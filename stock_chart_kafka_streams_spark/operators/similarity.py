@@ -24,9 +24,16 @@ oracle's 9-decimal rounding.
 
 from __future__ import annotations
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from stock_chart_kafka_streams_spark.operators import exact_chains as _xc
+
+# the Arrow kernels below call the shared chains; shipping the module by
+# value keeps their closures loadable on workers without this package
+cloudpickle.register_pickle_by_value(_xc)
 
 EMBED_DIM = 64
 
@@ -333,6 +340,137 @@ def lsh_topk(
 # bit-for-bit reproducible cross-engine (see ivf_topk_sql).
 _IVF_QUANT = 1_000_000.0
 
+_LLOYD_SCHEMA = "part int, sub int, cid int, n bigint, s array<bigint>"
+
+
+def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
+    """Batch function for one map-only Lloyd round over ``m`` subspaces.
+
+    Input: one column of vectors, of which the first ``m * sub``
+    components are used. ``books[j]`` holds subspace ``j``'s ``k``
+    centroids (their first ``sub`` components are used). Each row is
+    assigned per subspace with the exact chains of ``exact_chains``:
+    cosine argmax (``metric="cos"``, IVF) or squared-L2 argmin
+    (``metric="l2"``, PQ). In the same pass its components are quantized
+    to ``floor(x * 1e6 + 0.5)`` with Spark's ``floor`` semantics and
+    summed exactly per (sub, cid). The function yields once per
+    partition, one ``(part, sub, cid, n, s)`` row per centroid present
+    in it, so a round collects at most partitions × m × k rows. An exact
+    sum outside int64 raises, as Spark's ANSI ``sum`` does."""
+    import numpy as np
+
+    C = [np.asarray([list(c)[:sub] for c in b], dtype=np.float64) for b in books]
+    m, k = len(C), C[0].shape[0]
+    ncv = [_xc.centroid_norms(c) for c in C] if metric == "cos" else None
+    scale = _IVF_QUANT
+
+    def _round(batches):
+        import numpy as _np
+        import pandas as _pd
+        from pyspark import TaskContext
+
+        n_acc = _np.zeros((m, k), dtype=_np.int64)
+        s_acc = _np.zeros((m, k, sub), dtype=object)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = _xc.stack_rows(pdf.iloc[:, 0], m * sub)
+            Q = _xc.quantize(V, scale)
+            for j in range(m):
+                S = V[:, j * sub : (j + 1) * sub]
+                if ncv is None:
+                    cid = _xc.l2_argmin(S, C[j])
+                else:
+                    nv = _np.sqrt(_xc.sq_norms(S))
+                    cid, _ = _xc.cos_argmax(S, C[j], nv, ncv[j])
+                keys, counts, sums = _xc.group_sums(
+                    cid, Q[:, j * sub : (j + 1) * sub]
+                )
+                n_acc[j, keys] += counts
+                s_acc[j, keys] += sums
+        js, cids = _np.nonzero(n_acc)
+        if len(js) == 0:
+            return
+        sums = s_acc[js, cids]
+        _xc.check_int64(sums.ravel(), "a Lloyd partition sum")
+        yield _pd.DataFrame(
+            {
+                "part": TaskContext.get().partitionId(),
+                "sub": js.astype("int32"),
+                "cid": cids.astype("int32"),
+                "n": n_acc[js, cids],
+                "s": [list(r) for r in sums],
+            }
+        )
+
+    return _round
+
+
+def _lloyd_sums_jvm(assigned: DataFrame, vec: str, width: int) -> list:
+    """The fold/matmul modes' Lloyd aggregate: ``(sub, cid, n, s)`` rows,
+    one per present centroid, from the JVM's quantized BIGINT sums over
+    the ``(sub, cid, vec)`` assignment rows."""
+    return (
+        assigned.select(
+            "sub",
+            "cid",
+            *[
+                F.floor(F.element_at(vec, i + 1) * _IVF_QUANT + 0.5).alias(f"x{i}")
+                for i in range(width)
+            ],
+        )
+        .groupBy("sub", "cid")
+        .agg(
+            F.count("*").alias("n"),
+            F.array(*[F.sum(f"x{i}") for i in range(width)]).alias("s"),
+        )
+        .collect()
+    )
+
+
+def _lloyd_round_vector(
+    df: DataFrame, col: str, books: list[list[list[float]]], metric: str, sub: int
+) -> list[list[list[float]]]:
+    """One "vector"-mode Lloyd round: one map-only Arrow job (no
+    shuffle), partial sums reduced on the driver. The collect is bounded
+    by construction at partitions × m × k rows; a result past that bound
+    means the kernel broke its one-row-per-centroid-per-partition
+    contract, and raises."""
+    rows = (
+        df.select(col)
+        .mapInPandas(_lloyd_kernel(books, metric, sub), schema=_LLOYD_SCHEMA)
+        .collect()
+    )
+    bound = len({r["part"] for r in rows}) * len(books) * len(books[0])
+    if len(rows) > bound:
+        raise RuntimeError(
+            f"Lloyd round collected {len(rows)} rows, past its bound of "
+            f"partitions x m x k = {bound}"
+        )
+    return _lloyd_update(books, rows)
+
+
+def _lloyd_update(
+    books: list[list[list[float]]], rows: list
+) -> list[list[list[float]]]:
+    """New centroids from ``(sub, cid, n, s)`` partial-sum rows: the
+    exact integer totals per (sub, cid) divided as
+    ``float(s) / float(n) / 1e6``, the DuckDB twins' double. A centroid
+    no row names keeps its previous value."""
+    tot: dict[tuple[int, int], tuple[int, list[int]]] = {}
+    for r in rows:
+        key = (r["sub"], r["cid"])
+        n, s = tot.get(key, (0, [0] * len(r["s"])))
+        tot[key] = (n + r["n"], [a + b for a, b in zip(s, r["s"])])
+    new = {}
+    for key, (n, s) in tot.items():
+        _xc.check_int64(s, "a Lloyd centroid sum")
+        new[key] = [float(x) / float(n) / _IVF_QUANT for x in s]
+    return [
+        [new.get((j, i), book[i]) for i in range(len(book))]
+        for j, book in enumerate(books)
+    ]
+
 
 def ivf_build_centroids(
     corpus: DataFrame,
@@ -353,36 +491,24 @@ def ivf_build_centroids(
       ties broken by centroid id.
     - Averaging: components are quantized to integers
       (``floor(v*1e6 + 0.5)`` — plain double arithmetic, no engine
-      rounding-mode semantics) and summed as BIGINT, so the sum is exact
-      and order-independent; the mean double is then identical in Spark,
+      rounding-mode semantics) and summed as exact integers, so the sum
+      is order-independent; the mean double is then identical in Spark,
       Python and DuckDB. This is what lets ``ivf_topk_sql`` replay the
-      whole procedure and hash-match (the earlier float-sum version was
-      partition-order-sensitive and oracle-proof).
+      whole procedure and hash-match.
 
-    Only centroid-sized aggregates (n_centroids × dim longs) reach the
-    driver — assignment and summation are distributed.
+    ``assign_mode="vector"`` (the default): each Lloyd round is ONE
+    map-only Arrow job (``_lloyd_kernel``). The kernel assigns each row
+    with the dimension-loop cosine chain whose float order is the fold's,
+    and in the same pass sums its quantized components per centroid per
+    partition; the driver adds the partial sums (at most partitions ×
+    n_centroids rows per round, asserted). No shuffle, no JVM aggregate.
 
-    ``assign_mode="matmul"`` (round 9): the Lloyd-round assignment runs
-    as the Arrow-batched numpy matmul (``_assign_matmul``) instead of
-    the crossJoin + per-id rank window — at paper-scale centroid counts
-    the crossJoin materializes train_rows × k wide rows and the window
-    re-sorts them (measured: 93 s of a 107 s d8 run at k=2048, sample
-    5k), while the matmul assigns each training batch in one
-    (batch × dim) @ (dim × k) product with nothing shuffled. The
-    quantized-BIGINT averaging is unchanged, but numpy's summation
-    order can flip a near-tied argmax, so this mode is NOT
-    bit-exact-oracle-safe — it exists for the paper-scale path
-    (``semantic_dedup(assign_mode="matmul")`` passes it through).
-
-    ``assign_mode="vector"`` (round 15, the default): ``_assign_vector``
-    — the same Arrow-batched scan shape as matmul but with the
-    dimension-loop accumulation whose float order is IDENTICAL to the
-    fold's, so the Lloyd assignments (and therefore the quantized-BIGINT
-    sums and the returned centroids) are bit-identical to the fold at
-    matmul speed. The fold's crossJoin + per-id rank window — which
-    materializes train_rows x k wide rows and re-sorts them per round —
-    is gone from the default path; "fold" remains as the pure-JVM
-    reference implementation."""
+    ``assign_mode="fold"`` is the pure-JVM reference: a crossJoin with
+    the broadcast centroids, a per-id rank window, then a quantized
+    ``groupBy(cid)`` BIGINT aggregate. ``"matmul"`` assigns with the BLAS
+    kernel (``_assign_matmul``) into the same JVM aggregate; numpy's
+    summation order can flip a near-tied argmax, so it is NOT
+    oracle-exact and exists for paper-scale centroid counts."""
     if assign_mode not in ("fold", "matmul", "vector"):
         raise ValueError(
             f"assign_mode must be 'fold', 'matmul' or 'vector', got {assign_mode!r}"
@@ -398,17 +524,15 @@ def ivf_build_centroids(
         .collect()
     )
     centroids = [list(r["v"]) for r in seeds]
+    if not centroids:
+        return []
 
-    c = c.withColumn("nv", _norm(F.col("v"), dim))
     for _ in range(iterations):
         if assign_mode == "vector":
-            assigned = _assign_vector(
-                c.select(F.col(id_col), "v"), centroids, id_col, dim
-            )
-        elif assign_mode == "matmul":
-            assigned = _assign_matmul(
-                c.select(F.col(id_col), "v"), centroids, id_col, dim
-            )
+            centroids = _lloyd_round_vector(c, "v", [centroids], "cos", dim)[0]
+            continue
+        if assign_mode == "matmul":
+            assigned = _assign_matmul(c, centroids, id_col, dim)
         else:
             cent_df = F.broadcast(
                 c.sparkSession.createDataFrame(
@@ -417,7 +541,8 @@ def ivf_build_centroids(
                 ).withColumn("ncv", _norm(F.col("cv"), dim))
             )
             assigned = (
-                c.crossJoin(cent_df)
+                c.withColumn("nv", _norm(F.col("v"), dim))
+                .crossJoin(cent_df)
                 .withColumn(
                     "d",
                     _dot_unrolled(F.col("v"), F.col("cv"), dim)
@@ -433,27 +558,10 @@ def ivf_build_centroids(
                 )
                 .where(F.col("rk") == 1)
             )
-        sums = (
-            assigned.select(
-                "cid",
-                *[
-                    F.floor(F.element_at("v", i + 1) * _IVF_QUANT + 0.5).alias(f"x{i}")
-                    for i in range(dim)
-                ],
-            )
-            .groupBy("cid")
-            .agg(
-                F.count("*").alias("n"),
-                *[F.sum(f"x{i}").alias(f"s{i}") for i in range(dim)],
-            )
-            .collect()
+        rows = _lloyd_sums_jvm(
+            assigned.withColumn("sub", F.lit(0)), "v", dim
         )
-        new = dict()
-        for r in sums:
-            new[r["cid"]] = [
-                float(r[f"s{i}"]) / float(r["n"]) / _IVF_QUANT for i in range(dim)
-            ]
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
+        centroids = _lloyd_update([centroids], rows)[0]
     return centroids
 
 
@@ -761,13 +869,8 @@ def _srp_codes(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.vstack(
-                [_np.asarray(x, dtype=_np.float64)[:d] for x in pdf["v"]]
-            )
             n = len(pdf)
-            proj = _np.zeros((n, T * B), dtype=_np.float64)
-            for i in range(d):
-                proj += V[:, i][:, None] * H[None, :, i]
+            proj = _xc.dots(_xc.stack_rows(pdf["v"], d), H)
             bits = (proj > 0) | _np.isnan(proj)  # Spark: NaN > 0 is TRUE
             codes = (
                 (bits.reshape(n, T, B) * weights[None, None, :])
@@ -1557,18 +1660,10 @@ def _assign_vector(
     (re-verified by the full driver-sim after the default flip).
 
     The closure is numpy/pandas-only (no package import on workers)."""
-    import math
-
     import numpy as np
 
     C = np.asarray([list(c)[: int(dim)] for c in centroids], dtype=np.float64)
-    ncv = []
-    for cv in C:
-        acc = 0.0
-        for x in cv:
-            acc += float(x) * float(x)
-        ncv.append(math.sqrt(acc))
-    ncv_arr = np.asarray(ncv, dtype=np.float64)
+    ncv = _xc.centroid_norms(C)
     id_type = base.schema[id_col].dataType.simpleString()
     out_schema = (
         f"{id_col} {id_type}, v array<double>, nv double, "
@@ -1583,26 +1678,15 @@ def _assign_vector(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.vstack(
-                [_np.asarray(x, dtype=_np.float64)[:d] for x in pdf["v"]]
-            )
-            n = len(pdf)
-            nv2 = _np.zeros(n, dtype=_np.float64)
-            dot = _np.zeros((n, C.shape[0]), dtype=_np.float64)
-            for i in range(d):
-                vi = V[:, i]
-                nv2 += vi * vi  # left-to-right: acc = acc + x*x
-                dot += vi[:, None] * C[None, :, i]
-            nv = _np.sqrt(nv2)
-            S = dot / (nv[:, None] * ncv_arr[None, :])
-            cid = S.argmax(axis=1)
-            cent = S[_np.arange(n), cid]
+            V = _xc.stack_rows(pdf["v"], d)
+            nv = _np.sqrt(_xc.sq_norms(V))
+            cid, cent = _xc.cos_argmax(V, C, nv, ncv)
             yield _pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
                     "v": pdf["v"].values,
                     "nv": nv,
-                    "cid": cid.astype("int32"),
+                    "cid": cid,
                     "cent_cos": cent,
                 }
             )
@@ -1677,10 +1761,7 @@ def _cosine_verify_vector(
 
             A, short_a = _stack(a_col)
             B, short_b = _stack(b_col)
-            dot = _np.zeros(n, dtype=_np.float64)
-            for i in range(d):
-                dot += A[:, i] * B[:, i]
-            cos = dot / (pdf[na_col].values * pdf[nb_col].values)
+            cos = _xc.row_dots(A, B) / (pdf[na_col].values * pdf[nb_col].values)
             cos[short_a | short_b] = _np.nan  # -> Arrow null, the JVM's NULL
             res = pdf[keep_names].copy()
             res[out] = cos
@@ -1832,57 +1913,6 @@ def _normalized(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame
     )
 
 
-def _pq_train_assign_vector(
-    corpus_norm: DataFrame,
-    books: list[list[list[float]]],
-    m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """One Lloyd round's assignment for ``_pq_train``'s "vector" mode:
-    (sub, cid, sv) rows from an Arrow-batched numpy kernel with the
-    fold's exact IEEE order (dimension-loop squared-L2, first-minimum
-    ties, NaN-as-greatest — see ``_pq_encode_vector``). Emits only the
-    slim rows the quantized-BIGINT aggregation consumes."""
-    import numpy as np
-
-    C = np.asarray(books, dtype=np.float64)  # (m, k, sub_dim)
-    sub = int(sub_dim)
-    mm = int(m)
-
-    def _assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.vstack([_np.asarray(x, dtype=_np.float64) for x in pdf["vn"]])
-            n = len(pdf)
-            frames = []
-            for j in range(mm):
-                S = V[:, j * sub : (j + 1) * sub]
-                Cj = C[j]
-                D = _np.zeros((n, Cj.shape[0]), dtype=_np.float64)
-                for i in range(sub):
-                    diff = S[:, i][:, None] - Cj[None, :, i]
-                    D += diff * diff
-                D[_np.isnan(D)] = _np.inf
-                frames.append(
-                    _pd.DataFrame(
-                        {
-                            "sub": _np.full(n, j, dtype=_np.int32),
-                            "cid": D.argmin(axis=1).astype("int32"),
-                            "sv": list(S),
-                        }
-                    )
-                )
-            yield _pd.concat(frames, ignore_index=True)
-
-    return corpus_norm.select("vn").mapInPandas(
-        _assign, schema="sub int, cid int, sv array<double>"
-    )
-
-
 def _pq_train(
     corpus_norm: DataFrame,
     m: int,
@@ -1900,27 +1930,21 @@ def _pq_train(
 
     All m subspaces seed from the SAME md5-ordered prefix (one driver
     fetch of n_codes full vectors, sliced in Python), and each Lloyd
-    round runs as ONE Spark job covering ALL m subspaces (sub-vector rows
-    tagged by subspace, assignment joined against a (sub, cid) centroid
-    table, one (sub, cid)-keyed aggregation) — the per-subspace-loop form
-    ran m x iterations jobs whose fixed overheads dominated training at
-    tier-2 scale (19 s -> ~5 s on the 12.5k sample). Per-subspace
-    arithmetic is unchanged expression-for-expression, so the codebooks
-    are bit-identical to the loop form and the SQL twin's independent
-    per-subspace replay. Only (m x n_codes x sub_dim) BIGINT sums reach
-    the driver per round.
+    round covers ALL m subspaces in one Spark job. The arithmetic per
+    subspace is the SQL twin's independent per-subspace replay, so the
+    codebooks hash-match it.
 
-    ``encode_mode="vector"`` (round 15, the default): each Lloyd round's
-    assignment runs as an Arrow-batched numpy kernel over the normalized
-    sample — the ``_pq_encode_vector`` dimension-loop L2 with the fold's
-    exact IEEE order and first-minimum tie rule, emitting slim
-    (sub, cid, sv) rows straight into the same quantized-BIGINT
-    aggregation — instead of the broadcast join + per-(sub, id) rank
-    window over sample x n_codes rows. Codebooks are bit-identical
-    (assignments identical, BIGINT sums order-independent). "matmul"
-    rides the same kernel: PQ TRAINING was always fold-exact (the
-    join+window), so the kernel changes nothing about matmul-mode books
-    either — only "fold" keeps the pure-JVM join + window shape."""
+    ``encode_mode="vector"`` (the default) and ``"matmul"``: a round is
+    ONE map-only Arrow job (``_lloyd_kernel`` with the squared-L2
+    chain). Each partition assigns its rows in every subspace and emits
+    its exact quantized partial sums, at most m × n_codes rows; the
+    driver adds them (at most partitions × m × n_codes rows per round,
+    asserted). PQ training was always fold-exact, so matmul mode trains
+    with the same kernel. ``"fold"`` is the pure-JVM reference: sub-vector
+    rows tagged by subspace, a join against the broadcast (sub, cid)
+    centroid table, a per-(sub, id) rank window and a (sub, cid)-keyed
+    BIGINT aggregate. Both give bit-identical codebooks: the assignments
+    are identical and the integer sums are order-independent."""
     seed_rows = (
         corpus_norm.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(n_codes)
@@ -1945,79 +1969,49 @@ def _pq_train(
         off = j * sub_dim
         books.append([list(r["vn"])[off : off + sub_dim] for r in seed_rows])
 
-    # sub-vector rows for every subspace in one pass: (id, sub, sv) —
-    # only the join+window modes need the JVM explode; the vector mode's
-    # kernel slices subspaces batch-side.
-    kernel_assign = encode_mode in ("vector", "matmul")
-    svall = None
-    if not kernel_assign:
-        svall = corpus_norm.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("sub"),
-                            F.array(
-                                *[F.get("vn", j * sub_dim + i) for i in range(sub_dim)]
-                            ).alias("sv"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("z"),
-        ).select(F.col(id_col), F.col("z.sub").alias("sub"), F.col("z.sv").alias("sv"))
+    if encode_mode in ("vector", "matmul"):
+        for _ in range(iterations):
+            books = _lloyd_round_vector(corpus_norm, "vn", books, "l2", sub_dim)
+        return books
 
-    for _ in range(iterations):
-        if kernel_assign:
-            assigned = _pq_train_assign_vector(corpus_norm, books, m, sub_dim)
-        else:
-            cent_df = F.broadcast(
-                corpus_norm.sparkSession.createDataFrame(
-                    [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
-                    "sub int, cid int, cv array<double>",
-                )
-            )
-            assigned = (
-                svall.join(cent_df, on="sub")
-                .withColumn("d", _l2_unrolled(F.col("sv"), F.col("cv"), sub_dim))
-                .withColumn(
-                    "rk",
-                    F.row_number().over(
-                        Window.partitionBy("sub", id_col).orderBy(
-                            F.col("d").asc(), F.col("cid")
-                        )
-                    ),
-                )
-                .where(F.col("rk") == 1)
-            )
-        sums = (
-            assigned.select(
-                "sub",
-                "cid",
+    # sub-vector rows for every subspace in one pass: (id, sub, sv)
+    svall = corpus_norm.select(
+        F.col(id_col),
+        F.explode(
+            F.array(
                 *[
-                    F.floor(F.element_at("sv", i + 1) * _IVF_QUANT + 0.5).alias(f"x{i}")
-                    for i in range(sub_dim)
-                ],
+                    F.struct(
+                        F.lit(j).alias("sub"),
+                        F.array(
+                            *[F.get("vn", j * sub_dim + i) for i in range(sub_dim)]
+                        ).alias("sv"),
+                    )
+                    for j in range(m)
+                ]
             )
-            .groupBy("sub", "cid")
-            .agg(
-                F.count("*").alias("n"),
-                *[F.sum(f"x{i}").alias(f"s{i}") for i in range(sub_dim)],
+        ).alias("z"),
+    ).select(F.col(id_col), F.col("z.sub").alias("sub"), F.col("z.sv").alias("sv"))
+    for _ in range(iterations):
+        cent_df = F.broadcast(
+            corpus_norm.sparkSession.createDataFrame(
+                [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
+                "sub int, cid int, cv array<double>",
             )
-            .collect()
         )
-        new: dict[tuple[int, int], list[float]] = {
-            (r["sub"], r["cid"]): [
-                float(r[f"s{i}"]) / float(r["n"]) / _IVF_QUANT
-                for i in range(sub_dim)
-            ]
-            for r in sums
-        }
-        books = [
-            [new.get((j, i), books[j][i]) for i in range(n_codes)]
-            for j in range(m)
-        ]
+        assigned = (
+            svall.join(cent_df, on="sub")
+            .withColumn("d", _l2_unrolled(F.col("sv"), F.col("cv"), sub_dim))
+            .withColumn(
+                "rk",
+                F.row_number().over(
+                    Window.partitionBy("sub", id_col).orderBy(
+                        F.col("d").asc(), F.col("cid")
+                    )
+                ),
+            )
+            .where(F.col("rk") == 1)
+        )
+        books = _lloyd_update(books, _lloyd_sums_jvm(assigned, "sv", sub_dim))
     return books
 
 
@@ -2071,34 +2065,42 @@ def _pq_encode_matmul(
     return cn.select(F.col(id_col), "vn").mapInPandas(_encode, schema=out_schema)
 
 
-def _pq_encode_vector(
-    cn: DataFrame,
+def _encode_vector(
+    corpus: DataFrame,
     books: list[list[list[float]]],
-    m: int,
-    sub_dim: int,
+    coarse: list[list[float]] | None,
     id_col: str,
+    vec_col: str,
+    dim: int,
 ) -> DataFrame:
-    """Bit-exact-fold PQ encoding at Arrow speed (round 15; the
-    ``_assign_vector`` pattern applied to squared-L2 argmin): per
-    subspace the distance accumulates over DIMENSIONS left to right —
-    ``D += (s_i - c_i) * (s_i - c_i)`` — the identical IEEE chain
-    ``_l2_unrolled`` (and the twin's ``list_sum``) evaluates, and
-    ``argmin`` takes the FIRST minimum (lowest cid — the fold's
-    ``array_position(dists, array_min(dists))`` rule). NaN distances are
-    masked to +inf first, mirroring Spark's NaN-greatest ordering in
-    ``array_min`` (a NaN distance requires a NaN input component; the
-    documented no-NaN precondition). Oracle-safe, unlike matmul — and
-    plan size is O(1) in ``n_codes``, so the paper's k*=256 codebooks
-    cost the same plan as 16."""
+    """(id, code0..code{m-1}[, cid]) in ONE map-only Arrow pass over the
+    RAW corpus — the "vector" mode's encode for every PQ consumer.
+
+    Per batch the kernel computes the ``_normalized`` vector (dim-prefix
+    norm, zero norm divides by 1, per-element IEEE division), its PQ
+    codes (squared-L2 argmin per subspace, ``_xc.l2_argmin``) and, given
+    ``coarse``, its IVF list (cosine argmax of the raw vector,
+    ``_xc.cos_argmax``). Every chain is the one the JVM fold evaluates,
+    so codes and lists are bit-identical to ``_pq_encode(..., "fold")``
+    joined on id with the fold ``_coarse_assign`` — without the join or
+    its shuffle. Plan size is O(1) in ``n_codes`` and ``n_lists``."""
     import numpy as np
 
-    C = [np.asarray(books[j], dtype=np.float64) for j in range(m)]  # (k, sub)
-    id_type = cn.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, " + ", ".join(
-        f"code{j} int" for j in range(m)
+    m = len(books)
+    sub = int(dim) // m
+    d = int(dim)
+    C = [np.asarray(b, dtype=np.float64) for b in books]
+    K = None
+    ncv = None
+    if coarse is not None:
+        K = np.asarray([list(c)[:d] for c in coarse], dtype=np.float64)
+        ncv = _xc.centroid_norms(K)
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    out_schema = ", ".join(
+        [f"{id_col} {id_type}"]
+        + [f"code{j} int" for j in range(m)]
+        + (["cid int"] if coarse is not None else [])
     )
-    sub = int(sub_dim)
-    mm = int(m)
 
     def _encode(batches):
         import numpy as _np
@@ -2107,21 +2109,19 @@ def _pq_encode_vector(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.vstack([_np.asarray(x, dtype=_np.float64) for x in pdf["vn"]])
-            n = len(pdf)
+            V = _xc.stack_rows(pdf["v"], d)
+            nv = _np.sqrt(_xc.sq_norms(V))
+            VN = V / _np.where(nv == 0, 1.0, nv)[:, None]
             out = {id_col: pdf[id_col].values}
-            for j in range(mm):
-                S = V[:, j * sub : (j + 1) * sub]
-                Cj = C[j]
-                D = _np.zeros((n, Cj.shape[0]), dtype=_np.float64)
-                for i in range(sub):
-                    diff = S[:, i][:, None] - Cj[None, :, i]
-                    D += diff * diff
-                D[_np.isnan(D)] = _np.inf
-                out[f"code{j}"] = D.argmin(axis=1).astype("int32")
+            for j in range(m):
+                out[f"code{j}"] = _xc.l2_argmin(VN[:, j * sub : (j + 1) * sub], C[j])
+            if K is not None:
+                out["cid"], _ = _xc.cos_argmax(V, K, nv, ncv)
             yield _pd.DataFrame(out)
 
-    return cn.select(F.col(id_col), "vn").mapInPandas(_encode, schema=out_schema)
+    return corpus.select(
+        F.col(id_col), _as_double(vec_col).alias("v")
+    ).mapInPandas(_encode, schema=out_schema)
 
 
 def _adc_scan_vector(
@@ -2223,10 +2223,7 @@ def _adc_scan_vector(
                     q = qvecs[qi]
                     adc = None
                     for j in range(mm):
-                        dot = _np.zeros(rows, dtype=_np.float64)
-                        off = j * sub
-                        for i in range(sub):
-                            dot += q[off + i] * csel[j][:, i]
+                        dot = _xc.row_dots(csel[j], q[j * sub : (j + 1) * sub])
                         adc = dot if adc is None else adc + dot
                 yield _pd.DataFrame(
                     {"query_id": qid, id_col: ids, "adc": adc}
@@ -2243,12 +2240,10 @@ def _pq_encode(
     id_col: str,
     encode_mode: str,
 ) -> DataFrame:
-    """(id, code0..code{m-1}) — the fold/vector/matmul encode switch
-    shared by pq_topk, ivfpq_topk and build_pq_index (one implementation,
-    one tie rule: first minimum -> lowest cid). "vector" (default since
-    round 15) is bit-identical to "fold"."""
-    if encode_mode == "vector":
-        return _pq_encode_vector(cn, books, m, sub_dim, id_col)
+    """(id, code0..code{m-1}) from the normalized corpus ``cn`` — the
+    fold/matmul encode (tie rule: first minimum -> lowest cid). The
+    "vector" mode encodes the raw corpus in ``_encode_vector``, which is
+    bit-identical to "fold"."""
     if encode_mode == "matmul":
         return _pq_encode_matmul(cn, books, m, sub_dim, id_col)
     code_cols = []
@@ -2268,6 +2263,33 @@ def _pq_encode(
             .alias(f"code{j}")
         )
     return cn.select(F.col(id_col), *code_cols)
+
+
+def _coded_corpus(
+    corpus: DataFrame,
+    books: list[list[list[float]]],
+    coarse: list[list[float]] | None,
+    encode_mode: str,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+) -> DataFrame:
+    """(id, code0..code{m-1}[, cid]) for the raw ``corpus`` — the encode
+    shared by pq_topk, ivfpq_topk, build_pq_index and extend_pq_index.
+    "vector" is the one map-only kernel; fold and matmul encode the
+    normalized corpus and, given ``coarse``, join the list assignment on
+    id."""
+    if encode_mode == "vector":
+        return _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
+    m = len(books)
+    codes = _pq_encode(
+        _normalized(corpus, id_col, vec_col, dim), books, m, dim // m, id_col,
+        encode_mode,
+    )
+    if coarse is None:
+        return codes
+    c_lists = _coarse_assign(corpus, coarse, encode_mode, id_col, vec_col, dim)
+    return codes.join(c_lists, on=id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2301,10 +2323,17 @@ def build_pq_index(
     """Train PQ codebooks (and, when ``n_lists`` is set, the IVF coarse
     quantizer) over ``corpus`` and persist the SERVING ARTIFACT under
     ``path`` — the band_buckets pattern (operators/dedup.py
-    ``write_band_buckets``) applied to ANN: the measured ~10 s
-    build was previously re-paid on every ``pq_topk``/``ivfpq_topk``
-    call; a stored index pays it once and serves every subsequent query
-    batch at marginal cost.
+    ``write_band_buckets``) applied to ANN: ``pq_topk``/``ivfpq_topk``
+    without an index re-pay training and encoding on every call; a
+    stored index pays them once and serves every subsequent query batch
+    at marginal cost.
+
+    Jobs, in the default "vector" mode: the sample checkpoints, one seed
+    fetch per quantizer, then ``iterations`` map-only Lloyd jobs per
+    quantizer (the PQ and IVF trainings run concurrently), then ONE
+    map-only scan that normalizes, PQ-encodes and list-assigns each raw
+    vector (``_encode_vector``) and writes ``partitionBy(cid)`` with no
+    shuffle, and the three small metadata writes.
 
     Layout (all parquet, so the artifact lives on the same storage tier
     as the data at 100 TB — no driver-local files):
@@ -2376,7 +2405,7 @@ def build_pq_index(
             coarse = fut_coarse.result()
     else:
         books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col, encode_mode)
-    codes = _pq_encode(cn, books, m, sub_dim, id_col, encode_mode)
+    codes = _coded_corpus(corpus, books, coarse, encode_mode, id_col, vec_col, dim)
 
     spark.createDataFrame(
         [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
@@ -2406,10 +2435,7 @@ def build_pq_index(
             [(i, v) for i, v in enumerate(coarse)],
             "cid int, cv array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
-        c_lists = _coarse_assign(corpus, coarse, encode_mode, id_col, vec_col, dim)
-        codes.join(c_lists, on=id_col).write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(f"{path}/codes")
+        codes.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
     else:
         codes.write.mode("overwrite").parquet(f"{path}/codes")
 
@@ -2498,8 +2524,9 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     rebuilding (round 11 — the d9-incremental story applied to serving
     indexes): encode the new vectors with the STORED codebooks (and, for
     an IVF index, assign them to lists with the stored coarse centroids),
-    then append their code rows to the artifact. The ~10 s train never
-    re-runs; only the new batch is scanned.
+    then append their code rows to the artifact. Training never
+    re-runs; only the new batch is scanned, by the same encode the build
+    ran (``_coded_corpus``).
 
     Exactness contract (what makes this oracle-able): an index built on
     corpus slice A and extended with slice B serves queries BIT-IDENTICALLY
@@ -2523,10 +2550,7 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     batch)."""
     spark = new_vectors.sparkSession
     meta, books, coarse = read_pq_index(spark, path)
-    m, n_codes, sub_dim, dim = (
-        meta["m"], meta["n_codes"], meta["sub_dim"], meta["dim"],
-    )
-    id_col = meta["id_col"]
+    dim, id_col = meta["dim"], meta["id_col"]
     if id_col not in new_vectors.columns:
         raise ValueError(
             f"new_vectors must carry the index id column {id_col!r}"
@@ -2551,19 +2575,11 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     if n_new == 0:
         return 0
 
-    cn = _normalized(fresh, id_col, vec_col, dim)
-    codes = _pq_encode(cn, books, m, sub_dim, id_col, meta["encode_mode"])
+    codes = _coded_corpus(
+        fresh, books, coarse, meta["encode_mode"], id_col, vec_col, dim
+    )
     if meta["kind"] == "ivfpq":
-        assert coarse is not None
-        c_lists = _coarse_assign(
-            fresh, coarse, meta["encode_mode"], id_col, vec_col, dim
-        )
-        (
-            codes.join(c_lists, on=id_col)
-            .write.mode("append")
-            .partitionBy("cid")
-            .parquet(f"{path}/codes")
-        )
+        codes.write.mode("append").partitionBy("cid").parquet(f"{path}/codes")
     else:
         codes.write.mode("append").parquet(f"{path}/codes")
     return n_new
@@ -2868,16 +2884,9 @@ def _coarse_assign(
     dim: int,
 ) -> DataFrame:
     """(id, cid) — nearest coarse centroid per corpus vector (cosine,
-    ties to lowest cid), fold (broadcast centroid table + window),
-    vector (Arrow argmax, fold-bit-exact) or matmul (Arrow argmax, BLAS)
-    mode; shared by ivfpq_topk and build_pq_index."""
-    if encode_mode == "vector":
-        return _assign_vector(
-            corpus.select(F.col(id_col), _as_double(vec_col).alias("v")),
-            coarse,
-            id_col,
-            dim,
-        ).select(F.col(id_col), "cid")
+    ties to lowest cid) in fold (broadcast centroid table + window) or
+    matmul (Arrow argmax, BLAS) mode, for ``_coded_corpus``. The "vector"
+    mode assigns inside the encode scan (``_encode_vector``)."""
     if encode_mode == "matmul":
         return _assign_matmul(
             corpus.select(F.col(id_col), _as_double(vec_col).alias("v")),
@@ -2957,14 +2966,12 @@ def pq_topk(
     trick — so ``pq_topk_sql`` replays the WHOLE procedure and
     hash-matches, like s3/d8.
 
-    ``encode_mode="vector"`` (round 15, the DEFAULT): training assignment
-    and encode run as Arrow-batched numpy kernels whose dimension-loop
-    accumulation keeps the fold's exact IEEE order
-    (``_pq_train_assign_vector`` / ``_pq_encode_vector``) — BIT-IDENTICAL
-    to the fold (oracle-safe) with plan size O(1) in ``n_codes``; the ADC
-    selects centroids via m broadcast hash-joins like matmul mode (the
-    selected centroid array, and hence the ADC dot chain, is identical
-    either way). ``encode_mode="matmul"`` (the d8 assign_mode pattern) is
+    ``encode_mode="vector"`` (the DEFAULT): each Lloyd round, the encode
+    and the ADC scan run as map-only Arrow kernels whose dimension-loop
+    accumulation keeps the fold's exact IEEE order (``_lloyd_kernel``,
+    ``_encode_vector``, ``_adc_scan_vector``) — BIT-IDENTICAL to the
+    fold (oracle-safe) with plan size O(1) in ``n_codes``.
+    ``encode_mode="matmul"`` (the d8 assign_mode pattern) is
     the BLAS variant: one matmul per batch, NOT bit-exact in the last ulp
     (numpy pairwise/SIMD summation); fold/matmul final-result equality on
     the test fixture is asserted. ``encode_mode="fold"`` is the legacy
@@ -2972,8 +2979,8 @@ def pq_topk(
 
     ``index_path`` (r10 verdict #3): serve from a ``build_pq_index``
     artifact instead of re-training — codebooks load driver-side
-    (m*n_codes rows) and the code table is the stored parquet; the
-    ~10 s build cost disappears from the query path. Results are
+    (m*n_codes rows) and the code table is the stored parquet; training
+    and encoding disappear from the query path. Results are
     bit-identical to the rebuild form (parquet float64 is exact), so
     ``pq_topk_sql`` remains the oracle; (m, n_codes, dim) must match
     the stored meta (raises otherwise). ``corpus`` is still required —
@@ -3029,7 +3036,9 @@ def pq_topk(
         # encode: per subspace, argmin squared-L2 against the codebook
         # (array_position / numpy argmin find the FIRST minimum -> ties
         # to the lowest cid, the twin's row_number ORDER BY d ASC, cid).
-        codes = _pq_encode(cn, books, m, sub_dim, id_col, encode_mode)
+        codes = _coded_corpus(
+            corpus, books, None, encode_mode, id_col, vec_col, dim
+        )
 
     qn = _normalized(queries, id_col, vec_col, dim).select(
         F.col(id_col).alias("query_id"), F.col("vn").alias("qvn")
@@ -3287,12 +3296,12 @@ def ivfpq_topk(
             )
             coarse = fut_coarse.result()
             books = fut_books.result()
-        c_lists = _coarse_assign(corpus, coarse, encode_mode, id_col, vec_col, dim)
-        codes = _pq_encode(cn, books, m, sub_dim, id_col, encode_mode)
         # the stored artifact at scale: codes PARTITIONED BY the list id —
         # a probe below prunes to n_probe partitions (build_pq_index
         # writes exactly this shape; index_path serves it)
-        coded_lists = codes.join(c_lists, on=id_col)
+        coded_lists = _coded_corpus(
+            corpus, books, coarse, encode_mode, id_col, vec_col, dim
+        )
 
     cent_df = F.broadcast(
         spark.createDataFrame(

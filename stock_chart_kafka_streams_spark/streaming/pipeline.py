@@ -489,8 +489,10 @@ def _gap_rows_for_window(spark, merged_real_minutes, win_rows):
     builds it once and shares it with the coarse rollups). Returns the
     synthesized gap rows, eagerly checkpointed (they are consumed by a
     keys collect, the publish, and the sidecar — without the pin the
-    window-sized grid would re-derive per evaluation), or None when the
-    window holds no gaps."""
+    window-sized grid would re-derive per evaluation). It never returns
+    None: a window without gaps gives an empty frame, and the caller
+    must test emptiness itself (the fused cascade checks its collected
+    gap keys)."""
     from stock_chart_kafka_streams_spark.operators.candles import (
         fill_candle_gaps,
     )

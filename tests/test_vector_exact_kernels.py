@@ -115,6 +115,7 @@ def test_ivf_lloyd_vector_centroids_bit_equal_fold(spark, embs):
 
 def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs):
     from stock_chart_kafka_streams_spark.operators.similarity import (
+        _coded_corpus,
         _normalized,
         _pq_encode,
         _pq_train,
@@ -125,7 +126,8 @@ def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs):
     books_v = _pq_train(cn, 4, 16, 8, 2, "vec_id", "vector")
     assert books_f == books_v
     codes_f = _pq_encode(cn, books_f, 4, 16, "vec_id", "fold")
-    codes_v = _pq_encode(cn, books_f, 4, 16, "vec_id", "vector")
+    # the vector mode encodes the RAW corpus, normalizing inside the kernel
+    codes_v = _coded_corpus(embs, books_f, None, "vector", "vec_id", "embedding", 64)
     assert _rows(codes_f) == _rows(codes_v)
 
 
@@ -312,3 +314,201 @@ def test_vector_mode_rejected_names_still_raise(spark, embs):
         ivf_build_centroids(embs, 4, assign_mode="blas")
     with pytest.raises(ValueError, match="encode_mode"):
         pq_topk(embs, embs, encode_mode="gpu")
+
+
+# ---------------------------------------------------------------------------
+# Map-only Lloyd rounds and the fused encode-and-assign scan
+# ---------------------------------------------------------------------------
+
+
+def _edge_rows(dim=8, n=30):
+    """Row 5 has a NaN component, row 9 a 1e300 one. Component 6 is
+    non-positive everywhere else, so the saturated INT64_MAX of row 9
+    can join any cluster without overflowing its BIGINT sum."""
+    rows = [(i, [math.sin(i * 7.3 + j) for j in range(dim)]) for i in range(n)]
+    for _, v in rows:
+        v[6] = -abs(v[6])
+    rows[5][1][2] = float("nan")
+    rows[9][1][6] = 1e300
+    return rows
+
+
+def test_quantize_matches_spark_floor_conversion():
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators.exact_chains import (
+        INT64_MAX,
+        INT64_MIN,
+        quantize,
+    )
+
+    v = np.array([[float("nan"), 1e300, -1e300, float("inf"), -float("inf"), 0.4999999, -0.5]])
+    assert quantize(v, 1e6).tolist() == [
+        [0, INT64_MAX, INT64_MIN, INT64_MAX, INT64_MIN, 500000, -500000]
+    ]
+
+
+def test_group_sums_are_exact_past_int64():
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators.exact_chains import (
+        INT64_MAX,
+        INT64_MIN,
+        check_int64,
+        group_sums,
+    )
+
+    keys = np.array([2, 0, 2, 1, 0])
+    q = np.array([[INT64_MAX], [5], [INT64_MAX], [-3], [INT64_MIN]], dtype=np.int64)
+    present, counts, sums = group_sums(keys, q)
+    assert present.tolist() == [0, 1, 2] and counts.tolist() == [2, 1, 2]
+    assert sums[:, 0].tolist() == [INT64_MIN + 5, -3, 2 * INT64_MAX]
+    check_int64(sums[:2].ravel(), "test")
+    with pytest.raises(ArithmeticError, match="overflow"):
+        check_int64(sums.ravel(), "test")
+
+
+def test_lloyd_kernels_match_fold_on_nan_and_huge_components(spark):
+    """A NaN component quantizes to 0 and a 1e300 one saturates at
+    INT64_MAX, as Spark's ``floor(double)`` does; the map-only Lloyd
+    rounds must then agree with the JVM aggregate bit for bit."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _pq_train,
+        ivf_build_centroids,
+    )
+
+    df = spark.createDataFrame(_edge_rows(), "vec_id int, embedding array<double>")
+    fold = ivf_build_centroids(df, 3, iterations=2, dim=8, assign_mode="fold")
+    vect = ivf_build_centroids(df, 3, iterations=2, dim=8, assign_mode="vector")
+    assert repr(fold) == repr(vect)  # repr: NaN equals NaN
+    assert any(x > 1e9 for c in vect for x in c)  # the saturated sum
+
+    vn = df.select("vec_id", F.col("embedding").alias("vn"))
+    books_f = _pq_train(vn, 2, 4, 3, 2, "vec_id", "fold")
+    books_v = _pq_train(vn, 2, 4, 3, 2, "vec_id", "vector")
+    assert repr(books_f) == repr(books_v)
+
+
+def test_lloyd_kernels_raise_on_int64_overflow_like_ansi_sum(spark):
+    """Two saturated components in one cluster overflow the BIGINT sum:
+    the JVM aggregate raises (ANSI), and so must the kernel — never wrap."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _pq_train,
+        ivf_build_centroids,
+    )
+
+    rows = _edge_rows()
+    rows[10] = (10, list(rows[9][1]))  # a second, identical huge vector
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    vn = df.select("vec_id", F.col("embedding").alias("vn"))
+    for mode in ("fold", "vector"):
+        with pytest.raises(Exception, match="(?i)overflow"):
+            ivf_build_centroids(df, 3, iterations=1, dim=8, assign_mode=mode)
+        with pytest.raises(Exception, match="(?i)overflow"):
+            _pq_train(vn, 2, 4, 3, 1, "vec_id", mode)
+
+
+def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, tmp_path):
+    """Three input partitions of several 64-row Arrow batches each: the
+    per-partition partial sums and the driver reduce must give the fold's
+    codebooks and centroids, and the fused encode the fold build's
+    (codes, cid) table."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _normalized,
+        _pq_train,
+        build_pq_index,
+        ivf_build_centroids,
+        read_pq_index,
+    )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        corpus = embs.repartition(3)
+        assert corpus.rdd.getNumPartitions() == 3 and corpus.count() > 3 * 64
+        assert ivf_build_centroids(corpus, 8, assign_mode="vector") == (
+            ivf_build_centroids(corpus, 8, assign_mode="fold")
+        )
+        cn = _normalized(corpus, "vec_id", "embedding", 64)
+        assert _pq_train(cn, 4, 16, 8, 2, "vec_id", "vector") == _pq_train(
+            cn, 4, 16, 8, 2, "vec_id", "fold"
+        )
+        built = {}
+        for mode in ("fold", "vector"):
+            path = str(tmp_path / mode)
+            build_pq_index(corpus, path, n_lists=4, encode_mode=mode)
+            _, books, coarse = read_pq_index(spark, path)
+            codes = spark.read.parquet(f"{path}/codes").select(
+                "vec_id", "code0", "code1", "code2", "code3", "cid"
+            )
+            built[mode] = (books, coarse, _rows(codes))
+        assert built["vector"] == built["fold"]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_lloyd_round_collect_past_its_bound_raises(spark, monkeypatch):
+    """A round collects at most partitions x m x k rows; a kernel that
+    emits more must fail loudly instead of growing the driver's collect."""
+    from stock_chart_kafka_streams_spark.operators import similarity as S
+
+    def _too_many(books, metric, sub):
+        def _rows_out(batches):
+            import pandas as pd
+
+            for _ in batches:
+                pass
+            k = len(books[0])
+            yield pd.DataFrame(
+                {
+                    "part": 0,
+                    "sub": 0,
+                    "cid": list(range(k)) + [0],
+                    "n": 1,
+                    "s": [[0] * sub for _ in range(k + 1)],
+                }
+            )
+
+        return _rows_out
+
+    monkeypatch.setattr(S, "_lloyd_kernel", _too_many)
+    df = spark.createDataFrame([([0.0, 1.0],)], "vn array<double>").coalesce(1)
+    with pytest.raises(RuntimeError, match="bound"):
+        S._lloyd_round_vector(df, "vn", [[[0.0, 1.0], [1.0, 0.0]]], "l2", 2)
+
+
+def test_kernel_closures_load_without_the_package(tmp_path):
+    """The Lloyd and encode closures pickle the shared chains by value: a
+    Python process that cannot import this package can still run them."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from stock_chart_kafka_streams_spark.operators import similarity as S
+
+    fn = S._lloyd_kernel([[[1.0, 0.0], [0.0, 1.0]]], "l2", 2)
+    blob = tmp_path / "fn.pkl"
+    blob.write_bytes(cloudpickle.dumps(fn))
+    script = (
+        "import pickle, sys\n"
+        "sys.path = [p for p in sys.path if p not in ('', '.')]\n"
+        "import pandas as pd, pyspark\n"
+        "class _Ctx:\n"
+        "    def partitionId(self):\n"
+        "        return 0\n"
+        "pyspark.TaskContext.get = staticmethod(lambda: _Ctx())\n"
+        f"fn = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "out = list(fn(iter([pd.DataFrame({'vn': [[0.9, 0.1], [0.1, 0.8]]})])))\n"
+        "assert not any(m.startswith('stock_chart') for m in sys.modules)\n"
+        "print(out[0][['cid', 'n']].values.tolist(), out[0]['s'].tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "[[0, 1], [1, 1]] [[900000, 100000], [100000, 800000]]"
