@@ -153,8 +153,7 @@ def _heavy_entry_df(name: str, trades, docs, embs, **kw):
             embs, embs.where(F.col("vec_id") < 50),
             k=10, n_lists=64, n_probe=8, m=4, n_codes=256,
             sample_num=1, sample_den=16,
-            coarse_sample_num=1, coarse_sample_den=16,
-            encode_mode="matmul", **kw,
+            coarse_sample_num=1, coarse_sample_den=16, **kw,
         )
     if name == "t2_s5_pq_topk_200k":
         return pq_topk(
@@ -166,8 +165,7 @@ def _heavy_entry_df(name: str, trades, docs, embs, **kw):
             embs, embs.where(F.col("vec_id") < 50),
             k=10, n_lists=64, n_probe=8, m=4, n_codes=256,
             sample_num=1, sample_den=16,
-            coarse_sample_num=1, coarse_sample_den=16,
-            encode_mode="matmul", **kw,
+            coarse_sample_num=1, coarse_sample_den=16, **kw,
         )
     if name == "t2_d8_semdedup_50k":
         return semantic_dedup(
@@ -249,7 +247,6 @@ def _isolated_main(name: str, trades_path: str, docs_path: str, embs_path: str) 
             spark.read.parquet(embs_path), idx, n_lists=64, m=4,
             n_codes=256, sample_num=1, sample_den=16,
             coarse_sample_num=1, coarse_sample_den=16,
-            encode_mode="matmul",
         )
         kw["index_path"] = idx
     trades = spark.read.parquet(trades_path)
@@ -522,7 +519,9 @@ def _tier2_queries(
         ),
         "t2_j3_asof_prev_close_25m": j3,
         "t2_j6_asof_next_open_25m": j6,
-        "t2_d2_dedup_minhash_100x": lambda: dedup_minhash(docs),
+        "t2_d2_dedup_minhash_100x": lambda: _heavy_entry_df(
+            "t2_d2_dedup_minhash_100x", trades, docs, embs
+        ),
         "t2_p1_training_set_100x": lambda: training_set_selection(docs),
         "t2_w9_kmv_sketch_25m": lambda: kmv_daily_stats(trades),
         # w15 all-pairs rolling correlation over the 25M-trade minute
@@ -549,10 +548,8 @@ def _tier2_queries(
         # Global interleave: one shard shuffle (sizes branch rides a
         # ReusedExchange) + broadcast offsets join.
         "t2_p8_interleave_100x": lambda: global_interleave(docs),
-        "t2_d5_neardup_50k": lambda: embedding_neardup_lsh(
-            embs.where(F.col("vec_id") < 2_500_000_000),
-            threshold=0.99,
-            n_bits=14,
+        "t2_d5_neardup_50k": lambda: _heavy_entry_df(
+            "t2_d5_neardup_50k", trades, docs, embs
         ),
         # kNN self-join over the full 200k corpus: both sides are the
         # corpus, so the (table, code) bucket exchange carries
@@ -783,13 +780,13 @@ def _tier2_queries(
     extra["d8_capped_clusters"] = d8_best.get("n_capped_clusters")
 
     # d8 at the PAPER-scale configuration shape (r8 verdict #2): 2048
-    # centroids via assign_mode="matmul" — the fold would need 2048
-    # literal plan columns (infeasible: plan size/codegen), the matmul
-    # keeps the plan O(1) in k. One Lloyd round on the 1/10 sample;
-    # matmul mode applies to the TRAINING assignment too (the Lloyd
-    # crossJoin+window measured 93 s of a 107 s run at k=2048 before
-    # the passthrough). Sub-linear-in-k evidence: compare
-    # d8_matmul_2048_assign_s against d8_assign_s (fold, k=256).
+    # centroids on the default exact path — the fold would need 2048
+    # literal plan columns (infeasible: plan size/codegen), the Arrow
+    # kernel keeps the plan O(1) in k and its certified BLAS argmax keeps
+    # the cost per row near one matmul. One Lloyd round on the 1/10
+    # sample. The entry keeps its historical "matmul" key so earlier
+    # records compare; compare d8_matmul_2048_assign_s against
+    # d8_assign_s (k=256) for the growth in k.
     st = {}
     spark.sparkContext._jvm.System.gc()
     t0 = time.perf_counter()
@@ -800,33 +797,12 @@ def _tier2_queries(
             n_centroids=2048,
             iterations=1,
             sample_den=10,
-            assign_mode="matmul",
             stats=st,
         )
     )
     timings["t2_d8_matmul_2048c_50k"] = round(time.perf_counter() - t0, 3)
     extra["d8_matmul_2048_train_s"] = st.get("train_s")
     extra["d8_matmul_2048_assign_s"] = st.get("assign_s")
-
-    # same-k control: matmul at the fold's own 256 centroids — the
-    # apples-to-apples assignment-stage comparison (d8_assign_s is the
-    # fold's wall at the same k).
-    st = {}
-    spark.sparkContext._jvm.System.gc()
-    t0 = time.perf_counter()
-    _noop(
-        semantic_dedup(
-            d8_slice,
-            threshold=0.99,
-            n_centroids=256,
-            sample_den=10,
-            assign_mode="matmul",
-            stats=st,
-        )
-    )
-    timings["t2_d8_matmul_256c_50k"] = round(time.perf_counter() - t0, 3)
-    extra["d8_matmul_256_train_s"] = st.get("train_s")
-    extra["d8_matmul_256_assign_s"] = st.get("assign_s")
 
     # p11 DSIR importance over the 500k corpus vs a ~50-doc target slice:
     # gram-keyed bucket aggs (map-side pre-reduced, reduce side
@@ -885,9 +861,10 @@ def _tier2_queries(
     timings["t2_s5_pq_topk_200k"] = min(s5_runs)
     extra["s5_pq_runs_s"] = s5_runs
 
-    # s5 at the PQ paper's standard k*=256-per-subspace configuration —
-    # runnable only in encode_mode="matmul" (the fold encode would be a
-    # 16k-term literal plan): Arrow argmin encode, join-selected ADC.
+    # s5 at the PQ paper's standard k*=256-per-subspace configuration on
+    # the default exact path (the fold encode would be a 16k-term literal
+    # plan): certified-BLAS argmin encode, Arrow ADC scan. The key keeps
+    # its historical "matmul" name so earlier records compare.
     s5m_runs: list[float] = []
     for _ in range(2):
         spark.sparkContext._jvm.System.gc()
@@ -901,15 +878,15 @@ def _tier2_queries(
                 n_codes=256,
                 sample_num=1,
                 sample_den=16,
-                encode_mode="matmul",
             )
         )
         s5m_runs.append(round(time.perf_counter() - t0, 3))
     timings["t2_s5_pq_matmul_256c_200k"] = min(s5m_runs)
     extra["s5_pq_matmul_runs_s"] = s5m_runs
 
-    # s6 IVF+PQ vs s5 flat PQ at 200k, paper-scale codebooks (matmul
-    # mode), 50-query batch. IVF's economics: the inverted lists cost a
+    # s6 IVF+PQ vs s5 flat PQ at 200k, paper-scale codebooks (default
+    # exact path; the keys keep their historical "matmul" names), 50-query
+    # batch. IVF's economics: the inverted lists cost a
     # FIXED index build (coarse train on the shared 1/16 sample, one
     # full-corpus assignment pass, codes↔lists join) and repay per query
     # (each query ADC-scans ~n_probe/n_lists = 1/8 of the codes).
@@ -925,8 +902,7 @@ def _tier2_queries(
     t0 = time.perf_counter()
     _noop(
         pq_topk(
-            embs, q50, k=10, m=4, n_codes=256,
-            sample_num=1, sample_den=16, encode_mode="matmul",
+            embs, q50, k=10, m=4, n_codes=256, sample_num=1, sample_den=16,
         )
     )
     timings["t2_s5_pq_matmul_q50_200k"] = round(time.perf_counter() - t0, 3)
@@ -956,7 +932,6 @@ def _tier2_queries(
             embs, idx, n_lists=64, m=4, n_codes=256,
             sample_num=1, sample_den=16,
             coarse_sample_num=1, coarse_sample_den=16,
-            encode_mode="matmul",
         )
         timings["t2_s6_index_build_200k"] = round(time.perf_counter() - t0, 3)
         spark.sparkContext._jvm.System.gc()
@@ -997,8 +972,7 @@ def _tier2_queries(
             ):
                 ipath = os.path.join(idx_root, f"pq_ext_{tag}")
                 build_pq_index(
-                    base, ipath, m=4, n_codes=16,
-                    sample_num=1, sample_den=16, encode_mode="matmul",
+                    base, ipath, m=4, n_codes=16, sample_num=1, sample_den=16,
                 )
                 spark.sparkContext._jvm.System.gc()
                 t0 = time.perf_counter()

@@ -343,6 +343,14 @@ _IVF_QUANT = 1_000_000.0
 _LLOYD_SCHEMA = "part int, sub int, cid int, n bigint, s array<bigint>"
 
 
+def _check_mode(param: str, mode: str) -> None:
+    """Every ANN operator runs ``"vector"`` (the exact Arrow kernels, the
+    default) or ``"fold"`` (the pure-JVM reference they are tested
+    against); anything else raises."""
+    if mode not in ("fold", "vector"):
+        raise ValueError(f"{param} must be 'fold' or 'vector', got {mode!r}")
+
+
 def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
     """Batch function for one map-only Lloyd round over ``m`` subspaces.
 
@@ -407,7 +415,7 @@ def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
 
 
 def _lloyd_sums_jvm(assigned: DataFrame, vec: str, width: int) -> list:
-    """The fold/matmul modes' Lloyd aggregate: ``(sub, cid, n, s)`` rows,
+    """The fold mode's Lloyd aggregate: ``(sub, cid, n, s)`` rows,
     one per present centroid, from the JVM's quantized BIGINT sums over
     the ``(sub, cid, vec)`` assignment rows."""
     return (
@@ -472,6 +480,32 @@ def _lloyd_update(
     ]
 
 
+def _nearest_fold(
+    rows: DataFrame, centroids: list[list[float]], key: str, dim: int, n: int
+) -> DataFrame:
+    """The fold mode's cosine assignment: ``rows`` (key, v, ...) crossJoined
+    with the broadcast centroid table, cut to each key's ``n`` best
+    centroids under ``ORDER BY cos DESC, cid`` (adds ``nv`` and ``cid``)."""
+    cent_df = F.broadcast(
+        rows.sparkSession.createDataFrame(
+            [(i, v) for i, v in enumerate(centroids)], "cid int, cv array<double>"
+        ).withColumn("ncv", _norm(F.col("cv"), dim))
+    )
+    w = Window.partitionBy(key).orderBy(F.col("cd").desc(), F.col("cid"))
+    return (
+        rows.withColumn("nv", _norm(F.col("v"), dim))
+        .crossJoin(cent_df)
+        .withColumn(
+            "cd",
+            _dot_unrolled(F.col("v"), F.col("cv"), dim)
+            / (F.col("nv") * F.col("ncv")),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= n)
+        .drop("cv", "ncv", "cd", "rk")
+    )
+
+
 def ivf_build_centroids(
     corpus: DataFrame,
     n_centroids: int = 8,
@@ -498,21 +532,19 @@ def ivf_build_centroids(
 
     ``assign_mode="vector"`` (the default): each Lloyd round is ONE
     map-only Arrow job (``_lloyd_kernel``). The kernel assigns each row
-    with the dimension-loop cosine chain whose float order is the fold's,
-    and in the same pass sums its quantized components per centroid per
-    partition; the driver adds the partial sums (at most partitions ×
-    n_centroids rows per round, asserted). No shuffle, no JVM aggregate.
+    with ``exact_chains.cos_argmax`` — the fold's cosine argmax, scored
+    by one BLAS product and rerun on the dimension-loop chain wherever a
+    float error bound cannot certify the winner — and in the same pass
+    sums its quantized components per centroid per partition; the
+    driver adds the partial sums (at most partitions × n_centroids rows
+    per round, asserted). No shuffle, no JVM aggregate, and the cost per
+    row grows with n_centroids at BLAS speed, so paper-scale centroid
+    counts run on this exact path.
 
     ``assign_mode="fold"`` is the pure-JVM reference: a crossJoin with
     the broadcast centroids, a per-id rank window, then a quantized
-    ``groupBy(cid)`` BIGINT aggregate. ``"matmul"`` assigns with the BLAS
-    kernel (``_assign_matmul``) into the same JVM aggregate; numpy's
-    summation order can flip a near-tied argmax, so it is NOT
-    oracle-exact and exists for paper-scale centroid counts."""
-    if assign_mode not in ("fold", "matmul", "vector"):
-        raise ValueError(
-            f"assign_mode must be 'fold', 'matmul' or 'vector', got {assign_mode!r}"
-        )
+    ``groupBy(cid)`` BIGINT aggregate."""
+    _check_mode("assign_mode", assign_mode)
     c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
     # hash-ordered top-N seeding: orderBy+limit plans as a distributed
     # TakeOrdered (per-partition top-N then driver merge), unlike a global
@@ -531,33 +563,7 @@ def ivf_build_centroids(
         if assign_mode == "vector":
             centroids = _lloyd_round_vector(c, "v", [centroids], "cos", dim)[0]
             continue
-        if assign_mode == "matmul":
-            assigned = _assign_matmul(c, centroids, id_col, dim)
-        else:
-            cent_df = F.broadcast(
-                c.sparkSession.createDataFrame(
-                    [(i, v) for i, v in enumerate(centroids)],
-                    "cid int, cv array<double>",
-                ).withColumn("ncv", _norm(F.col("cv"), dim))
-            )
-            assigned = (
-                c.withColumn("nv", _norm(F.col("v"), dim))
-                .crossJoin(cent_df)
-                .withColumn(
-                    "d",
-                    _dot_unrolled(F.col("v"), F.col("cv"), dim)
-                    / (F.col("nv") * F.col("ncv")),
-                )
-                .withColumn(
-                    "rk",
-                    F.row_number().over(
-                        Window.partitionBy(id_col).orderBy(
-                            F.col("d").desc(), F.col("cid")
-                        )
-                    ),
-                )
-                .where(F.col("rk") == 1)
-            )
+        assigned = _nearest_fold(c, centroids, id_col, dim, 1)
         rows = _lloyd_sums_jvm(
             assigned.withColumn("sub", F.lit(0)), "v", dim
         )
@@ -579,35 +585,13 @@ def ivf_topk(
     nearest centroid lists, exact-rerank candidates. At scale the inverted
     lists are a partitioned table; n_probe/n_centroids trade recall for
     the fraction of the corpus scanned per query (~n_probe/n_centroids)."""
-    spark = corpus.sparkSession
     centroids = ivf_build_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
-    cent_df = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(centroids)], "cid int, cv array<double>"
-        ).withColumn("ncv", _norm(F.col("cv")))
-    )
-
-    def nearest(df: DataFrame, key: str, topn: int) -> DataFrame:
-        scored = df.crossJoin(cent_df).withColumn(
-            "cd",
-            _dot_unrolled(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")),
-        )
-        w = Window.partitionBy(key).orderBy(F.col("cd").desc(), F.col("cid"))
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= topn)
-            .drop("cv", "ncv", "cd", "rk")
-        )
-
-    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "nv", _norm(F.col("v"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v")
-    ).withColumn("nv", _norm(F.col("v")))
-    c_lists = nearest(c, id_col, 1)  # inverted lists: one centroid per vector
+    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v"))
+    # inverted lists: one centroid per vector
+    c_lists = _nearest_fold(c, centroids, id_col, EMBED_DIM, 1)
     q_probes = (
-        nearest(q, "query_id", n_probe)
+        _nearest_fold(q, centroids, "query_id", EMBED_DIM, n_probe)
         .withColumnRenamed("v", "qv")
         .withColumnRenamed("nv", "qn")
     )
@@ -1284,22 +1268,15 @@ def semantic_dedup(
     (1) centroids come from ``ivf_build_centroids`` (only
     centroid-sized aggregates reach the driver, s3) — trained on a
     deterministic md5 hash-SAMPLE of the corpus when
-    ``sample_num/sample_den`` < 1, because the Lloyd rounds crossJoin
-    the training set against every centroid and window-shuffle the
-    full vector payloads: at corpus scale that is the dominant cost
-    and sampled centroid training is the published practice (measured
-    here: 50k vectors x 256 centroids, end-to-end 149 s with
-    full-corpus training -> ~65 s with the 1/10 hash-sample; the
-    sampled-training REMOVAL behavior is pinned cross-engine by the
-    ``d8_semantic_dedup_sampled`` oracle, which resolves every planted
-    pair); the oracle fixture keeps 1/1 so the twin's CTE chain is
-    unchanged; (2) assignment is a
-    PURE MAP-SIDE projection — the k centroids are embedded as constant
-    array literals and the argmax is a linear array_max/array_position
-    over per-centroid cosine columns, so the corpus is never shuffled,
-    crossJoined, or windowed to get its cluster ids (and re-references
-    of the assignment branch recompute a scan expression, not a
-    shuffle — the p9 lesson);
+    ``sample_num/sample_den`` < 1: every Lloyd round scans the whole
+    training set, and sampled centroid training is the published
+    practice (the sampled-training REMOVAL behavior is pinned
+    cross-engine by the ``d8_semantic_dedup_sampled`` oracle, which
+    resolves every planted pair); the oracle fixture keeps 1/1 so the
+    twin's CTE chain is unchanged; (2) assignment is a PURE MAP-SIDE
+    scan (``_assign_vector``: one Arrow kernel per batch, centroids in
+    the task closure), so the corpus is never shuffled, crossJoined, or
+    windowed to get its cluster ids;
     (3) within-cluster pair enumeration reuses d5's ONE-groupBy bucket
     explode over slim (id, cid) rows with the ``_apply_bucket_cap`` skew
     guard (``cluster_cap``), vectors fetched back by id for the exact
@@ -1311,25 +1288,16 @@ def semantic_dedup(
     ``ivf_topk_sql``'s determinism argument; zero vectors excluded by
     the no-NaN precondition documented there).
 
-    ``assign_mode`` (round 9, r8 verdict #2; round 15 added "vector" and
-    made it the default): ``"vector"`` is ``_assign_vector`` — the
-    Arrow-batched numpy kernel whose dimension-loop accumulation keeps
-    the fold's exact IEEE float order, so it is BIT-IDENTICAL to the
-    fold (oracle-safe) with plan size O(1) in ``n_centroids``; the
-    training rounds ride the same kernel. ``"fold"`` is the legacy
-    pure-JVM oracle-exact per-centroid HOF-fold argmax — perfect to a few
-    hundred centroids, but LINEAR in ``n_centroids`` as literal plan
-    columns, so the SemDeDup paper's ~50k-cluster configuration is out of
-    reach (plan size alone). ``"matmul"`` is the BLAS path: an
-    Arrow-batched ``mapInPandas`` computing ONE ``(batch×dim)@(dim×k)``
-    numpy matmul per batch — still a pure map-side scan (no shuffle), but
-    k lives in a broadcast ndarray instead of the plan, so plan size and
-    codegen are O(1) in ``n_centroids``. The trade: numpy's pairwise/SIMD
-    summation order differs from the fold's left-to-right chain in the
-    last ulp, so matmul is NOT bit-exact against the DuckDB twin — keep
-    the default for oracle comparisons, use matmul at paper scale
-    (equivalence modulo ties is pytest-asserted; tier-2 benches it at
-    2048 centroids).
+    ``assign_mode``: ``"vector"`` (the default) is ``_assign_vector``,
+    whose argmax is ``exact_chains.cos_argmax``: one BLAS product per
+    batch, with the rows a float error bound cannot certify rerun on
+    the dimension-loop chain. It is BIT-IDENTICAL to the fold
+    (oracle-safe), its plan size is O(1) in ``n_centroids``, and it runs
+    at BLAS speed, so the SemDeDup paper's thousands of clusters run on
+    the exact path; the training rounds ride the same kernel. ``"fold"``
+    is the pure-JVM reference, a per-centroid HOF-fold argmax whose plan
+    is LINEAR in ``n_centroids`` (literal columns), usable to a few
+    hundred centroids.
 
     ``verify_prune`` (round 9): before fetching vector payloads for the
     exact within-cluster verify, candidate pairs are pre-filtered by the
@@ -1372,10 +1340,7 @@ def semantic_dedup(
     where training is possible."""
     if sample_num < 1 or sample_den < 1 or sample_num > sample_den:
         raise ValueError("sample fraction must satisfy 1 <= sample_num <= sample_den")
-    if assign_mode not in ("fold", "matmul", "vector"):
-        raise ValueError(
-            f"assign_mode must be 'fold', 'matmul' or 'vector', got {assign_mode!r}"
-        )
+    _check_mode("assign_mode", assign_mode)
     import time as _time
 
     _t0 = _time.perf_counter()
@@ -1387,11 +1352,7 @@ def semantic_dedup(
         train = vectors.where(_md5_sample_pred(id_col, sample_num, sample_den))
     centroids = ivf_build_centroids(
         train, n_centroids, iterations=iterations,
-        id_col=id_col, vec_col=vec_col, dim=dim,
-        # matmul mode applies to TRAINING assignment too — at paper-scale
-        # k the Lloyd crossJoin+window dominates end-to-end wall (93 s of
-        # 107 s at k=2048 measured before this passthrough)
-        assign_mode=assign_mode,
+        id_col=id_col, vec_col=vec_col, dim=dim, assign_mode=assign_mode,
     )
     if not centroids:
         raise ValueError(
@@ -1404,8 +1365,6 @@ def semantic_dedup(
     base = vectors.select(F.col(id_col), _as_double(vec_col).alias("v"))
     if assign_mode == "vector":
         assigned = _assign_vector(base, centroids, id_col, dim)
-    elif assign_mode == "matmul":
-        assigned = _assign_matmul(base, centroids, id_col, dim)
     else:
         assigned = _assign_fold(base, centroids, dim, id_col)
     # Materialize the assignment ONCE: it has four consumers (pair codes,
@@ -1529,9 +1488,9 @@ def _assign_fold(
     # and to DuckDB's list_sum. Centroid norms are precomputed
     # driver-side: Python's left-to-right float sum + correctly-rounded
     # sqrt is the same IEEE double either engine computes. This stage is
-    # scan-shaped (perfectly parallel, no shuffle); where oracle
-    # exactness is not needed, the paper-scale upgrade is
-    # ``_assign_matmul`` below (opt-in via assign_mode="matmul").
+    # scan-shaped (perfectly parallel, no shuffle); ``_assign_vector``
+    # below is the bit-identical default whose plan does not grow with
+    # the centroid count.
     import math
 
     v = base.withColumn("nv", _norm(F.col("v"), dim))
@@ -1571,93 +1530,29 @@ def _assign_fold(
     )
 
 
-def _assign_matmul(
-    base: DataFrame, centroids: list[list[float]], id_col: str, dim: int
-) -> DataFrame:
-    """Paper-scale centroid assignment (r8 verdict #2): Arrow-batched
-    ``mapInPandas``, one ``(batch×dim) @ (dim×k)`` float64 matmul per
-    batch. Same map-side scan shape as the fold (no shuffle, vectors
-    never leave their partition), but ``k`` lives in a broadcast ndarray
-    captured by the closure instead of k literal plan columns — plan
-    size, codegen and Catalyst time are O(1) in ``n_centroids``, which is
-    what makes the SemDeDup paper's ~50k-cluster configuration runnable
-    (the fold's k-column plan is not; see the janino note in
-    ``_assign_fold``). Ties: ``argmax`` returns the FIRST maximum —
-    lowest cid, the fold's (and the twin's) tie rule. NOT bit-exact vs
-    the fold/oracle in the last ulp (numpy pairwise/SIMD summation), so
-    this mode is opt-in; equivalence modulo ties is pytest-asserted.
-
-    ``dim`` semantics match the fold exactly (r9 review: the first cut
-    ignored it): cosines are computed over the FIRST ``dim`` components
-    of both vectors and centroids — seed centroids are full-width raw
-    vectors while trained ones are dim-length, and physical arrays may
-    be wider than the latent dim (the mm5 lesson, `17eca68`) — and the
-    emitted ``nv`` is the dim-prefix norm the downstream exact verify
-    divides by. The full-width vector still passes through untouched.
-
-    The closure is self-contained (numpy + pandas only) so Python workers
-    can unpickle it without this package on their path."""
-    import numpy as np
-
-    C = np.asarray([list(c[:dim]) for c in centroids], dtype=np.float64)  # (k, dim)
-    cn = np.sqrt((C * C).sum(axis=1))  # centroid norms, (k,)
-    id_type = base.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_type}, v array<double>, nv double, "
-        "cid int, cent_cos double"
-    )
-
-    def _assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.vstack(
-                [_np.asarray(x, dtype=_np.float64)[: int(dim)] for x in pdf["v"]]
-            )
-            nv = _np.sqrt((V * V).sum(axis=1))
-            S = (V @ C.T) / (nv[:, None] * cn[None, :])
-            cid = S.argmax(axis=1)
-            cent = S[_np.arange(len(cid)), cid]
-            yield _pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "v": pdf["v"].values,
-                    "nv": nv,
-                    "cid": cid.astype("int32"),
-                    "cent_cos": cent,
-                }
-            )
-
-    return base.mapInPandas(_assign, schema=out_schema)
-
-
 def _assign_vector(
     base: DataFrame, centroids: list[list[float]], id_col: str, dim: int
 ) -> DataFrame:
     """Bit-exact-fold centroid assignment at Arrow speed (round 15).
 
-    Same Arrow-batched ``mapInPandas`` scan shape as ``_assign_matmul``,
-    but the accumulation loops over DIMENSIONS, not rows:
+    An Arrow-batched ``mapInPandas`` scan (no shuffle; the centroids
+    ride in the task closure, so plan size is O(1) in ``n_centroids``).
+    Each batch's argmax is ``exact_chains.cos_argmax``: the cosine of
+    the dimension-loop chain
 
         dot[:, j] = ((0 + v0*c_j0) + v1*c_j1) + ... + v{d-1}*c_j{d-1}
 
-    i.e. one vectorized multiply-add per dimension, accumulated left to
-    right — the identical IEEE-double chain ``_assign_fold``'s HOF fold,
-    ``_dot_unrolled``, and the DuckDB twin's ``list_sum`` evaluate
-    (elementwise numpy ``*``/``+`` are single correctly-rounded IEEE ops;
-    only matmul/BLAS reductions reorder). Centroid norms are the same
-    driver-side left-to-right sum + ``sqrt`` as ``_assign_fold``; ``nv``
-    is the dim-prefix norm accumulated the same way. Ties and NaN match
-    too: ``argmax`` returns the FIRST maximum (lowest cid — the fold's
-    ``array_position(arr, array_max(arr))`` rule) and propagates the
-    first NaN, which is where Spark's NaN-greatest ordering lands as
-    well. So unlike matmul this mode IS oracle-safe: outputs are
-    bit-identical to the fold, at O(1) plan size in ``n_centroids`` —
-    the janino/Catalyst ceiling that forced the interpreted fold is gone
-    (re-verified by the full driver-sim after the default flip).
+    — the identical IEEE-double chain ``_assign_fold``'s HOF fold,
+    ``_dot_unrolled``, and the DuckDB twin's ``list_sum`` evaluate —
+    found through one BLAS product whose winner is kept only where a
+    proven error bound certifies it, the chain rerunning elsewhere.
+    Centroid norms are the same driver-side left-to-right sum + ``sqrt``
+    as ``_assign_fold``; ``nv`` is the dim-prefix norm accumulated the
+    same way; ``cent_cos`` is the chain's double. Ties and NaN match
+    too: the FIRST maximum wins (lowest cid — the fold's
+    ``array_position(arr, array_max(arr))`` rule) and the first NaN
+    stops the scan, which is where Spark's NaN-greatest ordering lands
+    as well. Outputs are bit-identical to the fold.
 
     The closure is numpy/pandas-only (no package import on workers)."""
     import numpy as np
@@ -1934,13 +1829,13 @@ def _pq_train(
     subspace is the SQL twin's independent per-subspace replay, so the
     codebooks hash-match it.
 
-    ``encode_mode="vector"`` (the default) and ``"matmul"``: a round is
-    ONE map-only Arrow job (``_lloyd_kernel`` with the squared-L2
-    chain). Each partition assigns its rows in every subspace and emits
-    its exact quantized partial sums, at most m × n_codes rows; the
-    driver adds them (at most partitions × m × n_codes rows per round,
-    asserted). PQ training was always fold-exact, so matmul mode trains
-    with the same kernel. ``"fold"`` is the pure-JVM reference: sub-vector
+    ``encode_mode="vector"`` (the default): a round is ONE map-only
+    Arrow job (``_lloyd_kernel`` with ``exact_chains.l2_argmin``, the
+    squared-L2 chain's argmin found through one certified BLAS product
+    per subspace). Each partition assigns its rows in every subspace and
+    emits its exact quantized partial sums, at most m × n_codes rows;
+    the driver adds them (at most partitions × m × n_codes rows per
+    round, asserted). ``"fold"`` is the pure-JVM reference: sub-vector
     rows tagged by subspace, a join against the broadcast (sub, cid)
     centroid table, a per-(sub, id) rank window and a (sub, cid)-keyed
     BIGINT aggregate. Both give bit-identical codebooks: the assignments
@@ -1969,7 +1864,7 @@ def _pq_train(
         off = j * sub_dim
         books.append([list(r["vn"])[off : off + sub_dim] for r in seed_rows])
 
-    if encode_mode in ("vector", "matmul"):
+    if encode_mode == "vector":
         for _ in range(iterations):
             books = _lloyd_round_vector(corpus_norm, "vn", books, "l2", sub_dim)
         return books
@@ -2015,56 +1910,6 @@ def _pq_train(
     return books
 
 
-def _pq_encode_matmul(
-    cn: DataFrame,
-    books: list[list[list[float]]],
-    m: int,
-    sub_dim: int,
-    id_col: str,
-) -> DataFrame:
-    """Paper-scale PQ encoding (the d8 ``_assign_matmul`` pattern):
-    Arrow-batched ``mapInPandas``, per batch ONE ``-2 S @ C_j.T + |C_j|²``
-    product per subspace and a numpy argmin — plan size, codegen and
-    Catalyst time are O(1) in ``n_codes``, which is what makes the PQ
-    paper's k*=256-per-subspace configuration runnable (the fold encode
-    is n_codes L2 plan-chains per subspace: 16k terms at 256x4x16 —
-    janino-infeasible). Ties: ``argmin`` returns the FIRST minimum —
-    lowest cid, the fold's tie rule. NOT bit-exact vs the fold in the
-    last ulp (numpy/BLAS summation order), so this mode is opt-in and
-    the oracle keeps the fold; final-result equivalence on separated
-    data is pytest-asserted. The closure is numpy/pandas-only so Python
-    workers need no package import."""
-    import numpy as np
-
-    C = [np.asarray(books[j], dtype=np.float64) for j in range(m)]  # (k, sub)
-    C2 = [(c * c).sum(axis=1) for c in C]
-    id_type = cn.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, " + ", ".join(
-        f"code{j} int" for j in range(m)
-    )
-    sub = int(sub_dim)
-    mm = int(m)
-
-    def _encode(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.vstack([_np.asarray(x, dtype=_np.float64) for x in pdf["vn"]])
-            out = {id_col: pdf[id_col].values}
-            for j in range(mm):
-                S = V[:, j * sub : (j + 1) * sub]
-                # argmin over squared L2: the row's own |s|^2 term is
-                # constant per row and cannot change the argmin
-                D = C2[j][None, :] - 2.0 * (S @ C[j].T)
-                out[f"code{j}"] = D.argmin(axis=1).astype("int32")
-            yield _pd.DataFrame(out)
-
-    return cn.select(F.col(id_col), "vn").mapInPandas(_encode, schema=out_schema)
-
-
 def _encode_vector(
     corpus: DataFrame,
     books: list[list[list[float]]],
@@ -2080,10 +1925,11 @@ def _encode_vector(
     norm, zero norm divides by 1, per-element IEEE division), its PQ
     codes (squared-L2 argmin per subspace, ``_xc.l2_argmin``) and, given
     ``coarse``, its IVF list (cosine argmax of the raw vector,
-    ``_xc.cos_argmax``). Every chain is the one the JVM fold evaluates,
-    so codes and lists are bit-identical to ``_pq_encode(..., "fold")``
-    joined on id with the fold ``_coarse_assign`` — without the join or
-    its shuffle. Plan size is O(1) in ``n_codes`` and ``n_lists``."""
+    ``_xc.cos_argmax``). Every argmin/argmax is the one of the chain the
+    JVM fold evaluates (found through a certified BLAS product), so
+    codes and lists are bit-identical to the fold ``_pq_encode`` joined
+    on id with the fold list assignment — without the join or its
+    shuffle. Plan size is O(1) in ``n_codes`` and ``n_lists``."""
     import numpy as np
 
     m = len(books)
@@ -2152,7 +1998,11 @@ def _adc_scan_vector(
     bit-identical to the broadcast-join + codegen-chain plan it replaces
     (pinned by tests/test_vector_exact_kernels.py). A query vector
     SHORTER than ``dim`` scores NULL against every code, mirroring the
-    JVM chain (out-of-bounds ``F.get`` is NULL and poisons the sum).
+    JVM chain (out-of-bounds ``F.get`` is NULL and poisons the sum). The
+    kernel emits Arrow batches (``mapInArrow``), so a NaN score stays NaN
+    as in the JVM chain — and sorts first under the ``adc DESC``
+    candidate cut, as Spark orders NaN above every number — where a
+    pandas batch would turn it into NULL and sort it last.
 
     What this removes from the plan (measured on the s6 q50 entry: the
     ADC stage was ~2.5 s of JVM chain): the m broadcast hash-joins that
@@ -2168,8 +2018,11 @@ def _adc_scan_vector(
     of the ``coded_lists JOIN probes ON cid`` the JVM plan did). None
     means every query scans every row (s5's flat crossJoin)."""
     import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
 
     C = [np.asarray(books[j], dtype=np.float64) for j in range(m)]
+    qid_arrow = to_arrow_type(_parse_datatype_string(qid_type))
     qids = [r[0] for r in q_rows]
     qvecs = []
     q_short = []
@@ -2197,39 +2050,43 @@ def _adc_scan_vector(
 
     def _scan(batches):
         import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            sel = [C[j][pdf[f"code{j}"].values] for j in range(mm)]
+            sel = [
+                C[j][b.column(f"code{j}").to_numpy(zero_copy_only=False)]
+                for j in range(mm)
+            ]
             if q_cids is not None:
-                cid_vals = pdf["cid"].values
+                cid_vals = b.column("cid").to_numpy(zero_copy_only=False)
             for qi, qid in enumerate(qids):
                 if q_cids is not None:
                     probed = _np.isin(cid_vals, q_cids[qi])
                     if not probed.any():
                         continue
-                    ids = pdf[id_col].values[probed]
+                    ids = b.column(id_col).filter(_pa.array(probed))
                     csel = [s[probed] for s in sel]
                 else:
-                    ids = pdf[id_col].values
+                    ids = b.column(id_col)
                     csel = sel
                 rows = len(ids)
                 if q_short[qi]:
-                    adc = _np.full(rows, _np.nan)
+                    adc = _pa.nulls(rows, _pa.float64())
                 else:
                     q = qvecs[qi]
-                    adc = None
+                    acc = None
                     for j in range(mm):
                         dot = _xc.row_dots(csel[j], q[j * sub : (j + 1) * sub])
-                        adc = dot if adc is None else adc + dot
-                yield _pd.DataFrame(
-                    {"query_id": qid, id_col: ids, "adc": adc}
+                        acc = dot if acc is None else acc + dot
+                    adc = _pa.array(acc, type=_pa.float64())
+                yield _pa.RecordBatch.from_arrays(
+                    [_pa.repeat(_pa.scalar(qid, type=qid_arrow), rows), ids, adc],
+                    names=["query_id", id_col, "adc"],
                 )
 
-    return codes.select(*in_cols).mapInPandas(_scan, schema=out_schema)
+    return codes.select(*in_cols).mapInArrow(_scan, schema=out_schema)
 
 
 def _pq_encode(
@@ -2238,14 +2095,11 @@ def _pq_encode(
     m: int,
     sub_dim: int,
     id_col: str,
-    encode_mode: str,
 ) -> DataFrame:
     """(id, code0..code{m-1}) from the normalized corpus ``cn`` — the
-    fold/matmul encode (tie rule: first minimum -> lowest cid). The
-    "vector" mode encodes the raw corpus in ``_encode_vector``, which is
-    bit-identical to "fold"."""
-    if encode_mode == "matmul":
-        return _pq_encode_matmul(cn, books, m, sub_dim, id_col)
+    fold encode (tie rule: first minimum -> lowest cid). The "vector"
+    mode encodes the raw corpus in ``_encode_vector``, which is
+    bit-identical."""
     code_cols = []
     for j in range(m):
         off = j * sub_dim
@@ -2276,19 +2130,20 @@ def _coded_corpus(
 ) -> DataFrame:
     """(id, code0..code{m-1}[, cid]) for the raw ``corpus`` — the encode
     shared by pq_topk, ivfpq_topk, build_pq_index and extend_pq_index.
-    "vector" is the one map-only kernel; fold and matmul encode the
-    normalized corpus and, given ``coarse``, join the list assignment on
-    id."""
+    "vector" is the one map-only kernel; "fold" encodes the normalized
+    corpus and, given ``coarse``, joins the list assignment on id."""
     if encode_mode == "vector":
         return _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
     m = len(books)
     codes = _pq_encode(
-        _normalized(corpus, id_col, vec_col, dim), books, m, dim // m, id_col,
-        encode_mode,
+        _normalized(corpus, id_col, vec_col, dim), books, m, dim // m, id_col
     )
     if coarse is None:
         return codes
-    c_lists = _coarse_assign(corpus, coarse, encode_mode, id_col, vec_col, dim)
+    c_lists = _nearest_fold(
+        corpus.select(F.col(id_col), _as_double(vec_col).alias("v")),
+        coarse, id_col, dim, 1,
+    ).select(F.col(id_col), "cid")
     return codes.join(c_lists, on=id_col)
 
 
@@ -2301,7 +2156,11 @@ def _coded_corpus(
 # whose requested training regime differs from how the stored books were
 # actually fit (r11 advice — silently serving a differently-trained index
 # is the wrong-answer class).
-PQ_INDEX_VERSION = 2
+# v3: meta drops ``encode_mode``. Every encode mode left ("fold",
+# "vector") writes bit-identical artifacts, so the field carried no
+# information; a v2 index may hold inexact BLAS-encoded codes and is
+# refused.
+PQ_INDEX_VERSION = 3
 
 
 def build_pq_index(
@@ -2339,7 +2198,9 @@ def build_pq_index(
     as the data at 100 TB — no driver-local files):
 
     - ``path/meta``       one row: version, kind, m/n_codes/sub_dim/dim,
-      n_lists, encode_mode — read back for compatibility validation.
+      n_lists, id_col and the training knobs — read back for
+      compatibility validation. ``encode_mode`` is not stored: both
+      modes write bit-identical artifacts.
     - ``path/codebooks``  (sub, cid, cv array<double>) m*n_codes rows.
     - ``path/coarse``     (cid, cv array<double>) n_lists rows (IVF only).
     - ``path/codes``      (id, code0..code{m-1}[, cid]); the IVF form is
@@ -2357,10 +2218,7 @@ def build_pq_index(
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
         raise ValueError(f"dim={dim} must be divisible by m={m}")
-    if encode_mode not in ("fold", "matmul", "vector"):
-        raise ValueError(
-            f"encode_mode must be 'fold', 'matmul' or 'vector', got {encode_mode!r}"
-        )
+    _check_mode("encode_mode", encode_mode)
     if n_lists is not None and n_lists < 1:
         raise ValueError(f"n_lists must be >= 1, got {n_lists}")
     sub_dim = dim // m
@@ -2420,7 +2278,6 @@ def build_pq_index(
         "sub_dim": sub_dim,
         "dim": dim,
         "n_lists": n_lists if n_lists is not None else 0,
-        "encode_mode": encode_mode,
         "id_col": id_col,
         "iterations": iterations,
         "sample_num": sample_num,
@@ -2575,9 +2432,7 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     if n_new == 0:
         return 0
 
-    codes = _coded_corpus(
-        fresh, books, coarse, meta["encode_mode"], id_col, vec_col, dim
-    )
+    codes = _coded_corpus(fresh, books, coarse, "vector", id_col, vec_col, dim)
     if meta["kind"] == "ivfpq":
         codes.write.mode("append").partitionBy("cid").parquet(f"{path}/codes")
     else:
@@ -2830,20 +2685,17 @@ def _check_index_meta(
     iterations: int | None = None,
     sample_num: int | None = None,
     sample_den: int | None = None,
-    encode_mode: str | None = None,
     coarse_sample_num: int | None = None,
     coarse_sample_den: int | None = None,
 ) -> None:
     """A stored index silently serving different hyper-parameters than
     the caller asked for is the wrong-answer class — raise instead. That
     includes the TRAINING knobs (r11 advice): the stored codebooks were
-    fit with a specific sampling / iteration / encode regime; a caller
-    requesting a different one would get results trained differently
-    than requested while the docstrings promise bit-identical-to-rebuild
-    serving. "fold" and "vector" encode modes are ONE equivalence class
-    (round 15): the vector kernels reproduce the fold's IEEE order
-    exactly, so their artifacts are bit-identical and interchangeable —
-    only "matmul" (BLAS summation order) stays a distinct regime."""
+    fit with a specific sampling / iteration regime; a caller requesting
+    a different one would get results trained differently than
+    requested while the docstrings promise bit-identical-to-rebuild
+    serving. The encode mode is not a knob: "fold" and "vector" write
+    bit-identical artifacts, so either serves any index."""
     got = (meta["kind"], meta["m"], meta["n_codes"], meta["dim"])
     want = (kind, m, n_codes, dim)
     if got != want:
@@ -2851,12 +2703,10 @@ def _check_index_meta(
             f"persisted index (kind, m, n_codes, dim)={got} does not match "
             f"requested {want}; rebuild the index or match the parameters"
         )
-    exact_modes = {"fold", "vector"}
     knobs = {
         "iterations": iterations,
         "sample_num": sample_num,
         "sample_den": sample_den,
-        "encode_mode": encode_mode,
         "coarse_sample_num": coarse_sample_num,
         "coarse_sample_den": coarse_sample_den,
     }
@@ -2864,8 +2714,6 @@ def _check_index_meta(
         if val is None:
             continue
         stored = meta.get(key)
-        if key == "encode_mode" and stored in exact_modes and val in exact_modes:
-            continue
         if stored != val:
             raise ValueError(
                 f"persisted index was trained with {key}={stored!r}, "
@@ -2875,46 +2723,102 @@ def _check_index_meta(
             )
 
 
-def _coarse_assign(
+def _adc_fold(
+    paired: DataFrame, books: list[list[list[float]]], sub_dim: int, id_col: str
+) -> DataFrame:
+    """The fold mode's ADC scan: (query_id, id, adc) for code rows paired
+    with their query's ``qvn``, adc = sum_j dot(q_sub_j,
+    codebook_j[code_j]) as the JVM chain in fixed j order (literal
+    codebook arrays, plan O(n_codes))."""
+    adc: Column | None = None
+    for j, book in enumerate(books):
+        book_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
+        contrib = _dot_unrolled(
+            F.col("qvn"),
+            F.element_at(book_lit, F.col(f"code{j}") + 1),
+            sub_dim,
+            j * sub_dim,
+        )
+        adc = contrib if adc is None else adc + contrib
+    return paired.select("query_id", F.col(id_col), adc.alias("adc"))
+
+
+def _cut_and_rerank(
+    scored: DataFrame,
     corpus: DataFrame,
-    coarse: list[list[float]],
-    encode_mode: str,
+    queries: DataFrame,
+    k: int,
+    cand: int,
+    shards: int,
     id_col: str,
     vec_col: str,
     dim: int,
 ) -> DataFrame:
-    """(id, cid) — nearest coarse centroid per corpus vector (cosine,
-    ties to lowest cid) in fold (broadcast centroid table + window) or
-    matmul (Arrow argmax, BLAS) mode, for ``_coded_corpus``. The "vector"
-    mode assigns inside the encode scan (``_encode_vector``)."""
-    if encode_mode == "matmul":
-        return _assign_matmul(
-            corpus.select(F.col(id_col), _as_double(vec_col).alias("v")),
-            coarse,
+    """pq_topk/ivfpq_topk's shared tail: the per-query top-``cand`` ADC
+    candidates, exact-reranked to the final (query_id, id, cos, rank)."""
+    # two-phase candidate cut: per-(query, shard) top-cand, then global
+    # per-query top-cand over the <= shards*cand survivors — identical
+    # result to a flat per-query window (every global top-cand row is in
+    # its shard's top-cand), without the one-task-per-query funnel.
+    sharded = scored.withColumn(
+        "__shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(shards)))
+    )
+    w1 = Window.partitionBy("query_id", "__shard").orderBy(
+        F.col("adc").desc(), F.col(id_col).asc()
+    )
+    w2 = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col(id_col).asc())
+    cands = (
+        sharded.withColumn("r1", F.row_number().over(w1))
+        .where(F.col("r1") <= cand)
+        .withColumn("r2", F.row_number().over(w2))
+        .where(F.col("r2") <= cand)
+        .select("query_id", id_col)
+    )
+
+    # exact rerank: candidates x queries rows only, vectors joined back by
+    # id. Norms take the same zero-norm->1 guard _normalized applies, so
+    # an all-zero vector reranks at cos 0 instead of NaN (NaN sorts ABOVE
+    # every real cosine under DESC and would hijack rank 1); the twin's
+    # rerank CTE mirrors the CASE.
+    zn = lambda c: F.when(c == 0, F.lit(1.0)).otherwise(c)  # noqa: E731
+    c_vec = corpus.select(F.col(id_col), _as_double(vec_col).alias("cv")).withColumn(
+        "cn2", zn(_norm(F.col("cv"), dim))
+    )
+    q_vec = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+    ).withColumn("qn2", zn(_norm(F.col("qv"), dim)))
+    exact = (
+        cands.join(c_vec, on=id_col)
+        .join(F.broadcast(q_vec), on="query_id")
+        .select(
+            "query_id",
             id_col,
-            dim,
-        ).select(F.col(id_col), "cid")
-    spark = corpus.sparkSession
-    cent_df = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(coarse)], "cid int, cv array<double>"
-        ).withColumn("ncv", _norm(F.col("cv"), dim))
-    )
-    c_raw = corpus.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "nv", _norm(F.col("v"), dim)
-    )
-    w_assign = Window.partitionBy(id_col).orderBy(F.col("cd").desc(), F.col("cid"))
-    return (
-        c_raw.crossJoin(cent_df)
-        .withColumn(
-            "cd",
-            _dot_unrolled(F.col("v"), F.col("cv"), dim)
-            / (F.col("nv") * F.col("ncv")),
+            (
+                _dot_unrolled(F.col("qv"), F.col("cv"), dim)
+                / (F.col("qn2") * F.col("cn2"))
+            ).alias("cos"),
         )
-        .withColumn("rk", F.row_number().over(w_assign))
-        .where(F.col("rk") == 1)
-        .select(F.col(id_col), "cid")
     )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
+    return exact.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+# Largest query set a pq_topk/ivfpq_topk call serves. The set is
+# collected to the driver and shipped in every scan task's closure, so it
+# must stay small; the largest one any caller passes today is 50.
+MAX_SERVE_QUERIES = 1024
+
+
+def _collect_bounded(df: DataFrame, bound: int, what: str) -> list:
+    """``df.collect()`` for a serve-path set that is small by contract;
+    more than ``bound`` rows raises instead of shipping it to every task."""
+    rows = df.collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"{what} has {len(rows)} rows, more than the serve-path maximum "
+            f"of {bound} (MAX_SERVE_QUERIES queries); split the query batch"
+        )
+    return rows
 
 
 def pq_topk(
@@ -2967,15 +2871,18 @@ def pq_topk(
     hash-matches, like s3/d8.
 
     ``encode_mode="vector"`` (the DEFAULT): each Lloyd round, the encode
-    and the ADC scan run as map-only Arrow kernels whose dimension-loop
-    accumulation keeps the fold's exact IEEE order (``_lloyd_kernel``,
+    and the ADC scan run as map-only Arrow kernels (``_lloyd_kernel``,
     ``_encode_vector``, ``_adc_scan_vector``) — BIT-IDENTICAL to the
-    fold (oracle-safe) with plan size O(1) in ``n_codes``.
-    ``encode_mode="matmul"`` (the d8 assign_mode pattern) is
-    the BLAS variant: one matmul per batch, NOT bit-exact in the last ulp
-    (numpy pairwise/SIMD summation); fold/matmul final-result equality on
-    the test fixture is asserted. ``encode_mode="fold"`` is the legacy
-    pure-JVM form (literal plan chains, O(n_codes) plan size).
+    fold (oracle-safe) with plan size O(1) in ``n_codes``. The argmins
+    are ``exact_chains.l2_argmin``: one BLAS product per batch and
+    subspace, certified by a float error bound, the dimension-loop chain
+    rerun on the rows it cannot certify — so the PQ paper's
+    k*=256 codebooks run at BLAS speed on this exact path.
+    ``encode_mode="fold"`` is the pure-JVM reference (literal plan
+    chains, O(n_codes) plan size).
+
+    The query set is collected to the driver for the scan kernel's
+    closure: more than ``MAX_SERVE_QUERIES`` queries raise.
 
     ``index_path`` (r10 verdict #3): serve from a ``build_pq_index``
     artifact instead of re-training — codebooks load driver-side
@@ -2996,10 +2903,7 @@ def pq_topk(
         raise ValueError(f"k must be >= 1, got {k}")
     if sample_num < 1 or sample_den < 1 or sample_num > sample_den:
         raise ValueError("sample fraction must satisfy 1 <= sample_num <= sample_den")
-    if encode_mode not in ("fold", "matmul", "vector"):
-        raise ValueError(
-            f"encode_mode must be 'fold', 'matmul' or 'vector', got {encode_mode!r}"
-        )
+    _check_mode("encode_mode", encode_mode)
     cand = 4 * k if candidates is None else int(candidates)
     if cand < k:
         raise ValueError(f"candidates={cand} must be >= k={k}")
@@ -3012,7 +2916,6 @@ def pq_topk(
             iterations=iterations,
             sample_num=sample_num,
             sample_den=sample_den,
-            encode_mode=encode_mode,
         )
         if meta["id_col"] != id_col:
             raise ValueError(
@@ -3044,7 +2947,7 @@ def pq_topk(
         F.col(id_col).alias("query_id"), F.col("vn").alias("qvn")
     )
     # ADC: adc = sum_j dot(q_sub_j, codebook_j[code_j]) in fixed j order.
-    # vector/matmul mode (round 16, r15 verdict #5): ONE Arrow kernel
+    # vector mode (round 16, r15 verdict #5): ONE Arrow kernel
     # with the codebooks and the (small, already-driver-materialized)
     # query set in the task closure — replaces the m broadcast joins
     # that attached centroid payloads to every code row, the query
@@ -3053,72 +2956,21 @@ def pq_topk(
     # kernel's dimension-loop order (see _adc_scan_vector). fold mode
     # keeps the literal-array element_at JVM form (plan O(n_codes)) as
     # the pure-JVM reference implementation.
-    if encode_mode in ("matmul", "vector"):
-        q_rows = [(r["query_id"], r["qvn"]) for r in qn.collect()]
+    if encode_mode == "vector":
+        q_rows = [
+            (r["query_id"], r["qvn"])
+            for r in _collect_bounded(qn, MAX_SERVE_QUERIES, "query set")
+        ]
         scored = _adc_scan_vector(
             codes, books, q_rows, m, sub_dim, id_col, dim,
             qn.schema["query_id"].dataType.simpleString(),
         )
     else:
-        adc: Column | None = None
-        paired = codes.crossJoin(F.broadcast(qn))
-        for j in range(m):
-            off = j * sub_dim
-            book_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in books[j]])
-            contrib = _dot_unrolled(
-                F.col("qvn"),
-                F.element_at(book_lit, F.col(f"code{j}") + 1),
-                sub_dim,
-                off,
-            )
-            adc = contrib if adc is None else adc + contrib
-        scored = paired.select("query_id", F.col(id_col), adc.alias("adc"))
+        scored = _adc_fold(codes.crossJoin(F.broadcast(qn)), books, sub_dim, id_col)
 
-    # two-phase candidate cut: per-(query, shard) top-cand, then global
-    # per-query top-cand over the <= shards*cand survivors — identical
-    # result to a flat per-query window (every global top-cand row is in
-    # its shard's top-cand), without the one-task-per-query funnel.
-    sharded = scored.withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(shards)))
+    return _cut_and_rerank(
+        scored, corpus, queries, k, cand, shards, id_col, vec_col, dim
     )
-    w1 = Window.partitionBy("query_id", "__shard").orderBy(
-        F.col("adc").desc(), F.col(id_col).asc()
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col(id_col).asc())
-    cands = (
-        sharded.withColumn("r1", F.row_number().over(w1))
-        .where(F.col("r1") <= cand)
-        .withColumn("r2", F.row_number().over(w2))
-        .where(F.col("r2") <= cand)
-        .select("query_id", id_col)
-    )
-
-    # exact rerank: candidates x queries rows only, vectors joined back by
-    # id. Norms take the same zero-norm->1 guard _normalized applies, so
-    # an all-zero vector reranks at cos 0 instead of NaN (NaN sorts ABOVE
-    # every real cosine under DESC and would hijack rank 1); the twin's
-    # rerank CTE mirrors the CASE.
-    zn = lambda c: F.when(c == 0, F.lit(1.0)).otherwise(c)  # noqa: E731
-    c_vec = corpus.select(F.col(id_col), _as_double(vec_col).alias("cv")).withColumn(
-        "cn2", zn(_norm(F.col("cv"), dim))
-    )
-    q_vec = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn2", zn(_norm(F.col("qv"), dim)))
-    exact = (
-        cands.join(c_vec, on=id_col)
-        .join(F.broadcast(q_vec), on="query_id")
-        .select(
-            "query_id",
-            id_col,
-            (
-                _dot_unrolled(F.col("qv"), F.col("cv"), dim)
-                / (F.col("qn2") * F.col("cn2"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def ivfpq_topk(
@@ -3167,19 +3019,17 @@ def ivfpq_topk(
     the scan row stays m small ints. The
     memory story is unchanged (codes + list id per vector); recall is
     tuned by n_probe like every published IVF deployment. The economics
-    are index-build vs per-query (measured, tier-2 200k / n_lists 64 /
-    n_probe 8, matmul): the coarse assignment + list join are a FIXED
-    ~10 s build, and the per-query marginal cost drops ~3x (0.56 ->
-    0.19 s/query), crossover ~34 queries — BELOW that batch size use
-    flat ``pq_topk`` (its 5-query bench entry beats s6's there; the
-    t2_s5/s6 *_q50_* pair records the regime where IVF earns its build). Coarse
-    training/assignment cost is n_lists-proportional — the
-    ``encode_mode="vector"`` DEFAULT (round 15) routes BOTH the coarse
-    Lloyd/assignment and the PQ encode through the Arrow-batched numpy
-    kernels whose dimension-loop accumulation is BIT-IDENTICAL to the
-    fold (oracle-safe at paper-scale list counts; see ``pq_topk``);
-    ``"matmul"`` is the BLAS variant (not bit-exact in the last ulp),
-    ``"fold"`` the legacy pure-JVM form. ``coarse_sample_num/den``
+    are index-build vs per-query: training, encoding and list
+    assignment are a fixed build cost that ``build_pq_index`` pays once,
+    and each query then scans ~n_probe/n_lists of the codes — for small
+    batches without an index, flat ``pq_topk`` is cheaper (the
+    t2_s5/s6 *_q50_* bench pair records the regime where IVF earns its
+    build). Coarse training/assignment cost is n_lists-proportional —
+    the ``encode_mode="vector"`` DEFAULT routes BOTH the coarse
+    Lloyd/assignment and the PQ encode through the Arrow kernels, whose
+    certified BLAS argmax/argmin is BIT-IDENTICAL to the fold
+    (oracle-safe at paper-scale list counts; see ``pq_topk``);
+    ``"fold"`` is the pure-JVM reference. ``coarse_sample_num/den``
     trains the coarse quantizer on the d8 md5
     subsample instead of the full corpus (every Lloyd round otherwise
     scans all vectors; FAISS likewise trains IVF on a sample). Final
@@ -3203,6 +3053,10 @@ def ivfpq_topk(
     the rebuild form; ``ivfpq_topk_sql`` remains the full-procedure
     oracle. ``corpus`` still required for the exact rerank fetch-back.
 
+    The query set and its (query, list) probe pairs are collected to the
+    driver: more than ``MAX_SERVE_QUERIES`` queries (or that many times
+    ``n_probe`` probe pairs) raise.
+
     Reference attribution: the reference has no vector search at all
     (SURVEY §2.6); s1-s6 exist for the LLM-pipeline mandate."""
     if n_lists < 1:
@@ -3211,10 +3065,7 @@ def ivfpq_topk(
         raise ValueError(
             f"n_probe must be in [1, n_lists={n_lists}], got {n_probe}"
         )
-    if encode_mode not in ("fold", "matmul", "vector"):
-        raise ValueError(
-            f"encode_mode must be 'fold', 'matmul' or 'vector', got {encode_mode!r}"
-        )
+    _check_mode("encode_mode", encode_mode)
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
@@ -3245,7 +3096,6 @@ def ivfpq_topk(
             iterations=iterations,
             sample_num=sample_num,
             sample_den=sample_den,
-            encode_mode=encode_mode,
             coarse_sample_num=coarse_sample_num,
             coarse_sample_den=coarse_sample_den,
         )
@@ -3303,51 +3153,36 @@ def ivfpq_topk(
             corpus, books, coarse, encode_mode, id_col, vec_col, dim
         )
 
-    cent_df = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(coarse)], "cid int, cv array<double>"
-        ).withColumn("ncv", _norm(F.col("cv"), dim))
-    )
-
     # ---- query probes: n_probe nearest coarse lists per query ----------
-    q_raw = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v")
-    ).withColumn("nv", _norm(F.col("v"), dim))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cd").desc(), F.col("cid")
-    )
-    q_probes = (
-        q_raw.crossJoin(cent_df)
-        .withColumn(
-            "cd",
-            _dot_unrolled(F.col("v"), F.col("cv"), dim)
-            / (F.col("nv") * F.col("ncv")),
-        )
-        .withColumn("rk", F.row_number().over(w_probe))
-        .where(F.col("rk") <= n_probe)
-        .select("query_id", "cid")
-    )
+    q_probes = _nearest_fold(
+        queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v")),
+        coarse, "query_id", dim, n_probe,
+    ).select("query_id", "cid")
     qn = _normalized(queries, id_col, vec_col, dim).select(
         F.col(id_col).alias("query_id"), F.col("vn").alias("qvn")
     )
 
     # ---- ADC over probed lists only (vs s5's full crossJoin) -----------
-    # vector/matmul mode (round 16, r15 verdict #5): the probe pairs are
+    # vector mode (round 16, r15 verdict #5): the probe pairs are
     # O(queries × n_probe) and driver-bounded (index mode already
     # collected them for the static IN), so the probed-list restriction
     # moves INTO the Arrow kernel alongside the codebooks — one
     # MapInPandas replaces the m centroid broadcast joins, the
     # probes-by-cid join and the codegen ADC chain, bit-identically
     # (see _adc_scan_vector).
-    if encode_mode in ("matmul", "vector"):
-        probe_rows = q_probes.collect()
+    max_probes = MAX_SERVE_QUERIES * n_probe
+    if encode_mode == "vector":
+        probe_rows = _collect_bounded(q_probes, max_probes, "probe set")
         if index_path is not None:
             # static probe pruning: the probed cid set is known BEFORE
             # the scan, so the cid-partitioned code table prunes to
             # exactly the probed directories at planning time.
             probed_cids = sorted({int(r["cid"]) for r in probe_rows})
             coded_lists = coded_lists.where(F.col("cid").isin(probed_cids))
-        q_rows = [(r["query_id"], r["qvn"]) for r in qn.collect()]
+        q_rows = [
+            (r["query_id"], r["qvn"])
+            for r in _collect_bounded(qn, MAX_SERVE_QUERIES, "query set")
+        ]
         qi_by_id = {qid: i for i, (qid, _) in enumerate(q_rows)}
         scored = _adc_scan_vector(
             coded_lists, books, q_rows, m, sub_dim, id_col, dim,
@@ -3359,62 +3194,19 @@ def ivfpq_topk(
     else:
         probes = F.broadcast(q_probes.join(qn, on="query_id"))
         if index_path is not None:
-            probed_cids = sorted({r["cid"] for r in q_probes.collect()})
+            probed_cids = sorted(
+                {r["cid"] for r in _collect_bounded(q_probes, max_probes, "probe set")}
+            )
             coded_lists = coded_lists.where(
                 F.col("cid").isin([int(c) for c in probed_cids])
             )
-        adc: Column | None = None
-        paired = coded_lists.join(probes, on="cid")
-        for j in range(m):
-            off = j * sub_dim
-            book_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in books[j]])
-            contrib = _dot_unrolled(
-                F.col("qvn"),
-                F.element_at(book_lit, F.col(f"code{j}") + 1),
-                sub_dim,
-                off,
-            )
-            adc = contrib if adc is None else adc + contrib
-        scored = paired.select("query_id", F.col(id_col), adc.alias("adc"))
-
-    # ---- s5's two-phase candidate cut + exact rerank --------------------
-    sharded = scored.withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(shards)))
-    )
-    w1 = Window.partitionBy("query_id", "__shard").orderBy(
-        F.col("adc").desc(), F.col(id_col).asc()
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col(id_col).asc()
-    )
-    cands = (
-        sharded.withColumn("r1", F.row_number().over(w1))
-        .where(F.col("r1") <= cand)
-        .withColumn("r2", F.row_number().over(w2))
-        .where(F.col("r2") <= cand)
-        .select("query_id", id_col)
-    )
-    zn = lambda c: F.when(c == 0, F.lit(1.0)).otherwise(c)  # noqa: E731
-    c_vec = corpus.select(F.col(id_col), _as_double(vec_col).alias("cv")).withColumn(
-        "cn2", zn(_norm(F.col("cv"), dim))
-    )
-    q_vec = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn2", zn(_norm(F.col("qv"), dim)))
-    exact = (
-        cands.join(c_vec, on=id_col)
-        .join(F.broadcast(q_vec), on="query_id")
-        .select(
-            "query_id",
-            id_col,
-            (
-                _dot_unrolled(F.col("qv"), F.col("cv"), dim)
-                / (F.col("qn2") * F.col("cn2"))
-            ).alias("cos"),
+        scored = _adc_fold(
+            coded_lists.join(probes, on="cid"), books, sub_dim, id_col
         )
+
+    return _cut_and_rerank(
+        scored, corpus, queries, k, cand, shards, id_col, vec_col, dim
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def _l2_sql(a: str, b: str, n: int, a_off: int = 0) -> str:

@@ -548,7 +548,12 @@ def cascade_upsert(
     batch, so a replayed or re-delivered batch rewrites byte-identical
     gap rows; and the coarse-frame rollups below read only real minutes,
     so HOUR/DAY/MONTH stay the rollup of real trades whether or not gaps
-    are materialized. Per-batch
+    are materialized. That holds with ``fill_gaps=False`` too, on
+    purpose: rollups always leave ``is_gap`` rows out, so running this
+    hook without the flag over a table an earlier gap-filling stream
+    maintained republishes coarse candles from the real minutes only —
+    where the pre-fusion code folded the carried-OHLC gap rows into the
+    coarse open/high/low/close. Per-batch
     cost is bounded by the batch's affected window, NOT the stream's
     lifetime (r11 verdict #1 — see ``_gap_rows_for_window``); the
     batched/finalize sink remains the high-throughput path.

@@ -502,30 +502,28 @@ def test_pq_rejects_nonpositive_m(embs):
         pq_topk_sql(m=-4)
 
 
-def test_pq_matmul_encode_equivalent_to_fold(spark, embs):
-    """encode_mode='matmul' (the paper-scale Arrow path) must produce the
-    SAME final top-k as the fold on the random fixture: the ADC dot chain
-    is the identical Spark expression in both modes, so the results can
-    only differ if a numpy argmin flips an exact sub-distance tie —
-    impossible on this continuous data."""
+def test_pq_vector_encode_equivalent_to_fold(spark, embs):
+    """The default encode (certified BLAS argmin, Arrow ADC scan) must
+    produce the SAME final top-k rows, cos doubles included, as the
+    pure-JVM fold at k=5."""
     from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
 
     queries = embs.where(F.col("vec_id") < 5)
-    fold = sorted(map(tuple, pq_topk(embs, queries, k=5, n_codes=8).collect()))
-    matmul = sorted(
+    vect = sorted(map(tuple, pq_topk(embs, queries, k=5, n_codes=8).collect()))
+    fold = sorted(
         map(
             tuple,
-            pq_topk(embs, queries, k=5, n_codes=8, encode_mode="matmul").collect(),
+            pq_topk(embs, queries, k=5, n_codes=8, encode_mode="fold").collect(),
         )
     )
-    assert fold == matmul
+    assert vect == fold
 
 
-def test_pq_matmul_runs_at_paper_scale_codebooks(spark, embs):
+def test_pq_runs_at_paper_scale_codebooks(spark, embs):
     """k*=256 codes per subspace (the PQ paper's standard configuration)
-    must be RUNNABLE in matmul mode — the fold's literal plan is not.
-    n_codes=256 > the 500-vector fixture's 1/2 sample, so train on the
-    full corpus; self-hit at rank 1 proves the whole path works."""
+    must be RUNNABLE on the default exact path — the fold's literal plan
+    is not. n_codes=256 > the 500-vector fixture's 1/2 sample, so train
+    on the full corpus; self-hit at rank 1 proves the whole path works."""
     from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
 
     out = pq_topk(
@@ -534,7 +532,6 @@ def test_pq_matmul_runs_at_paper_scale_codebooks(spark, embs):
         k=3,
         m=4,
         n_codes=256,
-        encode_mode="matmul",
     )
     firsts = out.where(F.col("rank") == 1).collect()
     assert len(firsts) == 3
@@ -688,22 +685,22 @@ def test_ivfpq_recall_vs_exact(spark, embs):
         assert r["vec_id"] == r["query_id"] and abs(r["cos"] - 1.0) < 1e-9
 
 
-def test_ivfpq_matmul_equivalent_to_fold(spark, embs):
+def test_ivfpq_vector_equivalent_to_fold(spark, embs):
     from stock_chart_kafka_streams_spark.operators.similarity import ivfpq_topk
 
     queries = embs.where(F.col("vec_id") < 3)
-    fold = sorted(
+    vect = sorted(
         map(tuple, ivfpq_topk(embs, queries, k=5, n_lists=4, n_probe=2).collect())
     )
-    mat = sorted(
+    fold = sorted(
         map(
             tuple,
             ivfpq_topk(
-                embs, queries, k=5, n_lists=4, n_probe=2, encode_mode="matmul"
+                embs, queries, k=5, n_lists=4, n_probe=2, encode_mode="fold"
             ).collect(),
         )
     )
-    assert fold == mat
+    assert vect == fold
 
 
 def test_ivfpq_rejects_bad_params(embs):

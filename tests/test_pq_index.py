@@ -392,9 +392,10 @@ def test_extend_probe_pushes_id_range_to_scan(spark, embs, tmp_path):
 
 def test_index_training_knob_mismatch_raises(spark, embs, queries, tmp_path):
     """r11 advice: serving must refuse an index trained with different
-    sampling / iterations / encode_mode than the caller requested —
-    silently serving a differently-trained index is the wrong-answer
-    class the (m, n_codes, dim) check already guards."""
+    sampling / iterations than the caller requested — silently serving a
+    differently-trained index is the wrong-answer class the (m, n_codes,
+    dim) check already guards. The encode mode is not a knob: the fold
+    serves a vector-built index."""
     path = str(tmp_path / "knob_idx")
     build_pq_index(
         embs, path, m=4, n_codes=8, iterations=2, sample_num=1, sample_den=2
@@ -411,12 +412,29 @@ def test_index_training_knob_mismatch_raises(spark, embs, queries, tmp_path):
             embs, queries, k=5, m=4, n_codes=8, iterations=3,
             sample_num=1, sample_den=2, index_path=path,
         )
-    with pytest.raises(ValueError, match="encode_mode"):
-        pq_topk(
-            embs, queries, k=5, m=4, n_codes=8, iterations=2,
-            sample_num=1, sample_den=2, encode_mode="matmul",
-            index_path=path,
-        )
+    pq_topk(
+        embs, queries, k=5, m=4, n_codes=8, iterations=2,
+        sample_num=1, sample_den=2, encode_mode="fold", index_path=path,
+    ).collect()
+
+
+def test_v2_index_meta_is_refused(spark, embs, queries, tmp_path):
+    """A v2 index may hold codes from the deleted inexact BLAS encode
+    (its meta carried ``encode_mode``): v3 serving refuses it."""
+    path = str(tmp_path / "v2_idx")
+    meta = build_pq_index(embs, path, m=4, n_codes=8, iterations=2)
+    assert meta["version"] == 3 and "encode_mode" not in meta
+    old = dict(meta, version=2, encode_mode="matmul")
+    spark.createDataFrame(
+        [tuple(old.values())],
+        ", ".join(
+            f"{k} {'string' if isinstance(v, str) else 'int'}" for k, v in old.items()
+        ),
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    with pytest.raises(ValueError, match="version 2"):
+        read_pq_index(spark, path)
+    with pytest.raises(ValueError, match="version 2"):
+        pq_topk(embs, queries, k=5, m=4, n_codes=8, index_path=path)
 
 
 def test_blue_green_refresh_serves_without_interruption(

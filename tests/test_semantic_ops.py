@@ -259,28 +259,21 @@ def test_mixture_sample_rejects_bad_params(spark):
 
 
 # ---------------------------------------------------------------------------
-# round 9: matmul assignment, verify prune, cap-mirrored twin, stage stats
+# round 9: vector == fold, verify prune, cap-mirrored twin, stage stats
 # ---------------------------------------------------------------------------
 
 
-def test_semantic_dedup_matmul_equivalent_to_fold(spark, planted):
-    """assign_mode='matmul' (the paper-scale Arrow matmul path) must pick
-    the same clusters and the same survivors as the oracle-exact fold on
-    the planted fixture — equivalence modulo argmax ties, which the
-    random corpus does not produce."""
+def test_semantic_dedup_vector_equivalent_to_fold(spark, planted):
+    """The default assignment (certified BLAS argmax) must pick the same
+    clusters, survivors and cent_cos doubles as the pure-JVM fold on the
+    planted fixture."""
     from stock_chart_kafka_streams_spark.operators.similarity import semantic_dedup
 
+    vect = sorted(map(tuple, semantic_dedup(planted, threshold=0.99).collect()))
     fold = sorted(
-        (r["vec_id"], r["cid"])
-        for r in semantic_dedup(planted, threshold=0.99).collect()
+        map(tuple, semantic_dedup(planted, threshold=0.99, assign_mode="fold").collect())
     )
-    matmul = sorted(
-        (r["vec_id"], r["cid"])
-        for r in semantic_dedup(
-            planted, threshold=0.99, assign_mode="matmul"
-        ).collect()
-    )
-    assert fold == matmul
+    assert vect == fold
 
 
 def test_semantic_dedup_verify_prune_is_lossless(spark, planted):
@@ -359,11 +352,10 @@ def test_semantic_dedup_stats_and_cap_warning(spark):
 
 def test_semantic_dedup_latent_dim_prefix_both_modes(spark):
     """r9 review regression: with dim SMALLER than the physical array
-    width, both assignment modes must (a) agree with each other and
-    (b) actually resolve pairs that are near-dups in the dim-prefix —
-    the unsliced fold used full-width cosines against dim-length trained
-    centroids (null-poisoned zip_with), and the first matmul cut crashed
-    outright."""
+    width, the vector and fold assignment modes must (a) agree with each
+    other bit for bit and (b) actually resolve pairs that are near-dups
+    in the dim-prefix — the unsliced fold once used full-width cosines
+    against dim-length trained centroids (null-poisoned zip_with)."""
     import random
 
     from stock_chart_kafka_streams_spark.operators.similarity import semantic_dedup
@@ -380,18 +372,19 @@ def test_semantic_dedup_latent_dim_prefix_both_modes(spark):
             )
         )
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    vect = sorted(
+        map(tuple, semantic_dedup(vecs, threshold=0.99, n_centroids=3, dim=4).collect())
+    )
     fold = sorted(
-        (r["vec_id"], r["cid"])
-        for r in semantic_dedup(vecs, threshold=0.99, n_centroids=3, dim=4).collect()
+        map(
+            tuple,
+            semantic_dedup(
+                vecs, threshold=0.99, n_centroids=3, dim=4, assign_mode="fold"
+            ).collect(),
+        )
     )
-    matmul = sorted(
-        (r["vec_id"], r["cid"])
-        for r in semantic_dedup(
-            vecs, threshold=0.99, n_centroids=3, dim=4, assign_mode="matmul"
-        ).collect()
-    )
-    assert fold == matmul
-    survivors = {v for v, _ in fold}
+    assert vect == fold
+    survivors = {v for v, _, _ in fold}
     for pid in range(5):
         kept = {pid, 1000 + pid} & survivors
         assert len(kept) == 1, f"prefix pair {pid} kept {kept}"

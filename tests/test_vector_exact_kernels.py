@@ -4,7 +4,7 @@ The optimization round replaced the interpreted HOF folds / literal plan
 chains on the oracle-exact default paths (SRP codes, centroid
 assignment, PQ training + encode) with Arrow-batched numpy kernels that
 accumulate over DIMENSIONS left to right — the claim is not "equivalent
-modulo ties" (the matmul tests' claim) but BIT-IDENTICAL doubles and
+modulo ties" but BIT-IDENTICAL doubles and
 therefore identical oracle hashes. These tests pin that claim at its
 strictest: full row tuples including float values, plus the NaN /
 non-default-dim edges the kernels must mirror from Spark semantics."""
@@ -125,7 +125,7 @@ def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs):
     books_f = _pq_train(cn, 4, 16, 8, 2, "vec_id", "fold")
     books_v = _pq_train(cn, 4, 16, 8, 2, "vec_id", "vector")
     assert books_f == books_v
-    codes_f = _pq_encode(cn, books_f, 4, 16, "vec_id", "fold")
+    codes_f = _pq_encode(cn, books_f, 4, 16, "vec_id")
     # the vector mode encodes the RAW corpus, normalizing inside the kernel
     codes_v = _coded_corpus(embs, books_f, None, "vector", "vec_id", "embedding", 64)
     assert _rows(codes_f) == _rows(codes_v)
@@ -243,7 +243,7 @@ def test_adc_scan_kernel_bit_equals_jvm_chain(spark, embs):
     m, sub_dim, dim = 4, 16, 64
     cn = _normalized(embs, "vec_id", "embedding", dim)
     books = _pq_train(cn, m, sub_dim, 8, 2, "vec_id", "fold")
-    codes = _pq_encode(cn, books, m, sub_dim, "vec_id", "fold")
+    codes = _pq_encode(cn, books, m, sub_dim, "vec_id")
     qn = _normalized(embs.where(F.col("vec_id") < 5), "vec_id", "embedding", dim).select(
         F.col("vec_id").alias("query_id"), F.col("vn").alias("qvn")
     )
@@ -294,26 +294,172 @@ def test_adc_scan_kernel_short_query_is_null(spark, embs):
 
     cn = _normalized(embs, "vec_id", "embedding", 64)
     books = _pq_train(cn, 4, 16, 8, 1, "vec_id", "fold")
-    codes = _pq_encode(cn, books, 4, 16, "vec_id", "fold").limit(3)
+    codes = _pq_encode(cn, books, 4, 16, "vec_id").limit(3)
     out = _adc_scan_vector(
         codes, books, [(99, [1.0] * 8)], 4, 16, "vec_id", 64, "bigint"
     ).collect()
     assert len(out) == 3 and all(r["adc"] is None for r in out)
 
 
-def test_vector_mode_rejected_names_still_raise(spark, embs):
-    from stock_chart_kafka_streams_spark.operators.similarity import (
-        ivf_build_centroids,
-        pq_topk,
-        semantic_dedup,
+def _nan_safe(rows):
+    return sorted(
+        tuple("nan" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in rows
     )
 
-    with pytest.raises(ValueError, match="assign_mode"):
-        semantic_dedup(embs, assign_mode="simd")
-    with pytest.raises(ValueError, match="assign_mode"):
-        ivf_build_centroids(embs, 4, assign_mode="blas")
-    with pytest.raises(ValueError, match="encode_mode"):
-        pq_topk(embs, embs, encode_mode="gpu")
+
+def test_pq_topk_nan_scores_rank_like_the_fold(spark):
+    """A NaN ADC score must stay NaN, which Spark sorts FIRST under the
+    ``adc DESC`` candidate cut; a NULL would sort it last and cut it.
+    Query 1 has a NaN component (every score NaN). Row ``nan_id`` is
+    NaN too and sorts first by md5, so with no Lloyd round it is
+    codebook centroid 0 of every subspace and the only row encoded
+    there: query 0's scores are finite except against it."""
+    import hashlib
+    import random
+
+    from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
+
+    rng = random.Random(3)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(200)]
+    nan_id = min(range(200), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    rows[nan_id][1][7] = float("nan")
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(0, rows[11][1]), (1, [float("nan")] + rows[12][1][1:])],
+        "vec_id long, embedding array<double>",
+    )
+    out = {
+        mode: _nan_safe(
+            pq_topk(
+                corpus, queries, k=5, n_codes=8, iterations=0, shards=1,
+                encode_mode=mode,
+            ).collect()
+        )
+        for mode in ("fold", "vector")
+    }
+    assert out["vector"] == out["fold"]
+    # the NaN row survived the cut and ranks first for the finite query
+    assert (0, nan_id, "nan", 1) in out["vector"]
+
+
+def test_serve_query_set_past_its_bound_raises(spark, embs, monkeypatch):
+    """pq_topk/ivfpq_topk collect the query set (and IVF's probe pairs)
+    to the driver; past ``MAX_SERVE_QUERIES`` they raise instead."""
+    from stock_chart_kafka_streams_spark.operators import similarity as S
+
+    assert S.MAX_SERVE_QUERIES >= 50  # the largest batch any caller serves
+    monkeypatch.setattr(S, "MAX_SERVE_QUERIES", 3)
+    q = embs.where(F.col("vec_id") < 5)
+    with pytest.raises(ValueError, match="query set has 5 rows.*maximum of 3"):
+        S.pq_topk(embs, q, k=2, n_codes=4, iterations=1).collect()
+    with pytest.raises(ValueError, match="set has .* rows.*serve-path maximum"):
+        S.ivfpq_topk(embs, q, k=2, n_lists=2, n_probe=1, n_codes=4, iterations=1)
+    S.pq_topk(embs, q.where(F.col("vec_id") < 3), k=2, n_codes=4, iterations=1).collect()
+
+
+def test_vector_mode_rejected_names_still_raise(spark, embs, tmp_path):
+    """Unknown modes raise before any Spark job runs — and so does
+    "matmul": the inexact BLAS mode was deleted."""
+    from stock_chart_kafka_streams_spark.operators import similarity as S
+
+    assert not hasattr(S, "_assign_matmul") and not hasattr(S, "_pq_encode_matmul")
+    for bad in ("simd", "matmul"):
+        with pytest.raises(ValueError, match="assign_mode must be 'fold' or 'vector'"):
+            S.semantic_dedup(embs, assign_mode=bad)
+        with pytest.raises(ValueError, match="assign_mode"):
+            S.ivf_build_centroids(embs, 4, assign_mode=bad)
+        with pytest.raises(ValueError, match="encode_mode must be 'fold' or 'vector'"):
+            S.pq_topk(embs, embs, encode_mode=bad)
+        with pytest.raises(ValueError, match="encode_mode"):
+            S.ivfpq_topk(embs, embs, encode_mode=bad)
+        with pytest.raises(ValueError, match="encode_mode"):
+            S.build_pq_index(embs, str(tmp_path / "i"), encode_mode=bad)
+
+
+def _near_tie_fixture(d, seeds=(0, 1, 2, 3), n=2000):
+    """Centroids and rows on which a plain BLAS argmax/argmin disagrees
+    with the dimension-loop chain. Per seed: a random c0, a planted exact
+    duplicate of it, and every 1-ulp nudge of one of its components; the
+    rows are c0 with every component moved by up to 64 ulps, so the
+    chain's scores of those centroids tie to within rounding. Edge rows
+    follow: random normals, a NaN row, a zero-norm row and a 1e300 row."""
+    import numpy as np
+
+    cents, rows = [], []
+    for seed in seeds:
+        rng = np.random.default_rng(seed)
+        c0 = rng.normal(size=d)
+        cents += [c0, c0]
+        for j in range(d):
+            for to in (np.inf, -np.inf):
+                c = c0.copy()
+                c[j] = np.nextafter(c[j], to)
+                cents.append(c)
+        rows.append(c0 * (1.0 + rng.integers(-64, 65, size=(n, d)) * 2.0**-52))
+    rng = np.random.default_rng(99)
+    rows += [
+        rng.normal(size=(50, d)),
+        np.full((1, d), np.nan),
+        np.zeros((1, d)),
+        np.full((1, d), 1e300),
+    ]
+    return np.vstack(rows), np.vstack(cents)
+
+
+def _pure_chains(V, C):
+    """The dimension-loop chains alone: (cosine scores, cosine argmax,
+    squared-L2 argmin with NaN as +inf)."""
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators import exact_chains as xc
+
+    nv = np.sqrt(xc.sq_norms(V))
+    S = xc.dots(V, C) / (nv[:, None] * xc.centroid_norms(C)[None, :])
+    D = np.zeros((len(V), len(C)))
+    for i in range(V.shape[1]):
+        diff = V[:, i][:, None] - C[None, :, i]
+        D += diff * diff
+    D[np.isnan(D)] = np.inf
+    return S, S.argmax(axis=1), D.argmin(axis=1)
+
+
+@pytest.mark.parametrize("d", [16, 64])
+def test_exact_chains_certified_argmax_argmin_equal_the_chain(d):
+    """``cos_argmax`` and ``l2_argmin`` score with BLAS and rerun the
+    chain on every row their error bound cannot certify: on a fixture
+    where the plain BLAS winner differs from the chain's, both must
+    still return exactly the chain's cid (and cos bits). A zero-norm or
+    NaN centroid sends every row to the chain."""
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators import exact_chains as xc
+
+    V, C = _near_tie_fixture(d)
+    bad = C.copy()
+    bad[3] = 0.0
+    bad[5, 0] = np.nan
+    rows = np.arange(len(V))
+    with np.errstate(all="ignore"):
+        nv = np.sqrt(xc.sq_norms(V))
+        ncv = xc.centroid_norms(C)
+        blas_cid = ((V @ C.T) / (nv[:, None] * ncv[None, :])).argmax(axis=1)
+        Q = xc.sq_norms(C)[None, :] - 2.0 * (V @ C.T)
+        Q[np.isnan(Q)] = np.inf
+        blas_l2 = Q.argmin(axis=1)
+        for i, cents in enumerate((C, bad)):
+            S, chain_cid, chain_l2 = _pure_chains(V, cents)
+            cid, cos = xc.cos_argmax(V, cents, nv, xc.centroid_norms(cents))
+            l2 = xc.l2_argmin(V, cents)
+            if i == 0:
+                # the fixture is adversarial: plain BLAS picks other winners
+                assert (blas_cid != chain_cid).any()
+                assert (blas_l2 != chain_l2).any()
+            assert cid.dtype == np.int32 and l2.dtype == np.int32
+            assert np.array_equal(cid, chain_cid)
+            # bit equality, NaN included
+            assert np.array_equal(cos.view(np.int64), S[rows, chain_cid].view(np.int64))
+            assert np.array_equal(l2, chain_l2)
 
 
 # ---------------------------------------------------------------------------
