@@ -745,9 +745,9 @@ def _tier2_queries(
 
     # d8 semantic dedup at 50k vectors (the d5 slice), 256 clusters,
     # centroid training on the 1/10 hash-sample — the scale shape: the
-    # Lloyd rounds crossJoin ONLY the sample (full-corpus training
+    # Lloyd rounds scan ONLY the sample (full-corpus training
     # measured 149 s vs 64 s end-to-end at this size), assignment is the
-    # map-side fold argmax, pairs enumerate within clusters (~n x
+    # map-side Arrow argmax kernel, pairs enumerate within clusters (~n x
     # mean-cluster candidates). Timed inclusively (the centroid build
     # and assignment checkpoint run jobs inside the call). BEST-OF-2
     # with per-stage walls since round 9 (r8 verdict #3: it was the
@@ -780,7 +780,7 @@ def _tier2_queries(
     extra["d8_capped_clusters"] = d8_best.get("n_capped_clusters")
 
     # d8 at the PAPER-scale configuration shape (r8 verdict #2): 2048
-    # centroids on the default exact path — the fold would need 2048
+    # centroids on the exact path — a JVM argmax would need 2048
     # literal plan columns (infeasible: plan size/codegen), the Arrow
     # kernel keeps the plan O(1) in k and its certified BLAS argmax keeps
     # the cost per row near one matmul. One Lloyd round on the 1/10
@@ -862,8 +862,8 @@ def _tier2_queries(
     extra["s5_pq_runs_s"] = s5_runs
 
     # s5 at the PQ paper's standard k*=256-per-subspace configuration on
-    # the default exact path (the fold encode would be a 16k-term literal
-    # plan): certified-BLAS argmin encode, Arrow ADC scan. The key keeps
+    # the exact path (a JVM encode would be a 16k-term literal plan):
+    # certified-BLAS argmin encode, Arrow ADC scan. The key keeps
     # its historical "matmul" name so earlier records compare.
     s5m_runs: list[float] = []
     for _ in range(2):

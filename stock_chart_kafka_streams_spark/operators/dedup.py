@@ -203,22 +203,6 @@ def _mh_col(h: Column, i: int) -> Column:
     return (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
 
 
-def minhash_signature(text_col: str = "text", k: int = MINHASH_K) -> list[Column]:
-    """k minhashes as per-row array expressions: one md5 per shingle, then
-    k universal-hash permutations ``(a_i*h + b_i) mod MINHASH_P`` (p ~
-    2^31, see the modulus note above) of the 32-bit base hash.
-
-    NOTE: higher-order array functions fall out of whole-stage codegen;
-    for corpus-scale signatures prefer ``minhash_signature_df`` which
-    explodes the shingles and computes the same mins as a codegen'd hash
-    aggregate (measured ~20x at 500k documents)."""
-    hs = F.transform(shingles(text_col), lambda s: _base_hash(s))
-    return [
-        F.array_min(F.transform(hs, lambda h, i=i: _mh_col(h, i))).alias(f"mh_{i}")
-        for i in range(k)
-    ]
-
-
 def minhash_signature_df(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = MINHASH_K
 ) -> DataFrame:

@@ -2,13 +2,32 @@
 
 Each chain accumulates over DIMENSIONS left to right — one vectorized
 multiply-add per dimension — which is the float order of the JVM's
-unrolled chains (``_dot_unrolled``, ``_l2_unrolled``) and of the DuckDB
-twins' ``list_sum(list_transform(...))``. Elementwise numpy ``*``/``+``/
-``/`` are single correctly-rounded IEEE ops, so every double these return
-is bit-identical to the JVM's. The two argmax/argmin kernels score with
+unrolled chain (``_dot_unrolled``) and of the DuckDB twins'
+``list_sum(list_transform(...))``. Elementwise numpy ``*``/``+``/``/``
+are single correctly-rounded IEEE ops, so every double these return is
+bit-identical to the twin's. The two argmax/argmin kernels score with
 one BLAS product first, whose summation order differs, and keep its
 answer only on rows where a proven error bound shows it cannot differ
 from the chain's (filter and refine, see ``cos_argmax``/``l2_argmin``).
+
+Edge contract. Every kernel built on these chains (the Lloyd rounds,
+the encode, the list assignment, the SRP codes, the IVF query probes)
+ranks as the twins' ``ORDER BY score, cid`` does:
+
+- A short row raises. ``stack_rows`` refuses a vector with fewer than
+  ``dim`` components, as ANSI ``element_at`` does.
+- NaN is the greatest value, as in Spark and DuckDB. A NaN cosine wins
+  the argmax and comes first under ``cos DESC``; a NaN squared-L2
+  distance loses the argmin. ``l2_argmin`` counts it as +inf, so on a
+  row whose every distance is +inf or NaN it picks the lowest such cid
+  where the twin would prefer a +inf one (reachable only with infinite
+  components).
+- Ties go to the lowest cid: ``argmax``/``argmin`` return the first
+  best index, which is ``ORDER BY ..., cid ASC``.
+- An empty batch yields no rows.
+
+These rules are pinned against the twins in
+``tests/test_vector_exact_kernels.py``.
 
 The module imports numpy only. ``similarity.py`` registers it with
 cloudpickle's pickle-by-value, so a kernel closure that calls these

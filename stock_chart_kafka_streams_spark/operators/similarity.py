@@ -15,11 +15,11 @@
   through ``lsh_topk``'s codes first.
 
 All dot products are double-precision left-to-right sums over the
-element order — an unrolled, whole-stage-codegen'd chain for the known
-EMBED_DIM (``_dot_unrolled``; the interpreted higher-order fold ``_dot``
-remains for dynamic lengths) — matching the DuckDB twin's
-``list_sum(list_transform(...))`` so values agree bit-for-bit within the
-oracle's 9-decimal rounding.
+element order — an unrolled, whole-stage-codegen'd chain in the JVM
+(``_dot_unrolled``) and the dimension-loop chains of ``exact_chains`` in
+the Arrow kernels — matching the DuckDB twin's
+``list_sum(list_transform(...))`` so values agree bit for bit. Each ANN
+operator has one path; its DuckDB twin (``*_sql``) is its reference.
 """
 
 from __future__ import annotations
@@ -61,25 +61,14 @@ def _md5_sample_pred_sql(id_col: str, num: int, den: int) -> str:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Fold-left dot via higher-order functions — works for any length,
-    but HOFs evaluate interpreted (closure call per element). Use only
-    where the dimension is not statically known."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _dot_unrolled(
     a: Column, b: Column, dim: int = EMBED_DIM, a_off: int = 0
 ) -> Column:
     """Codegen'd dot product for a statically-known dimension: a
     left-associated chain of ``get(a, a_off+i)*get(b,i)`` additions.
-    Float order is identical to ``_dot``'s fold (the fold's leading
-    ``0.0 + x`` is exact in IEEE) and to DuckDB's
-    ``list_sum(list_transform(...))``, so every oracle stays bit-for-bit.
+    Float order is identical to DuckDB's ``list_sum(list_transform(...))``
+    (its leading ``0.0 + x`` is exact in IEEE), so every oracle stays
+    bit-for-bit.
     Unlike the interpreted HOF eval this stays inside whole-stage codegen
     — the exact-verify stage of the ANN operators is dot-product-bound,
     so this is the hot path at scale. At dim=64 one dot is ~190
@@ -198,12 +187,11 @@ def srp_signs(table_idx: int, bit: int, dim: int = EMBED_DIM) -> list[float]:
     ]
 
 
-# NOTE: an earlier fully-unrolled dim-term projection chain (one +/* node
-# per vector element) was replaced everywhere by ``_srp_code_fold`` below:
-# at n_tables*n_bits*dim terms the generated janino method exceeded the
-# JVM's 64 KB bytecode limit and the whole stage silently fell back to
-# interpreted execution (observed in the sf0.01 driver run), on top of the
-# ~24 s Catalyst compile overhead the unrolled tree already cost.
+# NOTE: SRP codes are computed by one Arrow kernel (``_srp_codes``), not
+# as a JVM expression: an unrolled dim-term projection chain exceeds
+# janino's 64 KB method limit at n_tables*n_bits*dim terms (the stage falls
+# back to interpreted execution), and a higher-order fold per bit runs
+# interpreted (~12 s at 200k vectors x 4 tables x 16 bits).
 
 
 def lsh_topk_sql(
@@ -270,51 +258,29 @@ def lsh_topk(
     """Approximate top-k: candidates share an SRP code in any of
     ``n_tables`` tables; exact cosine re-ranks candidates. Returns
     (query_id, vec_id, cos, rank) like cosine_topk (may return < k rows
-    per query if the buckets are sparse)."""
-    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("cv")).withColumn(
-        "cn", _norm(F.col("cv"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c_codes = c.select(
-        id_col,
-        "cv",
-        "cn",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        _srp_code_fold(F.col("cv"), t, n_bits, dim).alias("code"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tc"),
-    ).select(id_col, "cv", "cn", F.col("tc.t"), F.col("tc.code"))
-    q_codes = q.select(
-        "query_id",
-        "qv",
-        "qn",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        _srp_code_fold(F.col("qv"), t, n_bits, dim).alias("code"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tc"),
-    ).select("query_id", "qv", "qn", F.col("tc.t"), F.col("tc.code"))
+    per query if the buckets are sparse).
 
-    cands = (
+    Both sides get their codes from the ``_srp_codes`` kernel; only the
+    slim (id, t, code) rows meet in the bucket join, and the vectors
+    join back by id for the exact cosine (s4/d5's fetch-back shape)."""
+    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    q = queries.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    c_codes = _srp_codes(c, id_col, n_bits, n_tables, dim)
+    q_codes = _srp_codes(q, id_col, n_bits, n_tables, dim).withColumnRenamed(
+        "id", "query_id"
+    )
+    cand_ids = (
         c_codes.join(F.broadcast(q_codes), on=["t", "code"])
-        .select("query_id", "qv", "qn", id_col, "cv", "cn")
+        .select("query_id", F.col("id").alias(id_col))
         .dropDuplicates(["query_id", id_col])
     )
+    c_vec = c.select(F.col(id_col), F.col("v").alias("cv"), _norm(F.col("v")).alias("cn"))
+    q_vec = q.select(
+        F.col(id_col).alias("query_id"),
+        F.col("v").alias("qv"),
+        _norm(F.col("v")).alias("qn"),
+    )
+    cands = cand_ids.join(c_vec, on=id_col).join(F.broadcast(q_vec), on="query_id")
     scored = cands.select(
         "query_id",
         id_col,
@@ -341,14 +307,6 @@ def lsh_topk(
 _IVF_QUANT = 1_000_000.0
 
 _LLOYD_SCHEMA = "part int, sub int, cid int, n bigint, s array<bigint>"
-
-
-def _check_mode(param: str, mode: str) -> None:
-    """Every ANN operator runs ``"vector"`` (the exact Arrow kernels, the
-    default) or ``"fold"`` (the pure-JVM reference they are tested
-    against); anything else raises."""
-    if mode not in ("fold", "vector"):
-        raise ValueError(f"{param} must be 'fold' or 'vector', got {mode!r}")
 
 
 def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
@@ -414,32 +372,10 @@ def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
     return _round
 
 
-def _lloyd_sums_jvm(assigned: DataFrame, vec: str, width: int) -> list:
-    """The fold mode's Lloyd aggregate: ``(sub, cid, n, s)`` rows,
-    one per present centroid, from the JVM's quantized BIGINT sums over
-    the ``(sub, cid, vec)`` assignment rows."""
-    return (
-        assigned.select(
-            "sub",
-            "cid",
-            *[
-                F.floor(F.element_at(vec, i + 1) * _IVF_QUANT + 0.5).alias(f"x{i}")
-                for i in range(width)
-            ],
-        )
-        .groupBy("sub", "cid")
-        .agg(
-            F.count("*").alias("n"),
-            F.array(*[F.sum(f"x{i}") for i in range(width)]).alias("s"),
-        )
-        .collect()
-    )
-
-
 def _lloyd_round_vector(
     df: DataFrame, col: str, books: list[list[list[float]]], metric: str, sub: int
 ) -> list[list[list[float]]]:
-    """One "vector"-mode Lloyd round: one map-only Arrow job (no
+    """One Lloyd round: one map-only Arrow job (no
     shuffle), partial sums reduced on the driver. The collect is bounded
     by construction at partitions × m × k rows; a result past that bound
     means the kernel broke its one-row-per-centroid-per-partition
@@ -480,32 +416,6 @@ def _lloyd_update(
     ]
 
 
-def _nearest_fold(
-    rows: DataFrame, centroids: list[list[float]], key: str, dim: int, n: int
-) -> DataFrame:
-    """The fold mode's cosine assignment: ``rows`` (key, v, ...) crossJoined
-    with the broadcast centroid table, cut to each key's ``n`` best
-    centroids under ``ORDER BY cos DESC, cid`` (adds ``nv`` and ``cid``)."""
-    cent_df = F.broadcast(
-        rows.sparkSession.createDataFrame(
-            [(i, v) for i, v in enumerate(centroids)], "cid int, cv array<double>"
-        ).withColumn("ncv", _norm(F.col("cv"), dim))
-    )
-    w = Window.partitionBy(key).orderBy(F.col("cd").desc(), F.col("cid"))
-    return (
-        rows.withColumn("nv", _norm(F.col("v"), dim))
-        .crossJoin(cent_df)
-        .withColumn(
-            "cd",
-            _dot_unrolled(F.col("v"), F.col("cv"), dim)
-            / (F.col("nv") * F.col("ncv")),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= n)
-        .drop("cv", "ncv", "cd", "rk")
-    )
-
-
 def ivf_build_centroids(
     corpus: DataFrame,
     n_centroids: int = 8,
@@ -513,10 +423,8 @@ def ivf_build_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = EMBED_DIM,
-    assign_mode: str = "vector",
 ) -> list[list[float]]:
-    """Deterministic, CROSS-ENGINE-EXACT mini k-means (in the "vector"
-    default and the legacy "fold" mode, which are bit-identical).
+    """Deterministic, CROSS-ENGINE-EXACT mini k-means.
 
     - Seeding: the ``n_centroids`` corpus vectors that sort first under
       ``(md5(cast(id as string)), id)`` — a deterministic pseudo-random
@@ -530,21 +438,15 @@ def ivf_build_centroids(
       Python and DuckDB. This is what lets ``ivf_topk_sql`` replay the
       whole procedure and hash-match.
 
-    ``assign_mode="vector"`` (the default): each Lloyd round is ONE
-    map-only Arrow job (``_lloyd_kernel``). The kernel assigns each row
-    with ``exact_chains.cos_argmax`` — the fold's cosine argmax, scored
-    by one BLAS product and rerun on the dimension-loop chain wherever a
-    float error bound cannot certify the winner — and in the same pass
-    sums its quantized components per centroid per partition; the
-    driver adds the partial sums (at most partitions × n_centroids rows
-    per round, asserted). No shuffle, no JVM aggregate, and the cost per
-    row grows with n_centroids at BLAS speed, so paper-scale centroid
-    counts run on this exact path.
-
-    ``assign_mode="fold"`` is the pure-JVM reference: a crossJoin with
-    the broadcast centroids, a per-id rank window, then a quantized
-    ``groupBy(cid)`` BIGINT aggregate."""
-    _check_mode("assign_mode", assign_mode)
+    Each Lloyd round is ONE map-only Arrow job (``_lloyd_kernel``). The
+    kernel assigns each row with ``exact_chains.cos_argmax`` — the
+    chain's cosine argmax, scored by one BLAS product and rerun on the
+    dimension-loop chain wherever a float error bound cannot certify the
+    winner — and in the same pass sums its quantized components per
+    centroid per partition; the driver adds the partial sums (at most
+    partitions × n_centroids rows per round, asserted). No shuffle, no
+    JVM aggregate, and the cost per row grows with n_centroids at BLAS
+    speed, so paper-scale centroid counts run on this exact path."""
     c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
     # hash-ordered top-N seeding: orderBy+limit plans as a distributed
     # TakeOrdered (per-partition top-N then driver merge), unlike a global
@@ -558,17 +460,51 @@ def ivf_build_centroids(
     centroids = [list(r["v"]) for r in seeds]
     if not centroids:
         return []
-
     for _ in range(iterations):
-        if assign_mode == "vector":
-            centroids = _lloyd_round_vector(c, "v", [centroids], "cos", dim)[0]
-            continue
-        assigned = _nearest_fold(c, centroids, id_col, dim, 1)
-        rows = _lloyd_sums_jvm(
-            assigned.withColumn("sub", F.lit(0)), "v", dim
-        )
-        centroids = _lloyd_update([centroids], rows)[0]
+        centroids = _lloyd_round_vector(c, "v", [centroids], "cos", dim)[0]
     return centroids
+
+
+# Largest query set an IVF/PQ serve call collects. The set (and, for
+# IVF, its probe lists) is computed on the driver and shipped in the
+# scan's task closure or as a broadcast, so it must stay small; the
+# largest one any caller passes today is 50.
+MAX_SERVE_QUERIES = 1024
+
+
+def _collect_bounded(df: DataFrame, bound: int, what: str) -> list:
+    """``df.collect()`` for a serve-path set that is small by contract;
+    more than ``bound`` rows raises instead of shipping it to every task."""
+    rows = df.collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"{what} has {len(rows)} rows, more than the serve-path maximum "
+            f"of {bound} (MAX_SERVE_QUERIES queries); split the query batch"
+        )
+    return rows
+
+
+def _probe_lists(vectors: list, centroids: list[list[float]], dim: int, n_probe: int):
+    """Each query's ``n_probe`` nearest lists, computed on the driver over
+    the collected query vectors: the chain's cosine
+    ``dots(V, C) / (nv * ncv)`` ordered by ``cos DESC, cid ASC`` with NaN
+    first, which is how Spark's and DuckDB's ``ORDER BY`` both rank it.
+    Returns ``(nv, V, probes)``: the dim-prefix norms, the (n, dim)
+    matrix and one list of cids per query."""
+    import numpy as np
+
+    if not vectors:
+        return np.zeros(0), np.zeros((0, dim)), []
+    V = _xc.stack_rows(vectors, dim)
+    C = np.asarray([list(c)[:dim] for c in centroids], dtype=np.float64)
+    nv = np.sqrt(_xc.sq_norms(V))
+    with np.errstate(all="ignore"):
+        S = _xc.dots(V, C) / (nv[:, None] * _xc.centroid_norms(C)[None, :])
+    nan = np.isnan(S)
+    cids = np.broadcast_to(np.arange(C.shape[0]), S.shape)
+    # lexsort keys, last is primary: NaN first, then cos DESC, then cid ASC
+    order = np.lexsort((cids, -np.where(nan, 0.0, S), ~nan), axis=1)
+    return nv, V, [[int(c) for c in row[:n_probe]] for row in order]
 
 
 def ivf_topk(
@@ -581,20 +517,29 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: assign the corpus to its nearest centroid
-    (one map-side pass, centroids broadcast), probe each query's n_probe
-    nearest centroid lists, exact-rerank candidates. At scale the inverted
-    lists are a partitioned table; n_probe/n_centroids trade recall for
-    the fraction of the corpus scanned per query (~n_probe/n_centroids)."""
+    (one map-side Arrow pass, ``_assign_vector``), probe each query's
+    n_probe nearest centroid lists (``_probe_lists``), exact-rerank
+    candidates. At scale the inverted lists are a partitioned table;
+    n_probe/n_centroids trade recall for the fraction of the corpus
+    scanned per query (~n_probe/n_centroids).
+
+    The query set is collected to the driver for the probe: more than
+    ``MAX_SERVE_QUERIES`` queries raise."""
     centroids = ivf_build_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
     c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v"))
-    # inverted lists: one centroid per vector
-    c_lists = _nearest_fold(c, centroids, id_col, EMBED_DIM, 1)
-    q_probes = (
-        _nearest_fold(q, centroids, "query_id", EMBED_DIM, n_probe)
-        .withColumnRenamed("v", "qv")
-        .withColumnRenamed("nv", "qn")
+    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
+    # inverted lists: one centroid per vector. The norm is the JVM's, so
+    # a NaN vector keeps a NaN cosine (a pandas batch would make it NULL)
+    c_lists = _assign_vector(c, centroids, id_col, EMBED_DIM).select(
+        id_col, "v", "cid", _norm(F.col("v")).alias("nv")
     )
+    q_rows = _collect_bounded(q, MAX_SERVE_QUERIES, "query set")
+    _, _, probes = _probe_lists([r["qv"] for r in q_rows], centroids, EMBED_DIM, n_probe)
+    q_probes = corpus.sparkSession.createDataFrame(
+        [(r["query_id"], r["qv"], cid) for r, cids in zip(q_rows, probes) for cid in cids],
+        f"query_id {q.schema['query_id'].dataType.simpleString()}, "
+        "qv array<double>, cid int",
+    ).withColumn("qn", _norm(F.col("qv")))
 
     cands = c_lists.join(
         F.broadcast(q_probes), on="cid"
@@ -778,32 +723,6 @@ def embedding_neardup_pairs(
     ).where(F.coalesce(F.col("cos") >= threshold, F.lit(False)))
 
 
-def _srp_code_fold(vec: Column, table_idx: int, n_bits: int, dim: int) -> Column:
-    """SRP code: bit j = [Σ_i sign_ji · v_i > 0], signs from srp_signs,
-    with the hyperplane as an array LITERAL folded via
-    ``aggregate``/``zip_with`` rather than an unrolled ``dim``-term
-    expression chain: the plan stays small (one higher-order call per
-    bit), avoiding both the ~24 s Catalyst compile overhead and the
-    64 KB janino bytecode overflow the unrolled form hit (see note at
-    the former ``_srp_code`` site), while the left-to-right fold keeps
-    the float addition order identical to DuckDB's ``list_sum``
-    (leading ``0.0 + x`` is exact in IEEE)."""
-    bits = []
-    for j in range(n_bits):
-        signs = srp_signs(table_idx, j, dim)
-        sarr = F.array(*[F.lit(s) for s in signs])
-        proj = F.aggregate(
-            F.zip_with(vec, sarr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    code = bits[0]
-    for b in bits[1:]:
-        code = code + b
-    return code
-
-
 def _srp_code_fold_sql(vec_sql: str, table_idx: int, n_bits: int, dim: int) -> str:
     parts = []
     for j in range(n_bits):
@@ -821,18 +740,16 @@ def _srp_codes(
     v: DataFrame, id_col: str, n_bits: int, n_tables: int, dim: int
 ) -> DataFrame:
     """(id, t, code) — one map-side pass computing every table's SRP code
-    per vector (shared by d5's near-dup pass and s4's kNN self-join).
+    per vector (shared by s2's ``lsh_topk``, d5's near-dup pass and s4's
+    kNN self-join).
 
-    Round 15: the per-bit HOF fold (interpreted closure per element —
-    measured ~12 s alone at 200k vectors x 4 tables x 16 bits, the
-    single largest slice of s4's wall) is replaced by an Arrow-batched
-    numpy kernel accumulating over DIMENSIONS left to right
-    (``proj += v_i * sign_i`` — the ``_assign_vector`` exactness
-    argument), so every projection is the identical IEEE double the fold
-    and the DuckDB twin's ``list_sum`` compute and the emitted codes are
-    bit-identical (``proj > 0`` is an exact comparison; NaN projections
-    count as > 0, mirroring Spark's NaN-greatest comparison — the fold's
-    ``F.when(proj > 0, ...)``). Output rows are emitted pre-exploded
+    An Arrow-batched numpy kernel accumulating over DIMENSIONS left to
+    right (``proj += v_i * sign_i`` — the ``_assign_vector`` exactness
+    argument), so every projection is the identical IEEE double the
+    DuckDB twin's ``list_sum`` (``_srp_code_fold_sql``) computes and the
+    emitted codes are bit-identical (``proj > 0`` is an exact
+    comparison; NaN projections count as > 0, as NaN is the greatest
+    value in Spark and DuckDB). Output rows are emitted pre-exploded
     (n_tables slim rows per vector) so no JVM explode follows."""
     import numpy as np
 
@@ -901,12 +818,11 @@ def _apply_bucket_cap(
 
     Plan shape: bucket sizes come from a WINDOW count over (t, code) —
     NOT a groupBy+join back — so the codes subtree keeps exactly ONE
-    consumer and the (expensive, measured ~12 s at 200k×4×16) SRP fold
-    is computed once BY CONSTRUCTION, the same single-reference
-    discipline d5/s4 adopted in round 7 (a sizes join re-expanded the
-    fold per branch: 64 vs 32 zip_with nodes in the executed plan,
-    verified). Cost below the cap: one extra slim-row exchange + an
-    equal-key sort feeding the window. The window does buffer a
+    consumer and the SRP code pass is computed once BY CONSTRUCTION,
+    the same single-reference discipline d5/s4 adopted in round 7 (a
+    sizes join re-expanded the code subtree per branch). Cost below the
+    cap: one extra slim-row exchange + an equal-key sort feeding the
+    window. The window does buffer a
     mega-bucket's slim rows in one task — an O(n) spill-able sort of
     (id, t, code) triples, survivable where the bucket² pair explosion
     it prevents is not."""
@@ -967,7 +883,7 @@ def embedding_neardup_lsh(
     the identical buckets); (2) ONE groupBy(table, code) collects each
     bucket's id list and explodes ordered pairs inside it — id+code ONLY
     ride the single bucket shuffle (the 64-double vectors never do), and
-    the SRP-code fold is computed once BY CONSTRUCTION instead of per
+    the SRP-code pass is computed once BY CONSTRUCTION instead of per
     self-join side (round 7, same shape as ``knn_join``; the previous
     self-equi-join form left the second code computation to
     optimizer-coupled ReuseExchange); (3) distinct candidate pairs join
@@ -1086,20 +1002,6 @@ aug AS (
 """
 
 
-def embedding_neardup_sql(threshold: float = 0.99) -> str:
-    dot = "list_sum(list_transform(range(1, {n}), i -> {a}[i] * {b}[i]))".format
-    d_ab = dot(n=EMBED_DIM + 1, a="a.v", b="b.v")
-    d_aa = dot(n=EMBED_DIM + 1, a="a.v", b="a.v")
-    d_bb = dot(n=EMBED_DIM + 1, a="b.v", b="b.v")
-    return f"""
-WITH {PLANTED_NEARDUP_CTE}
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {d_ab} / (sqrt({d_aa}) * sqrt({d_bb})) AS cos
-FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-WHERE {d_ab} / (sqrt({d_aa}) * sqrt({d_bb})) >= {threshold}
-"""
-
-
 # ---------------------------------------------------------------------------
 # kNN self-join (near-neighbor graph)
 # ---------------------------------------------------------------------------
@@ -1126,11 +1028,9 @@ def knn_join(
     sides are the corpus. Candidates come from ONE aggregation — codes
     group by (table, code) into per-bucket id lists, and pairs explode
     inside each bucket — rather than a self-equi-join: a self-join
-    re-expands the SRP-code subtree per side (the fold over ``dim``
-    doubles per bit per table is the measured per-vector cost, ~12 s at
-    200k×4×16, and whether ReuseExchange recovers the second copy is
-    optimizer-coupled), while the groupBy shape computes codes exactly
-    once BY CONSTRUCTION and shuffles (id, t, code) exactly once. Work
+    re-expands the SRP-code subtree per side (whether ReuseExchange
+    recovers the second copy is optimizer-coupled), while the groupBy
+    shape computes codes exactly once BY CONSTRUCTION and shuffles (id, t, code) exactly once. Work
     is Σ bucket² like d5's near-dup pass, never corpus²; ``n_bits``
     scales with corpus size to keep mean bucket size O(1), which also
     bounds the exploded ``ids`` payload per bucket row. The 64-double
@@ -1243,7 +1143,6 @@ def semantic_dedup(
     cluster_cap: int | None = 4096,
     sample_num: int = 1,
     sample_den: int = 1,
-    assign_mode: str = "vector",
     verify_prune: bool = True,
     stats: dict | None = None,
     warn_over_cap: bool = True,
@@ -1288,16 +1187,13 @@ def semantic_dedup(
     ``ivf_topk_sql``'s determinism argument; zero vectors excluded by
     the no-NaN precondition documented there).
 
-    ``assign_mode``: ``"vector"`` (the default) is ``_assign_vector``,
-    whose argmax is ``exact_chains.cos_argmax``: one BLAS product per
-    batch, with the rows a float error bound cannot certify rerun on
-    the dimension-loop chain. It is BIT-IDENTICAL to the fold
+    Assignment is ``_assign_vector``, whose argmax is
+    ``exact_chains.cos_argmax``: one BLAS product per batch, with the
+    rows a float error bound cannot certify rerun on the dimension-loop
+    chain. It is BIT-IDENTICAL to the twin's ``ORDER BY cos DESC, cid``
     (oracle-safe), its plan size is O(1) in ``n_centroids``, and it runs
     at BLAS speed, so the SemDeDup paper's thousands of clusters run on
-    the exact path; the training rounds ride the same kernel. ``"fold"``
-    is the pure-JVM reference, a per-centroid HOF-fold argmax whose plan
-    is LINEAR in ``n_centroids`` (literal columns), usable to a few
-    hundred centroids.
+    the exact path; the training rounds ride the same kernel.
 
     ``verify_prune`` (round 9): before fetching vector payloads for the
     exact within-cluster verify, candidate pairs are pre-filtered by the
@@ -1340,7 +1236,6 @@ def semantic_dedup(
     where training is possible."""
     if sample_num < 1 or sample_den < 1 or sample_num > sample_den:
         raise ValueError("sample fraction must satisfy 1 <= sample_num <= sample_den")
-    _check_mode("assign_mode", assign_mode)
     import time as _time
 
     _t0 = _time.perf_counter()
@@ -1352,7 +1247,7 @@ def semantic_dedup(
         train = vectors.where(_md5_sample_pred(id_col, sample_num, sample_den))
     centroids = ivf_build_centroids(
         train, n_centroids, iterations=iterations,
-        id_col=id_col, vec_col=vec_col, dim=dim, assign_mode=assign_mode,
+        id_col=id_col, vec_col=vec_col, dim=dim,
     )
     if not centroids:
         raise ValueError(
@@ -1363,16 +1258,11 @@ def semantic_dedup(
         stats["train_s"] = round(_time.perf_counter() - _t0, 3)
     _t0 = _time.perf_counter()
     base = vectors.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if assign_mode == "vector":
-        assigned = _assign_vector(base, centroids, id_col, dim)
-    else:
-        assigned = _assign_fold(base, centroids, dim, id_col)
+    assigned = _assign_vector(base, centroids, id_col, dim)
     # Materialize the assignment ONCE: it has four consumers (pair codes,
     # both fetch-back sides, the final anti-join), and Catalyst re-expands
     # shared stages per reference (the p9 lesson) — without the boundary
-    # each consumer re-evaluates every per-centroid fold AND the fused
-    # verify stage inherits the whole assignment tree, which pushed its
-    # generated processNext() past janino's 64 KB limit. At cluster scale
+    # each consumer re-runs the assignment kernel. At cluster scale
     # this boundary is the assignment table a real SemDeDup run writes
     # anyway (cluster ids are a reused artifact).
     assigned = assigned.localCheckpoint(eager=True)
@@ -1474,66 +1364,11 @@ def semantic_dedup(
     )
 
 
-def _assign_fold(
-    base: DataFrame, centroids: list[list[float]], dim: int, id_col: str
-) -> DataFrame:
-    # map-side argmax assignment: one per-centroid cosine COLUMN via the
-    # HOF FOLD dot (``_dot``), then a linear array argmax (below). The
-    # fold is deliberate: n_centroids x dim unrolled multiply-add terms
-    # in one fused projection blew janino's 64 KB method limit and
-    # silently fell back to interpreted execution for the WHOLE stage
-    # (verified here at 8x64; the same failure class _srp_code_fold
-    # documents), so this is the s2 trade — a small interpreted fold per
-    # centroid whose float order is bit-identical to the unrolled chain
-    # and to DuckDB's list_sum. Centroid norms are precomputed
-    # driver-side: Python's left-to-right float sum + correctly-rounded
-    # sqrt is the same IEEE double either engine computes. This stage is
-    # scan-shaped (perfectly parallel, no shuffle); ``_assign_vector``
-    # below is the bit-identical default whose plan does not grow with
-    # the centroid count.
-    import math
-
-    v = base.withColumn("nv", _norm(F.col("v"), dim))
-    # dim-prefix semantics on BOTH sides of the HOF dot (r9 review): seed
-    # centroids are full-width raw vectors, trained ones are dim-length,
-    # and physical arrays may be wider than the latent dim — an unsliced
-    # zip_with would pad the shorter side with nulls and poison the fold
-    # (null cosines silently skipped by array_max). Slicing is a no-op
-    # when dim == width (every oracle fixture), so float order — and
-    # hence every oracle hash — is unchanged; the DuckDB twin
-    # (``_cos_sql``) has always been dim-prefix.
-    vp = F.slice(F.col("v"), 1, int(dim))
-    cd_cols = []
-    for j, cvals in enumerate(centroids):
-        cvals = list(cvals)[: int(dim)]
-        cv = F.array(*[F.lit(float(x)) for x in cvals])
-        acc = 0.0
-        for x in cvals:
-            acc += float(x) * float(x)
-        ncv = F.lit(math.sqrt(acc))
-        cd_cols.append((_dot(vp, cv) / (F.col("nv") * ncv)).alias(f"__cd{j}"))
-    scored = v.select(F.col(id_col), "v", "nv", *cd_cols)
-    # argmax over the cosine columns stays LINEAR in n_centroids:
-    # array_max picks the best cosine and array_position finds its FIRST
-    # index (ties to the lowest cid, matching the twin's row_number
-    # ORDER BY cos DESC, cid ASC). A greatest()+CASE chain would embed
-    # greatest(n) once per branch — O(n_centroids²) codegen that cannot
-    # survive the paper-scale configurations (hundreds of clusters).
-    arr = F.array(*[F.col(f"__cd{j}") for j in range(len(centroids))])
-    best = F.array_max(arr)
-    return scored.select(
-        F.col(id_col),
-        "v",
-        "nv",
-        (F.array_position(arr, best) - 1).cast("int").alias("cid"),
-        best.alias("cent_cos"),
-    )
-
-
 def _assign_vector(
     base: DataFrame, centroids: list[list[float]], id_col: str, dim: int
 ) -> DataFrame:
-    """Bit-exact-fold centroid assignment at Arrow speed (round 15).
+    """Bit-exact centroid assignment at Arrow speed: adds ``nv``, ``cid``
+    and ``cent_cos`` to ``base`` (id, v).
 
     An Arrow-batched ``mapInPandas`` scan (no shuffle; the centroids
     ride in the task closure, so plan size is O(1) in ``n_centroids``).
@@ -1542,17 +1377,15 @@ def _assign_vector(
 
         dot[:, j] = ((0 + v0*c_j0) + v1*c_j1) + ... + v{d-1}*c_j{d-1}
 
-    — the identical IEEE-double chain ``_assign_fold``'s HOF fold,
-    ``_dot_unrolled``, and the DuckDB twin's ``list_sum`` evaluate —
-    found through one BLAS product whose winner is kept only where a
-    proven error bound certifies it, the chain rerunning elsewhere.
-    Centroid norms are the same driver-side left-to-right sum + ``sqrt``
-    as ``_assign_fold``; ``nv`` is the dim-prefix norm accumulated the
-    same way; ``cent_cos`` is the chain's double. Ties and NaN match
-    too: the FIRST maximum wins (lowest cid — the fold's
-    ``array_position(arr, array_max(arr))`` rule) and the first NaN
-    stops the scan, which is where Spark's NaN-greatest ordering lands
-    as well. Outputs are bit-identical to the fold.
+    — the identical IEEE-double chain ``_dot_unrolled`` and the DuckDB
+    twin's ``list_sum`` evaluate — found through one BLAS product whose
+    winner is kept only where a proven error bound certifies it, the
+    chain rerunning elsewhere. Centroid norms are the driver-side
+    left-to-right sum + ``sqrt`` (``centroid_norms``); ``nv`` is the
+    dim-prefix norm accumulated the same way; ``cent_cos`` is the
+    chain's double. Ties and NaN follow the edge contract of
+    ``exact_chains``, which is the twin's ``ORDER BY cos DESC, cid``.
+    A NaN ``nv`` or ``cent_cos`` leaves the pandas batch as NULL.
 
     The closure is numpy/pandas-only (no package import on workers)."""
     import numpy as np
@@ -1776,22 +1609,6 @@ WHERE NOT EXISTS (SELECT 1 FROM removed r WHERE r.vec_id = af.vec_id)
 # ---------------------------------------------------------------------------
 
 
-def _l2_unrolled(a: Column, b: Column, n: int, a_off: int = 0) -> Column:
-    """Codegen'd squared-L2 between ``a[a_off : a_off+n]`` and ``b[0:n]``
-    as a left-associated chain of ``(x - y) * (x - y)`` additions — the
-    bit-identical IEEE order of the DuckDB twin's
-    ``list_sum(list_transform(range(1, n+1), i -> (a[off+i]-b[i])*(a[off+i]-b[i])))``.
-    No sqrt: argmin over squared distances is the same argmin, division-
-    and libm-free."""
-    t: Column | None = None
-    for i in range(n):
-        d = F.get(a, a_off + i) - F.get(b, i)
-        term = d * d
-        t = term if t is None else t + term
-    assert t is not None
-    return t
-
-
 def _normalized(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
     """(id, vn) with vn = v / ||v|| — one norm per vector (projected
     column, not re-derived per element); zero-norm vectors divide by 1 so
@@ -1815,7 +1632,6 @@ def _pq_train(
     n_codes: int,
     iterations: int,
     id_col: str,
-    encode_mode: str = "vector",
 ) -> list[list[list[float]]]:
     """Per-subspace deterministic k-means over the NORMALIZED corpus —
     ``ivf_build_centroids``' exact-replay discipline (md5-ordered seeding,
@@ -1829,17 +1645,13 @@ def _pq_train(
     subspace is the SQL twin's independent per-subspace replay, so the
     codebooks hash-match it.
 
-    ``encode_mode="vector"`` (the default): a round is ONE map-only
-    Arrow job (``_lloyd_kernel`` with ``exact_chains.l2_argmin``, the
-    squared-L2 chain's argmin found through one certified BLAS product
-    per subspace). Each partition assigns its rows in every subspace and
-    emits its exact quantized partial sums, at most m × n_codes rows;
-    the driver adds them (at most partitions × m × n_codes rows per
-    round, asserted). ``"fold"`` is the pure-JVM reference: sub-vector
-    rows tagged by subspace, a join against the broadcast (sub, cid)
-    centroid table, a per-(sub, id) rank window and a (sub, cid)-keyed
-    BIGINT aggregate. Both give bit-identical codebooks: the assignments
-    are identical and the integer sums are order-independent."""
+    A round is ONE map-only Arrow job (``_lloyd_kernel`` with
+    ``exact_chains.l2_argmin``, the squared-L2 chain's argmin found
+    through one certified BLAS product per subspace). Each partition
+    assigns its rows in every subspace and emits its exact quantized
+    partial sums, at most m × n_codes rows; the driver adds them (at most
+    partitions × m × n_codes rows per round, asserted). The integer sums
+    are order-independent, so the codebooks equal the twin's."""
     seed_rows = (
         corpus_norm.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(n_codes)
@@ -1864,49 +1676,8 @@ def _pq_train(
         off = j * sub_dim
         books.append([list(r["vn"])[off : off + sub_dim] for r in seed_rows])
 
-    if encode_mode == "vector":
-        for _ in range(iterations):
-            books = _lloyd_round_vector(corpus_norm, "vn", books, "l2", sub_dim)
-        return books
-
-    # sub-vector rows for every subspace in one pass: (id, sub, sv)
-    svall = corpus_norm.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.array(
-                            *[F.get("vn", j * sub_dim + i) for i in range(sub_dim)]
-                        ).alias("sv"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("z"),
-    ).select(F.col(id_col), F.col("z.sub").alias("sub"), F.col("z.sv").alias("sv"))
     for _ in range(iterations):
-        cent_df = F.broadcast(
-            corpus_norm.sparkSession.createDataFrame(
-                [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
-                "sub int, cid int, cv array<double>",
-            )
-        )
-        assigned = (
-            svall.join(cent_df, on="sub")
-            .withColumn("d", _l2_unrolled(F.col("sv"), F.col("cv"), sub_dim))
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("sub", id_col).orderBy(
-                        F.col("d").asc(), F.col("cid")
-                    )
-                ),
-            )
-            .where(F.col("rk") == 1)
-        )
-        books = _lloyd_update(books, _lloyd_sums_jvm(assigned, "sv", sub_dim))
+        books = _lloyd_round_vector(corpus_norm, "vn", books, "l2", sub_dim)
     return books
 
 
@@ -1919,17 +1690,18 @@ def _encode_vector(
     dim: int,
 ) -> DataFrame:
     """(id, code0..code{m-1}[, cid]) in ONE map-only Arrow pass over the
-    RAW corpus — the "vector" mode's encode for every PQ consumer.
+    RAW corpus — the encode of every PQ consumer (pq_topk, ivfpq_topk,
+    build_pq_index, extend_pq_index).
 
     Per batch the kernel computes the ``_normalized`` vector (dim-prefix
     norm, zero norm divides by 1, per-element IEEE division), its PQ
     codes (squared-L2 argmin per subspace, ``_xc.l2_argmin``) and, given
     ``coarse``, its IVF list (cosine argmax of the raw vector,
-    ``_xc.cos_argmax``). Every argmin/argmax is the one of the chain the
-    JVM fold evaluates (found through a certified BLAS product), so
-    codes and lists are bit-identical to the fold ``_pq_encode`` joined
-    on id with the fold list assignment — without the join or its
-    shuffle. Plan size is O(1) in ``n_codes`` and ``n_lists``."""
+    ``_xc.cos_argmax``). Every argmin/argmax is the one of the
+    dimension-loop chain (found through a certified BLAS product), so
+    codes and lists are bit-identical to the twins' ``code_s*`` and
+    ``lists`` CTEs — with no join and no shuffle. Plan size is O(1) in
+    ``n_codes`` and ``n_lists``."""
     import numpy as np
 
     m = len(books)
@@ -2089,64 +1861,6 @@ def _adc_scan_vector(
     return codes.select(*in_cols).mapInArrow(_scan, schema=out_schema)
 
 
-def _pq_encode(
-    cn: DataFrame,
-    books: list[list[list[float]]],
-    m: int,
-    sub_dim: int,
-    id_col: str,
-) -> DataFrame:
-    """(id, code0..code{m-1}) from the normalized corpus ``cn`` — the
-    fold encode (tie rule: first minimum -> lowest cid). The "vector"
-    mode encodes the raw corpus in ``_encode_vector``, which is
-    bit-identical."""
-    code_cols = []
-    for j in range(m):
-        off = j * sub_dim
-        dists = F.array(
-            *[
-                _l2_unrolled(
-                    F.col("vn"), F.array(*[F.lit(x) for x in c]), sub_dim, off
-                )
-                for c in books[j]
-            ]
-        )
-        code_cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias(f"code{j}")
-        )
-    return cn.select(F.col(id_col), *code_cols)
-
-
-def _coded_corpus(
-    corpus: DataFrame,
-    books: list[list[list[float]]],
-    coarse: list[list[float]] | None,
-    encode_mode: str,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """(id, code0..code{m-1}[, cid]) for the raw ``corpus`` — the encode
-    shared by pq_topk, ivfpq_topk, build_pq_index and extend_pq_index.
-    "vector" is the one map-only kernel; "fold" encodes the normalized
-    corpus and, given ``coarse``, joins the list assignment on id."""
-    if encode_mode == "vector":
-        return _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
-    m = len(books)
-    codes = _pq_encode(
-        _normalized(corpus, id_col, vec_col, dim), books, m, dim // m, id_col
-    )
-    if coarse is None:
-        return codes
-    c_lists = _nearest_fold(
-        corpus.select(F.col(id_col), _as_double(vec_col).alias("v")),
-        coarse, id_col, dim, 1,
-    ).select(F.col(id_col), "cid")
-    return codes.join(c_lists, on=id_col)
-
-
 # ---------------------------------------------------------------------------
 # Persisted ANN index (r10 verdict #3): build once, serve many
 # ---------------------------------------------------------------------------
@@ -2156,8 +1870,8 @@ def _coded_corpus(
 # whose requested training regime differs from how the stored books were
 # actually fit (r11 advice — silently serving a differently-trained index
 # is the wrong-answer class).
-# v3: meta drops ``encode_mode``. Every encode mode left ("fold",
-# "vector") writes bit-identical artifacts, so the field carried no
+# v3: meta drops ``encode_mode``. Every encode mode left then ("fold",
+# "vector") wrote bit-identical artifacts, so the field carried no
 # information; a v2 index may hold inexact BLAS-encoded codes and is
 # refused.
 PQ_INDEX_VERSION = 3
@@ -2174,7 +1888,6 @@ def build_pq_index(
     sample_den: int = 1,
     coarse_sample_num: int = 1,
     coarse_sample_den: int = 1,
-    encode_mode: str = "vector",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = EMBED_DIM,
@@ -2187,7 +1900,7 @@ def build_pq_index(
     stored index pays them once and serves every subsequent query batch
     at marginal cost.
 
-    Jobs, in the default "vector" mode: the sample checkpoints, one seed
+    Jobs: the sample checkpoints, one seed
     fetch per quantizer, then ``iterations`` map-only Lloyd jobs per
     quantizer (the PQ and IVF trainings run concurrently), then ONE
     map-only scan that normalizes, PQ-encodes and list-assigns each raw
@@ -2199,8 +1912,7 @@ def build_pq_index(
 
     - ``path/meta``       one row: version, kind, m/n_codes/sub_dim/dim,
       n_lists, id_col and the training knobs — read back for
-      compatibility validation. ``encode_mode`` is not stored: both
-      modes write bit-identical artifacts.
+      compatibility validation.
     - ``path/codebooks``  (sub, cid, cv array<double>) m*n_codes rows.
     - ``path/coarse``     (cid, cv array<double>) n_lists rows (IVF only).
     - ``path/codes``      (id, code0..code{m-1}[, cid]); the IVF form is
@@ -2218,7 +1930,6 @@ def build_pq_index(
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
         raise ValueError(f"dim={dim} must be divisible by m={m}")
-    _check_mode("encode_mode", encode_mode)
     if n_lists is not None and n_lists < 1:
         raise ValueError(f"n_lists must be >= 1, got {n_lists}")
     sub_dim = dim // m
@@ -2246,8 +1957,7 @@ def build_pq_index(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             fut_books = pool.submit(
-                _pq_train, train, m, sub_dim, n_codes, iterations, id_col,
-                encode_mode,
+                _pq_train, train, m, sub_dim, n_codes, iterations, id_col
             )
             fut_coarse = pool.submit(
                 ivf_build_centroids,
@@ -2257,13 +1967,12 @@ def build_pq_index(
                 id_col=id_col,
                 vec_col=vec_col,
                 dim=dim,
-                assign_mode=encode_mode,
             )
             books = fut_books.result()
             coarse = fut_coarse.result()
     else:
-        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col, encode_mode)
-    codes = _coded_corpus(corpus, books, coarse, encode_mode, id_col, vec_col, dim)
+        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col)
+    codes = _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
 
     spark.createDataFrame(
         [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
@@ -2383,7 +2092,7 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     an IVF index, assign them to lists with the stored coarse centroids),
     then append their code rows to the artifact. Training never
     re-runs; only the new batch is scanned, by the same encode the build
-    ran (``_coded_corpus``).
+    ran (``_encode_vector``).
 
     Exactness contract (what makes this oracle-able): an index built on
     corpus slice A and extended with slice B serves queries BIT-IDENTICALLY
@@ -2432,7 +2141,7 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     if n_new == 0:
         return 0
 
-    codes = _coded_corpus(fresh, books, coarse, "vector", id_col, vec_col, dim)
+    codes = _encode_vector(fresh, books, coarse, id_col, vec_col, dim)
     if meta["kind"] == "ivfpq":
         codes.write.mode("append").partitionBy("cid").parquet(f"{path}/codes")
     else:
@@ -2694,8 +2403,7 @@ def _check_index_meta(
     fit with a specific sampling / iteration regime; a caller requesting
     a different one would get results trained differently than
     requested while the docstrings promise bit-identical-to-rebuild
-    serving. The encode mode is not a knob: "fold" and "vector" write
-    bit-identical artifacts, so either serves any index."""
+    serving."""
     got = (meta["kind"], meta["m"], meta["n_codes"], meta["dim"])
     want = (kind, m, n_codes, dim)
     if got != want:
@@ -2721,26 +2429,6 @@ def _check_index_meta(
                 "return results from a differently-trained index — rebuild "
                 "or pass the stored value"
             )
-
-
-def _adc_fold(
-    paired: DataFrame, books: list[list[list[float]]], sub_dim: int, id_col: str
-) -> DataFrame:
-    """The fold mode's ADC scan: (query_id, id, adc) for code rows paired
-    with their query's ``qvn``, adc = sum_j dot(q_sub_j,
-    codebook_j[code_j]) as the JVM chain in fixed j order (literal
-    codebook arrays, plan O(n_codes))."""
-    adc: Column | None = None
-    for j, book in enumerate(books):
-        book_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
-        contrib = _dot_unrolled(
-            F.col("qvn"),
-            F.element_at(book_lit, F.col(f"code{j}") + 1),
-            sub_dim,
-            j * sub_dim,
-        )
-        adc = contrib if adc is None else adc + contrib
-    return paired.select("query_id", F.col(id_col), adc.alias("adc"))
 
 
 def _cut_and_rerank(
@@ -2803,24 +2491,6 @@ def _cut_and_rerank(
     return exact.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-# Largest query set a pq_topk/ivfpq_topk call serves. The set is
-# collected to the driver and shipped in every scan task's closure, so it
-# must stay small; the largest one any caller passes today is 50.
-MAX_SERVE_QUERIES = 1024
-
-
-def _collect_bounded(df: DataFrame, bound: int, what: str) -> list:
-    """``df.collect()`` for a serve-path set that is small by contract;
-    more than ``bound`` rows raises instead of shipping it to every task."""
-    rows = df.collect()
-    if len(rows) > bound:
-        raise ValueError(
-            f"{what} has {len(rows)} rows, more than the serve-path maximum "
-            f"of {bound} (MAX_SERVE_QUERIES queries); split the query batch"
-        )
-    return rows
-
-
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2832,7 +2502,6 @@ def pq_topk(
     shards: int = 32,
     sample_num: int = 1,
     sample_den: int = 1,
-    encode_mode: str = "vector",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = EMBED_DIM,
@@ -2852,8 +2521,8 @@ def pq_topk(
 
     100 TB posture: this is the memory story of large-scale ANN — the
     scan side carries ``m`` small ints per vector (codes), never the
-    dim-double embedding; the ADC scan is a pure map-side projection
-    against broadcast codebooks (m x n_codes x sub_dim doubles). The
+    dim-double embedding; the ADC scan is a pure map-side kernel with
+    the codebooks (m x n_codes x sub_dim doubles) in its closure. The
     per-query candidate cut is TWO-PHASE top-k — per (query, shard) first,
     then over the shards x candidates survivors — so no task ever sorts a
     whole corpus partition per query (the t7 lesson; a flat per-query
@@ -2870,16 +2539,13 @@ def pq_topk(
     trick — so ``pq_topk_sql`` replays the WHOLE procedure and
     hash-matches, like s3/d8.
 
-    ``encode_mode="vector"`` (the DEFAULT): each Lloyd round, the encode
-    and the ADC scan run as map-only Arrow kernels (``_lloyd_kernel``,
-    ``_encode_vector``, ``_adc_scan_vector``) — BIT-IDENTICAL to the
-    fold (oracle-safe) with plan size O(1) in ``n_codes``. The argmins
-    are ``exact_chains.l2_argmin``: one BLAS product per batch and
-    subspace, certified by a float error bound, the dimension-loop chain
-    rerun on the rows it cannot certify — so the PQ paper's
+    Each Lloyd round, the encode and the ADC scan run as map-only Arrow
+    kernels (``_lloyd_kernel``, ``_encode_vector``, ``_adc_scan_vector``)
+    — BIT-IDENTICAL to the twin with plan size O(1) in ``n_codes``. The
+    argmins are ``exact_chains.l2_argmin``: one BLAS product per batch
+    and subspace, certified by a float error bound, the dimension-loop
+    chain rerun on the rows it cannot certify — so the PQ paper's
     k*=256 codebooks run at BLAS speed on this exact path.
-    ``encode_mode="fold"`` is the pure-JVM reference (literal plan
-    chains, O(n_codes) plan size).
 
     The query set is collected to the driver for the scan kernel's
     closure: more than ``MAX_SERVE_QUERIES`` queries raise.
@@ -2903,7 +2569,6 @@ def pq_topk(
         raise ValueError(f"k must be >= 1, got {k}")
     if sample_num < 1 or sample_den < 1 or sample_num > sample_den:
         raise ValueError("sample fraction must satisfy 1 <= sample_num <= sample_den")
-    _check_mode("encode_mode", encode_mode)
     cand = 4 * k if candidates is None else int(candidates)
     if cand < k:
         raise ValueError(f"candidates={cand} must be >= k={k}")
@@ -2935,38 +2600,27 @@ def pq_topk(
             train = cn.where(
                 _md5_sample_pred(id_col, sample_num, sample_den)
             ).localCheckpoint(eager=True)
-        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col, encode_mode)
+        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col)
         # encode: per subspace, argmin squared-L2 against the codebook
-        # (array_position / numpy argmin find the FIRST minimum -> ties
-        # to the lowest cid, the twin's row_number ORDER BY d ASC, cid).
-        codes = _coded_corpus(
-            corpus, books, None, encode_mode, id_col, vec_col, dim
-        )
+        # (numpy argmin finds the FIRST minimum -> ties to the lowest
+        # cid, the twin's row_number ORDER BY d ASC, cid).
+        codes = _encode_vector(corpus, books, None, id_col, vec_col, dim)
 
     qn = _normalized(queries, id_col, vec_col, dim).select(
         F.col(id_col).alias("query_id"), F.col("vn").alias("qvn")
     )
-    # ADC: adc = sum_j dot(q_sub_j, codebook_j[code_j]) in fixed j order.
-    # vector mode (round 16, r15 verdict #5): ONE Arrow kernel
-    # with the codebooks and the (small, already-driver-materialized)
-    # query set in the task closure — replaces the m broadcast joins
-    # that attached centroid payloads to every code row, the query
-    # crossJoin that re-carried the dim-double query per scanned row,
-    # and the m×sub_dim-term codegen chain; bit-identical doubles by the
-    # kernel's dimension-loop order (see _adc_scan_vector). fold mode
-    # keeps the literal-array element_at JVM form (plan O(n_codes)) as
-    # the pure-JVM reference implementation.
-    if encode_mode == "vector":
-        q_rows = [
-            (r["query_id"], r["qvn"])
-            for r in _collect_bounded(qn, MAX_SERVE_QUERIES, "query set")
-        ]
-        scored = _adc_scan_vector(
-            codes, books, q_rows, m, sub_dim, id_col, dim,
-            qn.schema["query_id"].dataType.simpleString(),
-        )
-    else:
-        scored = _adc_fold(codes.crossJoin(F.broadcast(qn)), books, sub_dim, id_col)
+    # ADC: adc = sum_j dot(q_sub_j, codebook_j[code_j]) in fixed j order,
+    # ONE Arrow kernel with the codebooks and the (small, collected)
+    # query set in the task closure; bit-identical doubles by the
+    # kernel's dimension-loop order (see _adc_scan_vector).
+    q_rows = [
+        (r["query_id"], r["qvn"])
+        for r in _collect_bounded(qn, MAX_SERVE_QUERIES, "query set")
+    ]
+    scored = _adc_scan_vector(
+        codes, books, q_rows, m, sub_dim, id_col, dim,
+        qn.schema["query_id"].dataType.simpleString(),
+    )
 
     return _cut_and_rerank(
         scored, corpus, queries, k, cand, shards, id_col, vec_col, dim
@@ -2988,7 +2642,6 @@ def ivfpq_topk(
     sample_den: int = 1,
     coarse_sample_num: int = 1,
     coarse_sample_den: int = 1,
-    encode_mode: str = "vector",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = EMBED_DIM,
@@ -3025,22 +2678,15 @@ def ivfpq_topk(
     batches without an index, flat ``pq_topk`` is cheaper (the
     t2_s5/s6 *_q50_* bench pair records the regime where IVF earns its
     build). Coarse training/assignment cost is n_lists-proportional —
-    the ``encode_mode="vector"`` DEFAULT routes BOTH the coarse
-    Lloyd/assignment and the PQ encode through the Arrow kernels, whose
-    certified BLAS argmax/argmin is BIT-IDENTICAL to the fold
-    (oracle-safe at paper-scale list counts; see ``pq_topk``);
-    ``"fold"`` is the pure-JVM reference. ``coarse_sample_num/den``
+    BOTH the coarse Lloyd/assignment and the PQ encode run through the
+    Arrow kernels, whose certified BLAS argmax/argmin is BIT-IDENTICAL
+    to the twin (oracle-safe at paper-scale list counts; see
+    ``pq_topk``). ``coarse_sample_num/den``
     trains the coarse quantizer on the d8 md5
     subsample instead of the full corpus (every Lloyd round otherwise
     scans all vectors; FAISS likewise trains IVF on a sample). Final
     list ASSIGNMENT always covers the full corpus; the sample knob
     mirrors in the twin, so the exact-mode oracle stays exact.
-
-    Plan-audit note: the two ``Join Cross`` nodes tools/plan_audit.py
-    flags here are the coarse ASSIGNMENT joins — corpus/query rows
-    against the BROADCAST n_lists-row centroid table (s3/d8's exact
-    shape, rightHint=broadcast in the plan); per-row work is O(n_lists),
-    never a data-by-data cartesian.
 
     ``index_path`` (r10 verdict #3): serve from a ``build_pq_index(...,
     n_lists=...)`` artifact — coarse centroids + codebooks load
@@ -3053,9 +2699,10 @@ def ivfpq_topk(
     the rebuild form; ``ivfpq_topk_sql`` remains the full-procedure
     oracle. ``corpus`` still required for the exact rerank fetch-back.
 
-    The query set and its (query, list) probe pairs are collected to the
-    driver: more than ``MAX_SERVE_QUERIES`` queries (or that many times
-    ``n_probe`` probe pairs) raise.
+    The raw query vectors are collected to the driver once; their probe
+    lists (``_probe_lists``) and normalized vectors are computed there
+    with the exact chains. More than ``MAX_SERVE_QUERIES`` queries
+    raise.
 
     Reference attribution: the reference has no vector search at all
     (SURVEY §2.6); s1-s6 exist for the LLM-pipeline mandate."""
@@ -3065,7 +2712,6 @@ def ivfpq_topk(
         raise ValueError(
             f"n_probe must be in [1, n_lists={n_lists}], got {n_probe}"
         )
-    _check_mode("encode_mode", encode_mode)
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
@@ -3138,72 +2784,43 @@ def ivfpq_topk(
                 id_col=id_col,
                 vec_col=vec_col,
                 dim=dim,
-                assign_mode=encode_mode,
             )
             fut_books = pool.submit(
-                _pq_train, train, m, sub_dim, n_codes, iterations, id_col,
-                encode_mode,
+                _pq_train, train, m, sub_dim, n_codes, iterations, id_col
             )
             coarse = fut_coarse.result()
             books = fut_books.result()
         # the stored artifact at scale: codes PARTITIONED BY the list id —
         # a probe below prunes to n_probe partitions (build_pq_index
         # writes exactly this shape; index_path serves it)
-        coded_lists = _coded_corpus(
-            corpus, books, coarse, encode_mode, id_col, vec_col, dim
-        )
+        coded_lists = _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
 
     # ---- query probes: n_probe nearest coarse lists per query ----------
-    q_probes = _nearest_fold(
-        queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v")),
-        coarse, "query_id", dim, n_probe,
-    ).select("query_id", "cid")
-    qn = _normalized(queries, id_col, vec_col, dim).select(
-        F.col(id_col).alias("query_id"), F.col("vn").alias("qvn")
+    # one collect of the raw query vectors; the probe lists and the
+    # normalized vectors (``_normalized``'s chain: dim-prefix norm, zero
+    # norm divides by 1) are computed from it on the driver
+    import numpy as np
+
+    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("v"))
+    q_raw = _collect_bounded(q, MAX_SERVE_QUERIES, "query set")
+    nv, V, probes = _probe_lists([r["v"] for r in q_raw], coarse, dim, n_probe)
+    qvn = V / np.where(nv == 0, 1.0, nv)[:, None]
+    q_rows = [(r["query_id"], list(x)) for r, x in zip(q_raw, qvn)]
+    if index_path is not None:
+        # static probe pruning: the probed cid set is known BEFORE the
+        # scan, so the cid-partitioned code table prunes to exactly the
+        # probed directories at planning time.
+        probed_cids = sorted({c for cids in probes for c in cids})
+        coded_lists = coded_lists.where(F.col("cid").isin(probed_cids))
+
+    # ---- ADC over probed lists only (vs s5's full scan) -----------------
+    # the probed-list restriction runs INSIDE the Arrow kernel alongside
+    # the codebooks (see _adc_scan_vector)
+    scored = _adc_scan_vector(
+        coded_lists, books, q_rows, m, sub_dim, id_col, dim,
+        q.schema["query_id"].dataType.simpleString(),
+        probes=[(qi, cid) for qi, cids in enumerate(probes) for cid in cids],
     )
-
-    # ---- ADC over probed lists only (vs s5's full crossJoin) -----------
-    # vector mode (round 16, r15 verdict #5): the probe pairs are
-    # O(queries × n_probe) and driver-bounded (index mode already
-    # collected them for the static IN), so the probed-list restriction
-    # moves INTO the Arrow kernel alongside the codebooks — one
-    # MapInPandas replaces the m centroid broadcast joins, the
-    # probes-by-cid join and the codegen ADC chain, bit-identically
-    # (see _adc_scan_vector).
-    max_probes = MAX_SERVE_QUERIES * n_probe
-    if encode_mode == "vector":
-        probe_rows = _collect_bounded(q_probes, max_probes, "probe set")
-        if index_path is not None:
-            # static probe pruning: the probed cid set is known BEFORE
-            # the scan, so the cid-partitioned code table prunes to
-            # exactly the probed directories at planning time.
-            probed_cids = sorted({int(r["cid"]) for r in probe_rows})
-            coded_lists = coded_lists.where(F.col("cid").isin(probed_cids))
-        q_rows = [
-            (r["query_id"], r["qvn"])
-            for r in _collect_bounded(qn, MAX_SERVE_QUERIES, "query set")
-        ]
-        qi_by_id = {qid: i for i, (qid, _) in enumerate(q_rows)}
-        scored = _adc_scan_vector(
-            coded_lists, books, q_rows, m, sub_dim, id_col, dim,
-            qn.schema["query_id"].dataType.simpleString(),
-            probes=[
-                (qi_by_id[r["query_id"]], r["cid"]) for r in probe_rows
-            ],
-        )
-    else:
-        probes = F.broadcast(q_probes.join(qn, on="query_id"))
-        if index_path is not None:
-            probed_cids = sorted(
-                {r["cid"] for r in _collect_bounded(q_probes, max_probes, "probe set")}
-            )
-            coded_lists = coded_lists.where(
-                F.col("cid").isin([int(c) for c in probed_cids])
-            )
-        scored = _adc_fold(
-            coded_lists.join(probes, on="cid"), books, sub_dim, id_col
-        )
-
     return _cut_and_rerank(
         scored, corpus, queries, k, cand, shards, id_col, vec_col, dim
     )
@@ -3211,7 +2828,8 @@ def ivfpq_topk(
 
 def _l2_sql(a: str, b: str, n: int, a_off: int = 0) -> str:
     """DuckDB squared-L2 between ``a[a_off+1 .. a_off+n]`` (1-based) and
-    ``b[1..n]`` — list_sum's left fold matches ``_l2_unrolled``'s chain."""
+    ``b[1..n]`` — list_sum's left-to-right sum is the chain of
+    ``exact_chains.l2_argmin``."""
     return (
         f"list_sum(list_transform(range(1, {n + 1}), "
         f"i -> ({a}[i + {a_off}] - {b}[i]) * ({a}[i + {a_off}] - {b}[i])))"
@@ -3241,7 +2859,7 @@ def ivfpq_topk_sql(
     query_pred: str = "vec_id < 5",
     dim: int = EMBED_DIM,
 ) -> str:
-    """DuckDB twin of ``ivfpq_topk`` (fold mode): the s3 coarse-k-means
+    """DuckDB twin of ``ivfpq_topk``: the s3 coarse-k-means
     CTE chain (``_kmeans_ctes``) + final list assignment + query probes,
     composed with the s5 PQ chain (per-subspace k-means, argmin encode,
     ADC, candidate cut, exact rerank) — the ADC's FROM restricts to

@@ -82,12 +82,6 @@ def load_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trades_from_events(read_events(spark, sf_dir))
 
 
-def read_trades_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read an already-trade-shaped parquet table."""
-    tune_session(spark)
-    return spark.read.parquet(path)
-
-
 def read_trades_csv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
     """Trade-shaped CSV with the declared schema (no inference pass —
     a second full scan at 100 TB is never acceptable). Malformed rows

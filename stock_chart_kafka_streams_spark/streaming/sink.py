@@ -1049,27 +1049,6 @@ def compact_candles(
     _bump_table_version(path)
 
 
-def foreach_batch_upsert(path: str):
-    """``foreachBatch`` hook writing each micro-batch of finalized candles
-    into the serving table (reference S3 without the per-record blocking
-    store call in the hot path)."""
-
-    def _write(batch: DataFrame, batch_id: int) -> None:
-        # evaluate the stateful micro-batch plan ONCE (round 16): the
-        # previous isEmpty() pre-check plus the MERGE's own touched
-        # collect and publish each re-ran the whole plan — pin it, then
-        # every downstream action reads the checkpoint
-        cols = list(CANDLE_COLUMNS) + (
-            ["is_gap"] if "is_gap" in batch.columns else []
-        )
-        pinned = batch.select(*cols).localCheckpoint(eager=True)
-        if pinned.isEmpty():
-            return
-        upsert_candles(pinned.sparkSession, pinned, path)
-
-    return _write
-
-
 class BatchedCompactionSink:
     """High-throughput serving sink (round 8, r7 verdict #6): APPEND each
     micro-batch to a staging directory (one cheap write, no read), and

@@ -502,27 +502,26 @@ def test_pq_rejects_nonpositive_m(embs):
         pq_topk_sql(m=-4)
 
 
-def test_pq_vector_encode_equivalent_to_fold(spark, embs):
-    """The default encode (certified BLAS argmin, Arrow ADC scan) must
-    produce the SAME final top-k rows, cos doubles included, as the
-    pure-JVM fold at k=5."""
-    from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
+def test_pq_vector_encode_equivalent_to_fold(spark, embs, duck):
+    """The encode (certified BLAS argmin, Arrow ADC scan) must produce
+    the SAME final top-k rows, cos doubles bit for bit, as the DuckDB
+    twin at k=5 (the name keeps the deleted JVM fold reference)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        pq_topk,
+        pq_topk_sql,
+    )
+    from tests.oracle import assert_matches_twin_bits
 
     queries = embs.where(F.col("vec_id") < 5)
-    vect = sorted(map(tuple, pq_topk(embs, queries, k=5, n_codes=8).collect()))
-    fold = sorted(
-        map(
-            tuple,
-            pq_topk(embs, queries, k=5, n_codes=8, encode_mode="fold").collect(),
-        )
+    assert_matches_twin_bits(
+        pq_topk(embs, queries, k=5, n_codes=8), duck, pq_topk_sql(k=5, n_codes=8)
     )
-    assert vect == fold
 
 
 def test_pq_runs_at_paper_scale_codebooks(spark, embs):
     """k*=256 codes per subspace (the PQ paper's standard configuration)
-    must be RUNNABLE on the default exact path — the fold's literal plan
-    is not. n_codes=256 > the 500-vector fixture's 1/2 sample, so train
+    must be RUNNABLE on the exact path — a literal-array JVM plan of
+    256 centroids per subspace is not. n_codes=256 > the 500-vector fixture's 1/2 sample, so train
     on the full corpus; self-hit at rank 1 proves the whole path works."""
     from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
 
@@ -540,9 +539,10 @@ def test_pq_runs_at_paper_scale_codebooks(spark, embs):
 
 
 def test_pq_rejects_unknown_encode_mode(embs):
+    """pq_topk has one path: any ``encode_mode`` is an unknown argument."""
     from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
 
-    with pytest.raises(ValueError, match="encode_mode"):
+    with pytest.raises(TypeError, match="encode_mode"):
         pq_topk(embs, embs, encode_mode="simd")
 
 
@@ -685,22 +685,21 @@ def test_ivfpq_recall_vs_exact(spark, embs):
         assert r["vec_id"] == r["query_id"] and abs(r["cos"] - 1.0) < 1e-9
 
 
-def test_ivfpq_vector_equivalent_to_fold(spark, embs):
-    from stock_chart_kafka_streams_spark.operators.similarity import ivfpq_topk
+def test_ivfpq_vector_equivalent_to_fold(spark, embs, duck):
+    """s6 at 4 lists / 2 probes against the DuckDB twin, bit for bit (the
+    name keeps the deleted JVM fold reference)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        ivfpq_topk,
+        ivfpq_topk_sql,
+    )
+    from tests.oracle import assert_matches_twin_bits
 
     queries = embs.where(F.col("vec_id") < 3)
-    vect = sorted(
-        map(tuple, ivfpq_topk(embs, queries, k=5, n_lists=4, n_probe=2).collect())
+    assert_matches_twin_bits(
+        ivfpq_topk(embs, queries, k=5, n_lists=4, n_probe=2),
+        duck,
+        ivfpq_topk_sql(k=5, n_lists=4, n_probe=2, query_pred="vec_id < 3"),
     )
-    fold = sorted(
-        map(
-            tuple,
-            ivfpq_topk(
-                embs, queries, k=5, n_lists=4, n_probe=2, encode_mode="fold"
-            ).collect(),
-        )
-    )
-    assert vect == fold
 
 
 def test_ivfpq_rejects_bad_params(embs):
@@ -715,7 +714,7 @@ def test_ivfpq_rejects_bad_params(embs):
         ivfpq_topk_sql(n_lists=4, n_probe=0)
     with pytest.raises(ValueError, match="n_lists"):
         ivfpq_topk(embs, embs, n_lists=0)
-    with pytest.raises(ValueError, match="encode_mode"):
+    with pytest.raises(TypeError, match="encode_mode"):
         ivfpq_topk(embs, embs, encode_mode="gpu")
 
 

@@ -394,8 +394,7 @@ def test_index_training_knob_mismatch_raises(spark, embs, queries, tmp_path):
     """r11 advice: serving must refuse an index trained with different
     sampling / iterations than the caller requested — silently serving a
     differently-trained index is the wrong-answer class the (m, n_codes,
-    dim) check already guards. The encode mode is not a knob: the fold
-    serves a vector-built index."""
+    dim) check already guards."""
     path = str(tmp_path / "knob_idx")
     build_pq_index(
         embs, path, m=4, n_codes=8, iterations=2, sample_num=1, sample_den=2
@@ -412,10 +411,6 @@ def test_index_training_knob_mismatch_raises(spark, embs, queries, tmp_path):
             embs, queries, k=5, m=4, n_codes=8, iterations=3,
             sample_num=1, sample_den=2, index_path=path,
         )
-    pq_topk(
-        embs, queries, k=5, m=4, n_codes=8, iterations=2,
-        sample_num=1, sample_den=2, encode_mode="fold", index_path=path,
-    ).collect()
 
 
 def test_v2_index_meta_is_refused(spark, embs, queries, tmp_path):

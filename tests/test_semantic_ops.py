@@ -259,21 +259,30 @@ def test_mixture_sample_rejects_bad_params(spark):
 
 
 # ---------------------------------------------------------------------------
-# round 9: vector == fold, verify prune, cap-mirrored twin, stage stats
+# round 9: bit equality with the twin, verify prune, cap-mirrored twin,
+# stage stats
 # ---------------------------------------------------------------------------
 
 
-def test_semantic_dedup_vector_equivalent_to_fold(spark, planted):
-    """The default assignment (certified BLAS argmax) must pick the same
-    clusters, survivors and cent_cos doubles as the pure-JVM fold on the
-    planted fixture."""
-    from stock_chart_kafka_streams_spark.operators.similarity import semantic_dedup
-
-    vect = sorted(map(tuple, semantic_dedup(planted, threshold=0.99).collect()))
-    fold = sorted(
-        map(tuple, semantic_dedup(planted, threshold=0.99, assign_mode="fold").collect())
+def test_semantic_dedup_vector_equivalent_to_fold(spark, planted, duck):
+    """The assignment (certified BLAS argmax) must pick the same clusters,
+    survivors and cent_cos doubles, bit for bit, as the DuckDB twin on
+    the planted fixture (the name keeps the deleted JVM fold reference
+    it once compared against)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        PLANTED_NEARDUP_CTE,
+        semantic_dedup,
+        semantic_dedup_sql,
     )
-    assert vect == fold
+    from tests.oracle import assert_matches_twin_bits
+
+    assert_matches_twin_bits(
+        semantic_dedup(planted, threshold=0.99),
+        duck,
+        semantic_dedup_sql(
+            threshold=0.99, source_cte=PLANTED_NEARDUP_CTE, source_name="aug"
+        ),
+    )
 
 
 def test_semantic_dedup_verify_prune_is_lossless(spark, planted):
@@ -350,15 +359,19 @@ def test_semantic_dedup_stats_and_cap_warning(spark):
     assert any("cluster_cap" in str(w.message) for w in caught)
 
 
-def test_semantic_dedup_latent_dim_prefix_both_modes(spark):
+def test_semantic_dedup_latent_dim_prefix_both_modes(spark, duck):
     """r9 review regression: with dim SMALLER than the physical array
-    width, the vector and fold assignment modes must (a) agree with each
-    other bit for bit and (b) actually resolve pairs that are near-dups
-    in the dim-prefix — the unsliced fold once used full-width cosines
-    against dim-length trained centroids (null-poisoned zip_with)."""
+    width, the assignment must (a) agree with the DuckDB twin's
+    dim-prefix cosines bit for bit and (b) actually resolve pairs that
+    are near-dups in the dim-prefix — a former JVM assignment once used
+    full-width cosines against dim-length trained centroids."""
     import random
 
-    from stock_chart_kafka_streams_spark.operators.similarity import semantic_dedup
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_dedup_sql,
+    )
+    from tests.oracle import assert_matches_twin_bits, register_vectors
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
@@ -372,19 +385,17 @@ def test_semantic_dedup_latent_dim_prefix_both_modes(spark):
             )
         )
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vect = sorted(
-        map(tuple, semantic_dedup(vecs, threshold=0.99, n_centroids=3, dim=4).collect())
+    register_vectors(duck, "latent8", rows)
+    out = semantic_dedup(vecs, threshold=0.99, n_centroids=3, dim=4)
+    assert_matches_twin_bits(
+        out,
+        duck,
+        semantic_dedup_sql(
+            threshold=0.99, n_centroids=3, dim=4,
+            source_cte="e AS (SELECT vec_id, embedding AS v FROM latent8)",
+        ),
     )
-    fold = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                vecs, threshold=0.99, n_centroids=3, dim=4, assign_mode="fold"
-            ).collect(),
-        )
-    )
-    assert vect == fold
-    survivors = {v for v, _, _ in fold}
+    survivors = {r["vec_id"] for r in out.collect()}
     for pid in range(5):
         kept = {pid, 1000 + pid} & survivors
         assert len(kept) == 1, f"prefix pair {pid} kept {kept}"

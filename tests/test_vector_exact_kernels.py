@@ -1,18 +1,32 @@
-"""Round-15 vectorized-exact kernels: BIT equality against the fold.
+"""The ANN kernels against their references, bit for bit.
 
-The optimization round replaced the interpreted HOF folds / literal plan
-chains on the oracle-exact default paths (SRP codes, centroid
-assignment, PQ training + encode) with Arrow-batched numpy kernels that
-accumulate over DIMENSIONS left to right — the claim is not "equivalent
-modulo ties" but BIT-IDENTICAL doubles and
-therefore identical oracle hashes. These tests pin that claim at its
-strictest: full row tuples including float values, plus the NaN /
-non-default-dim edges the kernels must mirror from Spark semantics."""
+Each ANN operator has one path: Arrow-batched numpy kernels that
+accumulate over DIMENSIONS left to right (``exact_chains``). Their
+reference is the operator's DuckDB twin (``*_sql``), compared with
+``oracle.assert_matches_twin_bits`` — every double by bit pattern, NaN
+equal to NaN — not at the driver oracle's 9 decimals. Fixtures the twin
+cannot express (DuckDB raises where Spark's ``floor`` saturates NaN and
+1e300-scale components) compare against a pure-Python dimension-loop
+replay built on ``exact_chains.quantize``. The tests also pin the edge
+contract written in ``exact_chains``: NaN first, ties to the lowest cid,
+short rows raise, empty input yields no rows.
 
+Several test names still say ``fold``: they name the pure-JVM reference
+these tests compared against until it was deleted. Each docstring names
+the reference the test uses now."""
+
+import hashlib
 import math
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.oracle import (
+    assert_bits_equal,
+    assert_matches_twin_bits,
+    bits,
+    register_vectors,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -26,156 +40,189 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_srp_codes_kernel_bit_equals_fold_expression(spark, embs):
+def _twin_select(sql: str, select: str) -> str:
+    """A twin's CTE chain with its final SELECT replaced by ``select``,
+    to read an intermediate CTE (centroids, codes, lists)."""
+    head, _ = sql.rsplit("\nSELECT query_id, vec_id, cos", 1)
+    return f"{head}\n{select}"
+
+
+def _srp_codes_sql(source: str, n_bits: int, n_tables: int, dim: int) -> str:
     from stock_chart_kafka_streams_spark.operators.similarity import (
-        _srp_code_fold,
-        _srp_codes,
+        _srp_code_fold_sql,
     )
+
+    return "\nUNION ALL\n".join(
+        f"SELECT vec_id AS id, {t} AS t, "
+        f"{_srp_code_fold_sql('v', t, n_bits, dim)} AS code "
+        f"FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM {source})"
+        for t in range(n_tables)
+    )
+
+
+def test_srp_codes_kernel_bit_equals_fold_expression(spark, embs, duck):
+    """The SRP code kernel equals the twins' code expression
+    (``_srp_code_fold_sql``) on every (id, table)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import _srp_codes
 
     v = embs.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v"))
-    kernel = _srp_codes(v, "vec_id", 16, 4, 64)
-    fold = v.select(
-        F.col("vec_id").alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        _srp_code_fold(F.col("v"), t, 16, 64).alias("code"),
-                    )
-                    for t in range(4)
-                ]
-            )
-        ).alias("tc"),
-    ).select("id", F.col("tc.t"), F.col("tc.code"))
-    assert _rows(kernel) == _rows(fold)
-
-
-def test_srp_codes_nan_projection_counts_as_positive(spark):
-    """Spark evaluates ``NaN > 0`` as TRUE (NaN-greatest ordering); the
-    kernel must set the bit for a NaN projection exactly like the fold."""
-    from stock_chart_kafka_streams_spark.operators.similarity import (
-        _srp_code_fold,
-        _srp_codes,
+    assert_matches_twin_bits(
+        _srp_codes(v, "vec_id", 16, 4, 64), duck, _srp_codes_sql("embeddings", 16, 4, 64)
     )
+
+
+def test_srp_codes_nan_projection_counts_as_positive(spark, duck):
+    """``NaN > 0`` is TRUE in Spark and DuckDB (NaN is the greatest
+    value): the kernel sets the bit for a NaN projection, as the twin's
+    code expression does."""
+    from stock_chart_kafka_streams_spark.operators.similarity import _srp_codes
 
     nan = float("nan")
     rows = [(1, [nan] * 8), (2, [0.5] * 8), (3, [-0.5] * 8)]
-    v = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    kernel = _rows(_srp_codes(v, "vec_id", 4, 2, 8))
-    fold = _rows(
-        v.select(
-            F.col("vec_id").alias("id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            _srp_code_fold(F.col("v"), t, 4, 8).alias("code"),
-                        )
-                        for t in range(2)
-                    ]
-                )
-            ).alias("tc"),
-        ).select("id", F.col("tc.t"), F.col("tc.code"))
-    )
-    assert kernel == fold
+    register_vectors(duck, "srp_nan", rows)
+    v = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    kernel = _srp_codes(v, "vec_id", 4, 2, 8)
+    assert_matches_twin_bits(kernel, duck, _srp_codes_sql("srp_nan", 4, 2, 8))
     # the all-NaN row's projections are NaN -> every bit set
-    assert [r for r in kernel if r[0] == 1] == [(1, 0, 15), (1, 1, 15)]
+    assert [r for r in _rows(kernel) if r[0] == 1] == [(1, 0, 15), (1, 1, 15)]
 
 
-def test_assign_vector_bit_equals_assign_fold(spark, embs):
+def _assignment_sql(source_cte: str, n_centroids: int, iterations: int, dim: int) -> str:
+    """The twin's assignment of every row, (vec_id, cid, cent_cos): the d8
+    twin with a threshold no cosine reaches, so nothing is removed."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
-        _assign_fold,
+        semantic_dedup_sql,
+    )
+
+    return semantic_dedup_sql(
+        threshold=2.0, n_centroids=n_centroids, iterations=iterations, dim=dim,
+        source_cte=source_cte,
+    )
+
+
+def test_assign_vector_bit_equals_assign_fold(spark, embs, duck):
+    """``_assign_vector`` over the trained centroids equals the twin's
+    assignment (cid and cent_cos bits, which also pins the trained
+    centroids), and its ``nv`` is the JVM norm's double."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
         _assign_vector,
+        _norm,
         ivf_build_centroids,
     )
 
-    cents = ivf_build_centroids(embs, 8, assign_mode="fold")
+    cents = ivf_build_centroids(embs, 8)
     base = embs.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v"))
-    fold = _assign_fold(base, cents, 64, "vec_id").select(
-        "vec_id", "nv", "cid", "cent_cos"
+    vect = _assign_vector(base, cents, "vec_id", 64)
+    src = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+    assert_matches_twin_bits(
+        vect.select("vec_id", "cid", "cent_cos"), duck, _assignment_sql(src, 8, 2, 64)
     )
-    vect = _assign_vector(base, cents, "vec_id", 64).select(
-        "vec_id", "nv", "cid", "cent_cos"
-    )
-    # bit equality including the nv / cent_cos doubles
-    assert _rows(fold) == _rows(vect)
+    jvm_nv = base.select("vec_id", _norm(F.col("v")).alias("nv"))
+    assert_bits_equal(vect.select("vec_id", "nv").collect(), jvm_nv.collect())
 
 
-def test_ivf_lloyd_vector_centroids_bit_equal_fold(spark, embs):
+def test_ivf_lloyd_vector_centroids_bit_equal_fold(spark, embs, duck):
+    """The map-only Lloyd rounds give the twin's k-means centroids
+    (``_kmeans_ctes``), every component bit for bit."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
+        _kmeans_ctes,
         ivf_build_centroids,
     )
 
-    fold = ivf_build_centroids(embs, 8, iterations=2, assign_mode="fold")
-    vect = ivf_build_centroids(embs, 8, iterations=2, assign_mode="vector")
-    assert fold == vect  # exact float equality, every component
+    vect = ivf_build_centroids(embs, 8, iterations=2)
+    ctes, last = _kmeans_ctes(8, 2, 64)
+    sql = (
+        "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),\n"
+        + ",\n".join(ctes)
+        + f"\nSELECT cid, cv FROM {last}"
+    )
+    assert_bits_equal(list(enumerate(vect)), duck.execute(sql).fetchall())
 
 
-def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs):
+def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs, duck):
+    """The PQ codebooks and the encode kernel's codes equal the s5
+    twin's ``cent*_s*`` and ``codes`` CTEs."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
-        _coded_corpus,
+        _encode_vector,
         _normalized,
-        _pq_encode,
         _pq_train,
+        pq_topk_sql,
     )
 
     cn = _normalized(embs, "vec_id", "embedding", 64)
-    books_f = _pq_train(cn, 4, 16, 8, 2, "vec_id", "fold")
-    books_v = _pq_train(cn, 4, 16, 8, 2, "vec_id", "vector")
-    assert books_f == books_v
-    codes_f = _pq_encode(cn, books_f, 4, 16, "vec_id")
-    # the vector mode encodes the RAW corpus, normalizing inside the kernel
-    codes_v = _coded_corpus(embs, books_f, None, "vector", "vec_id", "embedding", 64)
-    assert _rows(codes_f) == _rows(codes_v)
+    books = _pq_train(cn, 4, 16, 8, 2, "vec_id")
+    sql = pq_topk_sql(k=10, m=4, n_codes=8, iterations=2)
+    for j in range(4):
+        want = duck.execute(_twin_select(sql, f"SELECT cid, cv FROM cent2_s{j}")).fetchall()
+        assert_bits_equal(list(enumerate(books[j])), want)
+    codes = _encode_vector(embs, books, None, "vec_id", "embedding", 64)
+    assert_matches_twin_bits(codes, duck, _twin_select(sql, "SELECT * FROM codes"))
 
 
-def test_pq_topk_vector_bit_equals_fold_end_to_end(spark, embs):
-    from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
-
-    q = embs.where(F.col("vec_id") < 5)
-    fold = pq_topk(embs, q, k=10, m=4, n_codes=8, encode_mode="fold")
-    vect = pq_topk(embs, q, k=10, m=4, n_codes=8, encode_mode="vector")
-    assert _rows(fold) == _rows(vect)  # cos doubles included
-
-
-def test_ivfpq_topk_vector_bit_equals_fold_end_to_end(spark, embs):
-    from stock_chart_kafka_streams_spark.operators.similarity import ivfpq_topk
-
-    q = embs.where(F.col("vec_id") < 5)
-    fold = ivfpq_topk(embs, q, k=5, n_lists=4, n_probe=2, encode_mode="fold")
-    vect = ivfpq_topk(embs, q, k=5, n_lists=4, n_probe=2, encode_mode="vector")
-    assert _rows(fold) == _rows(vect)
-
-
-def test_semantic_dedup_vector_bit_equals_fold(spark, embs):
-    from stock_chart_kafka_streams_spark.operators.similarity import semantic_dedup
-
-    fold = semantic_dedup(embs, threshold=0.95, n_centroids=8, assign_mode="fold")
-    vect = semantic_dedup(embs, threshold=0.95, n_centroids=8, assign_mode="vector")
-    assert _rows(fold) == _rows(vect)  # survivors AND cent_cos doubles
-
-
-def test_assign_vector_nondefault_dim(spark):
-    """The multimodal path assigns 8-dim feature vectors (dim=8): the
-    kernel's dim-prefix slicing must match the fold's F.get/zip_with
-    prefix semantics at a non-default width."""
+def test_pq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
+    """s5 end to end against ``pq_topk_sql``, cos doubles included."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
-        _assign_fold,
+        pq_topk,
+        pq_topk_sql,
+    )
+
+    q = embs.where(F.col("vec_id") < 5)
+    assert_matches_twin_bits(
+        pq_topk(embs, q, k=10, m=4, n_codes=8), duck, pq_topk_sql(k=10, m=4, n_codes=8)
+    )
+
+
+def test_ivfpq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
+    """s6 end to end against ``ivfpq_topk_sql`` (coarse k-means, list
+    assignment, query probes, PQ, probed ADC, rerank)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        ivfpq_topk,
+        ivfpq_topk_sql,
+    )
+
+    q = embs.where(F.col("vec_id") < 5)
+    assert_matches_twin_bits(
+        ivfpq_topk(embs, q, k=5, n_lists=4, n_probe=2),
+        duck,
+        ivfpq_topk_sql(k=5, n_lists=4, n_probe=2),
+    )
+
+
+def test_semantic_dedup_vector_bit_equals_fold(spark, embs, duck):
+    """d8 on the raw corpus at threshold 0.95 against
+    ``semantic_dedup_sql``: survivors, cids and cent_cos doubles."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_dedup_sql,
+    )
+
+    assert_matches_twin_bits(
+        semantic_dedup(embs, threshold=0.95, n_centroids=8),
+        duck,
+        semantic_dedup_sql(threshold=0.95, n_centroids=8),
+    )
+
+
+def test_assign_vector_nondefault_dim(spark, duck):
+    """The multimodal path assigns 8-dim feature vectors (dim=8): the
+    kernel's dim-prefix slicing must match the twin's at a non-default
+    width."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
         _assign_vector,
+        ivf_build_centroids,
     )
 
     rows = [(i, [math.sin(i * 7.3 + j) for j in range(8)]) for i in range(40)]
-    base = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    cents = [r[1] for r in rows[:3]]
-    fold = _assign_fold(base, cents, 8, "vec_id").select(
-        "vec_id", "nv", "cid", "cent_cos"
+    register_vectors(duck, "dim8", rows)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ivf_build_centroids(df, 3, iterations=0, dim=8)
+    base = df.select("vec_id", F.col("embedding").alias("v"))
+    src = "e AS (SELECT vec_id, embedding AS v FROM dim8)"
+    assert_matches_twin_bits(
+        _assign_vector(base, cents, "vec_id", 8).select("vec_id", "cid", "cent_cos"),
+        duck,
+        _assignment_sql(src, 3, 0, 8),
     )
-    vect = _assign_vector(base, cents, "vec_id", 8).select(
-        "vec_id", "nv", "cid", "cent_cos"
-    )
-    assert _rows(fold) == _rows(vect)
 
 
 def test_cosine_verify_kernel_bit_equals_dot_unrolled(spark, embs):
@@ -235,15 +282,15 @@ def test_adc_scan_kernel_bit_equals_jvm_chain(spark, embs):
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _adc_scan_vector,
         _dot_unrolled,
+        _encode_vector,
         _normalized,
-        _pq_encode,
         _pq_train,
     )
 
     m, sub_dim, dim = 4, 16, 64
     cn = _normalized(embs, "vec_id", "embedding", dim)
-    books = _pq_train(cn, m, sub_dim, 8, 2, "vec_id", "fold")
-    codes = _pq_encode(cn, books, m, sub_dim, "vec_id")
+    books = _pq_train(cn, m, sub_dim, 8, 2, "vec_id")
+    codes = _encode_vector(embs, books, None, "vec_id", "embedding", dim)
     qn = _normalized(embs.where(F.col("vec_id") < 5), "vec_id", "embedding", dim).select(
         F.col("vec_id").alias("query_id"), F.col("vn").alias("qvn")
     )
@@ -287,65 +334,55 @@ def test_adc_scan_kernel_short_query_is_null(spark, embs):
     the JVM chain's out-of-bounds F.get semantics."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _adc_scan_vector,
+        _encode_vector,
         _normalized,
-        _pq_encode,
         _pq_train,
     )
 
     cn = _normalized(embs, "vec_id", "embedding", 64)
-    books = _pq_train(cn, 4, 16, 8, 1, "vec_id", "fold")
-    codes = _pq_encode(cn, books, 4, 16, "vec_id").limit(3)
+    books = _pq_train(cn, 4, 16, 8, 1, "vec_id")
+    codes = _encode_vector(embs, books, None, "vec_id", "embedding", 64).limit(3)
     out = _adc_scan_vector(
         codes, books, [(99, [1.0] * 8)], 4, 16, "vec_id", 64, "bigint"
     ).collect()
     assert len(out) == 3 and all(r["adc"] is None for r in out)
 
 
-def _nan_safe(rows):
-    return sorted(
-        tuple("nan" if isinstance(x, float) and math.isnan(x) else x for x in r)
-        for r in rows
-    )
-
-
-def test_pq_topk_nan_scores_rank_like_the_fold(spark):
-    """A NaN ADC score must stay NaN, which Spark sorts FIRST under the
-    ``adc DESC`` candidate cut; a NULL would sort it last and cut it.
-    Query 1 has a NaN component (every score NaN). Row ``nan_id`` is
-    NaN too and sorts first by md5, so with no Lloyd round it is
-    codebook centroid 0 of every subspace and the only row encoded
-    there: query 0's scores are finite except against it."""
-    import hashlib
+def test_pq_topk_nan_scores_rank_like_the_fold(spark, duck):
+    """A NaN ADC score must stay NaN, which Spark and DuckDB sort FIRST
+    under the ``adc DESC`` candidate cut; a NULL would sort it last and
+    cut it. Row ``nan_id`` has a NaN component and sorts first by md5,
+    so with no Lloyd round it is codebook centroid 0 of every subspace
+    and the only row encoded there. It is also a query, whose scores
+    are all NaN; query 11's are finite except against it. Reference:
+    ``pq_topk_sql`` on the same registered rows."""
     import random
 
-    from stock_chart_kafka_streams_spark.operators.similarity import pq_topk
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        pq_topk,
+        pq_topk_sql,
+    )
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(200)]
     nan_id = min(range(200), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
     rows[nan_id][1][7] = float("nan")
+    register_vectors(duck, "pq_nan", rows)
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [(0, rows[11][1]), (1, [float("nan")] + rows[12][1][1:])],
-        "vec_id long, embedding array<double>",
+    pred = f"vec_id IN (11, {nan_id})"
+    out = pq_topk(corpus, corpus.where(pred), k=5, n_codes=8, iterations=0, shards=1)
+    assert_matches_twin_bits(
+        out, duck,
+        pq_topk_sql(table="pq_nan", k=5, n_codes=8, iterations=0, query_pred=pred),
     )
-    out = {
-        mode: _nan_safe(
-            pq_topk(
-                corpus, queries, k=5, n_codes=8, iterations=0, shards=1,
-                encode_mode=mode,
-            ).collect()
-        )
-        for mode in ("fold", "vector")
-    }
-    assert out["vector"] == out["fold"]
     # the NaN row survived the cut and ranks first for the finite query
-    assert (0, nan_id, "nan", 1) in out["vector"]
+    first = [r for r in out.collect() if r["query_id"] == 11 and r["rank"] == 1]
+    assert [r["vec_id"] for r in first] == [nan_id] and math.isnan(first[0]["cos"])
 
 
 def test_serve_query_set_past_its_bound_raises(spark, embs, monkeypatch):
-    """pq_topk/ivfpq_topk collect the query set (and IVF's probe pairs)
-    to the driver; past ``MAX_SERVE_QUERIES`` they raise instead."""
+    """ivf_topk, pq_topk and ivfpq_topk collect the query set to the
+    driver; past ``MAX_SERVE_QUERIES`` they raise instead."""
     from stock_chart_kafka_streams_spark.operators import similarity as S
 
     assert S.MAX_SERVE_QUERIES >= 50  # the largest batch any caller serves
@@ -353,28 +390,40 @@ def test_serve_query_set_past_its_bound_raises(spark, embs, monkeypatch):
     q = embs.where(F.col("vec_id") < 5)
     with pytest.raises(ValueError, match="query set has 5 rows.*maximum of 3"):
         S.pq_topk(embs, q, k=2, n_codes=4, iterations=1).collect()
-    with pytest.raises(ValueError, match="set has .* rows.*serve-path maximum"):
+    with pytest.raises(ValueError, match="query set has 5 rows.*maximum of 3"):
         S.ivfpq_topk(embs, q, k=2, n_lists=2, n_probe=1, n_codes=4, iterations=1)
+    with pytest.raises(ValueError, match="query set has 5 rows.*maximum of 3"):
+        S.ivf_topk(embs, q, k=2, n_centroids=2)
     S.pq_topk(embs, q.where(F.col("vec_id") < 3), k=2, n_codes=4, iterations=1).collect()
 
 
 def test_vector_mode_rejected_names_still_raise(spark, embs, tmp_path):
-    """Unknown modes raise before any Spark job runs — and so does
-    "matmul": the inexact BLAS mode was deleted."""
+    """Each ANN operator has one path: the ``assign_mode``/``encode_mode``
+    parameters and the JVM fold reference are gone, and passing a mode
+    raises before any Spark job runs."""
+    import inspect
+
     from stock_chart_kafka_streams_spark.operators import similarity as S
 
-    assert not hasattr(S, "_assign_matmul") and not hasattr(S, "_pq_encode_matmul")
-    for bad in ("simd", "matmul"):
-        with pytest.raises(ValueError, match="assign_mode must be 'fold' or 'vector'"):
-            S.semantic_dedup(embs, assign_mode=bad)
-        with pytest.raises(ValueError, match="assign_mode"):
-            S.ivf_build_centroids(embs, 4, assign_mode=bad)
-        with pytest.raises(ValueError, match="encode_mode must be 'fold' or 'vector'"):
-            S.pq_topk(embs, embs, encode_mode=bad)
-        with pytest.raises(ValueError, match="encode_mode"):
-            S.ivfpq_topk(embs, embs, encode_mode=bad)
-        with pytest.raises(ValueError, match="encode_mode"):
-            S.build_pq_index(embs, str(tmp_path / "i"), encode_mode=bad)
+    for name in (
+        "_check_mode", "_nearest_fold", "_assign_fold", "_dot", "_lloyd_sums_jvm",
+        "_pq_encode", "_l2_unrolled", "_adc_fold", "_srp_code_fold", "_coded_corpus",
+        "_assign_matmul", "_pq_encode_matmul",
+    ):
+        assert not hasattr(S, name), name
+    calls = {
+        "semantic_dedup": lambda **kw: S.semantic_dedup(embs, **kw),
+        "ivf_build_centroids": lambda **kw: S.ivf_build_centroids(embs, 4, **kw),
+        "pq_topk": lambda **kw: S.pq_topk(embs, embs, **kw),
+        "ivfpq_topk": lambda **kw: S.ivfpq_topk(embs, embs, **kw),
+        "build_pq_index": lambda **kw: S.build_pq_index(embs, str(tmp_path / "i"), **kw),
+    }
+    for name, call in calls.items():
+        params = inspect.signature(getattr(S, name)).parameters
+        assert "assign_mode" not in params and "encode_mode" not in params
+        for kw in ("assign_mode", "encode_mode"):
+            with pytest.raises(TypeError, match=kw):
+                call(**{kw: "fold"})
 
 
 def _near_tie_fixture(d, seeds=(0, 1, 2, 3), n=2000):
@@ -462,6 +511,98 @@ def test_exact_chains_certified_argmax_argmin_equal_the_chain(d):
             assert np.array_equal(l2, chain_l2)
 
 
+def _md5_order(ids):
+    """``ids`` in the seeding order of every k-means here:
+    ``ORDER BY md5(CAST(id AS STRING)), id``."""
+    return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def test_assignment_near_ties_match_twin(spark, duck):
+    """Near ties through a twin: the centroids are ``_near_tie_fixture``'s
+    (a planted exact duplicate and every 1-ulp nudge of c0) and the rows
+    lie within 64 ulps of c0, where a plain BLAS argmax picks other
+    winners than the chain. The certified kernel must equal the twin's
+    assignment, cid and cent_cos, on every row (a 1e300 row included)."""
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _assign_vector,
+        ivf_build_centroids,
+    )
+
+    V, C = _near_tie_fixture(16, seeds=(0,), n=300)
+    V = np.vstack([V[:-3], V[-1:]])  # keep the 1e300 row, drop NaN and zero
+    ids = _md5_order(range(len(C) + len(V)))
+    rows = [(i, list(map(float, c))) for i, c in zip(ids, C)]
+    rows += [(i, list(map(float, v))) for i, v in zip(ids[len(C):], V)]
+    register_vectors(duck, "near_ties", rows)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ivf_build_centroids(df, len(C), iterations=0, dim=16)
+    assert bits(cents) == bits(C.tolist())
+    base = df.select("vec_id", F.col("embedding").alias("v"))
+    got = _assign_vector(base, cents, "vec_id", 16).select("vec_id", "cid", "cent_cos")
+    sql = _assignment_sql(
+        "e AS (SELECT vec_id, embedding AS v FROM near_ties)", len(C), 0, 16
+    )
+    assert_matches_twin_bits(got, duck, sql)
+    # the fixture is adversarial: plain BLAS disagrees with the twin
+    twin_cid = dict((r[0], r[1]) for r in duck.execute(sql).fetchall())
+    with np.errstate(all="ignore"):
+        blas = ((V @ C.T) / np.linalg.norm(V, axis=1)[:, None]).argmax(axis=1)
+    assert any(int(b) != twin_cid[i] for i, b in zip(ids[len(C):], blas))
+
+
+def test_kernel_edge_contract_matches_twin(spark, duck):
+    """The edge contract of ``exact_chains`` against the s6 twin on one
+    registered fixture, with no Lloyd round so that no quantized sum
+    sees a NaN (DuckDB's BIGINT cast raises on one):
+
+    - NaN first: row ``nan_id`` has a NaN component, so its cosines and
+      distances are NaN: it lands in list 0 with code 0 everywhere, its
+      exact cosine with any query is NaN and ranks first, and as a query
+      it probes list 0 and scores NaN against every code;
+    - ties to the lowest cid: the two md5-first rows (list seeds 0 and 1,
+      codebook entries 0 and 1) hold the same vector, so the rows nearest
+      it go to list 0 / code 0, and query ``tie_id`` probes list 0, not 1;
+    - a short query row raises, and an empty query set yields no rows."""
+    import random
+
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _probe_lists,
+        ivfpq_topk,
+        ivfpq_topk_sql,
+    )
+
+    rng = random.Random(5)
+    order = _md5_order(range(120))
+    rows = {i: [rng.uniform(-1, 1) for _ in range(16)] for i in range(120)}
+    rows[order[1]] = list(rows[order[0]])  # duplicate seed: lists/codes 0 and 1 tie
+    nan_id, tie_id = order[9], order[10]  # neither is a seed
+    rows[nan_id][3] = float("nan")
+    rows[tie_id] = [x + 1e-3 for x in rows[order[0]]]
+    rows = sorted(rows.items())
+    register_vectors(duck, "edge", rows)
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(k=5, n_lists=4, n_probe=1, m=4, n_codes=8, iterations=0, candidates=200)
+    pred = f"vec_id IN ({nan_id}, {tie_id})"
+    out = ivfpq_topk(corpus, corpus.where(pred), dim=16, **kw)
+    assert_matches_twin_bits(
+        out, duck, ivfpq_topk_sql(table="edge", query_pred=pred, dim=16, **kw)
+    )
+    got = {(r["query_id"], r["rank"]): r for r in out.collect()}
+    # the NaN corpus row ranks first for the tied query, which probed list 0
+    assert got[(tie_id, 1)]["vec_id"] == nan_id and math.isnan(got[(tie_id, 1)]["cos"])
+    assert all(math.isnan(r["cos"]) for (q, _), r in got.items() if q == nan_id)
+    cents = [dict(rows)[i] for i in order[:4]]
+    assert _probe_lists([dict(rows)[tie_id], dict(rows)[nan_id]], cents, 16, 2)[2] == [
+        [0, 1],
+        [0, 1],
+    ]
+    with pytest.raises(ValueError, match="fewer than dim"):
+        _probe_lists([[1.0, 2.0]], cents, 16, 1)
+    assert ivfpq_topk(corpus, corpus.limit(0), dim=16, **kw).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # Map-only Lloyd rounds and the fused encode-and-assign scan
 # ---------------------------------------------------------------------------
@@ -514,30 +655,90 @@ def test_group_sums_are_exact_past_int64():
         check_int64(sums.ravel(), "test")
 
 
+def _lloyd_reference(rows, k, iterations, m, sub, metric):
+    """Pure-Python replay of the deterministic k-means, one row and one
+    dimension at a time: md5-ordered seeding, Spark's ``ORDER BY score,
+    cid`` with NaN as the greatest value (cosine DESC for ``"cos"``,
+    squared L2 ASC for ``"l2"``), components quantized by
+    ``exact_chains.quantize`` (Spark's ``floor`` conversion) and summed as
+    exact integers. Returns ``books[m][k]``."""
+    import numpy as np
+
+    from stock_chart_kafka_streams_spark.operators.exact_chains import quantize
+
+    def chain(a, b, term):
+        acc = np.float64(0.0)
+        for x, y in zip(a, b):
+            acc = acc + term(np.float64(x), np.float64(y))
+        return acc
+
+    def best(s, book):
+        def key(cid):
+            c = book[cid][:sub]
+            if metric == "cos":
+                nv = np.sqrt(chain(s, s, lambda x, y: x * y))
+                nc = np.sqrt(chain(c, c, lambda x, y: x * y))
+                score = chain(s, c, lambda x, y: x * y) / (nv * nc)
+                nan_last, score = not math.isnan(score), -score  # DESC, NaN first
+            else:
+                score = chain(s, c, lambda x, y: (x - y) * (x - y))
+                nan_last = math.isnan(score)  # ASC, NaN last
+            return (nan_last, 0.0 if math.isnan(score) else score, cid)
+
+        return min(range(len(book)), key=key)
+
+    seeds = sorted(rows, key=lambda r: (hashlib.md5(str(r[0]).encode()).hexdigest(), r[0]))[:k]
+    if metric == "cos":  # IVF keeps the raw seed vectors
+        books = [[list(v) for _, v in seeds]]
+    else:
+        books = [[list(v[j * sub : (j + 1) * sub]) for _, v in seeds] for j in range(m)]
+    with np.errstate(all="ignore"):
+        for _ in range(iterations):
+            new = []
+            for j, book in enumerate(books):
+                tot = {}
+                for _, v in rows:
+                    s = v[j * sub : (j + 1) * sub]
+                    cid = best(s, book)
+                    q = quantize(np.asarray([s], dtype=np.float64), 1e6)[0]
+                    n, acc = tot.get(cid, (0, [0] * sub))
+                    tot[cid] = (n + 1, [a + int(b) for a, b in zip(acc, q)])
+                new.append(
+                    [
+                        [float(x) / float(tot[i][0]) / 1e6 for x in tot[i][1]]
+                        if i in tot else c
+                        for i, c in enumerate(book)
+                    ]
+                )
+            books = new
+    return books
+
+
 def test_lloyd_kernels_match_fold_on_nan_and_huge_components(spark):
     """A NaN component quantizes to 0 and a 1e300 one saturates at
-    INT64_MAX, as Spark's ``floor(double)`` does; the map-only Lloyd
-    rounds must then agree with the JVM aggregate bit for bit."""
+    INT64_MAX, as Spark's ``floor(double)`` does; DuckDB's twin raises on
+    both, so the reference is the pure-Python replay
+    (``_lloyd_reference``). The map-only Lloyd rounds must equal it bit
+    for bit, NaN equal to NaN."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _pq_train,
         ivf_build_centroids,
     )
 
-    df = spark.createDataFrame(_edge_rows(), "vec_id int, embedding array<double>")
-    fold = ivf_build_centroids(df, 3, iterations=2, dim=8, assign_mode="fold")
-    vect = ivf_build_centroids(df, 3, iterations=2, dim=8, assign_mode="vector")
-    assert repr(fold) == repr(vect)  # repr: NaN equals NaN
+    rows = _edge_rows()
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    vect = ivf_build_centroids(df, 3, iterations=2, dim=8)
+    assert bits(vect) == bits(_lloyd_reference(rows, 3, 2, 1, 8, "cos")[0])
     assert any(x > 1e9 for c in vect for x in c)  # the saturated sum
 
     vn = df.select("vec_id", F.col("embedding").alias("vn"))
-    books_f = _pq_train(vn, 2, 4, 3, 2, "vec_id", "fold")
-    books_v = _pq_train(vn, 2, 4, 3, 2, "vec_id", "vector")
-    assert repr(books_f) == repr(books_v)
+    books = _pq_train(vn, 2, 4, 3, 2, "vec_id")
+    assert bits(books) == bits(_lloyd_reference(rows, 3, 2, 2, 4, "l2"))
 
 
 def test_lloyd_kernels_raise_on_int64_overflow_like_ansi_sum(spark):
-    """Two saturated components in one cluster overflow the BIGINT sum:
-    the JVM aggregate raises (ANSI), and so must the kernel — never wrap."""
+    """Two saturated components in one cluster overflow the BIGINT sum,
+    where Spark's ANSI ``sum`` raises: so must the kernel — never wrap."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _pq_train,
         ivf_build_centroids,
@@ -547,23 +748,20 @@ def test_lloyd_kernels_raise_on_int64_overflow_like_ansi_sum(spark):
     rows[10] = (10, list(rows[9][1]))  # a second, identical huge vector
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     vn = df.select("vec_id", F.col("embedding").alias("vn"))
-    for mode in ("fold", "vector"):
-        with pytest.raises(Exception, match="(?i)overflow"):
-            ivf_build_centroids(df, 3, iterations=1, dim=8, assign_mode=mode)
-        with pytest.raises(Exception, match="(?i)overflow"):
-            _pq_train(vn, 2, 4, 3, 1, "vec_id", mode)
+    with pytest.raises(Exception, match="(?i)overflow"):
+        ivf_build_centroids(df, 3, iterations=1, dim=8)
+    with pytest.raises(Exception, match="(?i)overflow"):
+        _pq_train(vn, 2, 4, 3, 1, "vec_id")
 
 
-def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, tmp_path):
+def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, duck, tmp_path):
     """Three input partitions of several 64-row Arrow batches each: the
-    per-partition partial sums and the driver reduce must give the fold's
-    codebooks and centroids, and the fused encode the fold build's
-    (codes, cid) table."""
+    per-partition partial sums and the driver reduce must give the s6
+    twin's codebooks and coarse centroids, and the fused encode its
+    ``codes`` joined with its ``lists``."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
-        _normalized,
-        _pq_train,
         build_pq_index,
-        ivf_build_centroids,
+        ivfpq_topk_sql,
         read_pq_index,
     )
 
@@ -573,25 +771,24 @@ def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, tmp_p
     try:
         corpus = embs.repartition(3)
         assert corpus.rdd.getNumPartitions() == 3 and corpus.count() > 3 * 64
-        assert ivf_build_centroids(corpus, 8, assign_mode="vector") == (
-            ivf_build_centroids(corpus, 8, assign_mode="fold")
-        )
-        cn = _normalized(corpus, "vec_id", "embedding", 64)
-        assert _pq_train(cn, 4, 16, 8, 2, "vec_id", "vector") == _pq_train(
-            cn, 4, 16, 8, 2, "vec_id", "fold"
-        )
-        built = {}
-        for mode in ("fold", "vector"):
-            path = str(tmp_path / mode)
-            build_pq_index(corpus, path, n_lists=4, encode_mode=mode)
-            _, books, coarse = read_pq_index(spark, path)
-            codes = spark.read.parquet(f"{path}/codes").select(
-                "vec_id", "code0", "code1", "code2", "code3", "cid"
-            )
-            built[mode] = (books, coarse, _rows(codes))
-        assert built["vector"] == built["fold"]
+        path = str(tmp_path / "idx")
+        build_pq_index(corpus, path, n_lists=4)
+        _, books, coarse = read_pq_index(spark, path)
+        codes = spark.read.parquet(f"{path}/codes")
     finally:
         spark.conf.set(key, old)
+    sql = ivfpq_topk_sql(k=10, n_lists=4)
+    assert_bits_equal(
+        list(enumerate(coarse)),
+        duck.execute(_twin_select(sql, "SELECT cid, cv FROM cent2")).fetchall(),
+    )
+    for j in range(4):
+        want = duck.execute(_twin_select(sql, f"SELECT cid, cv FROM cent2_s{j}")).fetchall()
+        assert_bits_equal(list(enumerate(books[j])), want)
+    assert_matches_twin_bits(
+        codes, duck,
+        _twin_select(sql, "SELECT c.*, l.cid FROM codes c JOIN lists l USING (vec_id)"),
+    )
 
 
 def test_lloyd_round_collect_past_its_bound_raises(spark, monkeypatch):
