@@ -29,7 +29,8 @@ ranks as the twins' ``ORDER BY score, cid`` does:
 These rules are pinned against the twins in
 ``tests/test_vector_exact_kernels.py``.
 
-The module imports numpy only. ``similarity.py`` registers it with
+The module imports numpy only (``arrow_rows`` imports pyarrow when
+called). ``similarity.py`` registers it with
 cloudpickle's pickle-by-value, so a kernel closure that calls these
 functions ships them to the Python workers by value: workers never
 import this package.
@@ -56,6 +57,21 @@ def stack_rows(col, d: int) -> np.ndarray:
     return V
 
 
+def arrow_rows(col, d: int) -> np.ndarray:
+    """``stack_rows`` for a pyarrow list array: a uniform non-null column
+    reshapes its flat values without a Python object per component. A
+    NULL component is NaN either way."""
+    import pyarrow.compute as pc
+
+    if len(col) == 0:
+        return np.zeros((0, d))
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if col.null_count == 0 and (lens == lens[0]).all() and lens[0] >= d:
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return np.ascontiguousarray(flat.reshape(len(col), lens[0])[:, :d])
+    return stack_rows(col.to_pylist(), d)
+
+
 def centroid_norms(C) -> np.ndarray:
     """Per-centroid norms computed driver-side as Python's left-to-right
     ``acc += x*x`` and the correctly-rounded ``math.sqrt``: the same
@@ -75,6 +91,14 @@ def sq_norms(V: np.ndarray) -> np.ndarray:
     for i in range(V.shape[1]):
         acc += V[:, i] * V[:, i]
     return acc
+
+
+def unit_rows(V: np.ndarray):
+    """``(nv, VN)``: each row's norm ``sqrt(sq_norms)`` and the row divided
+    by it, a zero norm dividing by 1 — one correctly rounded division per
+    component, the JVM's ``_normalized``."""
+    nv = np.sqrt(sq_norms(V))
+    return nv, V / np.where(nv == 0, 1.0, nv)[:, None]
 
 
 def dots(V: np.ndarray, C: np.ndarray) -> np.ndarray:

@@ -274,18 +274,20 @@ def lsh_topk(
         .select("query_id", F.col("id").alias(id_col))
         .dropDuplicates(["query_id", id_col])
     )
-    c_vec = c.select(F.col(id_col), F.col("v").alias("cv"), _norm(F.col("v")).alias("cn"))
+    c_vec = c.select(
+        F.col(id_col), F.col("v").alias("cv"), _norm(F.col("v"), dim).alias("cn")
+    )
     q_vec = q.select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
+        _norm(F.col("v"), dim).alias("qn"),
     )
     cands = cand_ids.join(c_vec, on=id_col).join(F.broadcast(q_vec), on="query_id")
     scored = cands.select(
         "query_id",
         id_col,
         (
-            _dot_unrolled(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+            _dot_unrolled(F.col("qv"), F.col("cv"), dim) / (F.col("qn") * F.col("cn"))
         ).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
@@ -306,114 +308,115 @@ def lsh_topk(
 # bit-for-bit reproducible cross-engine (see ivf_topk_sql).
 _IVF_QUANT = 1_000_000.0
 
-_LLOYD_SCHEMA = "part int, sub int, cid int, n bigint, s array<bigint>"
+# Largest training set a quantizer fetches to the driver: 2**18 rows,
+# 128 MiB of doubles at 64-d. Seeding and the Lloyd rounds run in-process
+# on the fetched rows, so a larger corpus trains on an md5 sample
+# (``sample_den``), as FAISS caps k-means training at 256 points per
+# centroid. The largest sample any caller fetches today is 12.5k rows.
+MAX_TRAIN_ROWS = 1 << 18
 
 
-def _lloyd_kernel(books: list[list[list[float]]], metric: str, sub: int):
-    """Batch function for one map-only Lloyd round over ``m`` subspaces.
+def _fetch_training(
+    corpus: DataFrame, id_col: str, vec_col: str, samples: list[tuple[int, int]]
+):
+    """The training rows of one or more quantizers in ONE bounded fetch.
 
-    Input: one column of vectors, of which the first ``m * sub``
-    components are used. ``books[j]`` holds subspace ``j``'s ``k``
-    centroids (their first ``sub`` components are used). Each row is
-    assigned per subspace with the exact chains of ``exact_chains``:
-    cosine argmax (``metric="cos"``, IVF) or squared-L2 argmin
-    (``metric="l2"``, PQ). In the same pass its components are quantized
-    to ``floor(x * 1e6 + 0.5)`` with Spark's ``floor`` semantics and
-    summed exactly per (sub, cid). The function yields once per
-    partition, one ``(part, sub, cid, n, s)`` row per centroid present
-    in it, so a round collects at most partitions × m × k rows. An exact
-    sum outside int64 raises, as Spark's ANSI ``sum`` does."""
+    ``samples`` holds one ``(num, den)`` md5 sample per quantizer
+    (``_md5_sample_pred``; ``den == 1`` takes every row). The fetch
+    selects the md5 sort key, the id, the double vector and one flag per
+    sample, keeps the rows any flag takes, and collects at most
+    ``MAX_TRAIN_ROWS + 1`` of them as Arrow; more than ``MAX_TRAIN_ROWS``
+    raises. The rows are then sorted on the driver by
+    ``(md5(cast(id as string)), id)``, nulls first: Spark's ``orderBy``
+    order for integral and string ids, and the twins' seeding order.
+
+    Returns ``(vectors, masks)``: the sorted vectors as a pyarrow list
+    array and one boolean numpy mask per sample."""
+    import pyarrow.compute as pc
+
+    flags = [
+        F.lit(True) if den == 1 else _md5_sample_pred(id_col, num, den)
+        for num, den in samples
+    ]
+    names = [f"f{i}" for i in range(len(flags))]
+    take = F.col(names[0])
+    for name in names[1:]:
+        take = take | F.col(name)
+    tbl = (
+        corpus.select(
+            F.md5(F.col(id_col).cast("string")).alias("h"),
+            F.col(id_col).alias("id"),
+            _as_double(vec_col).alias("v"),
+            *[f.alias(n) for f, n in zip(flags, names)],
+        )
+        .where(take)
+        .limit(MAX_TRAIN_ROWS + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > MAX_TRAIN_ROWS:
+        raise ValueError(
+            f"the training set has more than MAX_TRAIN_ROWS={MAX_TRAIN_ROWS} "
+            "rows, and training fetches it to the driver; train on an md5 "
+            "sample of the corpus (raise sample_den)"
+        )
+    tbl = tbl.take(
+        pc.sort_indices(
+            tbl,
+            sort_keys=[("h", "ascending"), ("id", "ascending")],
+            null_placement="at_start",
+        )
+    )
+    masks = [
+        pc.fill_null(tbl.column(n), False).to_numpy(zero_copy_only=False)
+        for n in names
+    ]
+    return tbl.column("v").combine_chunks(), masks
+
+
+def _lloyd_kernel(V, books: list[list[list[float]]], metric: str, sub: int):
+    """One Lloyd round over the training rows ``V`` (n, m * sub), run
+    in-process; returns the new ``books``.
+
+    ``books[j]`` holds subspace ``j``'s ``k`` centroids (their first
+    ``sub`` components are used). Each row is assigned per subspace with
+    the exact chains of ``exact_chains``: cosine argmax (``metric="cos"``,
+    IVF) or squared-L2 argmin (``metric="l2"``, PQ). Its components are
+    quantized to ``floor(x * 1e6 + 0.5)`` with Spark's ``floor``
+    semantics and summed exactly per (sub, cid), so the sums do not
+    depend on row order. A centroid's new value is
+    ``float(s) / float(n) / 1e6``, the DuckDB twins' double; a centroid
+    no row picks keeps its previous value. An exact sum outside int64
+    raises, as Spark's ANSI ``sum`` does."""
     import numpy as np
 
-    C = [np.asarray([list(c)[:sub] for c in b], dtype=np.float64) for b in books]
-    m, k = len(C), C[0].shape[0]
-    ncv = [_xc.centroid_norms(c) for c in C] if metric == "cos" else None
-    scale = _IVF_QUANT
-
-    def _round(batches):
-        import numpy as _np
-        import pandas as _pd
-        from pyspark import TaskContext
-
-        n_acc = _np.zeros((m, k), dtype=_np.int64)
-        s_acc = _np.zeros((m, k, sub), dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _xc.stack_rows(pdf.iloc[:, 0], m * sub)
-            Q = _xc.quantize(V, scale)
-            for j in range(m):
-                S = V[:, j * sub : (j + 1) * sub]
-                if ncv is None:
-                    cid = _xc.l2_argmin(S, C[j])
-                else:
-                    nv = _np.sqrt(_xc.sq_norms(S))
-                    cid, _ = _xc.cos_argmax(S, C[j], nv, ncv[j])
-                keys, counts, sums = _xc.group_sums(
-                    cid, Q[:, j * sub : (j + 1) * sub]
-                )
-                n_acc[j, keys] += counts
-                s_acc[j, keys] += sums
-        js, cids = _np.nonzero(n_acc)
-        if len(js) == 0:
-            return
-        sums = s_acc[js, cids]
-        _xc.check_int64(sums.ravel(), "a Lloyd partition sum")
-        yield _pd.DataFrame(
-            {
-                "part": TaskContext.get().partitionId(),
-                "sub": js.astype("int32"),
-                "cid": cids.astype("int32"),
-                "n": n_acc[js, cids],
-                "s": [list(r) for r in sums],
-            }
-        )
-
-    return _round
+    new = [list(book) for book in books]
+    with np.errstate(all="ignore"):
+        Q = _xc.quantize(V, _IVF_QUANT)
+        for j, book in enumerate(books):
+            C = np.asarray([list(c)[:sub] for c in book], dtype=np.float64)
+            S = V[:, j * sub : (j + 1) * sub]
+            if metric == "l2":
+                cid = _xc.l2_argmin(S, C)
+            else:
+                nv = np.sqrt(_xc.sq_norms(S))
+                cid, _ = _xc.cos_argmax(S, C, nv, _xc.centroid_norms(C))
+            keys, counts, sums = _xc.group_sums(cid, Q[:, j * sub : (j + 1) * sub])
+            _xc.check_int64(sums.ravel(), "a Lloyd centroid sum")
+            for c, n, s in zip(keys, counts, sums):
+                new[j][c] = [float(x) / float(n) / _IVF_QUANT for x in s]
+    return new
 
 
-def _lloyd_round_vector(
-    df: DataFrame, col: str, books: list[list[list[float]]], metric: str, sub: int
-) -> list[list[list[float]]]:
-    """One Lloyd round: one map-only Arrow job (no
-    shuffle), partial sums reduced on the driver. The collect is bounded
-    by construction at partitions × m × k rows; a result past that bound
-    means the kernel broke its one-row-per-centroid-per-partition
-    contract, and raises."""
-    rows = (
-        df.select(col)
-        .mapInPandas(_lloyd_kernel(books, metric, sub), schema=_LLOYD_SCHEMA)
-        .collect()
-    )
-    bound = len({r["part"] for r in rows}) * len(books) * len(books[0])
-    if len(rows) > bound:
-        raise RuntimeError(
-            f"Lloyd round collected {len(rows)} rows, past its bound of "
-            f"partitions x m x k = {bound}"
-        )
-    return _lloyd_update(books, rows)
-
-
-def _lloyd_update(
-    books: list[list[list[float]]], rows: list
-) -> list[list[list[float]]]:
-    """New centroids from ``(sub, cid, n, s)`` partial-sum rows: the
-    exact integer totals per (sub, cid) divided as
-    ``float(s) / float(n) / 1e6``, the DuckDB twins' double. A centroid
-    no row names keeps its previous value."""
-    tot: dict[tuple[int, int], tuple[int, list[int]]] = {}
-    for r in rows:
-        key = (r["sub"], r["cid"])
-        n, s = tot.get(key, (0, [0] * len(r["s"])))
-        tot[key] = (n + r["n"], [a + b for a, b in zip(s, r["s"])])
-    new = {}
-    for key, (n, s) in tot.items():
-        _xc.check_int64(s, "a Lloyd centroid sum")
-        new[key] = [float(x) / float(n) / _IVF_QUANT for x in s]
-    return [
-        [new.get((j, i), book[i]) for i in range(len(book))]
-        for j, book in enumerate(books)
-    ]
+def _ivf_train(vecs, n_centroids: int, iterations: int, dim: int) -> list[list[float]]:
+    """IVF centroids from the (md5, id)-sorted training vectors: the first
+    ``n_centroids`` rows, kept whole, seed ``iterations`` cosine Lloyd
+    rounds over the dim-prefix of every row."""
+    centroids = vecs.slice(0, n_centroids).to_pylist()
+    if centroids and iterations:
+        V = _xc.arrow_rows(vecs, dim)
+        for _ in range(iterations):
+            centroids = _lloyd_kernel(V, [centroids], "cos", dim)[0]
+    return centroids
 
 
 def ivf_build_centroids(
@@ -438,31 +441,17 @@ def ivf_build_centroids(
       Python and DuckDB. This is what lets ``ivf_topk_sql`` replay the
       whole procedure and hash-match.
 
-    Each Lloyd round is ONE map-only Arrow job (``_lloyd_kernel``). The
-    kernel assigns each row with ``exact_chains.cos_argmax`` — the
-    chain's cosine argmax, scored by one BLAS product and rerun on the
+    Training runs on the driver: ONE job fetches the corpus
+    (``_fetch_training``), and the seeding and every Lloyd round
+    (``_lloyd_kernel``) run in-process on the fetched rows. The kernel
+    assigns each row with ``exact_chains.cos_argmax`` — the chain's
+    cosine argmax, scored by one BLAS product and rerun on the
     dimension-loop chain wherever a float error bound cannot certify the
-    winner — and in the same pass sums its quantized components per
-    centroid per partition; the driver adds the partial sums (at most
-    partitions × n_centroids rows per round, asserted). No shuffle, no
-    JVM aggregate, and the cost per row grows with n_centroids at BLAS
-    speed, so paper-scale centroid counts run on this exact path."""
-    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    # hash-ordered top-N seeding: orderBy+limit plans as a distributed
-    # TakeOrdered (per-partition top-N then driver merge), unlike a global
-    # row_number window which funnels the corpus through one partition.
-    seeds = (
-        c.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
-        .select("v")
-        .collect()
-    )
-    centroids = [list(r["v"]) for r in seeds]
-    if not centroids:
-        return []
-    for _ in range(iterations):
-        centroids = _lloyd_round_vector(c, "v", [centroids], "cos", dim)[0]
-    return centroids
+    winner — so paper-scale centroid counts run on this exact path. A
+    corpus of more than ``MAX_TRAIN_ROWS`` rows raises: pass an md5
+    sample of it (as ``semantic_dedup``'s ``sample_den`` does)."""
+    vecs, _ = _fetch_training(corpus, id_col, vec_col, [(1, 1)])
+    return _ivf_train(vecs, n_centroids, iterations, dim)
 
 
 # Largest query set an IVF/PQ serve call collects. The set (and, for
@@ -524,15 +513,14 @@ def ivf_topk(
     scanned per query (~n_probe/n_centroids).
 
     The query set is collected to the driver for the probe: more than
-    ``MAX_SERVE_QUERIES`` queries raise."""
+    ``MAX_SERVE_QUERIES`` queries raise. The centroids train on the whole
+    corpus on the driver (``ivf_build_centroids``), so a corpus of more
+    than ``MAX_TRAIN_ROWS`` rows raises."""
     centroids = ivf_build_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
     c = corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    # inverted lists: one centroid per vector. The norm is the JVM's, so
-    # a NaN vector keeps a NaN cosine (a pandas batch would make it NULL)
-    c_lists = _assign_vector(c, centroids, id_col, EMBED_DIM).select(
-        id_col, "v", "cid", _norm(F.col("v")).alias("nv")
-    )
+    # inverted lists: one centroid per vector, with the vector's norm
+    c_lists = _assign_vector(c, centroids, id_col, EMBED_DIM)
     q_rows = _collect_bounded(q, MAX_SERVE_QUERIES, "query set")
     _, _, probes = _probe_lists([r["qv"] for r in q_rows], centroids, EMBED_DIM, n_probe)
     q_probes = corpus.sparkSession.createDataFrame(
@@ -912,19 +900,19 @@ def embedding_neardup_lsh(
     va = v.select(
         F.col(id_col).alias("id_a"),
         F.col("v").alias("va"),
-        _norm(F.col("v")).alias("na"),
+        _norm(F.col("v"), dim).alias("na"),
     )
     vb = v.select(
         F.col(id_col).alias("id_b"),
         F.col("v").alias("vb"),
-        _norm(F.col("v")).alias("nb"),
+        _norm(F.col("v"), dim).alias("nb"),
     )
     # exact verification rides the _cosine_verify_vector kernel (round
     # 15): bit-identical doubles at Arrow speed, and no 64-term codegen
     # chain exists anymore for pushdown substitution to overflow.
     return (
         _cosine_verify_vector(
-            cands.join(va, on="id_a").join(vb, on="id_b")
+            cands.join(va, on="id_a").join(vb, on="id_b"), dim=dim
         )
         .select("id_a", "id_b", "cos")
         # Null-TOLERANT threshold (r11): a plain ``cos >= t`` filter is
@@ -1059,12 +1047,12 @@ def knn_join(
     vq = v.select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
+        _norm(F.col("v"), dim).alias("qn"),
     )
     vc = v.select(
         F.col(id_col),
         F.col("v").alias("cv"),
-        _norm(F.col("v")).alias("cn"),
+        _norm(F.col("v"), dim).alias("cn"),
     )
     # exact scoring rides the _cosine_verify_vector kernel (round 15):
     # the joins themselves are cheap (~3.5 s at 7.4M candidates), the
@@ -1076,6 +1064,7 @@ def knn_join(
         b_col="cv",
         na_col="qn",
         nb_col="cn",
+        dim=dim,
     ).select("query_id", id_col, "cos")
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
@@ -1164,12 +1153,13 @@ def semantic_dedup(
     exactly replayable in SQL (``semantic_dedup_sql``).
 
     Scale shape — each stage is the repo's already-audited pattern:
-    (1) centroids come from ``ivf_build_centroids`` (only
-    centroid-sized aggregates reach the driver, s3) — trained on a
+    (1) centroids come from ``ivf_build_centroids``, which fetches the
+    training set to the driver once (at most ``MAX_TRAIN_ROWS`` rows, or
+    it raises) and runs the Lloyd rounds there — trained on a
     deterministic md5 hash-SAMPLE of the corpus when
-    ``sample_num/sample_den`` < 1: every Lloyd round scans the whole
-    training set, and sampled centroid training is the published
-    practice (the sampled-training REMOVAL behavior is pinned
+    ``sample_num/sample_den`` < 1: sampled centroid training is the
+    published practice and keeps a large corpus under that bound (the
+    sampled-training REMOVAL behavior is pinned
     cross-engine by the ``d8_semantic_dedup_sampled`` oracle, which
     resolves every planted pair); the oracle fixture keeps 1/1 so the
     twin's CTE chain is unchanged; (2) assignment is a PURE MAP-SIDE
@@ -1193,7 +1183,7 @@ def semantic_dedup(
     chain. It is BIT-IDENTICAL to the twin's ``ORDER BY cos DESC, cid``
     (oracle-safe), its plan size is O(1) in ``n_centroids``, and it runs
     at BLAS speed, so the SemDeDup paper's thousands of clusters run on
-    the exact path; the training rounds ride the same kernel.
+    the exact path; the training rounds use the same argmax.
 
     ``verify_prune`` (round 9): before fetching vector payloads for the
     exact within-cluster verify, candidate pairs are pre-filtered by the
@@ -1370,7 +1360,7 @@ def _assign_vector(
     """Bit-exact centroid assignment at Arrow speed: adds ``nv``, ``cid``
     and ``cent_cos`` to ``base`` (id, v).
 
-    An Arrow-batched ``mapInPandas`` scan (no shuffle; the centroids
+    An Arrow-batched ``mapInArrow`` scan (no shuffle; the centroids
     ride in the task closure, so plan size is O(1) in ``n_centroids``).
     Each batch's argmax is ``exact_chains.cos_argmax``: the cosine of
     the dimension-loop chain
@@ -1385,41 +1375,47 @@ def _assign_vector(
     dim-prefix norm accumulated the same way; ``cent_cos`` is the
     chain's double. Ties and NaN follow the edge contract of
     ``exact_chains``, which is the twin's ``ORDER BY cos DESC, cid``.
-    A NaN ``nv`` or ``cent_cos`` leaves the pandas batch as NULL.
+    The kernel emits Arrow batches, so a NaN ``nv`` or ``cent_cos``
+    stays NaN, as in the twin.
 
-    The closure is numpy/pandas-only (no package import on workers)."""
+    The closure is numpy/pyarrow-only (no package import on workers)."""
+    return base.mapInArrow(
+        _assign_kernel(centroids, id_col, dim),
+        schema=f"{id_col} {base.schema[id_col].dataType.simpleString()}, "
+        "v array<double>, nv double, cid int, cent_cos double",
+    )
+
+
+def _assign_kernel(centroids: list[list[float]], id_col: str, dim: int):
+    """``_assign_vector``'s batch function over ``(id, v)`` Arrow batches."""
     import numpy as np
 
-    C = np.asarray([list(c)[: int(dim)] for c in centroids], dtype=np.float64)
-    ncv = _xc.centroid_norms(C)
-    id_type = base.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_type}, v array<double>, nv double, "
-        "cid int, cent_cos double"
-    )
     d = int(dim)
+    C = np.asarray([list(c)[:d] for c in centroids], dtype=np.float64)
+    ncv = _xc.centroid_norms(C)
 
     def _assign(batches):
         import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            V = _xc.stack_rows(pdf["v"], d)
+            V = _xc.arrow_rows(b.column("v"), d)
             nv = _np.sqrt(_xc.sq_norms(V))
             cid, cent = _xc.cos_argmax(V, C, nv, ncv)
-            yield _pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "v": pdf["v"].values,
-                    "nv": nv,
-                    "cid": cid,
-                    "cent_cos": cent,
-                }
+            yield _pa.RecordBatch.from_arrays(
+                [
+                    b.column(id_col),
+                    b.column("v"),
+                    _pa.array(nv, type=_pa.float64()),
+                    _pa.array(cid, type=_pa.int32()),
+                    _pa.array(cent, type=_pa.float64()),
+                ],
+                names=[id_col, "v", "nv", "cid", "cent_cos"],
             )
 
-    return base.mapInPandas(_assign, schema=out_schema)
+    return _assign
 
 
 def _cosine_verify_vector(
@@ -1446,16 +1442,11 @@ def _cosine_verify_vector(
     at 7.4M candidates (tools/profile_s4b.py), vs ~3.5 s for the joins
     themselves; the kernel's 64 vectorized multiply-adds amortize that
     to memory bandwidth. A pair whose vector is shorter than ``dim``
-    scores NULL, mirroring the JVM chain (out-of-bounds ``F.get`` is
-    NULL, which poisons the sum; numpy NaN converts to Arrow null).
-    NaN vector COMPONENTS are excluded by the documented no-NaN
-    precondition (a NaN cosine would also surface as NULL here, where
-    the JVM keeps NaN — the threshold/ranking consumers below treat
-    both as non-passing, and the precondition keeps the case
-    unreachable). All non-vector columns pass through Arrow unchanged
-    (lossless for the integer/string/double keys the callers carry)."""
-    import numpy as np  # noqa: F401 — workers re-import below
-
+    (or NULL) scores NULL, mirroring the JVM chain (out-of-bounds
+    ``F.get`` is NULL, which poisons the sum). The kernel emits Arrow
+    batches (``mapInArrow``), so a NaN cosine stays NaN, as in the JVM
+    chain and the twins. All non-vector columns pass through Arrow
+    unchanged."""
     d = int(dim)
     keep = [f for f in pairs.schema.fields if f.name not in (a_col, b_col)]
     out_schema = ", ".join(
@@ -1465,37 +1456,43 @@ def _cosine_verify_vector(
 
     def _score(batches):
         import numpy as _np
+        import pyarrow as _pa
+        import pyarrow.compute as _pc
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+        def _stack(col):
+            short = _pc.fill_null(
+                _pc.less(_pc.list_value_length(col), d), True
+            ).to_numpy(zero_copy_only=False)
+            if not short.any():
+                return _xc.arrow_rows(col, d), short
+            mat = _np.full((len(col), d), _np.nan)
+            for i, x in enumerate(col.to_pylist()):
+                if not short[i]:
+                    mat[i] = _np.asarray(x[:d], dtype=_np.float64)
+            return mat, short
+
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-
-            def _stack(col):
-                arrs = [_np.asarray(x, dtype=_np.float64) for x in pdf[col]]
-                short = _np.fromiter(
-                    (a.size < d for a in arrs), dtype=bool, count=n
+            A, short_a = _stack(b.column(a_col))
+            B, short_b = _stack(b.column(b_col))
+            na, nb = b.column(na_col), b.column(nb_col)
+            with _np.errstate(all="ignore"):
+                cos = _xc.row_dots(A, B) / (
+                    na.to_numpy(zero_copy_only=False) * nb.to_numpy(zero_copy_only=False)
                 )
-                if short.any():
-                    mat = _np.vstack(
-                        [
-                            a[:d] if a.size >= d else _np.full(d, _np.nan)
-                            for a in arrs
-                        ]
-                    )
-                else:
-                    mat = _np.vstack([a[:d] for a in arrs])
-                return mat, short
+            null = (
+                short_a | short_b
+                | _pc.is_null(na).to_numpy(zero_copy_only=False)
+                | _pc.is_null(nb).to_numpy(zero_copy_only=False)
+            )
+            yield _pa.RecordBatch.from_arrays(
+                [b.column(n) for n in keep_names]
+                + [_pa.array(cos, type=_pa.float64(), mask=null)],
+                names=keep_names + [out],
+            )
 
-            A, short_a = _stack(a_col)
-            B, short_b = _stack(b_col)
-            cos = _xc.row_dots(A, B) / (pdf[na_col].values * pdf[nb_col].values)
-            cos[short_a | short_b] = _np.nan  # -> Arrow null, the JVM's NULL
-            res = pdf[keep_names].copy()
-            res[out] = cos
-            yield res
-
-    return pairs.mapInPandas(_score, schema=out_schema)
+    return pairs.mapInArrow(_score, schema=out_schema)
 
 
 def semantic_dedup_sql(
@@ -1626,59 +1623,78 @@ def _normalized(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame
 
 
 def _pq_train(
-    corpus_norm: DataFrame,
-    m: int,
-    sub_dim: int,
-    n_codes: int,
-    iterations: int,
-    id_col: str,
+    VN, m: int, sub_dim: int, n_codes: int, iterations: int
 ) -> list[list[list[float]]]:
-    """Per-subspace deterministic k-means over the NORMALIZED corpus —
+    """Per-subspace deterministic k-means over the NORMALIZED training
+    rows ``VN`` (n, m * sub_dim), in ``(md5, id)`` order —
     ``ivf_build_centroids``' exact-replay discipline (md5-ordered seeding,
     fixed Lloyd rounds, quantized-BIGINT averaging) with squared-L2
     assignment (the PQ metric: sub-vectors are not unit, cosine would
     divide by near-zero norms). Returns codebooks[m][n_codes][sub_dim].
 
-    All m subspaces seed from the SAME md5-ordered prefix (one driver
-    fetch of n_codes full vectors, sliced in Python), and each Lloyd
-    round covers ALL m subspaces in one Spark job. The arithmetic per
-    subspace is the SQL twin's independent per-subspace replay, so the
-    codebooks hash-match it.
-
-    A round is ONE map-only Arrow job (``_lloyd_kernel`` with
-    ``exact_chains.l2_argmin``, the squared-L2 chain's argmin found
-    through one certified BLAS product per subspace). Each partition
-    assigns its rows in every subspace and emits its exact quantized
-    partial sums, at most m × n_codes rows; the driver adds them (at most
-    partitions × m × n_codes rows per round, asserted). The integer sums
-    are order-independent, so the codebooks equal the twin's."""
-    seed_rows = (
-        corpus_norm.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_codes)
-        .select("vn")
-        .collect()
-    )
-    if not seed_rows:
+    All m subspaces seed from the SAME first ``n_codes`` rows, and each
+    Lloyd round (``_lloyd_kernel`` with ``exact_chains.l2_argmin``, the
+    squared-L2 chain's argmin found through one certified BLAS product
+    per subspace) covers all m subspaces in-process. The arithmetic per
+    subspace is the SQL twin's independent per-subspace replay, and the
+    integer sums are order-independent, so the codebooks equal the
+    twin's."""
+    if not len(VN):
         raise ValueError(
             "PQ codebook training set is empty (empty corpus, or sample_num/"
             "sample_den left no training rows) — no encoding is possible"
         )
-    if len(seed_rows) < n_codes:
+    if len(VN) < n_codes:
         # no silent padding: the SQL twin's seeds CTE would yield fewer
         # centroids and diverge — surface the misconfiguration instead
         # (the d8 empty-sample discipline, r8 ADVICE #4).
         raise ValueError(
-            f"training set has {len(seed_rows)} rows < n_codes={n_codes}; "
+            f"training set has {len(VN)} rows < n_codes={n_codes}; "
             "shrink n_codes or widen the training sample"
         )
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        off = j * sub_dim
-        books.append([list(r["vn"])[off : off + sub_dim] for r in seed_rows])
-
+    books = [
+        VN[:n_codes, j * sub_dim : (j + 1) * sub_dim].tolist() for j in range(m)
+    ]
     for _ in range(iterations):
-        books = _lloyd_round_vector(corpus_norm, "vn", books, "l2", sub_dim)
+        books = _lloyd_kernel(VN, books, "l2", sub_dim)
     return books
+
+
+def _train_quantizers(
+    corpus: DataFrame,
+    m: int,
+    n_codes: int,
+    iterations: int,
+    sample_num: int,
+    sample_den: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_lists: int | None = None,
+    coarse_sample_num: int = 1,
+    coarse_sample_den: int = 1,
+):
+    """``(books, coarse)``: the PQ codebooks and, given ``n_lists``, the
+    IVF coarse centroids (else None), trained on the driver from ONE
+    bounded fetch of both md5 samples (``_fetch_training``; more than
+    ``MAX_TRAIN_ROWS`` rows raises). The PQ rows are normalized by
+    ``_normalized``'s chain (dim-prefix norm, zero norm divides by 1);
+    the coarse quantizer trains on the raw rows
+    (``ivf_build_centroids``' procedure)."""
+    import numpy as np
+    import pyarrow as pa
+
+    samples = [(sample_num, sample_den)]
+    if n_lists is not None:
+        samples.append((coarse_sample_num, coarse_sample_den))
+    vecs, masks = _fetch_training(corpus, id_col, vec_col, samples)
+    with np.errstate(all="ignore"):
+        _, VN = _xc.unit_rows(_xc.arrow_rows(vecs.filter(pa.array(masks[0])), dim))
+    books = _pq_train(VN, m, dim // m, n_codes, iterations)
+    coarse = None
+    if n_lists is not None:
+        coarse = _ivf_train(vecs.filter(pa.array(masks[1])), n_lists, iterations, dim)
+    return books, coarse
 
 
 def _encode_vector(
@@ -1728,8 +1744,7 @@ def _encode_vector(
             if len(pdf) == 0:
                 continue
             V = _xc.stack_rows(pdf["v"], d)
-            nv = _np.sqrt(_xc.sq_norms(V))
-            VN = V / _np.where(nv == 0, 1.0, nv)[:, None]
+            nv, VN = _xc.unit_rows(V)
             out = {id_col: pdf[id_col].values}
             for j in range(m):
                 out[f"code{j}"] = _xc.l2_argmin(VN[:, j * sub : (j + 1) * sub], C[j])
@@ -1870,11 +1885,14 @@ def _adc_scan_vector(
 # whose requested training regime differs from how the stored books were
 # actually fit (r11 advice — silently serving a differently-trained index
 # is the wrong-answer class).
-# v3: meta drops ``encode_mode``. Every encode mode left then ("fold",
-# "vector") wrote bit-identical artifacts, so the field carried no
-# information; a v2 index may hold inexact BLAS-encoded codes and is
-# refused.
-PQ_INDEX_VERSION = 3
+# v3: meta drops ``encode_mode``; a v2 index may hold inexact
+# BLAS-encoded codes and is refused.
+# v4: meta, codebooks and coarse centroids are rows of ONE ``model``
+# table, committed with ``codes`` as one directory move. A v3 index
+# (separate meta/codebooks/coarse directories) is refused.
+PQ_INDEX_VERSION = 4
+
+_MODEL_SCHEMA = "part string, sub int, cid int, cv array<double>, meta string"
 
 
 def build_pq_index(
@@ -1900,25 +1918,35 @@ def build_pq_index(
     stored index pays them once and serves every subsequent query batch
     at marginal cost.
 
-    Jobs: the sample checkpoints, one seed
-    fetch per quantizer, then ``iterations`` map-only Lloyd jobs per
-    quantizer (the PQ and IVF trainings run concurrently), then ONE
+    Jobs: ONE bounded fetch of both training samples, after which the
+    seeding and every Lloyd round run in-process on the driver
+    (``_train_quantizers``; a training set of more than
+    ``MAX_TRAIN_ROWS`` rows raises — raise ``sample_den``); then ONE
     map-only scan that normalizes, PQ-encodes and list-assigns each raw
     vector (``_encode_vector``) and writes ``partitionBy(cid)`` with no
-    shuffle, and the three small metadata writes.
+    shuffle; then the one-file ``model`` write.
 
     Layout (all parquet, so the artifact lives on the same storage tier
     as the data at 100 TB — no driver-local files):
 
-    - ``path/meta``       one row: version, kind, m/n_codes/sub_dim/dim,
-      n_lists, id_col and the training knobs — read back for
-      compatibility validation.
-    - ``path/codebooks``  (sub, cid, cv array<double>) m*n_codes rows.
-    - ``path/coarse``     (cid, cv array<double>) n_lists rows (IVF only).
-    - ``path/codes``      (id, code0..code{m-1}[, cid]); the IVF form is
+    - ``path/model``  one small table (``_MODEL_SCHEMA``): one ``meta``
+      row (version, kind, m/n_codes/sub_dim/dim, n_lists, id_col and the
+      training knobs, as JSON) read back for compatibility validation,
+      m*n_codes ``book`` rows (sub, cid, cv) and n_lists ``coarse`` rows
+      (cid, cv; IVF only).
+    - ``path/codes``  (id, code0..code{m-1}[, cid]); the IVF form is
       ``partitionBy(cid)`` so a probe of n_probe lists is a scan of
       exactly n_probe directories (pruning asserted from
       selectedPartitions in tests, the serving-table discipline).
+
+    Commit: both tables are written into a fresh staging directory
+    beside ``path``, which moves into place last (``_commit_index``): a
+    rename when ``path`` is new, ``_swap_dirs`` over an existing index.
+    A build that fails before the move leaves the previous index as it
+    was, and the directory never holds the model of one build with the
+    codes of another. A reader that reads the model before a swap and
+    the codes after it still sees two builds; the blue/green
+    ``refresh_pq_index`` is the online path.
 
     Exactness: parquet stores float64 bit-exactly, so an index-served
     query returns BIT-IDENTICAL results to the rebuild-every-time form,
@@ -1926,65 +1954,27 @@ def build_pq_index(
     full-procedure oracle — the twin replays the build.
 
     Returns the meta dict (also persisted)."""
+    import json
+    import uuid
+
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
         raise ValueError(f"dim={dim} must be divisible by m={m}")
     if n_lists is not None and n_lists < 1:
         raise ValueError(f"n_lists must be >= 1, got {n_lists}")
-    sub_dim = dim // m
     spark = corpus.sparkSession
 
-    cn = _normalized(corpus, id_col, vec_col, dim)
-    train = cn
-    if sample_den > 1:
-        train = cn.where(
-            _md5_sample_pred(id_col, sample_num, sample_den)
-        ).localCheckpoint(eager=True)
-    coarse = None
-    if n_lists is not None:
-        # overlap the two independent driver-blocking trainings (guide
-        # §2.6 — concurrent jobs back-fill each other's stage tails):
-        # the PQ codebooks and the IVF coarse quantizer train from their
-        # own (already-checkpointed) samples and share no state; results
-        # are pure values, so overlap cannot change them.
-        coarse_train = corpus
-        if coarse_sample_den > 1:
-            coarse_train = corpus.where(
-                _md5_sample_pred(id_col, coarse_sample_num, coarse_sample_den)
-            ).localCheckpoint(eager=True)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_books = pool.submit(
-                _pq_train, train, m, sub_dim, n_codes, iterations, id_col
-            )
-            fut_coarse = pool.submit(
-                ivf_build_centroids,
-                coarse_train,
-                n_lists,
-                iterations=iterations,
-                id_col=id_col,
-                vec_col=vec_col,
-                dim=dim,
-            )
-            books = fut_books.result()
-            coarse = fut_coarse.result()
-    else:
-        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col)
-    codes = _encode_vector(corpus, books, coarse, id_col, vec_col, dim)
-
-    spark.createDataFrame(
-        [(j, i, v) for j in range(m) for i, v in enumerate(books[j])],
-        "sub int, cid int, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
+    books, coarse = _train_quantizers(
+        corpus, m, n_codes, iterations, sample_num, sample_den, id_col,
+        vec_col, dim, n_lists, coarse_sample_num, coarse_sample_den,
+    )
     meta = {
         "version": PQ_INDEX_VERSION,
         "kind": "ivfpq" if n_lists is not None else "pq",
         "m": m,
         "n_codes": n_codes,
-        "sub_dim": sub_dim,
+        "sub_dim": dim // m,
         "dim": dim,
         "n_lists": n_lists if n_lists is not None else 0,
         "id_col": id_col,
@@ -1994,44 +1984,62 @@ def build_pq_index(
         "coarse_sample_num": coarse_sample_num,
         "coarse_sample_den": coarse_sample_den,
     }
-
-    if n_lists is not None:
-        assert coarse is not None  # trained concurrently above
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(coarse)],
-            "cid int, cv array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
-        codes.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
-    else:
-        codes.write.mode("overwrite").parquet(f"{path}/codes")
-
-    spark.createDataFrame(
-        [tuple(meta.values())],
-        ", ".join(
-            f"{k} {'string' if isinstance(v, str) else 'int'}"
-            for k, v in meta.items()
-        ),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    model = (
+        [("meta", None, None, None, json.dumps(meta))]
+        + [("book", j, i, v, None) for j in range(m) for i, v in enumerate(books[j])]
+        + [("coarse", None, i, v, None) for i, v in enumerate(coarse or [])]
+    )
+    stage = f"{path.rstrip('/')}.staging-{uuid.uuid4().hex}"
+    try:
+        codes = _encode_vector(corpus, books, coarse, id_col, vec_col, dim).write
+        if n_lists is not None:
+            codes = codes.partitionBy("cid")
+        codes.parquet(f"{stage}/codes")
+        spark.createDataFrame(model, _MODEL_SCHEMA).coalesce(1).write.parquet(
+            f"{stage}/model"
+        )
+        _commit_index(spark, stage, path)
+    except BaseException:
+        fs, hpath = _hadoop_fs(spark, stage)
+        fs.delete(hpath(stage), True)
+        raise
     return meta
 
 
 def read_pq_index(
     spark, path: str
 ) -> tuple[dict, list[list[list[float]]], list[list[float]] | None]:
-    """(meta, codebooks, coarse_centroids_or_None) from a persisted index.
-    The driver-side payload is O(m*n_codes + n_lists) rows — index
-    metadata, never data."""
-    meta_row = spark.read.parquet(f"{path}/meta").collect()
-    if len(meta_row) != 1:
-        raise ValueError(f"malformed PQ index at {path!r}: meta must be 1 row")
-    meta = meta_row[0].asDict()
+    """(meta, codebooks, coarse_centroids_or_None) from a persisted index:
+    one read of its ``model`` table, 1 + m*n_codes + n_lists rows — index
+    metadata, never data. A v3 index (separate ``meta``/``codebooks``/
+    ``coarse`` directories) raises, naming its version."""
+    import json
+
+    from pyspark.errors import AnalysisException
+
+    try:
+        rows = spark.read.parquet(f"{path}/model").collect()
+    except AnalysisException:
+        fs, hpath = _hadoop_fs(spark, path)
+        if not fs.exists(hpath(f"{path}/meta")):
+            raise
+        old = spark.read.parquet(f"{path}/meta").first()["version"]
+        raise ValueError(
+            f"PQ index at {path!r} has the version {old} layout (separate "
+            f"meta/codebooks/coarse directories); version {PQ_INDEX_VERSION} "
+            "is supported — rebuild the index"
+        ) from None
+    metas = [r["meta"] for r in rows if r["part"] == "meta"]
+    if len(metas) != 1:
+        raise ValueError(f"malformed PQ index at {path!r}: {len(metas)} meta rows, expected 1")
+    meta = json.loads(metas[0])
     if meta["version"] != PQ_INDEX_VERSION:
         raise ValueError(
             f"PQ index version {meta['version']} at {path!r} not supported "
             f"(expected {PQ_INDEX_VERSION})"
         )
     m, n_codes, sub_dim = meta["m"], meta["n_codes"], meta["sub_dim"]
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    book_rows = [r for r in rows if r["part"] == "book"]
     if len(book_rows) != m * n_codes:
         raise ValueError(
             f"malformed PQ index at {path!r}: {len(book_rows)} codebook rows, "
@@ -2044,14 +2052,14 @@ def read_pq_index(
         books[r["sub"]][r["cid"]] = list(r["cv"])
     coarse: list[list[float]] | None = None
     if meta["kind"] == "ivfpq":
-        rows = spark.read.parquet(f"{path}/coarse").collect()
-        if len(rows) != meta["n_lists"]:
+        coarse_rows = [r for r in rows if r["part"] == "coarse"]
+        if len(coarse_rows) != meta["n_lists"]:
             raise ValueError(
-                f"malformed PQ index at {path!r}: {len(rows)} coarse rows, "
+                f"malformed PQ index at {path!r}: {len(coarse_rows)} coarse rows, "
                 f"expected n_lists={meta['n_lists']}"
             )
-        coarse = [[0.0] * meta["dim"] for _ in range(len(rows))]
-        for r in rows:
+        coarse = [[0.0] * meta["dim"] for _ in range(len(coarse_rows))]
+        for r in coarse_rows:
             coarse[r["cid"]] = list(r["cv"])
     return meta, books, coarse
 
@@ -2149,6 +2157,23 @@ def extend_pq_index(new_vectors: DataFrame, path: str) -> int:
     return n_new
 
 
+def _hadoop_fs(spark, path: str):
+    """(Hadoop FileSystem of ``path``, the JVM ``Path`` constructor)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    conf = spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
+    return hpath(path).getFileSystem(conf), hpath
+
+
+def _commit_index(spark, stage: str, path: str) -> None:
+    """Move the fully written index directory ``stage`` to ``path``: one
+    rename when ``path`` is new, ``_swap_dirs`` over an existing one."""
+    fs, hpath = _hadoop_fs(spark, path)
+    if fs.exists(hpath(path)):
+        _swap_dirs(spark, stage, path)
+    elif not fs.rename(hpath(stage), hpath(path)):
+        raise IOError(f"cannot rename {stage} to {path}")
+
+
 def _swap_dirs(spark, src: str, dst: str) -> None:
     """Replace directory ``dst`` with ``src`` via two renames (dst ->
     dst.old, src -> dst), then drop the old copy. Hadoop FileSystem API
@@ -2156,10 +2181,7 @@ def _swap_dirs(spark, src: str, dst: str) -> None:
     rename is copy-based (S3) this is not atomic — there the blue/green
     versioned-directory refresh (``refresh_pq_index``) is the online
     path. A failed second rename restores the original directory."""
-    jvm = spark._jvm  # type: ignore[attr-defined]
-    jsc = spark._jsc  # type: ignore[attr-defined]
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(dst).getFileSystem(jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, dst)
     old = hpath(dst + ".old")
     if fs.exists(old):
         fs.delete(old, True)
@@ -2527,8 +2549,8 @@ def pq_topk(
     then over the shards x candidates survivors — so no task ever sorts a
     whole corpus partition per query (the t7 lesson; a flat per-query
     window would funnel the corpus through one task per query). Codebook
-    training subsamples via the d8 md5 predicate (``sample_num/den``) and
-    only n_codes x sub_dim quantized sums reach the driver. Exact rerank
+    training subsamples via the d8 md5 predicate (``sample_num/den``),
+    and only that sample reaches the driver. Exact rerank
     touches only candidates x queries rows, joined back by id. Composition
     with an IVF coarse quantizer (scan only probed lists) is the standard
     next step at extreme scale; flat-PQ here is the published base form.
@@ -2539,13 +2561,15 @@ def pq_topk(
     trick — so ``pq_topk_sql`` replays the WHOLE procedure and
     hash-matches, like s3/d8.
 
-    Each Lloyd round, the encode and the ADC scan run as map-only Arrow
-    kernels (``_lloyd_kernel``, ``_encode_vector``, ``_adc_scan_vector``)
-    — BIT-IDENTICAL to the twin with plan size O(1) in ``n_codes``. The
-    argmins are ``exact_chains.l2_argmin``: one BLAS product per batch
-    and subspace, certified by a float error bound, the dimension-loop
-    chain rerun on the rows it cannot certify — so the PQ paper's
-    k*=256 codebooks run at BLAS speed on this exact path.
+    Training runs on the driver over one bounded fetch of the md5
+    sample (``_train_quantizers``: more than ``MAX_TRAIN_ROWS`` training
+    rows raise — raise ``sample_den``); the encode and the ADC scan run
+    as map-only Arrow kernels (``_encode_vector``, ``_adc_scan_vector``).
+    All are BIT-IDENTICAL to the twin with plan size O(1) in
+    ``n_codes``. The argmins are ``exact_chains.l2_argmin``: one BLAS
+    product per subspace, certified by a float error bound, the
+    dimension-loop chain rerun on the rows it cannot certify — so the PQ
+    paper's k*=256 codebooks run at BLAS speed on this exact path.
 
     The query set is collected to the driver for the scan kernel's
     closure: more than ``MAX_SERVE_QUERIES`` queries raise.
@@ -2588,19 +2612,10 @@ def pq_topk(
             )
         codes = corpus.sparkSession.read.parquet(f"{index_path}/codes")
     else:
-        cn = _normalized(corpus, id_col, vec_col, dim)
-        train = cn
-        if sample_den > 1:
-            # materialize the (small) training sample once: the seed scan
-            # and every per-subspace Lloyd round otherwise re-reads and
-            # re-filters the FULL corpus (m x iterations + 1 scans —
-            # measured 40 s -> 25 s at 200k vectors); this is exactly the
-            # training-set extract a production run writes out before
-            # fitting codebooks.
-            train = cn.where(
-                _md5_sample_pred(id_col, sample_num, sample_den)
-            ).localCheckpoint(eager=True)
-        books = _pq_train(train, m, sub_dim, n_codes, iterations, id_col)
+        books, _ = _train_quantizers(
+            corpus, m, n_codes, iterations, sample_num, sample_den, id_col,
+            vec_col, dim,
+        )
         # encode: per subspace, argmin squared-L2 against the codebook
         # (numpy argmin finds the FIRST minimum -> ties to the lowest
         # cid, the twin's row_number ORDER BY d ASC, cid).
@@ -2678,15 +2693,17 @@ def ivfpq_topk(
     batches without an index, flat ``pq_topk`` is cheaper (the
     t2_s5/s6 *_q50_* bench pair records the regime where IVF earns its
     build). Coarse training/assignment cost is n_lists-proportional —
-    BOTH the coarse Lloyd/assignment and the PQ encode run through the
-    Arrow kernels, whose certified BLAS argmax/argmin is BIT-IDENTICAL
-    to the twin (oracle-safe at paper-scale list counts; see
+    the coarse assignment and the PQ encode run through the Arrow
+    kernels and the Lloyd rounds through the same chains on the driver,
+    whose certified BLAS argmax/argmin is BIT-IDENTICAL to the twin (oracle-safe at paper-scale list counts; see
     ``pq_topk``). ``coarse_sample_num/den``
     trains the coarse quantizer on the d8 md5
-    subsample instead of the full corpus (every Lloyd round otherwise
-    scans all vectors; FAISS likewise trains IVF on a sample). Final
-    list ASSIGNMENT always covers the full corpus; the sample knob
-    mirrors in the twin, so the exact-mode oracle stays exact.
+    subsample instead of the full corpus (FAISS likewise trains IVF on
+    a sample). Both quantizers train on the driver from ONE bounded
+    fetch of their samples (``_train_quantizers``): more than
+    ``MAX_TRAIN_ROWS`` training rows raise. Final list ASSIGNMENT always
+    covers the full corpus; the sample knobs mirror in the twin, so the
+    exact-mode oracle stays exact.
 
     ``index_path`` (r10 verdict #3): serve from a ``build_pq_index(...,
     n_lists=...)`` artifact — coarse centroids + codebooks load
@@ -2757,39 +2774,12 @@ def ivfpq_topk(
         coded_lists = spark.read.parquet(f"{index_path}/codes")
     else:
         # ---- coarse quantizer (s3's deterministic k-means) + PQ
-        # codebooks (s5's machinery), trained CONCURRENTLY (round 15,
-        # guide §2.6): the two trainings are independent driver-blocking
-        # Lloyd loops over their own checkpointed samples — overlapping
-        # them back-fills each other's stage tails and cannot change the
-        # (pure-value) results.
-        coarse_train = corpus
-        if coarse_sample_den > 1:
-            coarse_train = corpus.where(
-                _md5_sample_pred(id_col, coarse_sample_num, coarse_sample_den)
-            ).localCheckpoint(eager=True)
-        cn = _normalized(corpus, id_col, vec_col, dim)
-        train = cn
-        if sample_den > 1:
-            train = cn.where(
-                _md5_sample_pred(id_col, sample_num, sample_den)
-            ).localCheckpoint(eager=True)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_coarse = pool.submit(
-                ivf_build_centroids,
-                coarse_train,
-                n_lists,
-                iterations=iterations,
-                id_col=id_col,
-                vec_col=vec_col,
-                dim=dim,
-            )
-            fut_books = pool.submit(
-                _pq_train, train, m, sub_dim, n_codes, iterations, id_col
-            )
-            coarse = fut_coarse.result()
-            books = fut_books.result()
+        # codebooks (s5's machinery), trained on the driver from one
+        # bounded fetch of both samples
+        books, coarse = _train_quantizers(
+            corpus, m, n_codes, iterations, sample_num, sample_den, id_col,
+            vec_col, dim, n_lists, coarse_sample_num, coarse_sample_den,
+        )
         # the stored artifact at scale: codes PARTITIONED BY the list id —
         # a probe below prunes to n_probe partitions (build_pq_index
         # writes exactly this shape; index_path serves it)

@@ -1,6 +1,7 @@
-"""Persisted ANN index (r10 verdict #3): build_pq_index writes the
-codebooks / coarse centroids / cid-partitioned code table as a parquet
-serving artifact; pq_topk/ivfpq_topk(index_path=...) serve from it with
+"""Persisted ANN index (r10 verdict #3): build_pq_index writes a
+one-table model (meta, codebooks, coarse centroids) and the
+cid-partitioned code table as a parquet serving artifact, committed as
+one directory; pq_topk/ivfpq_topk(index_path=...) serve from it with
 zero rebuild and BIT-IDENTICAL results to the rebuild-every-call form
 (parquet float64 is exact). The IVF probe over the artifact must prune to
 exactly the probed list directories — asserted from selectedPartitions,
@@ -414,22 +415,61 @@ def test_index_training_knob_mismatch_raises(spark, embs, queries, tmp_path):
 
 
 def test_v2_index_meta_is_refused(spark, embs, queries, tmp_path):
-    """A v2 index may hold codes from the deleted inexact BLAS encode
-    (its meta carried ``encode_mode``): v3 serving refuses it."""
-    path = str(tmp_path / "v2_idx")
+    """v2 and v3 indexes keep meta, codebooks and coarse centroids in
+    directories of their own beside ``codes`` (a v2 index may also hold
+    codes from the deleted inexact BLAS encode). v4 reads one ``model``
+    table and refuses either old layout, naming its version."""
+    import shutil
+
+    path = str(tmp_path / "old_idx")
     meta = build_pq_index(embs, path, m=4, n_codes=8, iterations=2)
-    assert meta["version"] == 3 and "encode_mode" not in meta
-    old = dict(meta, version=2, encode_mode="matmul")
-    spark.createDataFrame(
-        [tuple(old.values())],
-        ", ".join(
-            f"{k} {'string' if isinstance(v, str) else 'int'}" for k, v in old.items()
-        ),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="version 2"):
-        read_pq_index(spark, path)
-    with pytest.raises(ValueError, match="version 2"):
-        pq_topk(embs, queries, k=5, m=4, n_codes=8, index_path=path)
+    assert meta["version"] == 4
+    shutil.rmtree(f"{path}/model")
+    for version, extra in ((2, {"encode_mode": "matmul"}), (3, {})):
+        old = dict(meta, version=version, **extra)
+        spark.createDataFrame(
+            [tuple(old.values())],
+            ", ".join(
+                f"{k} {'string' if isinstance(v, str) else 'int'}"
+                for k, v in old.items()
+            ),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        with pytest.raises(ValueError, match=f"version {version} layout"):
+            read_pq_index(spark, path)
+        with pytest.raises(ValueError, match=f"version {version} layout"):
+            pq_topk(embs, queries, k=5, m=4, n_codes=8, index_path=path)
+
+
+def test_build_killed_before_commit_keeps_previous_index(
+    spark, embs, queries, tmp_path, monkeypatch
+):
+    """A rebuild writes into a staging directory beside ``path`` and moves
+    it into place last. Killed before that move, it leaves the previous
+    index serving bit-identical results, and no staging directory."""
+    import os
+
+    from stock_chart_kafka_streams_spark.operators import similarity as S
+
+    path = str(tmp_path / "idx")
+    kw = dict(n_lists=8, m=4, n_codes=8, iterations=2)
+    build_pq_index(embs, path, **kw)
+    served = _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw))
+
+    def _killed(spark, stage, path):
+        raise RuntimeError("killed before commit")
+
+    monkeypatch.setattr(S, "_commit_index", _killed)
+    with pytest.raises(RuntimeError, match="killed before commit"):
+        build_pq_index(embs, path, n_lists=8, m=4, n_codes=8, iterations=1)
+    assert sorted(os.listdir(tmp_path)) == ["idx"]
+    again = _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw))
+    assert again == served
+
+    # the same rebuild, committed, swaps over the existing index
+    monkeypatch.undo()
+    build_pq_index(embs, path, **kw)
+    assert sorted(os.listdir(tmp_path)) == ["idx"]
+    assert _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw)) == served
 
 
 def test_blue_green_refresh_serves_without_interruption(

@@ -121,8 +121,8 @@ def test_assign_vector_bit_equals_assign_fold(spark, embs, duck):
     assert_bits_equal(vect.select("vec_id", "nv").collect(), jvm_nv.collect())
 
 
-def test_ivf_lloyd_vector_centroids_bit_equal_fold(spark, embs, duck):
-    """The map-only Lloyd rounds give the twin's k-means centroids
+def test_ivf_centroids_bit_equal_twin(spark, embs, duck):
+    """The driver-side Lloyd rounds give the twin's k-means centroids
     (``_kmeans_ctes``), every component bit for bit."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _kmeans_ctes,
@@ -139,18 +139,16 @@ def test_ivf_lloyd_vector_centroids_bit_equal_fold(spark, embs, duck):
     assert_bits_equal(list(enumerate(vect)), duck.execute(sql).fetchall())
 
 
-def test_pq_train_and_encode_vector_bit_equal_fold(spark, embs, duck):
+def test_pq_train_and_encode_bit_equal_twin(spark, embs, duck):
     """The PQ codebooks and the encode kernel's codes equal the s5
     twin's ``cent*_s*`` and ``codes`` CTEs."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _encode_vector,
-        _normalized,
-        _pq_train,
+        _train_quantizers,
         pq_topk_sql,
     )
 
-    cn = _normalized(embs, "vec_id", "embedding", 64)
-    books = _pq_train(cn, 4, 16, 8, 2, "vec_id")
+    books, _ = _train_quantizers(embs, 4, 8, 2, 1, 1, "vec_id", "embedding", 64)
     sql = pq_topk_sql(k=10, m=4, n_codes=8, iterations=2)
     for j in range(4):
         want = duck.execute(_twin_select(sql, f"SELECT cid, cv FROM cent2_s{j}")).fetchall()
@@ -225,6 +223,106 @@ def test_assign_vector_nondefault_dim(spark, duck):
     )
 
 
+def test_assign_vector_keeps_nan_like_the_twin(spark, duck):
+    """A NaN component makes ``nv`` and every cosine NaN: the Arrow
+    batches keep both as NaN (a pandas batch made them NULL), the row
+    lands in cluster 0 with a NaN ``cent_cos``, and ``semantic_dedup``
+    equals ``semantic_dedup_sql`` bit for bit. No Lloyd round runs, as
+    DuckDB's BIGINT cast raises on a NaN quantize."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _assign_vector,
+        ivf_build_centroids,
+        semantic_dedup,
+        semantic_dedup_sql,
+    )
+
+    rows = [(i, [math.sin(i * 7.3 + j) for j in range(8)]) for i in range(40)]
+    nan_id = _md5_order(range(40))[5]  # not one of the 3 seeds
+    rows[nan_id][1][2] = float("nan")
+    register_vectors(duck, "nan8", rows)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ivf_build_centroids(df, 3, iterations=0, dim=8)
+    base = df.select("vec_id", F.col("embedding").alias("v"))
+    got = {r["vec_id"]: r for r in _assign_vector(base, cents, "vec_id", 8).collect()}
+    assert got[nan_id]["cid"] == 0
+    assert math.isnan(got[nan_id]["nv"]) and math.isnan(got[nan_id]["cent_cos"])
+    assert_matches_twin_bits(
+        semantic_dedup(df, threshold=0.9, n_centroids=3, iterations=0, dim=8),
+        duck,
+        semantic_dedup_sql(
+            threshold=0.9, n_centroids=3, iterations=0, dim=8,
+            source_cte="e AS (SELECT vec_id, embedding AS v FROM nan8)",
+        ),
+    )
+
+
+def _rows8(n=60, seed=8):
+    import random
+
+    rng = random.Random(seed)
+    return [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(n)]
+
+
+def test_lsh_topk_dim8_matches_twin(spark, duck):
+    """``lsh_topk`` reranks with ``dim``: at 8-d its cosines equal the
+    twin's (the 64-d default made every one NULL)."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        lsh_topk,
+        lsh_topk_sql,
+    )
+
+    rows = _rows8()
+    register_vectors(duck, "lsh8", rows)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(k=5, n_bits=2, n_tables=2, dim=8)
+    assert_matches_twin_bits(
+        lsh_topk(df, df.where(F.col("vec_id") < 5), **kw),
+        duck,
+        lsh_topk_sql(table="lsh8", query_pred="vec_id < 5", **kw),
+    )
+
+
+def test_knn_join_dim8_matches_twin(spark, duck):
+    """``knn_join`` verifies with ``dim``: at 8-d it equals its twin."""
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        knn_join,
+        knn_join_sql,
+    )
+
+    rows = _rows8()
+    register_vectors(duck, "knn8", rows)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(k=3, n_bits=2, n_tables=2, dim=8)
+    assert_matches_twin_bits(knn_join(df, **kw), duck, knn_join_sql(table="knn8", **kw))
+
+
+def test_embedding_neardup_lsh_dim8_matches_twin(spark):
+    """``embedding_neardup_lsh`` verifies with ``dim``: at 8-d its pairs
+    equal the twin's, which reads the planted fixture from a table named
+    ``embeddings`` (registered here on a connection of its own)."""
+    import duckdb
+
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        embedding_neardup_lsh,
+        embedding_neardup_lsh_sql,
+        planted_neardup_vectors,
+    )
+
+    rows = _rows8(n=120)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(threshold=0.9, n_bits=2, n_tables=2, dim=8)
+    con = duckdb.connect()
+    try:
+        register_vectors(con, "embeddings", rows)
+        assert_matches_twin_bits(
+            embedding_neardup_lsh(planted_neardup_vectors(df), **kw),
+            con,
+            embedding_neardup_lsh_sql(**kw),
+        )
+    finally:
+        con.close()
+
+
 def test_cosine_verify_kernel_bit_equals_dot_unrolled(spark, embs):
     """The shared pair-verify kernel (s4/d5/d8's exact scoring) must emit
     the IDENTICAL double the JVM 64-term chain emits, and NULL for a
@@ -284,12 +382,11 @@ def test_adc_scan_kernel_bit_equals_jvm_chain(spark, embs):
         _dot_unrolled,
         _encode_vector,
         _normalized,
-        _pq_train,
+        _train_quantizers,
     )
 
     m, sub_dim, dim = 4, 16, 64
-    cn = _normalized(embs, "vec_id", "embedding", dim)
-    books = _pq_train(cn, m, sub_dim, 8, 2, "vec_id")
+    books, _ = _train_quantizers(embs, m, 8, 2, 1, 1, "vec_id", "embedding", dim)
     codes = _encode_vector(embs, books, None, "vec_id", "embedding", dim)
     qn = _normalized(embs.where(F.col("vec_id") < 5), "vec_id", "embedding", dim).select(
         F.col("vec_id").alias("query_id"), F.col("vn").alias("qvn")
@@ -335,12 +432,10 @@ def test_adc_scan_kernel_short_query_is_null(spark, embs):
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _adc_scan_vector,
         _encode_vector,
-        _normalized,
-        _pq_train,
+        _train_quantizers,
     )
 
-    cn = _normalized(embs, "vec_id", "embedding", 64)
-    books = _pq_train(cn, 4, 16, 8, 1, "vec_id")
+    books, _ = _train_quantizers(embs, 4, 8, 1, 1, 1, "vec_id", "embedding", 64)
     codes = _encode_vector(embs, books, None, "vec_id", "embedding", 64).limit(3)
     out = _adc_scan_vector(
         codes, books, [(99, [1.0] * 8)], 4, 16, "vec_id", 64, "bigint"
@@ -604,7 +699,7 @@ def test_kernel_edge_contract_matches_twin(spark, duck):
 
 
 # ---------------------------------------------------------------------------
-# Map-only Lloyd rounds and the fused encode-and-assign scan
+# Lloyd rounds and the fused encode-and-assign scan
 # ---------------------------------------------------------------------------
 
 
@@ -714,12 +809,22 @@ def _lloyd_reference(rows, k, iterations, m, sub, metric):
     return books
 
 
-def test_lloyd_kernels_match_fold_on_nan_and_huge_components(spark):
+def _fetched_rows(df, dim):
+    """The raw training rows of ``df`` as ``_pq_train`` receives them
+    (fetched and md5-sorted by ``_fetch_training``, not normalized)."""
+    from stock_chart_kafka_streams_spark.operators import exact_chains
+    from stock_chart_kafka_streams_spark.operators.similarity import _fetch_training
+
+    vecs, _ = _fetch_training(df, "vec_id", "embedding", [(1, 1)])
+    return exact_chains.arrow_rows(vecs, dim)
+
+
+def test_lloyd_rounds_match_reference_on_nan_and_huge_components(spark):
     """A NaN component quantizes to 0 and a 1e300 one saturates at
     INT64_MAX, as Spark's ``floor(double)`` does; DuckDB's twin raises on
     both, so the reference is the pure-Python replay
-    (``_lloyd_reference``). The map-only Lloyd rounds must equal it bit
-    for bit, NaN equal to NaN."""
+    (``_lloyd_reference``). The driver-side Lloyd rounds must equal it
+    bit for bit, NaN equal to NaN."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         _pq_train,
         ivf_build_centroids,
@@ -731,8 +836,7 @@ def test_lloyd_kernels_match_fold_on_nan_and_huge_components(spark):
     assert bits(vect) == bits(_lloyd_reference(rows, 3, 2, 1, 8, "cos")[0])
     assert any(x > 1e9 for c in vect for x in c)  # the saturated sum
 
-    vn = df.select("vec_id", F.col("embedding").alias("vn"))
-    books = _pq_train(vn, 2, 4, 3, 2, "vec_id")
+    books = _pq_train(_fetched_rows(df, 8), 2, 4, 3, 2)
     assert bits(books) == bits(_lloyd_reference(rows, 3, 2, 2, 4, "l2"))
 
 
@@ -747,18 +851,17 @@ def test_lloyd_kernels_raise_on_int64_overflow_like_ansi_sum(spark):
     rows = _edge_rows()
     rows[10] = (10, list(rows[9][1]))  # a second, identical huge vector
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    vn = df.select("vec_id", F.col("embedding").alias("vn"))
     with pytest.raises(Exception, match="(?i)overflow"):
         ivf_build_centroids(df, 3, iterations=1, dim=8)
     with pytest.raises(Exception, match="(?i)overflow"):
-        _pq_train(vn, 2, 4, 3, 1, "vec_id")
+        _pq_train(_fetched_rows(df, 8), 2, 4, 3, 1)
 
 
-def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, duck, tmp_path):
+def test_index_build_matches_twin_across_partitions_and_batches(spark, embs, duck, tmp_path):
     """Three input partitions of several 64-row Arrow batches each: the
-    per-partition partial sums and the driver reduce must give the s6
-    twin's codebooks and coarse centroids, and the fused encode its
-    ``codes`` joined with its ``lists``."""
+    one training fetch must gather every partition (the s6 twin's
+    codebooks and coarse centroids), and the fused encode over every
+    batch must give its ``codes`` joined with its ``lists``."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         build_pq_index,
         ivfpq_topk_sql,
@@ -791,39 +894,36 @@ def test_map_only_build_reduces_across_partitions_and_batches(spark, embs, duck,
     )
 
 
-def test_lloyd_round_collect_past_its_bound_raises(spark, monkeypatch):
-    """A round collects at most partitions x m x k rows; a kernel that
-    emits more must fail loudly instead of growing the driver's collect."""
+def test_training_past_max_train_rows_raises(spark, embs, tmp_path, monkeypatch):
+    """Training fetches its rows to the driver, at most ``MAX_TRAIN_ROWS``
+    of them: a training set of exactly the bound trains, one row more
+    raises and names ``sample_den``, for every operator that trains."""
     from stock_chart_kafka_streams_spark.operators import similarity as S
 
-    def _too_many(books, metric, sub):
-        def _rows_out(batches):
-            import pandas as pd
+    n_half = embs.where(S._md5_sample_pred("vec_id", 1, 2)).count()
+    q = embs.where(F.col("vec_id") < 5)
+    monkeypatch.setattr(S, "MAX_TRAIN_ROWS", n_half)
+    vecs, (mask,) = S._fetch_training(embs, "vec_id", "embedding", [(1, 2)])
+    assert len(vecs) == n_half and mask.all()
+    S.pq_topk(embs, q, k=5, sample_den=2).collect()
 
-            for _ in batches:
-                pass
-            k = len(books[0])
-            yield pd.DataFrame(
-                {
-                    "part": 0,
-                    "sub": 0,
-                    "cid": list(range(k)) + [0],
-                    "n": 1,
-                    "s": [[0] * sub for _ in range(k + 1)],
-                }
-            )
-
-        return _rows_out
-
-    monkeypatch.setattr(S, "_lloyd_kernel", _too_many)
-    df = spark.createDataFrame([([0.0, 1.0],)], "vn array<double>").coalesce(1)
-    with pytest.raises(RuntimeError, match="bound"):
-        S._lloyd_round_vector(df, "vn", [[[0.0, 1.0], [1.0, 0.0]]], "l2", 2)
+    monkeypatch.setattr(S, "MAX_TRAIN_ROWS", n_half - 1)
+    for train in (
+        lambda: S.pq_topk(embs, q, k=5, sample_den=2),
+        lambda: S.ivfpq_topk(embs, q, k=5, sample_den=2, coarse_sample_den=2),
+        lambda: S.build_pq_index(embs, str(tmp_path / "idx"), sample_den=2),
+        lambda: S.ivf_topk(embs, q, k=5),
+        lambda: S.ivf_build_centroids(embs, 4),
+        lambda: S.semantic_dedup(embs, sample_den=2),
+    ):
+        with pytest.raises(ValueError, match="MAX_TRAIN_ROWS.*sample_den"):
+            train()
 
 
 def test_kernel_closures_load_without_the_package(tmp_path):
-    """The Lloyd and encode closures pickle the shared chains by value: a
-    Python process that cannot import this package can still run them."""
+    """The kernel closures pickle the shared chains by value: a Python
+    process that cannot import this package can still run the list
+    assignment's batch function."""
     import os
     import subprocess
     import sys
@@ -832,21 +932,18 @@ def test_kernel_closures_load_without_the_package(tmp_path):
 
     from stock_chart_kafka_streams_spark.operators import similarity as S
 
-    fn = S._lloyd_kernel([[[1.0, 0.0], [0.0, 1.0]]], "l2", 2)
+    fn = S._assign_kernel([[1.0, 0.0], [0.0, 1.0]], "vec_id", 2)
     blob = tmp_path / "fn.pkl"
     blob.write_bytes(cloudpickle.dumps(fn))
     script = (
         "import pickle, sys\n"
         "sys.path = [p for p in sys.path if p not in ('', '.')]\n"
-        "import pandas as pd, pyspark\n"
-        "class _Ctx:\n"
-        "    def partitionId(self):\n"
-        "        return 0\n"
-        "pyspark.TaskContext.get = staticmethod(lambda: _Ctx())\n"
+        "import pyarrow as pa\n"
         f"fn = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
-        "out = list(fn(iter([pd.DataFrame({'vn': [[0.9, 0.1], [0.1, 0.8]]})])))\n"
+        "b = pa.RecordBatch.from_pydict({'vec_id': [7, 8], 'v': [[0.9, 0.1], [0.1, 0.8]]})\n"
+        "out = list(fn(iter([b])))\n"
         "assert not any(m.startswith('stock_chart') for m in sys.modules)\n"
-        "print(out[0][['cid', 'n']].values.tolist(), out[0]['s'].tolist())\n"
+        "print(out[0].column('vec_id').to_pylist(), out[0].column('cid').to_pylist())\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     res = subprocess.run(
@@ -854,4 +951,4 @@ def test_kernel_closures_load_without_the_package(tmp_path):
         capture_output=True, text=True, timeout=120,
     )
     assert res.returncode == 0, res.stderr
-    assert res.stdout.strip() == "[[0, 1], [1, 1]] [[900000, 100000], [100000, 800000]]"
+    assert res.stdout.strip() == "[7, 8] [0, 1]"
