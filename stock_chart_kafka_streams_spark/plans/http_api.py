@@ -24,9 +24,11 @@ use, serialize rows. Python's stdlib ``http.server`` keeps the repo
 dependency-free; a production deployment would front the same
 ``CandleStore`` with any WSGI/ASGI server (the handler takes the store,
 not Spark, so it composes with Spark Connect too). The SERVER is not the
-scale path — reads are served by Spark partition-pruned scans either
-way — so a ThreadingHTTPServer on the driver matches the reference's
-single Spring instance.
+scale path: the candle, point and symbol routes are served by the
+store's driver-side Arrow scans of the listed partition directories (no
+Spark job per read), and ``fill=true`` and the correlation routes by
+Spark scans over the same directories. A ThreadingHTTPServer on the
+driver matches the reference's single Spring instance.
 
 Error contract (mirrors Spring's behavior class): unknown paths -> 404;
 bad ISO datetimes / unknown frame / non-positive minutes -> 400 with a
@@ -42,7 +44,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from stock_chart_kafka_streams_spark.plans.query_api import CandleStore
+from stock_chart_kafka_streams_spark.plans.query_api import _ROW_COLS, CandleStore
 
 _UTC = _dt.timezone.utc
 
@@ -96,11 +98,6 @@ def _parse_materialized(q: dict):
     return low == "true"
 
 
-_CANDLE_COLS = [
-    "symbol", "bucket_start", "bucket_end", "open", "high", "low", "close",
-    "volume",
-]
-
 # Serving-path result cap: the reference's default span is 60 minutes and
 # Spring rejects oversized binds; an uncapped ?from=2020&to=2030 range
 # would collect every matching candle onto the driver (r7 verdict #3).
@@ -124,25 +121,12 @@ class _Handler(BaseHTTPRequestHandler):
     def log_message(self, fmt, *args):  # quiet: tests drive many requests
         pass
 
-    def _recent_capped(self, store, symbol, frame, n, now) -> list[dict]:
-        """recent-N through the store's cached-rows tier, with the same
-        result cap as every other candle route."""
-        rows = store.recent_rows(
-            symbol, frame, n=n, now=now, max_rows=MAX_RESULT_ROWS + 1
-        )
+    def _capped(self, rows, narrow: str) -> list[dict]:
+        """Candle rows fetched with ``MAX_RESULT_ROWS + 1`` as their
+        bound, serialized; one row past the cap is the 400 class."""
         if len(rows) > MAX_RESULT_ROWS:
             raise ValueError(
-                f"result exceeds {MAX_RESULT_ROWS} candles; narrow minutes"
-            )
-        return candle_rows_to_json(rows)
-
-    def _candles(self, df, extra_cols: list[str] | None = None) -> list[dict]:
-        cols = _CANDLE_COLS + (extra_cols or [])
-        rows = df.select(*cols).limit(MAX_RESULT_ROWS + 1).collect()
-        if len(rows) > MAX_RESULT_ROWS:
-            raise ValueError(
-                f"result exceeds {MAX_RESULT_ROWS} candles; narrow the "
-                "from/to range or minutes"
+                f"result exceeds {MAX_RESULT_ROWS} candles; narrow {narrow}"
             )
         return candle_rows_to_json(rows)
 
@@ -216,21 +200,19 @@ class _Handler(BaseHTTPRequestHandler):
             return
         frame = q.get("frame", "MINUTE")
         if parts[2] == "symbols" and len(parts) == 3:
-            # version-tagged LRU tier (round 15): a repeat poll between
-            # writes is a dict hit, not a whole-table distinct
+            # a driver-side Arrow distinct over the table; a repeat poll
+            # between writes is an LRU hit when the store has one
             self._send(200, store.symbol_names())
         elif parts[2] == "recent" and len(parts) == 4:
             # ?now=ISO opts into the reference's wall-clock-anchored
             # semantics (CandleStickService.kt:142-147) via the pruned
             # now= path; default stays data-anchored (bounded probe).
-            # recent_rows: the store's version-tagged LRU tier — a
-            # repeat poll between MERGEs is a dict hit, not a Spark job
-            self._send(
-                200,
-                self._recent_capped(
-                    store, parts[3], frame, minutes(), q.get("now")
-                ),
+            # recent_rows: a driver-side Arrow read, no Spark job
+            rows = store.recent_rows(
+                parts[3], frame, n=minutes(), now=q.get("now"),
+                max_rows=MAX_RESULT_ROWS + 1,
             )
+            self._send(200, self._capped(rows, "minutes"))
         elif parts[2] == "corr" and len(parts) == 5:
             # rolling correlation between two stored series (w14
             # through the store's pruned range read): /api/charts/
@@ -293,11 +275,10 @@ class _Handler(BaseHTTPRequestHandler):
                 ],
             )
         elif parts[2] == "point" and len(parts) == 4:
-            # single candle by calendar parts (reference Q6) through
-            # the store's LRU point tier — the chart poller's
-            # repeated re-read of the live candle is a dict hit, not
-            # a Spark job (strict int parse: garbage is the 400
-            # class; a missing candle is 404, the GET-nil analogue)
+            # single candle by calendar parts (reference Q6): a
+            # driver-side Arrow read of one directory (strict int
+            # parse: garbage is the 400 class; a missing candle is
+            # 404, the GET-nil analogue)
             if "year" not in q or "month" not in q:
                 raise ValueError("point lookup requires year and month")
             row = store.point_row(
@@ -322,27 +303,34 @@ class _Handler(BaseHTTPRequestHandler):
             if fill_raw not in ("true", "false"):
                 raise ValueError(f"fill must be true or false, got {q['fill']!r}")
             fill = fill_raw == "true"
-            if "from" in q and "to" in q:
-                df = store.get_candles(
-                    symbol, frame, start=q["from"], end=q["to"],
-                    fill_gaps=fill,
-                )
-            elif fill:
-                df = store.recent(symbol, frame, n=minutes(), now=q.get("now"))
-                from stock_chart_kafka_streams_spark.operators.candles import (
-                    fill_candle_gaps,
-                )
+            ranged = "from" in q and "to" in q
+            cap = MAX_RESULT_ROWS + 1
+            if fill:
+                if ranged:
+                    df = store.get_candles(
+                        symbol, frame, start=q["from"], end=q["to"],
+                        fill_gaps=True,
+                    )
+                else:
+                    from stock_chart_kafka_streams_spark.operators.candles import (
+                        fill_candle_gaps,
+                    )
 
-                df = fill_candle_gaps(df, frame).orderBy("bucket_start")
+                    df = fill_candle_gaps(
+                        store.recent(symbol, frame, n=minutes(), now=q.get("now")),
+                        frame,
+                    ).orderBy("bucket_start")
+                rows = df.select(*_ROW_COLS, "is_gap").limit(cap).collect()
+                narrow = "the from/to range or minutes"
+            elif ranged:
+                rows = store.range_rows(symbol, frame, q["from"], q["to"], cap)
+                narrow = "the from/to range"
             else:
-                self._send(
-                    200,
-                    self._recent_capped(
-                        store, symbol, frame, minutes(), q.get("now")
-                    ),
+                rows = store.recent_rows(
+                    symbol, frame, n=minutes(), now=q.get("now"), max_rows=cap
                 )
-                return
-            self._send(200, self._candles(df, ["is_gap"] if fill else None))
+                narrow = "minutes"
+            self._send(200, self._capped(rows, narrow))
         else:
             self._send(404, {"error": f"no route for {url.path}"})
 

@@ -3,10 +3,20 @@
 The reference serves reads from Redis by enumerating every bucket key in a
 range and issuing N point GETs (``service/CandleStickService.kt:30-110``).
 Here the serving store is a partitioned columnar table, so every read is a
-single filtered scan: partition pruning on ``time_frame`` and parquet
-min/max stats on ``bucket_start`` turn point lookups and range queries into
-near-O(result) scans, and the N-GET read amplification disappears
-(SURVEY §3.3).
+single filtered scan of exactly the ``(time_frame, bucket_date)``
+directories the request can touch, and the N-GET read amplification
+disappears (SURVEY §3.3).
+
+Two surfaces share that directory selection. The DataFrame API
+(``get_candles``, ``recent``, ``point``, ``symbols``) plans a Spark scan;
+it serves composition (gap fill, correlations) and is the reference the
+tests hold the serving calls to. The serving calls behind the HTTP
+routes (``recent_rows``, ``range_rows``, ``point_row``,
+``symbol_names``) return collected rows from one driver-side
+``pyarrow.dataset`` scan of the listed partition files instead: no Spark
+job runs, so an uncached read costs milliseconds, not the fixed cost of
+planning and scheduling a job. Their rows equal the DataFrame API's
+``collect()`` rows in field names, order and Python types.
 """
 
 from __future__ import annotations
@@ -16,10 +26,13 @@ import os as _os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.types import _create_row
 
 from stock_chart_kafka_streams_spark.functions.timeframes import (
     check_frame,
     frame_interval,
+    frame_minutes,
 )
 from stock_chart_kafka_streams_spark.session import tune_session
 
@@ -38,7 +51,12 @@ def _is_stale_listing_error(exc: BaseException) -> bool:
     listing — Spark surfaces this as FAILED_READ_FILE.FILE_NOT_EXIST /
     FileNotFoundException through Py4J. The retry class: a fresh listing
     sees the post-swap files (which are complete — the publish staged
-    them before renaming), so re-planning converges."""
+    them before renaming), so re-planning converges. The driver-side
+    Arrow reads see the same windows as Python's ``FileNotFoundError``
+    (pyarrow opening a listed file, or listing a directory, that a
+    publish renamed aside)."""
+    if isinstance(exc, FileNotFoundError):
+        return True
     s = str(exc)
     jexc = getattr(exc, "java_exception", None)
     if jexc is not None:
@@ -116,6 +134,111 @@ def _check_recent_n(n: int) -> None:
         )
 
 
+# The eight serving columns: the HTTP CandleStick shape.
+_ROW_COLS = [
+    "symbol", "bucket_start", "bucket_end", "open", "high", "low", "close",
+    "volume",
+]
+
+# Partition columns of the serving layout, in the order a Spark read
+# appends them after the data columns.
+_PARTITION_COLS = ["time_frame", "bucket_date"]
+
+
+def _arrow_types() -> dict:
+    """Spark type name -> the Arrow type the driver-side scan reads it
+    as. Timestamps are microseconds: INT96 files are read with
+    ``coerce_int96_timestamp_unit="us"``, the unit Spark itself keeps.
+    Types missing here (binary, decimals, nested) send the read to the
+    DataFrame API."""
+    import pyarrow as pa
+
+    return {
+        "string": pa.string(),
+        "timestamp": pa.timestamp("us"),
+        "timestamp_ntz": pa.timestamp("us"),
+        "date": pa.date32(),
+        "double": pa.float64(),
+        "float": pa.float32(),
+        "long": pa.int64(),
+        "integer": pa.int32(),
+        "short": pa.int16(),
+        "byte": pa.int8(),
+        "boolean": pa.bool_(),
+    }
+
+
+def _session_zone(spark: SparkSession):
+    """The session time zone (``make_timestamp``, ``to_date`` and
+    interval arithmetic resolve in it) as a tzinfo, or None for an id
+    not mapped here (Java short ids like ``PST``)."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    if name in ("UTC", "Z"):
+        return _dt.timezone.utc
+    try:
+        if name[:1] in "+-":
+            hms = [int(p) for p in name[1:].split(":")] + [0, 0]
+            secs = hms[0] * 3600 + hms[1] * 60 + hms[2]
+            return _dt.timezone(_dt.timedelta(seconds=secs if name[0] == "+" else -secs))
+        from zoneinfo import ZoneInfo
+
+        return ZoneInfo(name)
+    except Exception:  # noqa: BLE001 — unknown id: use the DataFrame API
+        return None
+
+
+def _micros(ts: _dt.datetime) -> int:
+    """Spark's internal value for a Python datetime (naive = local
+    time), the conversion ``F.lit(ts)`` applies."""
+    return T.TimestampType().toInternal(ts)
+
+
+def _minus_frames(us: int, frame: str, n: int, zone) -> int:
+    """``us`` minus ``frame_interval(frame, n)`` as Spark evaluates it
+    in the session zone: whole days and months step the zone's
+    calendar (clamping the day of month), the rest is elapsed time."""
+    import calendar
+
+    local = _dt.datetime.fromtimestamp(us // 1_000_000, zone).replace(
+        microsecond=us % 1_000_000
+    )
+    if frame == "MONTH":
+        y, m = divmod(local.year * 12 + local.month - 1 - n, 12)
+        day = min(local.day, calendar.monthrange(y, m + 1)[1])
+        return _micros(local.replace(year=y, month=m + 1, day=day))
+    step = {"MINUTE": 1, "HOUR": 60, "DAY": 1440}.get(frame) or frame_minutes(frame)
+    days, minutes = divmod(n * step, 1440)
+    return _micros(local - _dt.timedelta(days=days)) - minutes * 60_000_000
+
+
+def _arrow_rows(table, fields, limit=None, newest=None) -> list:
+    """Rows of an Arrow scan result, equal to what ``collect()`` returns
+    for the same rows: the fields' names and order, and each Spark
+    type's own ``fromInternal`` (naive local datetimes, dates). Sorts by
+    ``bucket_start`` and cuts in Arrow first: ``newest`` keeps the
+    newest that many rows, then at most ``limit`` rows, oldest first,
+    become Python objects."""
+    import pyarrow as pa
+
+    if newest is not None:
+        table = table.sort_by([("bucket_start", "descending")]).slice(0, newest)
+    table = table.sort_by("bucket_start")
+    if limit is not None:
+        table = table.slice(0, limit)
+    types = {f.name: f.dataType for f in fields}
+    cols = []
+    for name in table.column_names:
+        col, dtype = table.column(name), types[name]
+        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            cols.append([dtype.fromInternal(v) for v in col.cast(pa.int64()).to_pylist()])
+        elif isinstance(dtype, T.DateType):
+            cols.append([dtype.fromInternal(v) for v in col.cast(pa.int32()).to_pylist()])
+        else:
+            cols.append(col.to_pylist())
+    names = table.column_names
+    return [_create_row(names, vals) for vals in zip(*cols)]
+
+
 class CandleStore:
     """Query API over a candles DataFrame or serving-table path.
 
@@ -145,6 +268,9 @@ class CandleStore:
         self._dates_cache: dict = {}
         # (version-tagged) cached symbol sidecar parse (_sidecar_info)
         self._symbols_cache: tuple | None = None
+        # (pyarrow filesystem, root) of the table, False where pyarrow.fs
+        # cannot open the path; resolved on first use (_arrow_source)
+        self._arrow_fs = None
         if point_cache_size < 0:
             raise ValueError(f"point_cache_size must be >= 0, got {point_cache_size}")
         self._point_cache_size = point_cache_size
@@ -214,6 +340,7 @@ class CandleStore:
         out._schema_cache = self._schema_cache
         out._dates_cache = self._dates_cache
         out._symbols_cache = self._symbols_cache
+        out._arrow_fs = self._arrow_fs
         out._corr_path = self._corr_path
         out._corr_n = self._corr_n
         out._corr_schema_cache = self._corr_schema_cache
@@ -451,18 +578,105 @@ class CandleStore:
     def _read_frame_dates(self, frame: str, sel: list):
         """Dir-scoped read over the given listed dates (None when
         empty), planned against the cached table schema — zero footer
-        IO per request."""
+        IO per request. The DataFrame's file index lists the directories
+        when it is built, and Spark reads a listed directory that has
+        vanished as empty ("Was it deleted very recently?"), so a build
+        inside a publish's rename window silently drops the partition;
+        building it under ``_stable_listing`` keeps that window out (a
+        swap that starts after the build fails the scan with
+        FILE_NOT_EXIST instead, the retry class)."""
         from stock_chart_kafka_streams_spark.streaming.sink import (
             read_partition_dirs,
         )
 
-        return read_partition_dirs(
-            self._spark,
+        schema = self._table_schema()
+        scoped, _ = self._stable_listing(
             self._path,
-            [f"time_frame={frame}/bucket_date={d}" for d in sorted(sel)],
-            assume_exists=True,  # sel came from a _frame_dates listing
-            schema=self._table_schema(),
+            lambda: read_partition_dirs(
+                self._spark,
+                self._path,
+                [f"time_frame={frame}/bucket_date={d}" for d in sorted(sel)],
+                assume_exists=True,  # sel came from a _frame_dates listing
+                schema=schema,
+            ),
         )
+        return scoped
+
+    def _arrow_source(self):
+        """``(filesystem, root, fields)`` for the driver-side Arrow
+        reads, where ``fields`` are the cached table schema's fields in
+        the order a Spark read returns them (data columns, then
+        ``time_frame``, ``bucket_date``). None sends the serving calls to
+        the DataFrame API: a store with no path, a path
+        ``pyarrow.fs.FileSystem.from_uri`` cannot open, a table outside
+        the ``(time_frame, bucket_date)`` layout, or a column type with
+        no Arrow twin in ``_arrow_types``."""
+        if self._path is None or self._spark is None:
+            return None
+        if self._arrow_fs is None:
+            import pyarrow.fs as pafs
+
+            uri = self._path
+            if "://" not in uri and not uri.startswith("file:"):
+                uri = _os.path.abspath(uri)
+            try:
+                self._arrow_fs = pafs.FileSystem.from_uri(uri)
+            except Exception:  # noqa: BLE001 — e.g. hdfs without libhdfs
+                self._arrow_fs = False
+        if self._arrow_fs is False:
+            return None
+        schema = self._table_schema()
+        names = schema.fieldNames()
+        if not all(c in names for c in _PARTITION_COLS):
+            return None
+        fields = [f for f in schema.fields if f.name not in _PARTITION_COLS]
+        fields += [schema[c] for c in _PARTITION_COLS]
+        types = _arrow_types()
+        if any(f.dataType.typeName() not in types for f in fields):
+            return None
+        return (*self._arrow_fs, fields)
+
+    def _partition_files(self, fs, root: str, frame: str, dates: list):
+        """The ``*.parquet`` files of each listed
+        ``time_frame=<frame>/bucket_date=<d>`` directory (``_``/``.``
+        names skipped, as Spark's file index does), each with its
+        partition expression. A directory a publish renamed aside since
+        the date listing raises ``FileNotFoundError``: the retry class."""
+        import pyarrow.compute as pc
+        import pyarrow.fs as pafs
+
+        paths, parts = [], []
+        for d in dates:
+            where = (pc.field("time_frame") == frame) & (pc.field("bucket_date") == d)
+            sel = pafs.FileSelector(f"{root}/time_frame={frame}/bucket_date={d}")
+            for info in fs.get_file_info(sel):
+                name = info.base_name
+                if name.endswith(".parquet") and name[0] not in "._":
+                    paths.append(info.path)
+                    parts.append(where)
+        return paths, parts
+
+    def _scan(self, src, frame: str, dates: list, filt=None, columns=None):
+        """ONE driver-side Arrow scan of exactly the listed partition
+        directories: a scanner whose ``filter`` is pushed into the
+        parquet reads, so only matching rows are materialized. The
+        schema is the cached table schema's (no footer is read to infer
+        one); a partition written before a column existed reads it as
+        null, like Spark's read with the same schema."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        fs, root, fields = src
+        paths, parts = self._partition_files(fs, root, frame, dates)
+        types = _arrow_types()
+        schema = pa.schema([(f.name, types[f.dataType.typeName()]) for f in fields])
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        dset = ds.FileSystemDataset.from_paths(
+            paths, schema=schema, format=fmt, filesystem=fs, partitions=parts
+        )
+        return dset.scanner(filter=filt, columns=columns, use_threads=False)
 
     def _recent_plan(self, symbol: str, frame: str, n: int):
         """Shared directory plan for the data-anchored recent-N probes:
@@ -574,52 +788,33 @@ class CandleStore:
             return self._empty_frame()
         return scoped
 
-    def _recent_rows_probe(
-        self, symbol: str, frame: str, n: int, cols: list, max_rows
-    ):
-        """Driver-side rows for the data-anchored recent-N in ONE Spark
-        job per probe iteration (round 15, r14 verdict #6): the
-        DataFrame path pays a count() job to prove the selection
-        sufficient and then a second top-N job over the same directories
-        — on the dense common path (a chart poll against a live table)
-        this folds both into the serve collect itself: fetch the top-n
-        rows of the current suffix; n rows back IS the sufficiency
-        proof, fewer with the symbol's extent fully covered is the
-        complete answer. Returns ascending rows, or None when the store
-        has no directory layout (caller falls back to the DataFrame
-        path)."""
+    def _recent_rows_arrow(self, src, symbol: str, frame: str, n: int, max_rows):
+        """Data-anchored recent-N rows from Arrow scans of ``_recent_plan``'s
+        directory suffix: start at the directories a dense table needs,
+        double the reach while the selection holds fewer than n rows of
+        the symbol and unread extent directories remain (the suffix
+        argument of ``_recent_scoped``). The newest n matching rows are
+        cut in Arrow; at most ``max_rows`` of them, oldest first, become
+        Rows."""
+        import pyarrow.compute as pc
+
         kind, payload = self._recent_plan(symbol, frame, n)
-        if kind == "snapshot":
-            return None
         if kind == "empty":
             self._note_probe(0, payload, 0)
             return []
         dates, sub, k = payload
-        pred = (F.col("symbol") == symbol) & (F.col("time_frame") == frame)
         iters = 0
-        rows: list = []
         while True:
             iters += 1
             sel = sub[-k:]
-            scoped = self._read_frame_dates(frame, sel)
-            if scoped is None:  # pragma: no cover — sub was non-empty
-                rows = []
-                break
-            rows = (
-                scoped.where(pred)
-                .select(*cols)
-                .orderBy(F.col("bucket_start").desc())
-                .limit(n)
-                .collect()
-            )
-            if len(rows) >= n or k >= len(sub):
+            table = self._scan(
+                src, frame, sel, pc.field("symbol") == symbol, _ROW_COLS
+            ).to_table()
+            if table.num_rows >= n or k >= len(sub):
                 break
             k = min(len(sub), k * 2)
         self._note_probe(len(sel), len(dates), iters)
-        rows = list(reversed(rows))
-        if max_rows is not None:
-            rows = rows[:max_rows]
-        return rows
+        return _arrow_rows(table, src[2], limit=max_rows, newest=n)
 
     @staticmethod
     def _lookback_date(now: _dt.datetime, frame: str, n: int):
@@ -752,50 +947,21 @@ class CandleStore:
             .orderBy("bucket_start")
         )
 
-    def recent_rows(
-        self,
-        symbol: str,
-        frame: str = "MINUTE",
-        n: int = 60,
-        now: TsLike | None = None,
-        max_rows: int | None = None,
-    ) -> list:
-        """Collected recent-N rows through the same version-tagged LRU
-        as ``point_row`` (round 14) — the reference's PRIMARY chart-poll
-        endpoint (``StockChartController.kt:41-47``) re-served at
-        dict-hit speed on a repeat poll: a chart client polling
-        ``/recent/{symbol}`` between MERGEs pays one ~µs sentinel read
-        instead of a Spark job, and any writer (this process or another)
-        invalidates via the version token. Enable with
-        ``point_cache_size > 0``; size 0 = every call runs the bounded
-        probe + scan. Rows carry exactly the eight serving columns (the
-        HTTP CandleStick shape). ``max_rows`` bounds what the driver
-        materializes (one row past it, so callers can detect overflow
-        — the HTTP layer's result-cap contract).
-
-        A dense-table cache miss is ONE Spark job (round 15, r14 verdict
-        #6): the data-anchored path serves through
-        ``_recent_rows_probe``, whose per-iteration top-n fetch is both
-        the sufficiency check and the answer. Caching requires a
-        READABLE on-disk version sentinel (r14 advice): without one
-        (object-store paths, hand-written tables) a writer in another
-        process could never invalidate the entry, so the insert and the
-        hit are both skipped — every call re-reads, the correct degraded
-        mode (``_frame_dates`` applies the same rule)."""
-        check_frame(frame)
-        _check_recent_n(n)
+    def _cached(self, key, compute):
+        """``compute()`` through the version-tagged LRU shared by the
+        serving calls: a hit is a dict lookup plus one ~µs sentinel read,
+        and any writer (this process or another) invalidates it through
+        ``streaming.sink.table_version``. Enable with
+        ``point_cache_size > 0``. Caching requires a READABLE on-disk
+        version sentinel (r14 advice): without one (object-store paths,
+        hand-written tables) a writer in another process could never
+        invalidate the entry, so the insert and the hit are both skipped
+        and every call re-reads (``_frame_dates`` applies the same
+        rule)."""
         from stock_chart_kafka_streams_spark.streaming.sink import (
             table_version,
         )
 
-        cols = [
-            "symbol", "bucket_start", "bucket_end", "open", "high", "low",
-            "close", "volume",
-        ]
-        key = (
-            "recent", symbol, frame, int(n),
-            None if now is None else str(_ts(now)), max_rows,
-        )
         ver = table_version(self._path) if self._path is not None else 0
         cacheable = self._point_cache is not None and (
             self._path is None or ver[1] is not None
@@ -805,24 +971,116 @@ class CandleStore:
             if hit is not None and hit[0] == ver:
                 self._point_cache.move_to_end(key)
                 return hit[1]
-
-        def _run():
-            if now is None:
-                probed = self._recent_rows_probe(symbol, frame, n, cols, max_rows)
-                if probed is not None:
-                    return probed
-            df = self.recent(symbol, frame, n=n, now=now).select(*cols)
-            if max_rows is not None:
-                df = df.limit(max_rows)
-            return df.collect()
-
-        rows = retry_stale(_run)
+        value = compute()
         if cacheable:
-            self._point_cache[key] = (ver, rows)
+            self._point_cache[key] = (ver, value)
             self._point_cache.move_to_end(key)
             while len(self._point_cache) > self._point_cache_size:
                 self._point_cache.popitem(last=False)
-        return rows
+        return value
+
+    def recent_rows(
+        self,
+        symbol: str,
+        frame: str = "MINUTE",
+        n: int = 60,
+        now: TsLike | None = None,
+        max_rows: int | None = None,
+    ) -> list:
+        """Collected ``recent(symbol, frame, n, now)`` rows with exactly
+        the eight serving columns (the HTTP CandleStick shape) — the
+        reference's PRIMARY chart-poll endpoint
+        (``StockChartController.kt:41-47``). ``max_rows`` bounds what
+        becomes Python objects (the HTTP layer passes one row past its
+        result cap to detect overflow). A miss is a driver-side Arrow
+        scan, no Spark job: the data-anchored default probes backward
+        from the newest directories (``_recent_rows_arrow``), ``now=``
+        reads the lookback directories. A repeat poll between writes is
+        an LRU hit (``_cached``)."""
+        check_frame(frame)
+        _check_recent_n(n)
+        key = (
+            "recent", symbol, frame, int(n),
+            None if now is None else str(_ts(now)), max_rows,
+        )
+        return self._cached(
+            key,
+            lambda: retry_stale(
+                lambda: self._recent_rows(symbol, frame, n, now, max_rows)
+            ),
+        )
+
+    def _recent_rows(self, symbol, frame, n, now, max_rows) -> list:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        src = self._arrow_source()
+        zone = None if src is None or now is None else _session_zone(self._spark)
+        if src is None or (now is not None and zone is None):
+            df = self.recent(symbol, frame, n=n, now=now).select(*_ROW_COLS)
+            return (df if max_rows is None else df.limit(max_rows)).collect()
+        if now is None:
+            return self._recent_rows_arrow(src, symbol, frame, n, max_rows)
+        # recent(now=)'s directories and predicates, evaluated the way
+        # Spark does: bucket_start in (now - n buckets, now], bucket_date
+        # from the lookback date (and to_date of the lower bound) to now
+        at = _ts(now)
+        hi = _micros(at)
+        lo = _minus_frames(hi, frame, n, zone)
+        d_lo = max(
+            self._lookback_date(at, frame, n),
+            _dt.datetime.fromtimestamp(lo // 1_000_000, zone).date(),
+        )
+        dates = [d for d in self._frame_dates(frame) if d_lo <= d <= at.date()]
+        ts = pa.timestamp("us")
+        filt = (
+            (pc.field("symbol") == symbol)
+            & (pc.field("bucket_start") > pa.scalar(lo, ts))
+            & (pc.field("bucket_start") <= pa.scalar(hi, ts))
+        )
+        table = self._scan(src, frame, dates, filt, _ROW_COLS).to_table()
+        return _arrow_rows(table, src[2], limit=max_rows)
+
+    def range_rows(
+        self,
+        symbol: str,
+        frame: str = "MINUTE",
+        start: TsLike | None = None,
+        end: TsLike | None = None,
+        max_rows: int | None = None,
+    ) -> list:
+        """Collected ``get_candles(symbol, frame, start, end)`` rows with
+        the eight serving columns, ascending, at most ``max_rows`` of
+        them — the HTTP range route without ``fill``. One driver-side
+        Arrow scan of the range's listed directories, no Spark job."""
+        check_frame(frame)
+        return retry_stale(
+            lambda: self._range_rows(symbol, frame, start, end, max_rows)
+        )
+
+    def _range_rows(self, symbol, frame, start, end, max_rows) -> list:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        src = self._arrow_source()
+        if src is None:
+            df = self.get_candles(symbol, frame, start, end).select(*_ROW_COLS)
+            return (df if max_rows is None else df.limit(max_rows)).collect()
+        lo = None if start is None else _ts(start)
+        hi = None if end is None else _ts(end)
+        dates = [
+            d
+            for d in self._frame_dates(frame)
+            if (lo is None or d >= lo.date()) and (hi is None or d <= hi.date())
+        ]
+        ts = pa.timestamp("us")
+        filt = pc.field("symbol") == symbol
+        if lo is not None:
+            filt &= pc.field("bucket_start") >= pa.scalar(_micros(lo), ts)
+        if hi is not None:
+            filt &= pc.field("bucket_start") <= pa.scalar(_micros(hi), ts)
+        table = self._scan(src, frame, dates, filt, _ROW_COLS).to_table()
+        return _arrow_rows(table, src[2], limit=max_rows)
 
     # -- Q6: point lookup by calendar parts --------------------------------
     def point(
@@ -866,55 +1124,43 @@ class CandleStore:
         hour: int = 0,
         minute: int = 0,
     ):
-        """Interactive point-lookup tier (r10 verdict #7): the pruned
-        ``point`` scan is correct and directory-exact, but each call is
-        still a Spark job (~0.2-0.4 s) — far from the reference's O(1)
-        Redis GET for a chart poller re-reading the same candle. This
-        returns the single Row (or None) through an optional driver-side
-        LRU keyed by the calendar parts and tagged with the serving
-        table's freshness token (``streaming.sink.table_version`` — an
-        in-process write counter PLUS the on-disk ``_table_version``
-        sentinel every MERGE/write/compact/expire rewrites, so a writer
-        in ANOTHER process invalidates this cache too; r11 verdict #3).
-        A repeat read is a dict hit plus one ~µs sentinel open; a
-        post-MERGE read refetches. Read-layer only: misses run the
-        exact same pruned ``point`` scan, against a
-        FRESH file listing for path-backed stores (a MERGE rewrites
-        files, so the constructor's snapshot listing could go stale).
-        Enable with ``point_cache_size > 0``; size 0 = every call scans."""
+        """The single ``point(...)`` Row (all its fields, partition
+        columns included), or None — the interactive point-lookup tier
+        (r10 verdict #7). A miss is one driver-side Arrow scan of the
+        one listed ``bucket_date`` directory, no Spark job; the bucket
+        instant is ``make_timestamp``'s, resolved in the session time
+        zone. A repeat read between writes is an LRU hit keyed by the
+        calendar parts (``_cached``)."""
         check_frame(frame)
-        from stock_chart_kafka_streams_spark.streaming.sink import table_version
-
         key = (symbol, frame, year, month, day, hour, minute)
-        ver = table_version(self._path) if self._path is not None else 0
-        # same no-sentinel caching rule as recent_rows/_frame_dates: a
-        # table whose version half is unreadable can never be
-        # cross-process invalidated, so it is never cached
-        cacheable = self._point_cache is not None and (
-            self._path is None or ver[1] is not None
+        return self._cached(
+            key,
+            lambda: retry_stale(
+                lambda: self._point_row(
+                    symbol, frame, year, month, day, hour, minute
+                )
+            ),
         )
-        if cacheable:
-            hit = self._point_cache.get(key)
-            if hit is not None and hit[0] == ver:
-                self._point_cache.move_to_end(key)
-                return hit[1]
-        # point() is freshness-safe on path-backed stores by itself now:
-        # _frame_scoped re-lists (exactly one directory) per call, so the
-        # constructor snapshot's stale file index is never consulted.
-        # retry_stale (r13 advice): direct Python-API callers get the
-        # same swap-race protection as the HTTP layer — each attempt
-        # re-plans against a fresh listing.
-        rows = retry_stale(
-            lambda: self.point(symbol, frame, year, month, day, hour, minute)
-            .collect()
+
+    def _point_row(self, symbol, frame, year, month, day, hour, minute):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        src = self._arrow_source()
+        zone = None if src is None else _session_zone(self._spark)
+        if zone is None:
+            rows = self.point(symbol, frame, year, month, day, hour, minute).collect()
+            return rows[0] if rows else None
+        bd = _dt.date(year, month, day)
+        at = _micros(_dt.datetime(year, month, day, hour, minute, tzinfo=zone))
+        dates = [d for d in self._frame_dates(frame) if d == bd]
+        filt = (pc.field("symbol") == symbol) & (
+            pc.field("bucket_start") == pa.scalar(at, pa.timestamp("us"))
         )
-        row = rows[0] if rows else None
-        if cacheable:
-            self._point_cache[key] = (ver, row)
-            self._point_cache.move_to_end(key)
-            while len(self._point_cache) > self._point_cache_size:
-                self._point_cache.popitem(last=False)
-        return row
+        rows = _arrow_rows(
+            self._scan(src, frame, dates, filt).to_table(), src[2], limit=1
+        )
+        return rows[0] if rows else None
 
     # -- cross-series analytics over the stored table -----------------------
     def attach_corr_table(self, path: str, n: int) -> None:
@@ -1250,36 +1496,38 @@ class CandleStore:
         return self.df.select("symbol").distinct().orderBy("symbol")
 
     def symbol_names(self) -> list:
-        """Collected symbol catalog through the version-tagged LRU
-        (round 15): ``/api/charts/symbols`` is a poll-class endpoint,
-        and ``symbols()`` is a whole-table distinct by semantics — a
-        repeat poll between writes should be a dict hit plus one ~µs
-        sentinel read, not a full-table scan. Exact (expiry-aware): a
-        cache miss runs the same scan the c9_symbols oracle checks; the
-        sidecar's over-approximating membership set is deliberately NOT
-        used here (a fully-expired symbol must drop out of the catalog,
-        the Redis KEYS semantics). Same no-sentinel caching rule as
-        recent_rows/point_row."""
-        from stock_chart_kafka_streams_spark.streaming.sink import (
-            table_version,
-        )
+        """Collected ``symbols()`` catalog — the ``/api/charts/symbols``
+        poll. Exact (expiry-aware): the scan stays whole-table like the
+        c9_symbols oracle's, and the sidecar's over-approximating
+        membership set is deliberately NOT used (a fully-expired symbol
+        must drop out of the catalog, the Redis KEYS semantics). A miss
+        is a driver-side Arrow scan of the ``symbol`` column of every
+        listed partition, deduplicated per batch (memory stays
+        O(distinct symbols)), no Spark job; a repeat poll between writes
+        is an LRU hit (``_cached``)."""
+        return self._cached(("symbols",), lambda: retry_stale(self._symbol_names))
 
-        key = ("symbols",)
-        ver = table_version(self._path) if self._path is not None else 0
-        cacheable = self._point_cache is not None and (
-            self._path is None or ver[1] is not None
-        )
-        if cacheable:
-            hit = self._point_cache.get(key)
-            if hit is not None and hit[0] == ver:
-                self._point_cache.move_to_end(key)
-                return hit[1]
-        names = [r["symbol"] for r in retry_stale(
-            lambda: self.fresh().symbols().collect()
-        )]
-        if cacheable:
-            self._point_cache[key] = (ver, names)
-            self._point_cache.move_to_end(key)
-            while len(self._point_cache) > self._point_cache_size:
-                self._point_cache.popitem(last=False)
-        return names
+    def _symbol_names(self) -> list:
+        import pyarrow.compute as pc
+        import pyarrow.fs as pafs
+
+        src = self._arrow_source()
+        if src is None:
+            return [r["symbol"] for r in self.fresh().symbols().collect()]
+        fs, root, _ = src
+
+        def _list_frames():
+            return sorted(
+                info.base_name.split("=", 1)[1]
+                for info in fs.get_file_info(pafs.FileSelector(root))
+                if info.type == pafs.FileType.Directory
+                and info.base_name.startswith("time_frame=")
+            )
+
+        names: set = set()
+        for frame in self._stable_listing(self._path, _list_frames)[0]:
+            scan = self._scan(src, frame, self._frame_dates(frame), columns=["symbol"])
+            for batch in scan.to_batches():
+                names.update(pc.unique(batch.column(0)).to_pylist())
+        # orderBy("symbol"): code-point order, nulls first
+        return [None] * (None in names) + sorted(names - {None})

@@ -603,3 +603,161 @@ def test_symbol_names_lru_and_invalidation(spark, tmp_path):
     plain = CandleStore.from_path(spark, table)
     assert plain.symbol_names() == ["A", "B", "C"]
     assert plain.symbol_names() is not plain.symbol_names()
+
+
+# -- driver-side Arrow serving: no Spark job, UTC instants on any host -------
+
+
+@pytest.fixture(scope="module")
+def disk_url(spark, tmp_path_factory):
+    """HTTP server over a MINUTE+HOUR serving table on disk (LRU off)."""
+    from stock_chart_kafka_streams_spark.streaming.sink import write_candles
+
+    table = str(tmp_path_factory.mktemp("arrow_serving") / "table")
+    write_candles(
+        multi_frame_candles(load_trades(spark, SF_DIR), ["MINUTE", "HOUR"]), table
+    )
+    server, url = serve_in_background(CandleStore.from_path(spark, table))
+    yield url, table
+    server.shutdown()
+
+
+def _chart_reads_block(shift: int) -> list[str]:
+    """One block of the benchmark's ten request shapes (four recent-N,
+    three range, two point, one symbol listing); ``shift`` moves every
+    time so that a second block asks for different rows."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 10, 9, 0) + dt.timedelta(hours=shift)
+
+    def iso(x):
+        return x.strftime("%Y-%m-%dT%H:%M:%S")
+
+    return [
+        f"/api/charts/recent/click?minutes=15&frame=MINUTE&now={iso(t)}",
+        "/api/charts/recent/click?minutes=240&frame=MINUTE",
+        f"/api/charts/recent/click?minutes=60&frame=HOUR&now={iso(t)}",
+        "/api/charts/recent/click?minutes=120&frame=HOUR",
+        f"/api/charts/click?from={iso(t)}&to={iso(t + dt.timedelta(hours=1))}&frame=MINUTE",
+        f"/api/charts/click?from={iso(t)}&to={iso(t + dt.timedelta(hours=4))}&frame=MINUTE",
+        f"/api/charts/click?from={iso(t)}&to={iso(t + dt.timedelta(hours=12))}&frame=HOUR",
+        f"/api/charts/point/click?frame=MINUTE&year={t.year}&month={t.month}"
+        f"&day={t.day}&hour={t.hour}&minute=3",
+        f"/api/charts/point/click?frame=HOUR&year={t.year}&month={t.month}"
+        f"&day={t.day}&hour={t.hour}",
+        "/api/charts/symbols",
+    ]
+
+
+def test_chart_reads_request_shapes_run_no_spark_job(spark, disk_url):
+    """Each of the benchmark's ten request shapes is served without a
+    Spark job. Handler threads run outside any job group, so the count
+    covers the jobs with no group plus the test thread's own group."""
+    url, _ = disk_url
+    for path in _chart_reads_block(0):  # per-table-version schema inference
+        _get_err(f"{url}{path}")
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("chart-reads-no-job", "ten request shapes")
+    try:
+        codes = [_get_err(f"{url}{path}")[0] for path in _chart_reads_block(5)]
+    finally:
+        sc.setJobGroup(None, None)
+    # the points (shapes 8 and 9) may miss in the sparse sf0.001 data
+    assert codes[:7] + codes[9:] == [200] * 8 and set(codes[7:9]) <= {200, 404}
+    new = (set(st.getJobIdsForGroup(None)) - before) | set(
+        st.getJobIdsForGroup("chart-reads-no-job")
+    )
+    assert not new, f"{len(new)} Spark jobs for ten chart reads"
+
+
+def test_serving_json_equals_duckdb_under_non_utc_tz(spark, disk_url):
+    """With the process under ``TZ=America/New_York`` the candle JSON
+    still carries the UTC instants DuckDB reads from the same files:
+    recent (data- and ``now=``-anchored), range, point and symbols.
+    Explicit ``+00:00`` offsets pin the UTC meaning of ``now``/``from``/
+    ``to``; naive ones read as host-local time, as PySpark does."""
+    import os
+    import time as time_mod
+    from urllib.parse import quote
+
+    import duckdb
+
+    url, table = disk_url
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute(
+        "CREATE VIEW t AS SELECT * FROM read_parquet("
+        f"'{table}/time_frame=*/bucket_date=*/*.parquet', hive_partitioning=true)"
+    )
+    cols = "symbol, open, high, low, close, volume, bucket_start, bucket_end"
+
+    def want(sql, args):
+        return [
+            {
+                "symbol": r[0], "open": r[1], "high": r[2], "low": r[3],
+                "close": r[4], "volume": r[5],
+                "startTime": r[6].strftime("%Y-%m-%dT%H:%M:%SZ"),
+                "endTime": r[7].strftime("%Y-%m-%dT%H:%M:%SZ"),
+            }
+            for r in con.execute(f"SELECT {cols} FROM t WHERE {sql}", args).fetchall()
+        ]
+
+    sym = "symbol = 'click' AND time_frame = 'MINUTE'"
+    starts = [r[0].replace(tzinfo=None) for r in con.execute(
+        f"SELECT bucket_start FROM t WHERE {sym} ORDER BY 1").fetchall()]
+    now = starts[len(starts) // 2]
+    # a range across a UTC midnight: the last candle of one day to the
+    # first of the next, two partitions
+    cut = next(i for i in range(1, len(starts))
+               if starts[i].date() != starts[i - 1].date())
+    lo, hi = starts[cut - 1], starts[cut]
+    utc = quote("+00:00")
+    cases = [
+        (
+            "/api/charts/recent/click?minutes=45",
+            "bucket_start IN (SELECT bucket_start FROM t WHERE " + sym
+            + " ORDER BY bucket_start DESC LIMIT 45) AND " + sym
+            + " ORDER BY bucket_start",
+            [],
+        ),
+        (
+            f"/api/charts/recent/click?minutes=600&now={now.isoformat()}{utc}",
+            f"{sym} AND bucket_start <= ? AND bucket_start > ? - INTERVAL 600 minute"
+            " ORDER BY bucket_start",
+            [now, now],
+        ),
+        (
+            f"/api/charts/click?from={lo.isoformat()}{utc}&to={hi.isoformat()}{utc}",
+            f"{sym} AND bucket_start BETWEEN ? AND ? ORDER BY bucket_start",
+            [lo, hi],
+        ),
+    ]
+    prev = os.environ.get("TZ")
+    try:
+        os.environ["TZ"] = "America/New_York"
+        time_mod.tzset()
+        for path, sql, args in cases:
+            status, got = _get_err(f"{url}{path}")
+            assert status == 200 and got, path
+            assert got == want(sql, args), path
+        assert len(got) == 2  # the last range: both sides of midnight
+        # point: the calendar parts are read in the session zone (UTC)
+        status, got = _get_err(
+            f"{url}/api/charts/point/click?frame=MINUTE&year={now.year}"
+            f"&month={now.month}&day={now.day}&hour={now.hour}&minute={now.minute}"
+        )
+        assert status == 200
+        assert [got] == want(f"{sym} AND bucket_start = ?", [now])
+        status, got = _get_err(f"{url}/api/charts/symbols")
+        assert status == 200
+        assert got == [r[0] for r in con.execute(
+            "SELECT DISTINCT symbol FROM t ORDER BY 1").fetchall()]
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time_mod.tzset()
+        con.close()

@@ -502,10 +502,10 @@ def test_pq_rejects_nonpositive_m(embs):
         pq_topk_sql(m=-4)
 
 
-def test_pq_vector_encode_equivalent_to_fold(spark, embs, duck):
+def test_pq_encode_topk_bit_equals_twin(spark, embs, duck):
     """The encode (certified BLAS argmin, Arrow ADC scan) must produce
     the SAME final top-k rows, cos doubles bit for bit, as the DuckDB
-    twin at k=5 (the name keeps the deleted JVM fold reference)."""
+    twin at k=5."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         pq_topk,
         pq_topk_sql,
@@ -685,9 +685,8 @@ def test_ivfpq_recall_vs_exact(spark, embs):
         assert r["vec_id"] == r["query_id"] and abs(r["cos"] - 1.0) < 1e-9
 
 
-def test_ivfpq_vector_equivalent_to_fold(spark, embs, duck):
-    """s6 at 4 lists / 2 probes against the DuckDB twin, bit for bit (the
-    name keeps the deleted JVM fold reference)."""
+def test_ivfpq_4_lists_2_probes_bit_equals_twin(spark, embs, duck):
+    """s6 at 4 lists / 2 probes against the DuckDB twin, bit for bit."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         ivfpq_topk,
         ivfpq_topk_sql,

@@ -264,11 +264,10 @@ def test_mixture_sample_rejects_bad_params(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_semantic_dedup_vector_equivalent_to_fold(spark, planted, duck):
+def test_semantic_dedup_planted_bit_equals_twin(spark, planted, duck):
     """The assignment (certified BLAS argmax) must pick the same clusters,
     survivors and cent_cos doubles, bit for bit, as the DuckDB twin on
-    the planted fixture (the name keeps the deleted JVM fold reference
-    it once compared against)."""
+    the planted fixture."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         PLANTED_NEARDUP_CTE,
         semantic_dedup,
@@ -359,7 +358,7 @@ def test_semantic_dedup_stats_and_cap_warning(spark):
     assert any("cluster_cap" in str(w.message) for w in caught)
 
 
-def test_semantic_dedup_latent_dim_prefix_both_modes(spark, duck):
+def test_semantic_dedup_latent_dim_prefix_matches_twin(spark, duck):
     """r9 review regression: with dim SMALLER than the physical array
     width, the assignment must (a) agree with the DuckDB twin's
     dim-prefix cosines bit for bit and (b) actually resolve pairs that

@@ -526,6 +526,11 @@ def test_stale_listing_error_class_covers_swap_windows():
         Exception("[FAILED_READ_FILE.FILE_NOT_EXIST] ...")
     )
     assert _is_stale_listing_error(Exception("java.io.FileNotFoundException"))
+    # the driver-side Arrow reads: pyarrow opening (or listing) a path a
+    # publish renamed aside
+    assert _is_stale_listing_error(
+        FileNotFoundError(2, "Failed to open local file '/t/x=1/part-0.parquet'")
+    )
     assert not _is_stale_listing_error(Exception("ArithmeticException"))
 
 
@@ -1001,17 +1006,17 @@ def test_failed_publish_restores_noninflight_sentinel(spark, tmp_path, monkeypat
     assert [r["close"] for r in store.recent("X", "MINUTE", n=5).collect()] == [1.0]
 
 
-def test_recent_rows_dense_poll_is_one_job(spark, tmp_path):
-    """round 15 (r14 verdict #6): a cache-miss recent poll on a dense
-    table is ONE Spark job — the top-n fetch is its own sufficiency
-    proof; the old shape paid a count() job AND the serve job over the
-    same two directories."""
+def test_recent_rows_dense_poll_runs_no_spark_job(spark, tmp_path):
+    """A cache-miss recent poll on a dense table runs NO Spark job: the
+    rows come from a driver-side Arrow scan of the probed directories
+    (the first call still pays the per-table-version schema inference,
+    which is a Spark job)."""
     import datetime as dt
 
     from stock_chart_kafka_streams_spark.streaming.sink import upsert_candles
     from tests.test_streaming import _mk_candle_batch
 
-    table = str(tmp_path / "onejob")
+    table = str(tmp_path / "nojob")
     day0 = dt.datetime(2024, 5, 1, 12, 0)
     rows = [("X", day0 + dt.timedelta(days=d, minutes=m), 1.0 + m, 1)
             for d in range(6) for m in range(60)]
@@ -1020,13 +1025,13 @@ def test_recent_rows_dense_poll_is_one_job(spark, tmp_path):
     store = CandleStore.from_path(spark, table)
     warm = store.recent_rows("X", n=60)  # pays schema/dates/sidecar setup
     sc = spark.sparkContext
-    sc.setJobGroup("recent-one-job", "dense recent poll")
+    sc.setJobGroup("recent-no-job", "dense recent poll")
     try:
         again = store.recent_rows("X", n=60)
     finally:
         sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("recent-one-job")
-    assert len(jobs) == 1, f"dense recent poll ran {len(jobs)} jobs"
+    jobs = sc.statusTracker().getJobIdsForGroup("recent-no-job")
+    assert len(jobs) == 0, f"dense recent poll ran {len(jobs)} jobs"
     # value-identical to the DataFrame path
     want = [tuple(r) for r in
             store.recent("X", n=60).select(
@@ -1242,3 +1247,245 @@ def test_sidecar_reader_never_loses_fresh_symbols_under_churn(spark, tmp_path):
         rows = store.recent_rows(f"NEW{i}", "MINUTE", n=5)
         assert [r["close"] for r in rows] == [2.0 + i]
         assert qa.LAST_RECENT_PROBE["dates_scanned"] == 1
+
+
+def test_serving_rows_retry_a_partition_swapped_after_listing(
+    spark, tmp_path, monkeypatch
+):
+    """Reader isolation of the driver-side Arrow reads: a publish that
+    renames a listed partition directory aside (and its successor in)
+    between the file listing and the scan makes pyarrow raise
+    FileNotFoundError; ``recent_rows``, ``range_rows`` and ``point_row``
+    each retry against a fresh listing and return the post-swap rows."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from stock_chart_kafka_streams_spark.plans import query_api as qa
+    from stock_chart_kafka_streams_spark.plans.query_api import CandleStore as CS
+    from stock_chart_kafka_streams_spark.streaming import sink as sink_mod
+    from stock_chart_kafka_streams_spark.streaming.sink import upsert_candles
+    from tests.test_streaming import _mk_candle_batch
+
+    t0 = dt.datetime(2024, 6, 3, 9, 0)
+    rel = os.path.join("time_frame=MINUTE", "bucket_date=2024-06-03")
+
+    def _table(name, base):
+        path = str(tmp_path / name)
+        upsert_candles(
+            spark,
+            _mk_candle_batch(
+                spark,
+                [("X", t0 + dt.timedelta(minutes=i), base + i, 1) for i in range(3)],
+            ),
+            path,
+        )
+        return path
+
+    table = _table("live", 1.0)
+    # one successor partition per swap, each with its own file names
+    successors = [os.path.join(_table(f"next{k}", 10.0 * k), rel) for k in (1, 2, 3)]
+    store = CandleStore.from_path(spark, table)
+    assert [r["close"] for r in store.recent_rows("X", n=3)] == [1.0, 2.0, 3.0]
+
+    real_list = CS._partition_files
+    pending: list = []
+    listings = {"n": 0}
+
+    def _swap_after_listing(self, fs, root, frame, dates):
+        out = real_list(self, fs, root, frame, dates)
+        listings["n"] += 1
+        if pending:
+            live = os.path.join(table, rel)
+            os.rename(live, os.path.join(table, f".aside-{listings['n']}"))
+            shutil.copytree(pending.pop(), live)
+            sink_mod._bump_table_version(table)
+        return out
+
+    real_is_stale = qa._is_stale_listing_error
+    stale: list = []
+
+    def _record(exc):
+        stale.append(type(exc))
+        return real_is_stale(exc)
+
+    monkeypatch.setattr(CS, "_partition_files", _swap_after_listing)
+    monkeypatch.setattr(qa, "_is_stale_listing_error", _record)
+
+    calls = [
+        (lambda: store.recent_rows("X", n=3), [10.0, 11.0, 12.0]),
+        (
+            lambda: store.range_rows(
+                "X", "MINUTE", "2024-06-03T09:00:00", "2024-06-03T10:00:00"
+            ),
+            [20.0, 21.0, 22.0],
+        ),
+        (lambda: [store.point_row("X", "MINUTE", 2024, 6, 3, 9, 1)], [31.0]),
+    ]
+    for (call, want), successor in zip(calls, successors):
+        pending.append(successor)
+        before = listings["n"]
+        stale.clear()
+        assert [r["close"] for r in call()] == want
+        assert not pending  # the swap happened inside this call
+        assert stale == [FileNotFoundError]  # one retried attempt
+        assert listings["n"] - before == 2
+
+
+def _assert_rows_equal(got, want):
+    """Field names, values, Python types and order, row by row."""
+    assert [r.__fields__ for r in got] == [r.__fields__ for r in want]
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [[type(v) for v in r] for r in got] == [[type(v) for v in r] for r in want]
+
+
+def _assert_serving_rows_equal_api(store, frames, symbols):
+    """Every serving call against its DataFrame-API reference:
+    ``recent_rows`` with and without ``now=`` (and a ``max_rows`` cut),
+    ``range_rows``, ``point_row`` hit and miss, ``symbol_names``."""
+    import datetime as dt
+
+    cols = [
+        "symbol", "bucket_start", "bucket_end", "open", "high", "low",
+        "close", "volume",
+    ]
+    assert store._arrow_source() is not None  # the Arrow path, not the fallback
+    assert store.symbol_names() == [r["symbol"] for r in store.symbols().collect()]
+    for frame in frames:
+        for sym in symbols:
+            hist = store.get_candles(sym, frame).collect()
+            for n in (1, 7, 60):
+                _assert_rows_equal(
+                    store.recent_rows(sym, frame, n=n),
+                    store.recent(sym, frame, n=n).select(*cols).collect(),
+                )
+            _assert_rows_equal(
+                store.recent_rows(sym, frame, n=60, max_rows=3),
+                store.recent(sym, frame, n=60).select(*cols).limit(3).collect(),
+            )
+            anchors = ["2024-01-15T12:30:00", "2024-01-15T12:30:00+00:00"]
+            if hist:
+                mid = hist[len(hist) // 2]["bucket_start"]
+                anchors += [mid, hist[-1]["bucket_start"] + dt.timedelta(minutes=1)]
+            for now in anchors:
+                _assert_rows_equal(
+                    store.recent_rows(sym, frame, n=30, now=now),
+                    store.recent(sym, frame, n=30, now=now).select(*cols).collect(),
+                )
+            bounds = [("2024-01-03T00:00:00", "2024-01-20T06:00:00+00:00")]
+            if hist:
+                bounds.append((
+                    hist[len(hist) // 4]["bucket_start"],
+                    hist[3 * len(hist) // 4]["bucket_start"],
+                ))
+            for lo, hi in bounds:
+                want = store.get_candles(sym, frame, lo, hi).select(*cols)
+                _assert_rows_equal(
+                    store.range_rows(sym, frame, lo, hi), want.collect()
+                )
+                _assert_rows_equal(
+                    store.range_rows(sym, frame, lo, hi, max_rows=2),
+                    want.limit(2).collect(),
+                )
+            # a hit (calendar parts in the session zone, UTC), and a miss
+            parts = [(1999, 1, 1, 0, 0)]
+            if hist:
+                b = hist[len(hist) // 3]["bucket_start"].astimezone(dt.timezone.utc)
+                parts.insert(0, (b.year, b.month, b.day, b.hour, b.minute))
+            for i, p in enumerate(parts):
+                got = store.point_row(sym, frame, *p)
+                want = store.point(sym, frame, *p).collect()
+                if i == len(parts) - 1:
+                    assert got is None and want == []
+                else:
+                    _assert_rows_equal([got], want)
+
+
+def test_serving_rows_equal_dataframe_api(spark, tmp_path):
+    """The driver-side Arrow serving calls return exactly the DataFrame
+    API's rows — field names, order, values and Python types — on the
+    sf0.001 four-frame table, and again with the process under a
+    non-UTC ``TZ``, where both sides hand back naive local datetimes
+    (``TimestampType.fromInternal``) and read naive inputs as local
+    time."""
+    import os
+    import time as time_mod
+
+    table = str(tmp_path / "equal")
+    mf = multi_frame_candles(load_trades(spark, SF_DIR)).localCheckpoint()
+    write_candles(mf, table)
+    store = CandleStore.from_path(spark, table)
+    syms = [r["symbol"] for r in store.symbols().collect()]
+    frames = ["MINUTE", "HOUR", "DAY", "MONTH"]
+    _assert_serving_rows_equal_api(store, frames, syms[:2] + ["NOPE"])
+
+    prev = os.environ.get("TZ")
+    try:
+        os.environ["TZ"] = "America/New_York"
+        time_mod.tzset()
+        _assert_serving_rows_equal_api(store, ["MINUTE", "HOUR"], syms[:1])
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time_mod.tzset()
+
+
+def test_serving_rows_equal_dataframe_api_on_mixed_legacy_tables(spark, tmp_path):
+    """Mixed legacy / ``is_gap`` partitions: a legacy partition reads
+    ``is_gap`` as null on both paths, and the field order follows the
+    cached schema whichever partition it was sampled from (the sampled
+    leaf is the newest date)."""
+    import datetime as dt
+
+    from stock_chart_kafka_streams_spark.streaming.sink import (
+        _bump_table_version,
+        _mark_gap_table,
+        upsert_candles,
+    )
+    from tests.test_streaming import _mk_candle_batch
+
+    t0 = dt.datetime(2024, 6, 3, 9, 0)
+
+    def _rows(day, base):
+        return [("X", t0 + dt.timedelta(days=day, minutes=m), base + m, 1)
+                for m in range(5)]
+
+    # legacy oldest partition, is_gap newest: the sample carries is_gap
+    older = str(tmp_path / "legacy_first")
+    upsert_candles(spark, _mk_candle_batch(spark, _rows(0, 1.0)), older)
+    _mark_gap_table(spark, older)
+    upsert_candles(
+        spark,
+        _mk_candle_batch(spark, _rows(1, 10.0)).withColumn("is_gap", F.lit(False)),
+        older,
+    )
+    # is_gap oldest partition, legacy newest: the sample lacks is_gap
+    # and the cached schema appends it
+    newer = str(tmp_path / "legacy_last")
+    upsert_candles(
+        spark,
+        _mk_candle_batch(spark, _rows(0, 1.0)).withColumn("is_gap", F.lit(True)),
+        newer,
+    )
+    (
+        _mk_candle_batch(spark, _rows(1, 10.0))
+        .drop("time_frame")
+        .coalesce(1)
+        .write.parquet(f"{newer}/time_frame=MINUTE/bucket_date=2024-06-04")
+    )
+    _bump_table_version(newer)
+
+    for table in (older, newer):
+        store = CandleStore.from_path(spark, table)
+        assert "is_gap" in store._columns()
+        _assert_serving_rows_equal_api(store, ["MINUTE"], ["X", "NOPE"])
+        nulls = {
+            r["bucket_date"]: r["is_gap"]
+            for r in (
+                store.point_row("X", "MINUTE", 2024, 6, 3, 9, 0),
+                store.point_row("X", "MINUTE", 2024, 6, 4, 9, 0),
+            )
+        }
+        assert None in nulls.values()

@@ -9,11 +9,7 @@ cannot express (DuckDB raises where Spark's ``floor`` saturates NaN and
 1e300-scale components) compare against a pure-Python dimension-loop
 replay built on ``exact_chains.quantize``. The tests also pin the edge
 contract written in ``exact_chains``: NaN first, ties to the lowest cid,
-short rows raise, empty input yields no rows.
-
-Several test names still say ``fold``: they name the pure-JVM reference
-these tests compared against until it was deleted. Each docstring names
-the reference the test uses now."""
+short rows raise, empty input yields no rows."""
 
 import hashlib
 import math
@@ -60,7 +56,7 @@ def _srp_codes_sql(source: str, n_bits: int, n_tables: int, dim: int) -> str:
     )
 
 
-def test_srp_codes_kernel_bit_equals_fold_expression(spark, embs, duck):
+def test_srp_codes_kernel_bit_equals_twin_code_expression(spark, embs, duck):
     """The SRP code kernel equals the twins' code expression
     (``_srp_code_fold_sql``) on every (id, table)."""
     from stock_chart_kafka_streams_spark.operators.similarity import _srp_codes
@@ -100,7 +96,7 @@ def _assignment_sql(source_cte: str, n_centroids: int, iterations: int, dim: int
     )
 
 
-def test_assign_vector_bit_equals_assign_fold(spark, embs, duck):
+def test_assign_vector_bit_equals_twin_assignment(spark, embs, duck):
     """``_assign_vector`` over the trained centroids equals the twin's
     assignment (cid and cent_cos bits, which also pins the trained
     centroids), and its ``nv`` is the JVM norm's double."""
@@ -157,7 +153,7 @@ def test_pq_train_and_encode_bit_equal_twin(spark, embs, duck):
     assert_matches_twin_bits(codes, duck, _twin_select(sql, "SELECT * FROM codes"))
 
 
-def test_pq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
+def test_pq_topk_bit_equals_pq_topk_sql_end_to_end(spark, embs, duck):
     """s5 end to end against ``pq_topk_sql``, cos doubles included."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
         pq_topk,
@@ -170,7 +166,7 @@ def test_pq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
     )
 
 
-def test_ivfpq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
+def test_ivfpq_topk_bit_equals_ivfpq_topk_sql_end_to_end(spark, embs, duck):
     """s6 end to end against ``ivfpq_topk_sql`` (coarse k-means, list
     assignment, query probes, PQ, probed ADC, rerank)."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
@@ -186,7 +182,7 @@ def test_ivfpq_topk_vector_bit_equals_fold_end_to_end(spark, embs, duck):
     )
 
 
-def test_semantic_dedup_vector_bit_equals_fold(spark, embs, duck):
+def test_semantic_dedup_bit_equals_semantic_dedup_sql(spark, embs, duck):
     """d8 on the raw corpus at threshold 0.95 against
     ``semantic_dedup_sql``: survivors, cids and cent_cos doubles."""
     from stock_chart_kafka_streams_spark.operators.similarity import (
@@ -443,7 +439,7 @@ def test_adc_scan_kernel_short_query_is_null(spark, embs):
     assert len(out) == 3 and all(r["adc"] is None for r in out)
 
 
-def test_pq_topk_nan_scores_rank_like_the_fold(spark, duck):
+def test_pq_topk_nan_scores_rank_like_pq_topk_sql(spark, duck):
     """A NaN ADC score must stay NaN, which Spark and DuckDB sort FIRST
     under the ``adc DESC`` candidate cut; a NULL would sort it last and
     cut it. Row ``nan_id`` has a NaN component and sorts first by md5,
