@@ -101,8 +101,10 @@ def _parse_materialized(q: dict):
 # Serving-path result cap: the reference's default span is 60 minutes and
 # Spring rejects oversized binds; an uncapped ?from=2020&to=2030 range
 # would collect every matching candle onto the driver (r7 verdict #3).
-# The limit(MAX+1) bounds what the driver ever materializes; violations
-# are the 400 class, like an oversized page request.
+# Each route reads with MAX+1 as its bound (``limit(MAX+1)`` on Spark;
+# the Arrow range read stops after the directory that reaches it, so the
+# driver holds at most the cap plus one partition); violations are the
+# 400 class, like an oversized page request.
 MAX_RESULT_ROWS = 10_000
 
 

@@ -147,44 +147,23 @@ _PARTITION_COLS = ["time_frame", "bucket_date"]
 
 def _arrow_types() -> dict:
     """Spark type name -> the Arrow type the driver-side scan reads it
-    as. Timestamps are microseconds: INT96 files are read with
-    ``coerce_int96_timestamp_unit="us"``, the unit Spark itself keeps.
-    Types missing here (binary, decimals, nested) send the read to the
-    DataFrame API."""
+    as, for the column types a candle table holds. Timestamps are
+    microseconds: INT96 files are read with
+    ``coerce_int96_timestamp_unit="us"``, the unit Spark itself keeps."""
     import pyarrow as pa
 
     return {
         "string": pa.string(),
         "timestamp": pa.timestamp("us"),
-        "timestamp_ntz": pa.timestamp("us"),
         "date": pa.date32(),
         "double": pa.float64(),
-        "float": pa.float32(),
         "long": pa.int64(),
         "integer": pa.int32(),
-        "short": pa.int16(),
-        "byte": pa.int8(),
         "boolean": pa.bool_(),
     }
 
 
-def _session_zone(spark: SparkSession):
-    """The session time zone (``make_timestamp``, ``to_date`` and
-    interval arithmetic resolve in it) as a tzinfo, or None for an id
-    not mapped here (Java short ids like ``PST``)."""
-    name = spark.conf.get("spark.sql.session.timeZone")
-    if name in ("UTC", "Z"):
-        return _dt.timezone.utc
-    try:
-        if name[:1] in "+-":
-            hms = [int(p) for p in name[1:].split(":")] + [0, 0]
-            secs = hms[0] * 3600 + hms[1] * 60 + hms[2]
-            return _dt.timezone(_dt.timedelta(seconds=secs if name[0] == "+" else -secs))
-        from zoneinfo import ZoneInfo
-
-        return ZoneInfo(name)
-    except Exception:  # noqa: BLE001 — unknown id: use the DataFrame API
-        return None
+_EPOCH = _dt.datetime(1970, 1, 1)
 
 
 def _micros(ts: _dt.datetime) -> int:
@@ -193,22 +172,25 @@ def _micros(ts: _dt.datetime) -> int:
     return T.TimestampType().toInternal(ts)
 
 
-def _minus_frames(us: int, frame: str, n: int, zone) -> int:
-    """``us`` minus ``frame_interval(frame, n)`` as Spark evaluates it
-    in the session zone: whole days and months step the zone's
-    calendar (clamping the day of month), the rest is elapsed time."""
-    import calendar
+def _utc(us: int) -> _dt.datetime:
+    """Spark's internal timestamp value as a naive UTC datetime."""
+    return _EPOCH + _dt.timedelta(microseconds=us)
 
-    local = _dt.datetime.fromtimestamp(us // 1_000_000, zone).replace(
-        microsecond=us % 1_000_000
-    )
+
+def _minus_frames(us: int, frame: str, n: int) -> int:
+    """``us`` minus ``frame_interval(frame, n)`` as Spark evaluates it
+    in a UTC session: months step the calendar (clamping the day of
+    month), every other frame is elapsed time."""
     if frame == "MONTH":
-        y, m = divmod(local.year * 12 + local.month - 1 - n, 12)
-        day = min(local.day, calendar.monthrange(y, m + 1)[1])
-        return _micros(local.replace(year=y, month=m + 1, day=day))
+        import calendar
+
+        t = _utc(us)
+        y, m = divmod(t.year * 12 + t.month - 1 - n, 12)
+        day = min(t.day, calendar.monthrange(y, m + 1)[1])
+        back = t.replace(year=y, month=m + 1, day=day)
+        return (back - _EPOCH) // _dt.timedelta(microseconds=1)
     step = {"MINUTE": 1, "HOUR": 60, "DAY": 1440}.get(frame) or frame_minutes(frame)
-    days, minutes = divmod(n * step, 1440)
-    return _micros(local - _dt.timedelta(days=days)) - minutes * 60_000_000
+    return us - n * step * 60_000_000
 
 
 def _arrow_rows(table, fields, limit=None, newest=None) -> list:
@@ -229,10 +211,12 @@ def _arrow_rows(table, fields, limit=None, newest=None) -> list:
     cols = []
     for name in table.column_names:
         col, dtype = table.column(name), types[name]
-        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            cols.append([dtype.fromInternal(v) for v in col.cast(pa.int64()).to_pylist()])
+        if isinstance(dtype, T.TimestampType):
+            vals = col.cast(pa.int64()).to_pylist()
+            cols.append([dtype.fromInternal(v) for v in vals])
         elif isinstance(dtype, T.DateType):
-            cols.append([dtype.fromInternal(v) for v in col.cast(pa.int32()).to_pylist()])
+            vals = col.cast(pa.int32()).to_pylist()
+            cols.append([dtype.fromInternal(v) for v in vals])
         else:
             cols.append(col.to_pylist())
     names = table.column_names
@@ -609,9 +593,12 @@ class CandleStore:
         ``time_frame``, ``bucket_date``). None sends the serving calls to
         the DataFrame API: a store with no path, a path
         ``pyarrow.fs.FileSystem.from_uri`` cannot open, a table outside
-        the ``(time_frame, bucket_date)`` layout, or a column type with
-        no Arrow twin in ``_arrow_types``."""
+        the ``(time_frame, bucket_date)`` layout, or a session time zone
+        other than UTC (the one ``tune_session`` sets; the Arrow reads
+        evaluate ``now=`` and point bounds in UTC)."""
         if self._path is None or self._spark is None:
+            return None
+        if self._spark.conf.get("spark.sql.session.timeZone") not in ("UTC", "Z"):
             return None
         if self._arrow_fs is None:
             import pyarrow.fs as pafs
@@ -631,9 +618,6 @@ class CandleStore:
             return None
         fields = [f for f in schema.fields if f.name not in _PARTITION_COLS]
         fields += [schema[c] for c in _PARTITION_COLS]
-        types = _arrow_types()
-        if any(f.dataType.typeName() not in types for f in fields):
-            return None
         return (*self._arrow_fs, fields)
 
     def _partition_files(self, fs, root: str, frame: str, dates: list):
@@ -656,27 +640,63 @@ class CandleStore:
                     parts.append(where)
         return paths, parts
 
-    def _scan(self, src, frame: str, dates: list, filt=None, columns=None):
-        """ONE driver-side Arrow scan of exactly the listed partition
-        directories: a scanner whose ``filter`` is pushed into the
-        parquet reads, so only matching rows are materialized. The
-        schema is the cached table schema's (no footer is read to infer
-        one); a partition written before a column existed reads it as
-        null, like Spark's read with the same schema."""
-        import pyarrow as pa
+    def _batches(self, src, frame, dates, filt=None, columns=None, limit=None):
+        """Record batches of a driver-side Arrow read of exactly the
+        listed partition directories, oldest directory first: the
+        ``filter`` is pushed into the parquet reads, so only matching
+        rows are materialized. The schema is the cached table schema's
+        (no footer is read to infer one); a partition written before a
+        column existed reads it as null, like Spark's read with the same
+        schema.
+
+        With ``limit``, the directories are listed and scanned in chunks
+        of 1, 2, 4, ... and the read stops at the first directory
+        boundary after ``limit`` rows: ``bucket_date`` is
+        ``to_date(bucket_start)``, so every row of an unread directory is
+        later than every row read, and the earliest ``limit`` rows are
+        among those read. Memory then stays at the limit plus one
+        partition's matches, and fewer than twice the directories the
+        limit needs are listed."""
         import pyarrow.dataset as ds
 
-        fs, root, fields = src
-        paths, parts = self._partition_files(fs, root, frame, dates)
-        types = _arrow_types()
-        schema = pa.schema([(f.name, types[f.dataType.typeName()]) for f in fields])
+        fs, root, _ = src
+        schema = self._arrow_schema(src)
         fmt = ds.ParquetFileFormat(
             read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
         )
-        dset = ds.FileSystemDataset.from_paths(
-            paths, schema=schema, format=fmt, filesystem=fs, partitions=parts
-        )
-        return dset.scanner(filter=filt, columns=columns, use_threads=False)
+        done, k, held = 0, (len(dates) if limit is None else 1), 0
+        while done < len(dates) and (limit is None or held < limit):
+            paths, parts = self._partition_files(fs, root, frame, dates[done:done + k])
+            done, k = done + k, k * 2
+            dset = ds.FileSystemDataset.from_paths(
+                paths, schema=schema, format=fmt, filesystem=fs, partitions=parts
+            )
+            last = None
+            scan = dset.scanner(filter=filt, columns=columns, use_threads=False)
+            for tagged in scan.scan_batches():
+                where = _os.path.dirname(tagged.fragment.path)
+                if limit is not None and held >= limit and where != last:
+                    return
+                yield tagged.record_batch
+                held, last = held + tagged.record_batch.num_rows, where
+
+    def _scan(self, src, frame, dates, filt=None, columns=None, limit=None):
+        """``_batches`` as one table."""
+        import pyarrow as pa
+
+        schema = self._arrow_schema(src)
+        if columns is not None:
+            schema = pa.schema([schema.field(c) for c in columns])
+        batches = self._batches(src, frame, dates, filt, columns, limit)
+        return pa.Table.from_batches(list(batches), schema=schema)
+
+    @staticmethod
+    def _arrow_schema(src):
+        """The Arrow schema of the ``_arrow_source`` fields."""
+        import pyarrow as pa
+
+        types = _arrow_types()
+        return pa.schema([(f.name, types[f.dataType.typeName()]) for f in src[2]])
 
     def _recent_plan(self, symbol: str, frame: str, n: int):
         """Shared directory plan for the data-anchored recent-N probes:
@@ -807,9 +827,7 @@ class CandleStore:
         while True:
             iters += 1
             sel = sub[-k:]
-            table = self._scan(
-                src, frame, sel, pc.field("symbol") == symbol, _ROW_COLS
-            ).to_table()
+            table = self._scan(src, frame, sel, pc.field("symbol") == symbol, _ROW_COLS)
             if table.num_rows >= n or k >= len(sub):
                 break
             k = min(len(sub), k * 2)
@@ -1015,8 +1033,7 @@ class CandleStore:
         import pyarrow.compute as pc
 
         src = self._arrow_source()
-        zone = None if src is None or now is None else _session_zone(self._spark)
-        if src is None or (now is not None and zone is None):
+        if src is None:
             df = self.recent(symbol, frame, n=n, now=now).select(*_ROW_COLS)
             return (df if max_rows is None else df.limit(max_rows)).collect()
         if now is None:
@@ -1026,11 +1043,8 @@ class CandleStore:
         # from the lookback date (and to_date of the lower bound) to now
         at = _ts(now)
         hi = _micros(at)
-        lo = _minus_frames(hi, frame, n, zone)
-        d_lo = max(
-            self._lookback_date(at, frame, n),
-            _dt.datetime.fromtimestamp(lo // 1_000_000, zone).date(),
-        )
+        lo = _minus_frames(hi, frame, n)
+        d_lo = max(self._lookback_date(at, frame, n), _utc(lo).date())
         dates = [d for d in self._frame_dates(frame) if d_lo <= d <= at.date()]
         ts = pa.timestamp("us")
         filt = (
@@ -1038,7 +1052,7 @@ class CandleStore:
             & (pc.field("bucket_start") > pa.scalar(lo, ts))
             & (pc.field("bucket_start") <= pa.scalar(hi, ts))
         )
-        table = self._scan(src, frame, dates, filt, _ROW_COLS).to_table()
+        table = self._scan(src, frame, dates, filt, _ROW_COLS, limit=max_rows)
         return _arrow_rows(table, src[2], limit=max_rows)
 
     def range_rows(
@@ -1051,8 +1065,9 @@ class CandleStore:
     ) -> list:
         """Collected ``get_candles(symbol, frame, start, end)`` rows with
         the eight serving columns, ascending, at most ``max_rows`` of
-        them — the HTTP range route without ``fill``. One driver-side
-        Arrow scan of the range's listed directories, no Spark job."""
+        them — the HTTP range route without ``fill``. A driver-side
+        Arrow scan of the range's listed directories, oldest first, that
+        stops once ``max_rows`` rows are held; no Spark job."""
         check_frame(frame)
         return retry_stale(
             lambda: self._range_rows(symbol, frame, start, end, max_rows)
@@ -1079,7 +1094,7 @@ class CandleStore:
             filt &= pc.field("bucket_start") >= pa.scalar(_micros(lo), ts)
         if hi is not None:
             filt &= pc.field("bucket_start") <= pa.scalar(_micros(hi), ts)
-        table = self._scan(src, frame, dates, filt, _ROW_COLS).to_table()
+        table = self._scan(src, frame, dates, filt, _ROW_COLS, limit=max_rows)
         return _arrow_rows(table, src[2], limit=max_rows)
 
     # -- Q6: point lookup by calendar parts --------------------------------
@@ -1128,9 +1143,9 @@ class CandleStore:
         columns included), or None — the interactive point-lookup tier
         (r10 verdict #7). A miss is one driver-side Arrow scan of the
         one listed ``bucket_date`` directory, no Spark job; the bucket
-        instant is ``make_timestamp``'s, resolved in the session time
-        zone. A repeat read between writes is an LRU hit keyed by the
-        calendar parts (``_cached``)."""
+        instant is ``make_timestamp``'s in the UTC session zone. A
+        repeat read between writes is an LRU hit keyed by the calendar
+        parts (``_cached``)."""
         check_frame(frame)
         key = (symbol, frame, year, month, day, hour, minute)
         return self._cached(
@@ -1147,19 +1162,17 @@ class CandleStore:
         import pyarrow.compute as pc
 
         src = self._arrow_source()
-        zone = None if src is None else _session_zone(self._spark)
-        if zone is None:
+        if src is None:
             rows = self.point(symbol, frame, year, month, day, hour, minute).collect()
             return rows[0] if rows else None
         bd = _dt.date(year, month, day)
-        at = _micros(_dt.datetime(year, month, day, hour, minute, tzinfo=zone))
+        utc = _dt.timezone.utc
+        at = _micros(_dt.datetime(year, month, day, hour, minute, tzinfo=utc))
         dates = [d for d in self._frame_dates(frame) if d == bd]
         filt = (pc.field("symbol") == symbol) & (
             pc.field("bucket_start") == pa.scalar(at, pa.timestamp("us"))
         )
-        rows = _arrow_rows(
-            self._scan(src, frame, dates, filt).to_table(), src[2], limit=1
-        )
+        rows = _arrow_rows(self._scan(src, frame, dates, filt), src[2], limit=1)
         return rows[0] if rows else None
 
     # -- cross-series analytics over the stored table -----------------------
@@ -1526,8 +1539,8 @@ class CandleStore:
 
         names: set = set()
         for frame in self._stable_listing(self._path, _list_frames)[0]:
-            scan = self._scan(src, frame, self._frame_dates(frame), columns=["symbol"])
-            for batch in scan.to_batches():
+            dates = self._frame_dates(frame)
+            for batch in self._batches(src, frame, dates, columns=["symbol"]):
                 names.update(pc.unique(batch.column(0)).to_pylist())
         # orderBy("symbol"): code-point order, nulls first
         return [None] * (None in names) + sorted(names - {None})

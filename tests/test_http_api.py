@@ -672,6 +672,66 @@ def test_chart_reads_request_shapes_run_no_spark_job(spark, disk_url):
     assert not new, f"{len(new)} Spark jobs for ten chart reads"
 
 
+def test_range_past_the_cap_reads_only_the_directories_it_needs(
+    spark, tmp_path, monkeypatch
+):
+    """A range wider than the result cap is read oldest directory first
+    and stops after the directory that brings it to ``MAX_RESULT_ROWS +
+    1`` rows: over eight dense MINUTE days (1,440 candles each) a
+    2020-2030 range lists and reads seven of them (chunks of 1, 2 and 4
+    directories), through ``range_rows`` (whose rows equal
+    ``get_candles``' first ``MAX_RESULT_ROWS + 1``) and over HTTP (a
+    400)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from stock_chart_kafka_streams_spark.plans import http_api
+    from stock_chart_kafka_streams_spark.plans.query_api import _ROW_COLS
+    from stock_chart_kafka_streams_spark.streaming.sink import write_candles
+
+    days = 8
+    t = F.timestamp_seconds(F.lit(1_704_067_200) + F.col("id") * 60)  # 2024-01-01Z
+    c = (F.col("id") % 97).cast("double")
+    table = str(tmp_path / "cap")
+    write_candles(
+        spark.range(days * 1440).select(
+            F.lit("X").alias("symbol"), F.lit("MINUTE").alias("time_frame"),
+            t.alias("bucket_start"),
+            (t + F.expr("INTERVAL 1 minute")).alias("bucket_end"),
+            c.alias("open"), c.alias("high"), c.alias("low"), c.alias("close"),
+            F.col("id").alias("volume"),
+        ),
+        table,
+    )
+    store = CandleStore.from_path(spark, table)
+    read: list = []
+    real = CandleStore._partition_files
+
+    def _count(self, fs, root, frame, dates):
+        read.extend(dates)
+        return real(self, fs, root, frame, dates)
+
+    monkeypatch.setattr(CandleStore, "_partition_files", _count)
+    cap = http_api.MAX_RESULT_ROWS + 1
+    need = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(-(-cap // 1440))]
+    assert len(need) == 7
+    lo, hi = "2020-01-01T00:00:00", "2030-01-01T00:00:00"
+    rows = store.range_rows("X", "MINUTE", lo, hi, cap)
+    assert read == need
+    want = store.get_candles("X", "MINUTE", lo, hi).select(*_ROW_COLS).limit(cap)
+    assert [tuple(r) for r in rows] == [tuple(r) for r in want.collect()]
+
+    read.clear()
+    server, url = serve_in_background(store)
+    try:
+        code, body = _get_err(f"{url}/api/charts/X?from={lo}&to={hi}")
+    finally:
+        server.shutdown()
+    assert code == 400 and "exceeds" in body["error"]
+    assert read == need
+
+
 def test_serving_json_equals_duckdb_under_non_utc_tz(spark, disk_url):
     """With the process under ``TZ=America/New_York`` the candle JSON
     still carries the UTC instants DuckDB reads from the same files:

@@ -1431,6 +1431,24 @@ def test_serving_rows_equal_dataframe_api(spark, tmp_path):
             os.environ["TZ"] = prev
         time_mod.tzset()
 
+    # a non-UTC session zone is served by the DataFrame API itself
+    key = "spark.sql.session.timeZone"
+    prev_zone = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/New_York")
+        assert store._arrow_source() is None
+        now = "2024-01-15T12:30:00"
+        cols = [
+            "symbol", "bucket_start", "bucket_end", "open", "high", "low",
+            "close", "volume",
+        ]
+        _assert_rows_equal(
+            store.recent_rows(syms[0], "HOUR", n=30, now=now),
+            store.recent(syms[0], "HOUR", n=30, now=now).select(*cols).collect(),
+        )
+    finally:
+        spark.conf.set(key, prev_zone)
+
 
 def test_serving_rows_equal_dataframe_api_on_mixed_legacy_tables(spark, tmp_path):
     """Mixed legacy / ``is_gap`` partitions: a legacy partition reads
