@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stock_chart_kafka_streams_spark.operators import exact_chains as _xc
+from stock_chart_kafka_streams_spark.streaming.sink import read_partition_dirs
 
 # the Arrow kernels below call the shared chains; shipping the module by
 # value keeps their closures loadable on workers without this package
@@ -1707,7 +1708,9 @@ def _encode_vector(
 ) -> DataFrame:
     """(id, code0..code{m-1}[, cid]) in ONE map-only Arrow pass over the
     RAW corpus — the encode of every PQ consumer (pq_topk, ivfpq_topk,
-    build_pq_index, extend_pq_index).
+    build_pq_index, extend_pq_index). The kernel is a ``mapInArrow``: it
+    stacks the rows with ``exact_chains.arrow_rows`` (no Python object
+    per row), passes the id column through and emits int32 code columns.
 
     Per batch the kernel computes the ``_normalized`` vector (dim-prefix
     norm, zero norm divides by 1, per-element IEEE division), its PQ
@@ -1729,32 +1732,43 @@ def _encode_vector(
     if coarse is not None:
         K = np.asarray([list(c)[:d] for c in coarse], dtype=np.float64)
         ncv = _xc.centroid_norms(K)
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = ", ".join(
-        [f"{id_col} {id_type}"]
-        + [f"code{j} int" for j in range(m)]
-        + (["cid int"] if coarse is not None else [])
-    )
+    out_schema = _codes_schema(corpus, id_col, m, coarse is not None)
+    names = [id_col] + [f"code{j}" for j in range(m)]
+    if coarse is not None:
+        names.append("cid")
 
     def _encode(batches):
-        import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            V = _xc.stack_rows(pdf["v"], d)
+            V = _xc.arrow_rows(b.column("v"), d)
             nv, VN = _xc.unit_rows(V)
-            out = {id_col: pdf[id_col].values}
-            for j in range(m):
-                out[f"code{j}"] = _xc.l2_argmin(VN[:, j * sub : (j + 1) * sub], C[j])
+            codes = [
+                _xc.l2_argmin(VN[:, j * sub : (j + 1) * sub], C[j]) for j in range(m)
+            ]
             if K is not None:
-                out["cid"], _ = _xc.cos_argmax(V, K, nv, ncv)
-            yield _pd.DataFrame(out)
+                codes.append(_xc.cos_argmax(V, K, nv, ncv)[0])
+            yield _pa.RecordBatch.from_arrays(
+                [b.column(id_col)] + [_pa.array(c, type=_pa.int32()) for c in codes],
+                names=names,
+            )
 
     return corpus.select(
         F.col(id_col), _as_double(vec_col).alias("v")
-    ).mapInPandas(_encode, schema=out_schema)
+    ).mapInArrow(_encode, schema=out_schema)
+
+
+def _codes_schema(corpus: DataFrame, id_col: str, m: int, ivf: bool) -> str:
+    """DDL of a code table: the corpus id type, ``code0..code{m-1}`` int
+    and, for IVF, ``cid`` int."""
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    return ", ".join(
+        [f"{id_col} {id_type}"]
+        + [f"code{j} int" for j in range(m)]
+        + (["cid int"] if ivf else [])
+    )
 
 
 def _adc_scan_vector(
@@ -1918,22 +1932,24 @@ def build_pq_index(
     stored index pays them once and serves every subsequent query batch
     at marginal cost.
 
-    Jobs: ONE bounded fetch of both training samples, after which the
-    seeding and every Lloyd round run in-process on the driver
+    Jobs: TWO. ONE bounded fetch of both training samples, after which
+    the seeding and every Lloyd round run in-process on the driver
     (``_train_quantizers``; a training set of more than
     ``MAX_TRAIN_ROWS`` rows raises — raise ``sample_den``); then ONE
     map-only scan that normalizes, PQ-encodes and list-assigns each raw
     vector (``_encode_vector``) and writes ``partitionBy(cid)`` with no
-    shuffle; then the one-file ``model`` write.
+    shuffle. The ``model`` table is one parquet file the driver encodes
+    and writes itself (``_write_model``), not a Spark job.
 
     Layout (all parquet, so the artifact lives on the same storage tier
     as the data at 100 TB — no driver-local files):
 
-    - ``path/model``  one small table (``_MODEL_SCHEMA``): one ``meta``
-      row (version, kind, m/n_codes/sub_dim/dim, n_lists, id_col and the
-      training knobs, as JSON) read back for compatibility validation,
-      m*n_codes ``book`` rows (sub, cid, cv) and n_lists ``coarse`` rows
-      (cid, cv; IVF only).
+    - ``path/model``  one small table (``_MODEL_SCHEMA``) in one file,
+      ``part-00000.parquet``: one ``meta`` row (version, kind,
+      m/n_codes/sub_dim/dim, n_lists, id_col and the training knobs, as
+      JSON) read back for compatibility validation, m*n_codes ``book``
+      rows (sub, cid, cv) and n_lists ``coarse`` rows (cid, cv; IVF
+      only).
     - ``path/codes``  (id, code0..code{m-1}[, cid]); the IVF form is
       ``partitionBy(cid)`` so a probe of n_probe lists is a scan of
       exactly n_probe directories (pruning asserted from
@@ -1995,9 +2011,7 @@ def build_pq_index(
         if n_lists is not None:
             codes = codes.partitionBy("cid")
         codes.parquet(f"{stage}/codes")
-        spark.createDataFrame(model, _MODEL_SCHEMA).coalesce(1).write.parquet(
-            f"{stage}/model"
-        )
+        _write_model(spark, f"{stage}/model", model)
         _commit_index(spark, stage, path)
     except BaseException:
         fs, hpath = _hadoop_fs(spark, stage)
@@ -2009,26 +2023,26 @@ def build_pq_index(
 def read_pq_index(
     spark, path: str
 ) -> tuple[dict, list[list[list[float]]], list[list[float]] | None]:
-    """(meta, codebooks, coarse_centroids_or_None) from a persisted index:
-    one read of its ``model`` table, 1 + m*n_codes + n_lists rows — index
-    metadata, never data. A v3 index (separate ``meta``/``codebooks``/
-    ``coarse`` directories) raises, naming its version."""
+    """(meta, codebooks, coarse_centroids_or_None) from a persisted index,
+    without a Spark job: the driver reads the parquet files of its
+    ``model`` table (1 + m*n_codes + n_lists rows — index metadata, never
+    data) through the path's Hadoop FileSystem (``_read_model_rows``).
+    A model table written by Spark (indexes built before the driver-side
+    writer) reads back to the same rows. A v2/v3 index (separate
+    ``meta``/``codebooks``/``coarse`` directories) raises, naming its
+    version; a path with neither layout raises ``FileNotFoundError``."""
     import json
 
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{path}/model").collect()
-    except AnalysisException:
-        fs, hpath = _hadoop_fs(spark, path)
-        if not fs.exists(hpath(f"{path}/meta")):
-            raise
-        old = spark.read.parquet(f"{path}/meta").first()["version"]
+    rows = _read_model_rows(spark, f"{path}/model")
+    if rows is None:
+        old = _read_model_rows(spark, f"{path}/meta")
+        if old is None:
+            raise FileNotFoundError(f"no PQ index at {path!r}: no model table")
         raise ValueError(
-            f"PQ index at {path!r} has the version {old} layout (separate "
-            f"meta/codebooks/coarse directories); version {PQ_INDEX_VERSION} "
-            "is supported — rebuild the index"
-        ) from None
+            f"PQ index at {path!r} has the version {old[0]['version']} layout "
+            f"(separate meta/codebooks/coarse directories); version "
+            f"{PQ_INDEX_VERSION} is supported — rebuild the index"
+        )
     metas = [r["meta"] for r in rows if r["part"] == "meta"]
     if len(metas) != 1:
         raise ValueError(f"malformed PQ index at {path!r}: {len(metas)} meta rows, expected 1")
@@ -2062,6 +2076,56 @@ def read_pq_index(
         for r in coarse_rows:
             coarse[r["cid"]] = list(r["cv"])
     return meta, books, coarse
+
+
+def _write_model(spark, model_dir: str, model: list[tuple]) -> None:
+    """Write the ``_MODEL_SCHEMA`` rows ``model`` as ONE parquet file,
+    ``model_dir/part-00000.parquet``: the bytes are encoded on the driver
+    by ``pyarrow.parquet`` and written through the path's Hadoop
+    FileSystem (the API ``_commit_index`` moves the index with), so no
+    Spark job runs and every scheme the codes write reaches works."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(_MODEL_SCHEMA))
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in model], schema)
+    buf = pa.BufferOutputStream()
+    # the cv doubles are nearly all distinct: a dictionary only adds bytes
+    pq.write_table(table, buf, use_dictionary=["part"])
+    fs, hpath = _hadoop_fs(spark, model_dir)
+    out = fs.create(hpath(f"{model_dir}/part-00000.parquet"))
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+
+
+def _read_model_rows(spark, table_dir: str) -> list[dict] | None:
+    """The rows (as dicts) of the small parquet table at ``table_dir``,
+    read on the driver: each part file directly under it (``_``/``.``
+    names skipped) is read whole through the path's Hadoop FileSystem
+    into ``pyarrow.parquet``. None when the directory does not exist."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fs, hpath = _hadoop_fs(spark, table_dir)
+    if not fs.exists(hpath(table_dir)):
+        return None
+    io = spark._jvm.org.apache.commons.io.IOUtils  # type: ignore[attr-defined]
+    rows: list[dict] = []
+    for status in fs.listStatus(hpath(table_dir)):
+        part = status.getPath()
+        if not status.isFile() or part.getName().startswith(("_", ".")):
+            continue
+        stream = fs.open(part)
+        try:
+            data = io.toByteArray(stream)
+        finally:
+            stream.close()
+        rows += pq.read_table(pa.BufferReader(data)).to_pylist()
+    return rows
 
 
 def _batch_id_bounds(batch: DataFrame, id_col: str):
@@ -2610,7 +2674,11 @@ def pq_topk(
             raise ValueError(
                 f"persisted index id_col={meta['id_col']!r} != {id_col!r}"
             )
-        codes = corpus.sparkSession.read.parquet(f"{index_path}/codes")
+        # the codes directory with the schema given: no footer inference
+        codes = read_partition_dirs(
+            corpus.sparkSession, index_path, ["codes"], assume_exists=True,
+            schema=_codes_schema(corpus, id_col, m, ivf=False),
+        )
     else:
         books, _ = _train_quantizers(
             corpus, m, n_codes, iterations, sample_num, sample_den, id_col,
@@ -2771,7 +2839,6 @@ def ivfpq_topk(
                 f"persisted index id_col={meta['id_col']!r} != {id_col!r}"
             )
         assert coarse is not None
-        coded_lists = spark.read.parquet(f"{index_path}/codes")
     else:
         # ---- coarse quantizer (s3's deterministic k-means) + PQ
         # codebooks (s5's machinery), trained on the driver from one
@@ -2798,10 +2865,18 @@ def ivfpq_topk(
     q_rows = [(r["query_id"], list(x)) for r, x in zip(q_raw, qvn)]
     if index_path is not None:
         # static probe pruning: the probed cid set is known BEFORE the
-        # scan, so the cid-partitioned code table prunes to exactly the
-        # probed directories at planning time.
-        probed_cids = sorted({c for cids in probes for c in cids})
-        coded_lists = coded_lists.where(F.col("cid").isin(probed_cids))
+        # scan, so only the probed list directories are listed and read
+        # (a probed list with no directory holds no codes), with the
+        # schema given: no listing of all n_lists directories, no footer
+        # inference
+        ddl = _codes_schema(corpus, id_col, m, ivf=True)
+        coded_lists = read_partition_dirs(
+            spark, f"{index_path}/codes",
+            [f"cid={c}" for c in sorted({c for cids in probes for c in cids})],
+            schema=ddl, list_on_driver=True,
+        )
+        if coded_lists is None:
+            coded_lists = spark.createDataFrame([], ddl)
 
     # ---- ADC over probed lists only (vs s5's full scan) -----------------
     # the probed-list restriction runs INSIDE the Arrow kernel alongside

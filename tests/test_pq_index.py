@@ -8,6 +8,9 @@ exactly the probed list directories — asserted from selectedPartitions,
 the serving-table discipline, on the REAL artifact and the REAL query
 plan (not a simulated code table)."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -469,6 +472,89 @@ def test_build_killed_before_commit_keeps_previous_index(
     monkeypatch.undo()
     build_pq_index(embs, path, **kw)
     assert sorted(os.listdir(tmp_path)) == ["idx"]
+    assert _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw)) == served
+
+
+def _jobs(spark, group, fn):
+    """(fn's result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_runs_two_jobs_and_serving_reads_no_metadata_job(
+    spark, embs, queries, tmp_path
+):
+    """A build is the training fetch plus the codes write; the model is
+    written and read on the driver, so ``read_pq_index`` runs no job and
+    a served query plans with only its query collect: the probed list
+    directories (more than Spark's 32-path parallel-listing threshold
+    here) are listed on the driver and read with the schema given."""
+    path = str(tmp_path / "jobs")
+    kw = dict(n_lists=40, m=4, n_codes=8, iterations=2)
+    _, build_jobs = _jobs(spark, "pq-build", lambda: build_pq_index(embs, path, **kw))
+    assert build_jobs == 2
+    (meta, _, coarse), read_jobs = _jobs(
+        spark, "pq-read", lambda: read_pq_index(spark, path)
+    )
+    assert read_jobs == 0 and meta["n_lists"] == 40 and len(coarse) == 40
+
+    served, plan_jobs = _jobs(
+        spark, "pq-serve",
+        lambda: ivfpq_topk(embs, queries, k=5, n_probe=40, index_path=path, **kw),
+    )
+    assert plan_jobs == 1  # the query collect
+    fresh = ivfpq_topk(embs, queries, k=5, n_probe=40, **kw)
+    assert _rows(served) == _rows(fresh)
+
+
+def test_driver_written_model_reads_in_spark(spark, embs, tmp_path):
+    """The driver-written model is one parquet file that Spark reads as
+    ``_MODEL_SCHEMA`` with the rows ``read_pq_index`` reads."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from stock_chart_kafka_streams_spark.operators.similarity import (
+        _MODEL_SCHEMA,
+        _read_model_rows,
+    )
+
+    path = str(tmp_path / "idx")
+    build_pq_index(embs, path, n_lists=8, m=4, n_codes=8, iterations=2)
+    model = spark.read.parquet(f"{path}/model")
+    assert model.schema.simpleString() == _parse_datatype_string(
+        _MODEL_SCHEMA
+    ).simpleString()
+    assert [r.asDict() for r in model.collect()] == _read_model_rows(
+        spark, f"{path}/model"
+    )
+    assert model.inputFiles() == [f"file://{path}/model/part-00000.parquet"]
+
+
+def test_spark_written_model_reads_back_the_same(spark, embs, queries, tmp_path):
+    """An index whose model table Spark wrote (the writer before the
+    driver-side one: ``createDataFrame``, ``coalesce(1)``, a write job)
+    reads back to the same (meta, books, coarse) and serves the same
+    rows."""
+    from stock_chart_kafka_streams_spark.operators.similarity import _MODEL_SCHEMA
+
+    path = str(tmp_path / "idx")
+    kw = dict(n_lists=8, m=4, n_codes=8, iterations=2)
+    build_pq_index(embs, path, **kw)
+    driver = read_pq_index(spark, path)
+    served = _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw))
+
+    rows = [tuple(r) for r in spark.read.parquet(f"{path}/model").collect()]
+    spark.createDataFrame(rows, _MODEL_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/model.spark")
+    shutil.rmtree(f"{path}/model")
+    os.rename(f"{path}/model.spark", f"{path}/model")
+    assert any(n.endswith(".snappy.parquet") for n in os.listdir(f"{path}/model"))
+    assert read_pq_index(spark, path) == driver
     assert _rows(ivfpq_topk(embs, queries, k=5, n_probe=2, index_path=path, **kw)) == served
 
 
