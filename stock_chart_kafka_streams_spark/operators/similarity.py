@@ -2646,7 +2646,10 @@ def pq_topk(
     ``pq_topk_sql`` remains the oracle; (m, n_codes, dim) must match
     the stored meta (raises otherwise). ``corpus`` is still required —
     the exact rerank fetches survivor vectors back by id (the index
-    stores codes, never embeddings: the PQ memory story)."""
+    stores codes, never embeddings: the PQ memory story) — and its id
+    column must have the build corpus's type: the code table is read
+    with that type given (no footer inference), so a different one
+    fails the scan."""
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     if dim % m != 0:
@@ -2776,13 +2779,15 @@ def ivfpq_topk(
     ``index_path`` (r10 verdict #3): serve from a ``build_pq_index(...,
     n_lists=...)`` artifact — coarse centroids + codebooks load
     driver-side, the cid-partitioned code table is the stored parquet,
-    and the probe becomes a STATIC ``cid IN (probed)`` filter computed
-    from the (O(queries x n_probe), driver-bounded) probe set, so the
-    scan prunes to exactly the probed list directories at planning time
-    (asserted from selectedPartitions in tests) — no training, no
-    assignment, no rebuild on the query path. Results bit-identical to
-    the rebuild form; ``ivfpq_topk_sql`` remains the full-procedure
-    oracle. ``corpus`` still required for the exact rerank fetch-back.
+    and the (O(queries x n_probe), driver-bounded) probe set names the
+    directories read: the scan lists and reads exactly the probed list
+    directories (asserted from selectedPartitions in tests) — no
+    training, no assignment, no rebuild on the query path. Results
+    bit-identical to the rebuild form; ``ivfpq_topk_sql`` remains the
+    full-procedure oracle. ``corpus`` still required for the exact
+    rerank fetch-back, and its id column must have the build corpus's
+    type: the code table is read with that type given (no footer
+    inference), so a different one fails the scan.
 
     The raw query vectors are collected to the driver once; their probe
     lists (``_probe_lists``) and normalized vectors are computed there
@@ -2873,7 +2878,7 @@ def ivfpq_topk(
         coded_lists = read_partition_dirs(
             spark, f"{index_path}/codes",
             [f"cid={c}" for c in sorted({c for cids in probes for c in cids})],
-            schema=ddl, list_on_driver=True,
+            schema=ddl,
         )
         if coded_lists is None:
             coded_lists = spark.createDataFrame([], ddl)

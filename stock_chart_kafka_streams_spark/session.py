@@ -30,6 +30,13 @@ _RUNTIME_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic UTC semantics for date_trunc/window regardless of host TZ.
     "spark.sql.session.timeZone": "UTC",
+    # List partition directories on the driver: past this many paths Spark
+    # lists them with a distributed job instead (default 32). On a local
+    # filesystem (local[4]) resolving a read of 64 / 256 / 1000 / 2000
+    # partition directories took 0.73 / 1.4 / 4.7 / 7.9 s with that job and
+    # 0.08 / 0.08 / 0.25 / 0.49 s on the driver. Lower it where each
+    # listing call is a slow object-store round trip.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
 }
 
 

@@ -377,9 +377,10 @@ def affected_symbol_windows(spark, batch: DataFrame, path: str) -> list:
         iters += 1
         sel = (before[-back:] if back else []) + inside + (after[:fwd] if fwd else [])
         # dir-scoped read: the file LISTING is O(selected dates) too, not
-        # just the scan — a bare read of the table root walks (and above
-        # ~32 dirs, job-schedules) every partition directory at planning
-        # time, an O(table age) metadata cost this probe exists to avoid
+        # just the scan — a bare read of the table root walks (and past
+        # the parallel-listing threshold, job-schedules) every partition
+        # directory at planning time, an O(table age) metadata cost this
+        # probe exists to avoid
         stored = read_partition_dirs(
             spark,
             path,

@@ -63,7 +63,6 @@ analogue for HDFS/local deployments.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -756,7 +755,6 @@ def read_partition_dirs(
     rel_dirs: list[str],
     assume_exists: bool = False,
     schema=None,
-    list_on_driver: bool = False,
 ):
     """DataFrame over EXACTLY the given partition directories of the
     table at ``path`` (``basePath``-anchored, so partition columns still
@@ -764,8 +762,10 @@ def read_partition_dirs(
 
     The point is the LISTING, not the scan: a bare
     ``spark.read.parquet(table)`` walks every partition directory at
-    planning time (above ~32 dirs Spark even launches a distributed
-    listing job with one task per directory), so each maintenance read
+    planning time (past ``spark.sql.sources.parallelPartitionDiscovery
+    .threshold`` dirs Spark even launches a distributed listing job with
+    one task per directory; ``session`` raises it from Spark's 32 to
+    4096), so each maintenance read
     in a streaming foreachBatch hook pays O(table partitions) in
     metadata even when the scan itself is pruned to two directories —
     measured: a fill-enabled batch against 600 days of history spent
@@ -789,14 +789,7 @@ def read_partition_dirs(
     reader-vs-swap race window (a concurrent publish renaming a listed
     file mid-inference fails the read before the retryable scan even
     starts). Serving-path callers pass the store's cached table
-    schema.
-
-    ``list_on_driver=True`` lists the directories on the driver however
-    many there are: past ``spark.sql.sources.parallelPartitionDiscovery
-    .threshold`` root paths (32 by default) Spark lists them with a
-    distributed job. For callers whose selection is already bounded (the
-    probed lists of an IVF index); the threshold is raised for this one
-    read only, since the file index is listed when the reader resolves."""
+    schema."""
     if assume_exists:
         dirs = [f"{path}/{rel}" for rel in rel_dirs]
     else:
@@ -811,19 +804,7 @@ def read_partition_dirs(
     reader = spark.read.option("basePath", path)
     if schema is not None:
         reader = reader.schema(schema)
-    if not list_on_driver:
-        return reader.parquet(*dirs)
-    with _LISTING_LOCK:
-        prev = spark.conf.get(_LISTING_THRESHOLD)
-        spark.conf.set(_LISTING_THRESHOLD, str(max(int(prev), len(dirs))))
-        try:
-            return reader.parquet(*dirs)
-        finally:
-            spark.conf.set(_LISTING_THRESHOLD, prev)
-
-
-_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-_LISTING_LOCK = threading.Lock()
+    return reader.parquet(*dirs)
 
 
 def _table_exists(spark: SparkSession, path: str) -> bool:

@@ -492,8 +492,9 @@ def test_build_runs_two_jobs_and_serving_reads_no_metadata_job(
     """A build is the training fetch plus the codes write; the model is
     written and read on the driver, so ``read_pq_index`` runs no job and
     a served query plans with only its query collect: the probed list
-    directories (more than Spark's 32-path parallel-listing threshold
-    here) are listed on the driver and read with the schema given."""
+    directories (more than Spark's default parallel-listing threshold of
+    32 paths here) are listed on the driver, under the session's raised
+    threshold, and read with the schema given."""
     path = str(tmp_path / "jobs")
     kw = dict(n_lists=40, m=4, n_codes=8, iterations=2)
     _, build_jobs = _jobs(spark, "pq-build", lambda: build_pq_index(embs, path, **kw))
